@@ -336,8 +336,8 @@ object Bench {
     // prints above and persists in the bench_full sidecar. Fields
     // that also live on the full line (lanes, load stamps) move off
     // the final line to keep it inside the driver's 2000-char tail
-    // next to sbt's closing "[success]" line; if a degenerate lap
-    // still overflows ~1900 chars, values degrade to 1 decimal.
+    // next to sbt's closing "[success]" line; a degenerate lap that
+    // still overflows ~1900 chars degrades (see digestJson).
     println(digestJson(mins, total, sfTag))
     spark.stop()
   }
@@ -347,7 +347,8 @@ object Bench {
     * the lap runs and the meaning of "order":"alpha". Values are
     * min-seconds at 2 decimals, trailing zeros trimmed (~5 B/query);
     * a degenerate lap that would overflow ~1900 chars degrades to 1
-    * decimal rather than truncate mid-JSON.
+    * decimal, and if that still overflows, to the slowest-only digest
+    * (no per-query array), rather than truncate mid-JSON.
     */
   def digestJson(mins: Seq[(String, Double)], total: Double, sfTag: String): String = {
     def r3(v: Double): Double = math.round(v * 1000) / 1000.0
@@ -364,27 +365,28 @@ object Bench {
     val slowest = mins.sortBy(-_._2).take(5)
       .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + r2(v) }
       .mkString("{", ",", "}")
-    def line(decimals: Int): String = {
-      val vArr = mins.map { case (_, v) => fmtTrim(v, decimals) }
-        .mkString("[", ",", "]")
+    def line(values: Option[Int]): String = {
+      val vArr = values.fold("") { decimals =>
+        mins.map { case (_, v) => fmtTrim(v, decimals) }
+          .mkString(""""order":"alpha","v":[""", ",", "],")
+      }
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":${mins.size},""" +
-        s""""queries":$slowest,"order":"alpha","v":$vArr,"sf":"$sfTag"}"""
+        s""""queries":$slowest,$vArr"sf":"$sfTag"}"""
     }
-    val d2 = line(2)
-    if (d2.length <= 1900) d2 else line(1)
+    Seq(Some(2), Some(1)).map(line).find(_.length <= 1900).getOrElse(line(None))
   }
 
-  /** Queries whose implementation executes a Structured Streaming
-    * job (micro-batch setup dominates their wall time at small sf).
-    * Kept explicit — name conventions almost but don't quite cover it
-    * (ev53 has no "stream" in its name; ev72's decode is batch).
-    */
   /** The envelope probe's designated tail queries: heavy, batch-lane,
     * untouched for multiple rounds (their cost is plan-stable), so
     * repeat spread measures the BOX, not the code. Prefix match.
     */
   val EnvelopeProbes: Seq[String] = Seq("ss37", "dd11", "dd08")
 
+  /** Queries whose implementation executes a Structured Streaming
+    * job (micro-batch setup dominates their wall time at small sf).
+    * Kept explicit — name conventions almost but don't quite cover it
+    * (ev53 has no "stream" in its name; ev72's decode is batch).
+    */
   val StreamingLane: Set[String] = Set(
     "ev11_stream_stats", "ev19_stream_pipeline", "ev21_stream_dedup",
     "ev28_stream_hourly", "ev38_stream_bursts", "ev42_stream_first_seen",

@@ -3,8 +3,7 @@ package graft.model
 import org.apache.spark.sql.types._
 
 /** Data model mirroring the reference's event types
-  * (/root/reference/src/event_types.rs, token.rs) as Spark schemas +
-  * case classes.
+  * (event_types.rs) as Spark schemas + case classes.
   *
   * `data` is kept as a JSON string at the envelope level (the
   * reference's `EventData::Generic`); NEP-171 payloads additionally
@@ -14,33 +13,15 @@ import org.apache.spark.sql.types._
   */
 object NearEvent {
 
-  /** event_types.rs:69-76 EmitInfo. */
-  val emitInfoSchema: StructType = StructType(Seq(
-    StructField("receipt_id", StringType),
-    StructField("block_timestamp", LongType),
-    StructField("block_height", LongType),
-    StructField("shard_id", LongType),
-    StructField("contract_account_id", StringType)))
-
-  /** token.rs:51-66 TokenMetadata (subset actually used by NEP-171). */
-  val tokenMetadataSchema: StructType = StructType(Seq(
-    StructField("title", StringType),
-    StructField("description", StringType),
-    StructField("media", StringType),
-    StructField("copies", LongType),
-    StructField("extra", StringType),
-    StructField("reference", StringType),
-    StructField("collection_id", StringType)))
-
-  /** event_types.rs:96-106 Nep171MintData (pre-enrichment fields). */
-  val mintDataSchema: StructType = StructType(Seq(
+  /** event_types.rs:96-120 Nep171MintData ∪ Nep171TransferData, the
+    * fields the flatten reads: one element schema for both NEP-171
+    * array payloads. Every role field is a string, and a string field
+    * accepts any JSON value, so a field the element's event does not
+    * define never fails the element; the flatten keeps only the
+    * event's own role fields.
+    */
+  val nep171DataSchema: StructType = StructType(Seq(
     StructField("owner_id", StringType),
-    StructField("token_ids", ArrayType(StringType)),
-    StructField("memo", StringType)))
-
-  /** event_types.rs:108-120 Nep171TransferData. */
-  val transferDataSchema: StructType = StructType(Seq(
-    StructField("authorized_id", StringType),
     StructField("old_owner_id", StringType),
     StructField("new_owner_id", StringType),
     StructField("token_ids", ArrayType(StringType)),
@@ -73,10 +54,3 @@ case class NearEventRow(
     event: String,
     data: String,
     emit_info: EmitInfo)
-
-case class TokenRow(
-    contract_account_id: String,
-    token_id: String,
-    title: String,
-    media: String,
-    extra: String)

@@ -95,26 +95,14 @@ object Components {
       // aggregate: min over all rows is the propagated label, min over
       // the own row (exactly one per node) recovers the previous label
       // for the convergence count. Same fixpoint, one exchange.
-      // spark.graft.cc.fused=false restores the r13 three-exchange
-      // round (same-JVM A/B hook).
-      val fused = pairs.sparkSession.conf
-        .getOption("spark.graft.cc.fused").forall(_.toBoolean)
-      val next = (if (fused) {
-        val msgs = edges.join(comp, edges("dst") === comp("node"))
-          .select(edges("src").as("node"), col("comp"), lit(false).as("own"))
-        comp.select(col("node"), col("comp"), lit(true).as("own"))
-          .unionByName(msgs)
-          .groupBy(col("node"))
-          .agg(min(col("comp")).as("new_comp"),
-            min(when(col("own"), col("comp"))).as("old_comp"))
-      } else {
-        val nbr = edges.join(comp, edges("dst") === comp("node"))
-          .groupBy(col("src")).agg(min(col("comp")).as("nbr_comp"))
-        comp.join(nbr, comp("node") === nbr("src"), "left")
-          .select(comp("node").as("node"),
-            least(comp("comp"), coalesce(col("nbr_comp"), comp("comp"))).as("new_comp"),
-            comp("comp").as("old_comp"))
-      }).localCheckpoint()
+      val msgs = edges.join(comp, edges("dst") === comp("node"))
+        .select(edges("src").as("node"), col("comp"), lit(false).as("own"))
+      val next = comp.select(col("node"), col("comp"), lit(true).as("own"))
+        .unionByName(msgs)
+        .groupBy(col("node"))
+        .agg(min(col("comp")).as("new_comp"),
+          min(when(col("own"), col("comp"))).as("old_comp"))
+        .localCheckpoint()
       changed = next.filter(col("new_comp") < col("old_comp")).count()
       // next is fully materialized (eager checkpoint) — the previous
       // round's blocks are dead; without this, one RDD leaks per round
@@ -181,14 +169,11 @@ object Components {
       // hangNbrs) are canonical-identical subtrees, so the exchange
       // feeding its distinct is planned once and reused; lineage stays
       // bounded because the round still starts from checkpointed edges.
-      val fused = pairs.sparkSession.conf
-        .getOption("spark.graft.cc.fused").forall(_.toBoolean)
-      val afterLarge0 = bi.join(minsL, "a")
+      val afterLarge = bi.join(minsL, "a")
         .filter(col("b") > col("a"))
         .select(col("b").as("u"), col("m").as("v")) // b > a ≥ m
         .filter(col("u") =!= col("v"))
         .distinct()
-      val afterLarge = if (fused) afterLarge0 else afterLarge0.localCheckpoint()
       // small-star: per larger endpoint u, all smaller neighbors (and
       // u itself) hang onto m = min of the smaller neighborhood
       val minsS = afterLarge.groupBy(col("u")).agg(min(col("v")).as("m"))
@@ -206,7 +191,6 @@ object Components {
       val nextCount = next.count()
       converged = nextCount == edgeCount && next.exceptAll(edges).isEmpty
       edgeCount = nextCount
-      if (!fused) release(afterLarge)
       release(edges)
       edges = next
       rounds += 1

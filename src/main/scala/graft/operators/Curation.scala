@@ -172,17 +172,9 @@ object Curation {
     // char) and census both sides of the split.
     "ev16_dead_letter" -> { (s, d) =>
       val ev = graft.core.Par.scatter(Tables.events(s, d))
-      val logs = ev.select(
-        concat(
-          lit("EVENT_JSON:{\"standard\":\"app\",\"version\":\"1.0.0\",\"event\":\""),
-          when(pmod(col("event_id"), lit(7)) === 0,
-            concat(col("event_type"), lit("!"))).otherwise(col("event_type")),
-          lit("\",\"data\":"), col("props"), lit("}")).as("log"),
-        concat(lit("r"), col("event_id")).as("receipt_id"),
-        col("ts").cast("long").as("block_timestamp"),
-        col("event_id").as("block_height"),
-        pmod(col("user_id"), lit(4)).as("shard_id"),
-        concat(lit("c"), col("user_id")).as("contract_account_id"))
+      val logs = ev.select(EventPipeline.logLines(
+        when(pmod(col("event_id"), lit(7)) === 0,
+          concat(col("event_type"), lit("!"))).otherwise(col("event_type"))): _*)
       // single pass: a status column from the SAME validity predicate
       // the dead-letter split uses — a union of the two split branches
       // would re-run the whole render+parse pipeline per branch

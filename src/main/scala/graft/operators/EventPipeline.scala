@@ -21,9 +21,6 @@ import graft.core.Tables
   */
 object EventPipeline {
 
-  /** `^[a-zA-Z0-9._-]+$` — event_types.rs:8-10 REGEX_STANDARD/EVENT. */
-  val NameRegex = "^[a-zA-Z0-9._-]+$"
-
   /** Topic prefix, nes.toml `near_events_topic_prefix` analog. */
   val TopicPrefix = "near.events"
 
@@ -38,6 +35,21 @@ object EventPipeline {
   def topicOf(eventType: Column): Column =
     concat_ws(".", lit(TopicPrefix), eventType)
 
+  /** An `events` row as the (log, emit-info) ingress row
+    * [[graft.streaming.EventStreams.extractEvents]] reads: the row
+    * rendered as an `app` standard `EVENT_JSON:` log line with
+    * `eventName` as the envelope's event and `props` as its data.
+    */
+  def logLines(eventName: Column): Seq[Column] = Seq(
+    concat(
+      lit("EVENT_JSON:{\"standard\":\"app\",\"version\":\"1.0.0\",\"event\":\""),
+      eventName, lit("\",\"data\":"), col("props"), lit("}")).as("log"),
+    concat(lit("r"), col("event_id")).as("receipt_id"),
+    col("ts").cast("long").as("block_timestamp"),
+    col("event_id").as("block_height"),
+    pmod(col("user_id"), lit(4)).as("shard_id"),
+    concat(lit("c"), col("user_id")).as("contract_account_id"))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // extract_events: JSON payload → typed columns (events.rs:283-350)
     "ev01_extract_parse" -> { (s, d) =>
@@ -50,7 +62,8 @@ object EventPipeline {
     // NEP name validation drop-invalid (event_types.rs:8-24, events.rs:310)
     "ev02_validate_regex" -> { (s, d) =>
       Tables.events(s, d)
-        .filter(col("event_type").rlike(NameRegex) && col("props").rlike("^\\{.*\\}$"))
+        .filter(col("event_type").rlike(graft.model.NearEvent.NameRegex) &&
+          col("props").rlike("^\\{.*\\}$"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_valid"))
         .orderBy(col("event_type"))
@@ -180,15 +193,7 @@ object EventPipeline {
       // here — scatter the narrow input so it runs on every core
       // instead of inheriting the scan's split count
       val ev = graft.core.Par.scatter(Tables.events(s, d))
-      val logs = ev.select(
-        concat(
-          lit("EVENT_JSON:{\"standard\":\"app\",\"version\":\"1.0.0\",\"event\":\""),
-          col("event_type"), lit("\",\"data\":"), col("props"), lit("}")).as("log"),
-        concat(lit("r"), col("event_id")).as("receipt_id"),
-        col("ts").cast("long").as("block_timestamp"),
-        col("event_id").as("block_height"),
-        pmod(col("user_id"), lit(4)).as("shard_id"),
-        concat(lit("c"), col("user_id")).as("contract_account_id"))
+      val logs = ev.select(logLines(col("event_type")): _*)
       val events = graft.streaming.EventStreams.validated(
         graft.streaming.EventStreams.extractEvents(logs))
       graft.streaming.EventStreams
@@ -253,15 +258,8 @@ object EventPipeline {
       // explicit repartition count overrides the trimmed shuffle conf
       // inside runMemorySnapshot: the JSON render/parse stage runs
       // wide, only the stateful agg runs at 4 state partitions
-      val logs = ev.repartition(s.sparkContext.defaultParallelism).select(
-        concat(
-          lit("EVENT_JSON:{\"standard\":\"app\",\"version\":\"1.0.0\",\"event\":\""),
-          col("event_type"), lit("\",\"data\":"), col("props"), lit("}")).as("log"),
-        concat(lit("r"), col("event_id")).as("receipt_id"),
-        col("ts").cast("long").as("block_timestamp"),
-        col("event_id").as("block_height"),
-        pmod(col("user_id"), lit(4)).as("shard_id"),
-        concat(lit("c"), col("user_id")).as("contract_account_id"))
+      val logs = ev.repartition(s.sparkContext.defaultParallelism)
+        .select(logLines(col("event_type")): _*)
       val events = graft.streaming.EventStreams.validated(
         graft.streaming.EventStreams.extractEvents(logs))
       // streaming disallows distinct aggregates: keep the stream's

@@ -99,37 +99,27 @@ object EventStreams {
   def eventTopic(prefix: String): Column =
     concat_ws(".", lit(prefix), col("standard"), col("event"))
 
-  /** NEP-171 mint/transfer array payloads → one row per element.
-    * Non-NEP-171 events pass through unexploded with a null flat slot
-    * filtered out (the reference returns an empty vec for those).
+  /** NEP-171 mint/transfer array payloads → one row per element
+    * token. `data` parses once against the merged element schema and
+    * explodes once; each event keeps only its own role fields (mint:
+    * owner_id; transfer: old/new_owner_id), so a stray field of the
+    * other event stays null. Other events yield no rows (the
+    * reference returns an empty vec for those).
     */
   def flattenNep171(events: DataFrame): DataFrame = {
-    val isMint = col("standard") === "nep171" && col("event") === "nft_mint"
-    val isTransfer = col("standard") === "nep171" && col("event") === "nft_transfer"
-    val parsed = events
-      .withColumn("mint_arr",
-        when(isMint, from_json(get_json_object(col("data"), "$.data"), org.apache.spark.sql.types.ArrayType(mintDataSchema))))
-      .withColumn("xfer_arr",
-        when(isTransfer, from_json(get_json_object(col("data"), "$.data"), org.apache.spark.sql.types.ArrayType(transferDataSchema))))
-    val mints = parsed.filter(isMint)
+    val isMint = col("event") === "nft_mint"
+    val isTransfer = col("event") === "nft_transfer"
+    val elems = from_json(get_json_object(col("data"), "$.data"),
+      org.apache.spark.sql.types.ArrayType(nep171DataSchema))
+    events.filter(col("standard") === "nep171" && (isMint || isTransfer))
       .select(col("standard"), col("version"), col("event"), col("emit_info"),
-        explode(col("mint_arr")).as("m"))
+        explode(elems).as("d"))
       .select(col("standard"), col("version"), col("event"), col("emit_info"),
-        col("m.owner_id").as("owner_id"),
-        lit(null).cast("string").as("old_owner_id"),
-        lit(null).cast("string").as("new_owner_id"),
-        explode(col("m.token_ids")).as("token_id"),
-        col("m.memo").as("memo"))
-    val xfers = parsed.filter(isTransfer)
-      .select(col("standard"), col("version"), col("event"), col("emit_info"),
-        explode(col("xfer_arr")).as("t"))
-      .select(col("standard"), col("version"), col("event"), col("emit_info"),
-        lit(null).cast("string").as("owner_id"),
-        col("t.old_owner_id").as("old_owner_id"),
-        col("t.new_owner_id").as("new_owner_id"),
-        explode(col("t.token_ids")).as("token_id"),
-        col("t.memo").as("memo"))
-    mints.unionByName(xfers)
+        when(isMint, col("d.owner_id")).as("owner_id"),
+        when(isTransfer, col("d.old_owner_id")).as("old_owner_id"),
+        when(isTransfer, col("d.new_owner_id")).as("new_owner_id"),
+        explode(col("d.token_ids")).as("token_id"),
+        col("d.memo").as("memo"))
   }
 
   /** Broadcast-join flat events with a token-metadata dim table keyed

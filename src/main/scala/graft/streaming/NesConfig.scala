@@ -45,9 +45,12 @@ final case class NesConfig(
     * the flat enriched copies to `<topic>_metadata`; enrichment never
     * replaces the envelope deliveries). `tokens` supplies the
     * metadata dim (the reference's per-token RPC lookup, re-expressed
-    * as a broadcast join). The union's two branches re-evaluate the
-    * extract upstream — the cost of the dual-shape fanout; the
-    * reference likewise serializes the event once per delivery.
+    * as a broadcast join). Enriched, the plan reads its source twice
+    * per micro-batch: once for the envelope deliveries, once for the
+    * flatten (itself a single parse-and-explode) — the union's two
+    * branches each re-evaluate the extract upstream, the cost of the
+    * dual-shape fanout; the reference likewise serializes the event
+    * once per delivery.
     */
   def pipeline(logs: DataFrame, tokens: Option[DataFrame] = None): DataFrame = {
     val filtered = EventStreams.filterContracts(

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamReader, DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import java.sql.Timestamp
@@ -148,26 +148,6 @@ object StreamJobs {
     }
   }
 
-  /** Drain a streaming frame into a memory-sink snapshot under
-    * AvailableNow and return the snapshot table. Stateful-shuffle
-    * partitions are trimmed to `stateParts` for the stream only: the
-    * conf is captured at stream start and the session value restored
-    * after termination (restoring right after `start()` races with
-    * async micro-batch planning). The previous table of the same name
-    * is dropped first — append-mode memory sinks accumulate across
-    * restarts in one session.
-    *
-    * SINGLE-THREADED-SESSION ASSUMPTION: the shuffle-partition override
-    * is session-global while the stream drains, so any query planned
-    * concurrently on the same session would silently run at
-    * `stateParts` partitions, and concurrent snapshot calls could
-    * clobber each other's restore. All call sites (ev11/ev19/ev21 in
-    * the gated queries map, specs) run queries sequentially on the
-    * session; a stream built on a `SparkSession.cloneSession()` would
-    * isolate the conf, but the query must then start from the clone —
-    * i.e. the SOURCE frame has to be constructed on the clone, which
-    * this helper (handed an already-built frame) cannot do.
-    */
   /** State-store footprint of the most recent snapshot run — ladder
     * instrumentation (VERDICT r11 #4): (state rows, state bytes)
     * summed over the final progress's stateful operators. Bytes come
@@ -220,70 +200,10 @@ object StreamJobs {
       lastStateMetrics = Some((rows, bytes))
     }
 
-  /** Stateful-shuffle partition count for snapshot drains: explicit
-    * argument wins; otherwise the `spark.graft.stream.stateParts`
-    * dial (Tuned sets it from corpus scale; ladder legs override);
-    * default 4 — the r13 posture. Partition count never changes WHAT
-    * a stateful operator computes (grouping is by key, not by
-    * partition), only how many state stores hold it.
-    */
-  private def statePartsFor(s: SparkSession, explicit: Int): Int =
-    if (explicit > 0) explicit
-    else s.conf.getOption("spark.graft.stream.stateParts")
-      .map(_.toInt).filter(_ > 0).getOrElse(4)
-
-  /** Scratch base for snapshot-drain state (checkpoints, file-sink
-    * output). `spark.graft.stream.scratchDir` points it at fast local
-    * scratch on deployments that have it; default java.io.tmpdir.
-    * Measured r14: a tmpfs (/dev/shm) default was a WASH at sf0.1
-    * (six-stream same-JVM A/B, ratios 0.69-1.13 both directions — the
-    * page cache already absorbs the WAL's small writes) and RAM-backed
-    * scratch is a memory hazard at ladder scale (multi-GiB snapshot
-    * parquet per sample), so the default stays disk. Resumable
-    * production streams (runFilePipeline) take an explicit durable
-    * checkpoint dir from the caller and are unaffected.
-    */
-  private[graft] def scratchBase(s: SparkSession): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      s.conf.getOption("spark.graft.stream.scratchDir")
-        .getOrElse(System.getProperty("java.io.tmpdir")))
-
-  def runMemorySnapshot(
-      df: DataFrame, name: String, mode: String, stateParts: Int = 0): DataFrame = {
-    val s = df.sparkSession
-    s.catalog.dropTempView(name)
-    snapshotHook
-    val ckpt = java.nio.file.Files.createTempDirectory(scratchBase(s), "graft-msnap")
-    snapshotDirs.add(ckpt)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartsFor(s, stateParts).toString)
-    try {
-      val q = df.writeStream.format("memory").queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", s"$ckpt/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try { q.awaitTermination(); recordStateMetrics(q); recordDurations(q) } finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    s.table(name)
-  }
-
-  /** Drain a streaming frame into a FILE-sink snapshot and read it
-    * back — the scale-safe twin of [[runMemorySnapshot]] for
-    * DATA-PROPORTIONAL append outputs. A memory sink collects every
-    * micro-batch's rows to the driver (the r10 sf10 ladder killed
-    * ev48 exactly there: 2.1 GiB of task results vs the 1 GiB
-    * maxResultSize); the file sink keeps output distributed, which is
-    * also the shape a production deployment has (files/Kafka, never
-    * driver memory). Same stateParts contract and single-threaded-
-    * session assumption as runMemorySnapshot. Append mode only (the
-    * file sink's own constraint — complete-mode aggregates are tiny
-    * and belong on the memory sink).
-    */
-  /** Snapshot dirs created by [[runFileSnapshot]] and not yet
-    * reclaimed. At ladder scale each holds multi-GiB parquet +
-    * checkpoint state, so leaking them across bench samples fills
-    * /tmp (ADVICE r10); a shutdown hook sweeps whatever callers
+  /** Scratch dirs created by the snapshot drains and not yet
+    * reclaimed. At ladder scale a file snapshot holds multi-GiB
+    * parquet + checkpoint state, so leaking them across bench samples
+    * fills /tmp (ADVICE r10); a shutdown hook sweeps whatever callers
     * didn't reclaim explicitly.
     */
   private val snapshotDirs =
@@ -310,26 +230,78 @@ object StreamJobs {
     */
   def cleanupFileSnapshots(): Unit = deleteSnapshotDirs()
 
-  def runFileSnapshot(df: DataFrame, stateParts: Int = 0): DataFrame = {
+  /** Stateful-shuffle partitions of a snapshot drain (the r13
+    * posture; r14 measured 1 vs 4 as a wash at sf0.1). Partition
+    * count never changes WHAT a stateful operator computes (grouping
+    * is by key, not by partition), only how many state stores hold it.
+    */
+  private val StateParts = 4
+
+  /** The drain both snapshot runners share: run `df` to completion
+    * under AvailableNow with its checkpoint in a fresh tracked scratch
+    * dir under java.io.tmpdir, and return that dir. Shuffle partitions
+    * are trimmed to [[StateParts]] for the stream only: the conf is
+    * captured at stream start and the session value restored after
+    * termination (restoring right after `start()` races with async
+    * micro-batch planning).
+    *
+    * SINGLE-THREADED-SESSION ASSUMPTION: the shuffle-partition override
+    * is session-global while the stream drains, so any query planned
+    * concurrently on the same session would silently run at
+    * [[StateParts]] partitions, and concurrent snapshot calls could
+    * clobber each other's restore. All call sites (the streaming
+    * queries in the gated map, specs) run queries sequentially on the
+    * session; a stream built on a `SparkSession.cloneSession()` would
+    * isolate the conf, but the query must then start from the clone —
+    * i.e. the SOURCE frame has to be constructed on the clone, which
+    * this helper (handed an already-built frame) cannot do.
+    */
+  private def drain(df: DataFrame, prefix: String)(
+      sink: (DataStreamWriter[Row], String) => DataStreamWriter[Row]): String = {
     val s = df.sparkSession
     snapshotHook
-    val dirPath = java.nio.file.Files.createTempDirectory(scratchBase(s), "graft-fsnap")
-    snapshotDirs.add(dirPath)
-    val dir = dirPath.toString
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    snapshotDirs.add(dir)
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartsFor(s, stateParts).toString)
+    s.conf.set("spark.sql.shuffle.partitions", StateParts.toString)
     try {
-      val q = df.writeStream.format("parquet")
-        .option("path", s"$dir/out")
+      val q = sink(df.writeStream, dir.toString)
         .option("checkpointLocation", s"$dir/ckpt")
-        .outputMode("append")
         .trigger(Trigger.AvailableNow())
         .start()
       try { q.awaitTermination(); recordStateMetrics(q); recordDurations(q) } finally q.stop()
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    dir.toString
+  }
+
+  /** Drain a streaming frame into a memory-sink snapshot and return
+    * the snapshot table. The previous table of the same name is
+    * dropped first — append-mode memory sinks accumulate across
+    * restarts in one session.
+    */
+  def runMemorySnapshot(df: DataFrame, name: String, mode: String): DataFrame = {
+    df.sparkSession.catalog.dropTempView(name)
+    drain(df, "graft-msnap")((w, _) => w.format("memory").queryName(name).outputMode(mode))
+    df.sparkSession.table(name)
+  }
+
+  /** Drain a streaming frame into a FILE-sink snapshot and read it
+    * back — the scale-safe twin of [[runMemorySnapshot]] for
+    * DATA-PROPORTIONAL append outputs. A memory sink collects every
+    * micro-batch's rows to the driver (the r10 sf10 ladder killed
+    * ev48 exactly there: 2.1 GiB of task results vs the 1 GiB
+    * maxResultSize); the file sink keeps output distributed, which is
+    * also the shape a production deployment has (files/Kafka, never
+    * driver memory). Append mode only (the file sink's own
+    * constraint — complete-mode aggregates are tiny and belong on the
+    * memory sink).
+    */
+  def runFileSnapshot(df: DataFrame): DataFrame = {
+    val dir = drain(df, "graft-fsnap")((w, dir) =>
+      w.format("parquet").option("path", s"$dir/out").outputMode("append"))
     // zero-output streams leave no part files — the explicit schema
     // keeps the read valid either way
-    s.read.schema(df.schema).parquet(s"$dir/out")
+    df.sparkSession.read.schema(df.schema).parquet(s"$dir/out")
   }
 
   case class AsOfIn(k: Long, ts: Long, side: Int, v: Option[Double])
@@ -519,12 +491,6 @@ object StreamJobs {
       conf.map { case (k, v) => s"kafka.$k" -> v }
   }
 
-  /** File-based streaming run of the full reference pipeline:
-    * readStream(json logs) → extract → validate → filter → kafka-shape
-    * → partitioned parquet sink by topic (the no-broker stand-in for
-    * per-topic Kafka delivery; foreachBatch so the same batch writer
-    * serves both engines).
-    */
   /** The (log, emit-info) ingress row shape — BlockSource.schema's
     * twin for file sources.
     */
@@ -536,27 +502,4 @@ object StreamJobs {
       org.apache.spark.sql.types.StructField("block_height", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("shard_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("contract_account_id", org.apache.spark.sql.types.StringType)))
-
-  def runFilePipeline(
-      spark: SparkSession,
-      sourceDir: String,
-      outDir: String,
-      checkpointDir: String,
-      whitelist: Seq[String] = Nil,
-      blacklist: Seq[String] = Nil,
-      prefix: String = "near.events",
-      allTopic: String = "near.events.all"): org.apache.spark.sql.streaming.StreamingQuery = {
-    val logs = spark.readStream.schema(logSchema).json(sourceDir)
-    val events = EventStreams.filterContracts(
-      EventStreams.validated(EventStreams.extractEvents(logs)), whitelist, blacklist)
-    val records = EventStreams.toKafkaRecords(events, prefix, allTopic)
-    records.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").partitionBy("topic").parquet(outDir)
-      }
-      .start()
-  }
 }

@@ -35,10 +35,17 @@ class BenchDigestSpec extends AnyFunSuite {
   test("digest fits the driver's 2000-char tail beside sbt's closing line") {
     // worst realistic lap: 343 queries, all with two non-zero decimals,
     // several in the 10+ s range
-    val mins = syntheticMins(343, i => if (i % 40 == 0) 12.34 else 1.23 + (i % 9) * 0.11)
-    val line = Bench.digestJson(mins, mins.map(_._2).sum, "sf0.1")
-    // [info] prefix (7) + line + \n + "[success] ..." (~73) must be <= 2000
-    assert(line.length <= 1919, s"digest too long: ${line.length}")
+    val realistic = syntheticMins(343, i => if (i % 40 == 0) 12.34 else 1.23 + (i % 9) * 0.11)
+    // degenerate lap: every query at 123.45 s overflows even at 1
+    // decimal, so the digest falls back to the slowest-only shape
+    val degenerate = syntheticMins(343, _ => 123.45)
+    for (mins <- Seq(realistic, degenerate)) {
+      val line = Bench.digestJson(mins, mins.map(_._2).sum, "sf0.1")
+      // [info] prefix (7) + line + \n + "[success] ..." (~73) must be <= 2000
+      assert(line.length <= 1919, s"digest too long: ${line.length}")
+      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+      assert(node.get("n").asInt === 343 && node.get("queries").size === 5)
+    }
   }
 
   test("digest is well-formed JSON with the contract fields") {

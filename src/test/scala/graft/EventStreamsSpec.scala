@@ -56,6 +56,28 @@ class EventStreamsSpec extends SparkSpec {
     val x = flat.filter(col("event") === "nft_transfer").head
     assert(x.getAs[String]("new_owner_id") === "bob.near")
     assert(x.getAs[String]("token_id") === "1:1")
+
+    // one element schema serves both events, so each event must keep
+    // only its own role fields: a stray old_owner_id on a mint element
+    // and a stray owner_id on a transfer element stay null
+    val strayMint =
+      """EVENT_JSON:{"standard":"nep171","version":"1.0.0","event":"nft_mint","data":[{"owner_id":"carol.near","old_owner_id":"x.near","token_ids":["3:1"]}]}"""
+    val strayTransfer =
+      """EVENT_JSON:{"standard":"nep171","version":"1.0.0","event":"nft_transfer","data":[{"owner_id":"y.near","old_owner_id":"carol.near","new_owner_id":"dave.near","token_ids":["3:1"]}]}"""
+    val stray = EventStreams.flattenNep171(EventStreams.extractEvents(
+      Seq(logRow(strayMint), logRow(strayTransfer)).toDF("log", "receipt_id",
+        "block_timestamp", "block_height", "shard_id", "contract_account_id")))
+    assert(stray.columns.toSeq === Seq("standard", "version", "event", "emit_info",
+      "owner_id", "old_owner_id", "new_owner_id", "token_id", "memo"))
+    val byEvent = stray
+      .select(col("event"), to_json(struct(stray.columns.map(col).toSeq: _*)).as("json"))
+      .as[(String, String)].collect().toMap
+    assert(byEvent.size === 2)
+    assert(byEvent("nft_mint").contains("\"owner_id\":\"carol.near\""))
+    assert(!byEvent("nft_mint").contains("old_owner_id"))
+    assert(byEvent("nft_transfer").contains(
+      "\"old_owner_id\":\"carol.near\",\"new_owner_id\":\"dave.near\",\"token_id\":\"3:1\""))
+    assert(!byEvent("nft_transfer").contains("\"owner_id\""))
   }
 
   test("enrichMetadata broadcast-joins token metadata and derives _id") {

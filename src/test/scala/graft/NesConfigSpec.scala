@@ -140,4 +140,18 @@ class NesConfigSpec extends SparkSpec {
       NesConfig.fromProperties(Map("enrich_metadata" -> "true")).pipeline(logs)
     }
   }
+
+  test("an enriched streaming pipeline reads its source twice per micro-batch") {
+    // the envelope deliveries read once and the NEP-171 flatten reads
+    // once (one parse-and-explode for mint and transfer alike)
+    val src = java.nio.file.Files.createTempDirectory("graft-nesreads").toString
+    val logs = spark.readStream.schema(graft.streaming.StreamJobs.logSchema).json(src)
+    val tokens = Seq(("c0.near", "1:0", "T", "ipfs://m", "{}"))
+      .toDF("contract_account_id", "token_id", "title", "media", "extra")
+    val plan = NesConfig(enrichMetadata = true).pipeline(logs, Some(tokens))
+      .queryExecution.analyzed
+    val reads = plan.collectLeaves().count(
+      _.isInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingRelation])
+    assert(reads === 2)
+  }
 }

@@ -2,12 +2,12 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.streaming.{EventStreams, StreamJobs}
+import graft.streaming.{EventStreams, NesConfig, StreamJobs}
 
 class StreamJobsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("runFilePipeline streams logs → validated kafka-shaped topic partitions") {
+  test("runConfigured streams logs → validated kafka-shaped topic partitions") {
     val base = Files.createTempDirectory("graft-stream").toString
     val src = s"$base/src"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
     new java.io.File(src).mkdirs()
@@ -18,7 +18,7 @@ class StreamJobsSpec extends SparkSpec {
     Files.write(java.nio.file.Paths.get(s"$src/part0.json"),
       lines.mkString("\n").getBytes)
 
-    val q = StreamJobs.runFilePipeline(spark, src, out, ckpt)
+    val q = NesConfig.runConfigured(spark, NesConfig(), src, out, ckpt)
     q.awaitTermination(60000)
 
     val res = spark.read.parquet(out)
