@@ -3,10 +3,16 @@ import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 object Bench {
 
-  /** The bench session contract, factored out so BenchCompare's
-    * focused recheck (VERDICT r12 #1) measures under EXACTLY the lap
-    * contract — same extensions, dials, and env pins — instead of a
-    * hand-replicated session that drifts from this one.
+  /** Local cores of every bench, verify, tool and spec session:
+    * SPARK_GRAFT_CPUS, default 4.
+    */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The one session contract. Bench, Verify, the dev tools and the
+    * spec harness all run on it, so a DuckDB hash, a plan audit and a
+    * shuffle budget all describe the same plans — same extensions,
+    * dials and env pins. `ClusterConf` stays the separate deployment
+    * posture.
     */
   def buildSession(cpus: String): SparkSession = {
     // Spill-aware partition sizing (the 100 TB knob): cpus partitions
@@ -44,9 +50,9 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // opt-in state-store provider pin (same contract as Verify): lets
-    // the stream lane's ladder legs run under the RocksDB production
-    // posture. Unset = Spark's default heap provider.
+    // opt-in state-store provider pin: lets an oracle lap or a probe
+    // run under the RocksDB production posture (`rocksdb` expands to
+    // the Spark-shipped class). Unset = Spark's default heap provider.
     sys.env.get("SPARK_GRAFT_STATE_PROVIDER").foreach { p =>
       val cls =
         if (p == "rocksdb")
@@ -57,22 +63,45 @@ object Bench {
     spark
   }
 
+  /** SPARK_GRAFT_ONLY=q01,ev13: the comma-separated name prefixes
+    * that select a query subset for Bench and Verify. Unset selects
+    * every query.
+    */
+  def selected(name: String): Boolean = only.forall(_.exists(name.startsWith))
+
+  private val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
+    .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+
   /** One timed run of a query under the bench contract: a noop-format
     * write (count() lets Catalyst prune expression-heavy select
-    * lists), None on failure so a failed run's time-to-failure never
-    * becomes the min.
+    * lists), a Failure on error so a failed run's time-to-failure
+    * never becomes the min.
     */
   def sampleQuery(spark: SparkSession, sfDir: String, name: String,
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-      : Option[Double] = {
+      : scala.util.Try[Double] = {
     val t0 = System.nanoTime()
     try {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      Some((System.nanoTime() - t0) / 1e9)
+      scala.util.Success((System.nanoTime() - t0) / 1e9)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      None
+      scala.util.Failure(e)
     }
+  }
+
+  /** JSON string-body escape: quote, backslash and every control char
+    * (< 0x20), so builder-authored SQL or an exception message never
+    * breaks a consumer's json.load.
+    */
+  def esc(s: String): String = s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
   }
 
   /** The warmup contract: repeat the IO/codegen/JIT warmup block
@@ -118,7 +147,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = buildSession(cpus)
     // SPARK_GRAFT_TUNED=1: let the ENGINE set the scale dials from its
     // gated censuses (Tuned.session — q82 shuffle partitions, dd46
@@ -182,15 +210,8 @@ object Bench {
     // Drive with a noop-format write, not count(): count() lets
     // Catalyst prune the final project, so expression-heavy select
     // lists would go untimed.
-    // optional focus list for local iteration: SPARK_GRAFT_ONLY=q01,ev13
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names.exists(n.startsWith) }
-      case None => SparkEntry.queries
-    }
     def sample(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] =
-      sampleQuery(spark, sfDir, name, fn)
+      sampleQuery(spark, sfDir, name, fn).toOption
     // Same-day envelope probe (VERDICT r11 #5, opt-in via
     // SPARK_GRAFT_ENVELOPE_PROBE=1): BenchCompare's regression
     // envelope was a constant from a hand-measured A/B — fine until
@@ -223,7 +244,8 @@ object Bench {
     // sample count override for scale-ladder legs (a 100x corpus pays
     // minutes per sample; one honest run beats three aborted ones)
     val nSamples = sys.env.get("SPARK_GRAFT_SAMPLES").map(_.toInt).getOrElse(3)
-    val firstPass = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val lap = SparkEntry.queries.filter(kv => selected(kv._1)).toSeq.sortBy(_._1)
+    val firstPass = lap.map { case (name, fn) =>
       val ts = (1 to nSamples).flatMap(_ => sample(name, fn))
       // reclaim file-snapshot dirs (ev48-class streams) between
       // queries — each sample re-drains its own fresh dir, so at

@@ -26,254 +26,135 @@ object SparkEntry {
     EventPipeline.queries("ev13_pipeline_e2e")(spark, "/root/testdata/sf0.001")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Seq[Map[String, (SparkSession, String) => DataFrame]](
-      CoreAnalytics.queries,
-      EventPipeline.queries,
-      TextAnalysis.queries,
-      Dedup.queries,
-      Similarity.queries,
-      Similarity.queries2,
-      Multimodal.queries,
-      Multimodal.queries2,
-      Curation.queries,
-      Round3.queries,
-      Round4.queries,
-      Round4b.queries,
-      Round5.queries,
-      Round5b.queries,
-      Round5c.queries,
-      Round5d.queries,
-      Round5e.queries,
-      Round5f.queries,
-      Round5g.queries,
-      Round5h.queries,
-      Round5i.queries,
-      Round5j.queries,
-      Round5k.queries,
-      Round5l.queries,
-      Round5m.queries,
-      Round5n.queries,
-      Round5o.queries,
-      Round5p.queries,
-      Round5q.queries,
-      Round5r.queries,
-      Round5s.queries,
-      Round5t.queries,
-      Round5u.queries,
-      Round6.queries,
-      Round6b.queries,
-      Round6c.queries,
-      Round6d.queries,
-      Round6e.queries,
-      Round6f.queries,
-      Round6g.queries,
-      Round6h.queries,
-      Round6i.queries,
-      Round6j.queries,
-      Round6k.queries,
-      Round6l.queries,
-      Round6m.queries,
-      Round6n.queries,
-      Round6o.queries,
-      Round6p.queries,
-      Round6q.queries,
-      Round6r.queries,
-      Round6s.queries,
-      Round6t.queries,
-      Round6u.queries,
-      Round6v.queries,
-      Round6w.queries,
-      Round6x.queries,
-      Round6y.queries,
-      Round6z.queries,
-      Round6aa.queries,
-      Round6ab.queries,
-      Round6ac.queries,
-      Round6ad.queries,
-      Round6ae.queries,
-      Round6af.queries,
-      Round6ag.queries,
-      Round6ah.queries,
-      Round6ai.queries,
-      Round6aj.queries,
-      Round6ak.queries,
-      Round6al.queries,
-      Round6am.queries,
-      Round6an.queries,
-      Round6ao.queries,
-      Round6ap.queries,
-      Round6aq.queries,
-      Round6ar.queries,
-      Round6as.queries,
-      Round6at.queries,
-      Round6au.queries,
-      Round6av.queries,
-      Round6aw.queries,
-      Round6ax.queries,
-      Round6ay.queries,
-      Round6az.queries,
-      Round6ba.queries,
-      Round6bb.queries,
-      Round6bc.queries,
-      Round6bd.queries,
-      Round6be.queries,
-      Round6bf.queries,
-      Round7.queries,
-      Round7b.queries,
-      Round7c.queries,
-      Round7d.queries,
-      Round7e.queries,
-      Round8.queries,
-      Round8b.queries,
-      Round8c.queries,
-      Round8d.queries,
-      Round8e.queries,
-      Round8f.queries,
-      Round8g.queries,
-      Round8h.queries,
-      Round8i.queries,
-      Round8j.queries,
-      Round8k.queries,
-      Round8l.queries,
-      Round8m.queries,
-      Round8n.queries,
-      Round8o.queries,
-      Round8p.queries,
-      Round8q.queries,
-      Round8r.queries,
-      Round8s.queries,
-      Round8t.queries,
-      Round8u.queries,
-      Round8v.queries,
-      Round8w.queries,
-      Round9.queries,
-      Round10.queries,
-      Round11.queries,
-      Round13.queries).reduce(_ ++ _)
+  /** Every operator object, named once. Each query name is owned by
+    * exactly one object (QueriesSmokeSpec checks that no name is
+    * shadowed).
+    */
+  val operators: Seq[Operators] = Seq(
+    CoreAnalytics,
+    EventPipeline,
+    TextAnalysis,
+    Dedup,
+    Similarity,
+    Multimodal,
+    Curation,
+    Round3,
+    Round4,
+    Round4b,
+    Round5,
+    Round5b,
+    Round5c,
+    Round5d,
+    Round5e,
+    Round5f,
+    Round5g,
+    Round5h,
+    Round5i,
+    Round5j,
+    Round5k,
+    Round5l,
+    Round5m,
+    Round5n,
+    Round5o,
+    Round5p,
+    Round5q,
+    Round5r,
+    Round5s,
+    Round5t,
+    Round5u,
+    Round6,
+    Round6b,
+    Round6c,
+    Round6d,
+    Round6e,
+    Round6f,
+    Round6g,
+    Round6h,
+    Round6i,
+    Round6j,
+    Round6k,
+    Round6l,
+    Round6m,
+    Round6n,
+    Round6o,
+    Round6p,
+    Round6q,
+    Round6r,
+    Round6s,
+    Round6t,
+    Round6u,
+    Round6v,
+    Round6w,
+    Round6x,
+    Round6y,
+    Round6z,
+    Round6aa,
+    Round6ab,
+    Round6ac,
+    Round6ad,
+    Round6ae,
+    Round6af,
+    Round6ag,
+    Round6ah,
+    Round6ai,
+    Round6aj,
+    Round6ak,
+    Round6al,
+    Round6am,
+    Round6an,
+    Round6ao,
+    Round6ap,
+    Round6aq,
+    Round6ar,
+    Round6as,
+    Round6at,
+    Round6au,
+    Round6av,
+    Round6aw,
+    Round6ax,
+    Round6ay,
+    Round6az,
+    Round6ba,
+    Round6bb,
+    Round6bc,
+    Round6bd,
+    Round6be,
+    Round6bf,
+    Round7,
+    Round7b,
+    Round7c,
+    Round7d,
+    Round7e,
+    Round8,
+    Round8b,
+    Round8c,
+    Round8d,
+    Round8e,
+    Round8f,
+    Round8g,
+    Round8h,
+    Round8i,
+    Round8j,
+    Round8k,
+    Round8l,
+    Round8m,
+    Round8n,
+    Round8o,
+    Round8p,
+    Round8q,
+    Round8r,
+    Round8s,
+    Round8t,
+    Round8u,
+    Round8v,
+    Round8w,
+    Round9,
+    Round10,
+    Round11,
+    Round13)
 
-  def oracleSql: Map[String, String] =
-    Seq[Map[String, String]](
-      CoreAnalytics.oracles,
-      EventPipeline.oracles,
-      TextAnalysis.oracles,
-      Dedup.oracles,
-      Similarity.oracles,
-      Similarity.oracles2,
-      Multimodal.oracles,
-      Curation.oracles,
-      Round3.oracles,
-      Round4.oracles,
-      Round4b.oracles,
-      Round5.oracles,
-      Round5b.oracles,
-      Round5c.oracles,
-      Round5d.oracles,
-      Round5e.oracles,
-      Round5f.oracles,
-      Round5g.oracles,
-      Round5h.oracles,
-      Round5i.oracles,
-      Round5j.oracles,
-      Round5k.oracles,
-      Round5l.oracles,
-      Round5m.oracles,
-      Round5n.oracles,
-      Round5o.oracles,
-      Round5p.oracles,
-      Round5q.oracles,
-      Round5r.oracles,
-      Round5s.oracles,
-      Round5t.oracles,
-      Round5u.oracles,
-      Round6.oracles,
-      Round6b.oracles,
-      Round6c.oracles,
-      Round6d.oracles,
-      Round6e.oracles,
-      Round6f.oracles,
-      Round6g.oracles,
-      Round6h.oracles,
-      Round6i.oracles,
-      Round6j.oracles,
-      Round6k.oracles,
-      Round6l.oracles,
-      Round6m.oracles,
-      Round6n.oracles,
-      Round6o.oracles,
-      Round6p.oracles,
-      Round6q.oracles,
-      Round6r.oracles,
-      Round6s.oracles,
-      Round6t.oracles,
-      Round6u.oracles,
-      Round6v.oracles,
-      Round6w.oracles,
-      Round6x.oracles,
-      Round6y.oracles,
-      Round6z.oracles,
-      Round6aa.oracles,
-      Round6ab.oracles,
-      Round6ac.oracles,
-      Round6ad.oracles,
-      Round6ae.oracles,
-      Round6af.oracles,
-      Round6ag.oracles,
-      Round6ah.oracles,
-      Round6ai.oracles,
-      Round6aj.oracles,
-      Round6ak.oracles,
-      Round6al.oracles,
-      Round6am.oracles,
-      Round6an.oracles,
-      Round6ao.oracles,
-      Round6ap.oracles,
-      Round6aq.oracles,
-      Round6ar.oracles,
-      Round6as.oracles,
-      Round6at.oracles,
-      Round6au.oracles,
-      Round6av.oracles,
-      Round6aw.oracles,
-      Round6ax.oracles,
-      Round6ay.oracles,
-      Round6az.oracles,
-      Round6ba.oracles,
-      Round6bb.oracles,
-      Round6bc.oracles,
-      Round6bd.oracles,
-      Round6be.oracles,
-      Round6bf.oracles,
-      Round7.oracles,
-      Round7b.oracles,
-      Round7c.oracles,
-      Round7d.oracles,
-      Round7e.oracles,
-      Round8.oracles,
-      Round8b.oracles,
-      Round8c.oracles,
-      Round8d.oracles,
-      Round8e.oracles,
-      Round8f.oracles,
-      Round8g.oracles,
-      Round8h.oracles,
-      Round8i.oracles,
-      Round8j.oracles,
-      Round8k.oracles,
-      Round8l.oracles,
-      Round8m.oracles,
-      Round8n.oracles,
-      Round8o.oracles,
-      Round8p.oracles,
-      Round8q.oracles,
-      Round8r.oracles,
-      Round8s.oracles,
-      Round8t.oracles,
-      Round8u.oracles,
-      Round8v.oracles,
-      Round8w.oracles,
-      Round9.oracles,
-      Round10.oracles,
-      Round11.oracles,
-      Round13.oracles).reduce(_ ++ _)
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    operators.flatMap(_.queries).toMap
+
+  def oracleSql: Map[String, String] = operators.flatMap(_.oracles).toMap
 }

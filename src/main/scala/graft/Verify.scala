@@ -1,67 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. Runs on the
+  * bench session contract (Bench.buildSession) and honours the same
+  * SPARK_GRAFT_ONLY subset, which also restricts oracle_sql.json so
+  * local_verify compares the same queries; unset, the full surface
+  * runs.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same optimizer posture as the bench session (Bench.buildSession
-      // r13 opt): semantically neutral — the rule only infers filters
-      // explode already implies — but keeps verify and bench plans
-      // identical
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // opt-in state-store provider pin (VERDICT r10 #5): lets the
-    // RocksDB production posture run the SAME oracle lap as the
-    // default heap provider. The driver sets no env, so gated laps
-    // are unaffected; `rocksdb` expands to the Spark-shipped class.
-    sys.env.get("SPARK_GRAFT_STATE_PROVIDER").foreach { p =>
-      val cls =
-        if (p == "rocksdb")
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        else p
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass", cls)
-    }
+    val spark = Bench.buildSession(Bench.cpus)
     new java.io.File(outDir).mkdirs()
-    // optional focus list for local iteration (same contract as Bench):
-    // SPARK_GRAFT_ONLY=dd07,dd09 dumps just those queries AND restricts
-    // oracle_sql.json to them so local_verify compares the same subset.
-    // The driver sets no env, so the gate always runs the full surface.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def selected(name: String): Boolean =
-      only.forall(_.exists(name.startsWith))
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
+    SparkEntry.queries.filter(kv => Bench.selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
+    def q(s: String): String = "\"" + Bench.esc(s) + "\""
+    val json = SparkEntry.oracleSql.filter(kv => Bench.selected(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

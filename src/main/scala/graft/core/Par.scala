@@ -11,21 +11,16 @@ import org.apache.spark.sql.DataFrame
   * per-row compute cost dominates the cost of moving the rows, a
   * round-robin repartition to the cluster's parallelism is the
   * standard fix: pay one cheap shuffle of the narrow input, run the
-  * hot stage on every core. At 100 TB inputs arrive as thousands of
-  * splits and this becomes unnecessary — `spark.graft.scatter.partitions=0`
-  * disables it without touching operator code.
+  * hot stage on every core.
   */
 object Par {
 
-  /** Round-robin repartition to `spark.graft.scatter.partitions`
-    * (default: defaultParallelism; `0` disables).
-    */
-  def scatter(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    val n = s.conf.getOption("spark.graft.scatter.partitions")
-      .map(_.toInt).getOrElse(s.sparkContext.defaultParallelism)
-    if (n <= 0) df else df.repartition(n)
-  }
+  /** Input bytes per [[scatterBy]] partition. */
+  private val TargetBytes = 256L * 1024
+
+  /** Round-robin repartition to defaultParallelism. */
+  def scatter(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
   /** Keyed scatter: hash-repartition on `keys` to a SIZE-AWARE
     * partition count. Two properties make this the right shape ahead
@@ -50,7 +45,7 @@ object Par {
     * clamp(leafInputBytes / targetBytes, 1, defaultParallelism),
     * where leafInputBytes is the sum of the frame's source-relation
     * sizes (file-relation statistics — truthful, unlike post-join
-    * estimates). With the default 256 KB target a 3 MB sf0.1 corpus
+    * estimates). With the 256 KB target a 3 MB sf0.1 corpus
     * scatters ~12 ways; a 10x ladder rung (or any production input)
     * saturates defaultParallelism, so the dial vanishes exactly where
     * AQE would stop coalescing anyway — scale-adaptive, not a
@@ -60,26 +55,12 @@ object Par {
     * a tiny frame saturates every core with real compute — the
     * driver's 32-core lap confirmed all three improved while dd08
     * regressed.
-    *
-    * `spark.graft.scatter.partitions=0` restores the planner-owned
-    * exchange without touching operator code; a positive value pins
-    * the count for both helpers (ladder/experiment override);
-    * `spark.graft.scatter.targetBytes` tunes the density.
     */
   def scatterBy(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
-    val s = df.sparkSession
-    s.conf.getOption("spark.graft.scatter.partitions").map(_.toInt) match {
-      case Some(n) if n <= 0 => df
-      case Some(n) => df.repartition(n, keys: _*)
-      case None =>
-        val target = s.conf.getOption("spark.graft.scatter.targetBytes")
-          .map(_.toLong).getOrElse(256L * 1024)
-        val bytes = leafInputBytes(df)
-        val byData = (bytes + target - 1) / math.max(target, 1L)
-        val n = math.max(1L, math.min(byData,
-          s.sparkContext.defaultParallelism.toLong)).toInt
-        df.repartition(n, keys: _*)
-    }
+    val byData = (leafInputBytes(df) + TargetBytes - 1) / TargetBytes
+    val n = math.max(1L, math.min(byData,
+      df.sparkSession.sparkContext.defaultParallelism.toLong)).toInt
+    df.repartition(n, keys: _*)
   }
 
   /** Keyed scatter at FULL parallelism — the [[scatterBy]] escape
@@ -87,15 +68,10 @@ object Par {
     * a byte-tiny frame saturates every core with real compute (dd40's
     * per-pair simhash cap-sweep fold: the size-aware cap measured
     * 2.98 s vs 1.89 s at full fan-out in a same-JVM A/B, the inverse
-    * of dd08/dd15). Same AQE-exemption and kill-switch semantics as
-    * [[scatterBy]].
+    * of dd08/dd15). Same AQE exemption as [[scatterBy]].
     */
-  def scatterByDense(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
-    val s = df.sparkSession
-    val n = s.conf.getOption("spark.graft.scatter.partitions")
-      .map(_.toInt).getOrElse(s.sparkContext.defaultParallelism)
-    if (n <= 0) df else df.repartition(n, keys: _*)
-  }
+  def scatterByDense(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, keys: _*)
 
   /** Sum of the frame's leaf-relation size statistics — file sizes
     * for scans, which is the only estimate that stays truthful above

@@ -21,7 +21,7 @@ import graft.functions.Hashing
   * broadcast explicitly; fact-side aggregations are single-shuffle
   * with map-side partials; windows partition on high-cardinality keys.
   */
-object CoreAnalytics {
+object CoreAnalytics extends Operators {
 
   private def decSum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     sum(c.cast("decimal(18,6)")).cast("double")

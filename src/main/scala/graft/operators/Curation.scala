@@ -16,7 +16,7 @@ import graft.functions.{Det, Hashing}
   * hash-matches, and iterative algorithms (connected components)
   * checkpoint between rounds so lineage stays bounded.
   */
-object Curation {
+object Curation extends Operators {
 
   /** Token-budget sequence packing (LLM pretraining batch shaping):
     * documents are streamed per language in doc_id order, token counts
@@ -260,7 +260,7 @@ object Curation {
         .groupBy(col("h")).agg(count(lit(1)).as("dfc"))
       // keyed scatter (r13 opt): the DF-order rebuild — collect_list +
       // array_sort per doc — is compute-bound but byte-tiny, so AQE
-      // coalesced its exchange to ONE task (StageProbe: 1.5 s single-
+      // coalesced its exchange to ONE task (Probe stage census: 1.5 s single-
       // task stage). Partitioning on doc_id (a subset of the grouping
       // keys) replaces the same exchange with an AQE-exempt count.
       val ds = Dedup.barrierAlso(graft.core.Par.scatterBy(ds0
@@ -277,7 +277,7 @@ object Curation {
       // table only for the surviving candidate id pairs
       // keyed scatter on the prefix-element key (r13 opt): the
       // candidate self-join's exchanges are byte-tiny → AQE folded the
-      // position-filter + distinct stage to one task (StageProbe:
+      // position-filter + distinct stage to one task (Probe stage census:
       // 1.1 s). Both join sides derive from this frame, so one keyed
       // scatter co-partitions the self-join at full parallelism with
       // NO join-side exchanges (2 exchanges → 1 here).

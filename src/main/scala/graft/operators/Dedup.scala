@@ -20,7 +20,7 @@ import graft.functions.Hashing
   * pure 64-bit arithmetic, codegen'd, no per-family md5. Jaccard
   * compares hashed-shingle long arrays, not string arrays.
   */
-object Dedup {
+object Dedup extends Operators {
 
   // canonical definitions live in graft.functions.Hashing (shared
   // with the native MinhashSigExpr, which cannot depend on this

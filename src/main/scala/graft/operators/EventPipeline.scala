@@ -19,7 +19,7 @@ import graft.core.Tables
   * per-token RPC metadata lookup becomes a broadcast dimension join —
   * the only formulations that survive 100 TB.
   */
-object EventPipeline {
+object EventPipeline extends Operators {
 
   /** Topic prefix, nes.toml `near_events_topic_prefix` analog. */
   val TopicPrefix = "near.events"

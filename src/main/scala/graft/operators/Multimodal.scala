@@ -19,7 +19,7 @@ import graft.core.Tables
   * the same real plumbing, with codec init amortized per partition
   * and payloads never passing through the driver.
   */
-object Multimodal {
+object Multimodal extends Operators {
 
   /** Canonical multimodal record schema: opaque payload + metadata. */
   val mediaSchema: StructType = StructType(Seq(
@@ -77,7 +77,9 @@ object Multimodal {
           sum(col("byte_len")).as("total_bytes"),
           min(col("digest")).as("min_digest"))
         .orderBy(col("source"))
-    }
+    },
+
+    "mm02_decode_features" -> (mm02 _)
   )
 
   /** The mapPartitions decode path as a gated query: per-item features
@@ -532,9 +534,6 @@ object Multimodal {
     }
     spark.createDataFrame(rdd, outSchema)
   }
-
-  def queries2: Map[String, (SparkSession, String) => DataFrame] =
-    Map("mm02_decode_features" -> (mm02 _))
 
   def oracles: Map[String, String] = Map(
     "mm02_decode_features" ->

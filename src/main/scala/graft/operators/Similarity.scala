@@ -14,7 +14,7 @@ import graft.core.Tables
   * at 100 TB the candidate set is ~1/256 of the corpus and the bucket
   * column can be a partition/cluster key for pruning.
   */
-object Similarity {
+object Similarity extends Operators {
 
   /** Dot product of two double arrays — native fused-loop expression
     * ([[graft.functions.DotExpr]]); bit-identical to the composable
@@ -61,6 +61,20 @@ object Similarity {
         .select(col("vec_id"), col("bucket"), col("cos_sim"))
         .orderBy(col("cos_sim").desc, col("vec_id"))
         .limit(5)
+    },
+
+    "ss03_ann_ivf" -> { (s, d) =>
+      val assigned = assignCells(s, d)
+      val q = assigned.filter(col("vec_id") === 0)
+        .select(col("emb").as("q_emb"), col("norm").as("q_norm"), col("cell").as("q_cell"))
+      assigned.filter(col("vec_id") =!= 0)
+        .crossJoin(broadcast(q))
+        .filter(col("cell") === col("q_cell"))
+        .withColumn("cos_sim", graft.functions.Det.trunc4(
+          dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm"))))
+        .select(col("vec_id"), col("cell"), col("cos_sim"))
+        .orderBy(col("cos_sim").desc, col("vec_id"))
+        .limit(5)
     }
   )
 
@@ -96,22 +110,6 @@ object Similarity {
       .select(col("vec_id"), col("label"), col("emb"), col("norm"), col("c_id").as("cell"))
   }
 
-  def queries2: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ss03_ann_ivf" -> { (s, d) =>
-      val assigned = assignCells(s, d)
-      val q = assigned.filter(col("vec_id") === 0)
-        .select(col("emb").as("q_emb"), col("norm").as("q_norm"), col("cell").as("q_cell"))
-      assigned.filter(col("vec_id") =!= 0)
-        .crossJoin(broadcast(q))
-        .filter(col("cell") === col("q_cell"))
-        .withColumn("cos_sim", graft.functions.Det.trunc4(
-          dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm"))))
-        .select(col("vec_id"), col("cell"), col("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-        .limit(5)
-    }
-  )
-
   private[operators] val duckCos =
     "floor((list_sum(list_transform(range(len(%s)), i -> %s[i+1] * %s[i+1])) / (%s * %s)) * 10000) / 10000"
 
@@ -131,17 +129,6 @@ object Similarity {
        |        ORDER BY $assignCos DESC, c.c_id) AS rn
        |    FROM e, cents c) WHERE rn = 1)""".stripMargin
   }
-
-  def oracles2: Map[String, String] = Map(
-    "ss03_ann_ivf" -> {
-      val queryCos = duckCos.format("emb", "emb", "q_emb", "norm", "q_norm")
-      s"""$duckAssignedCtes,
-         |q AS (SELECT emb AS q_emb, norm AS q_norm, cell AS q_cell
-         |      FROM assigned WHERE vec_id = 0)
-         |SELECT vec_id, cell, $queryCos AS cos_sim
-         |FROM assigned, q WHERE vec_id <> 0 AND cell = q_cell
-         |ORDER BY cos_sim DESC, vec_id LIMIT 5""".stripMargin
-    })
 
   def oracles: Map[String, String] = Map(
     "ss01_topk_cosine" ->
@@ -164,6 +151,16 @@ object Similarity {
          |  floor((list_sum(list_transform(range(len(emb)), i -> emb[i+1] * q_emb[i+1]))
          |        / (norm * q_norm)) * 10000) / 10000 AS cos_sim
          |FROM e, q WHERE vec_id <> 0 AND bucket = q_bucket
+         |ORDER BY cos_sim DESC, vec_id LIMIT 5""".stripMargin,
+
+    "ss03_ann_ivf" -> {
+      val queryCos = duckCos.format("emb", "emb", "q_emb", "norm", "q_norm")
+      s"""$duckAssignedCtes,
+         |q AS (SELECT emb AS q_emb, norm AS q_norm, cell AS q_cell
+         |      FROM assigned WHERE vec_id = 0)
+         |SELECT vec_id, cell, $queryCos AS cos_sim
+         |FROM assigned, q WHERE vec_id <> 0 AND cell = q_cell
          |ORDER BY cos_sim DESC, vec_id LIMIT 5""".stripMargin
+    }
   )
 }

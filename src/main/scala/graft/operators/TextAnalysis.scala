@@ -12,7 +12,7 @@ import graft.functions.Hashing
   * parquet-scan → project pipeline with column pruning: only `text`
   * (+ grouping keys) is read.
   */
-object TextAnalysis {
+object TextAnalysis extends Operators {
 
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 

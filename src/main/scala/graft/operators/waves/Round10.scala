@@ -31,7 +31,7 @@ import graft.functions.Hashing
   * operators are the brief's 100 TB training-pipeline arms
   * (similarity-search hub diagnostics, multimodal decode).
   */
-object Round10 {
+object Round10 extends Operators {
 
   private val Fx = 10000L
 

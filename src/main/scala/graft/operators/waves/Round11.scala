@@ -30,7 +30,7 @@ import graft.core.Tables
   * Reference tie: the reference's surface is complete (r7); this is
   * the brief's 100 TB dedup arm hardening its own planning loop.
   */
-object Round11 {
+object Round11 extends Operators {
 
   /** Candidate pairs a deployment budgets per corpus vector: keeps
     * the verify join O(n) at any scale. 128 clears the per-vector

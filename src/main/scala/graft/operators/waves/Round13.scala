@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * [[graft.streaming.StateV2]] carrying the processors and
   * StateV2Spec pinning exact v1↔v2 output parity.
   */
-object Round13 {
+object Round13 extends Operators {
 
   /** ev83's session gap (seconds) — ev09/ev51's batch convention. */
   private val GapSec = 1800L

@@ -20,7 +20,7 @@ import graft.functions.{Det, Hashing}
   * decimal-exact sums or pure int ratios, every query carries an
   * explicit ORDER BY for the oracle hash compare.
   */
-object Round3 {
+object Round3 extends Operators {
 
   private def toks(c: Column): Column = split(trim(c), "\\s+")
 

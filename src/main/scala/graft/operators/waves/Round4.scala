@@ -13,7 +13,7 @@ import graft.functions.{Det, Hashing}
   * stats.rs field (the in-flight gauge) re-expressed as a partitioned
   * sweep-line.
   */
-object Round4 {
+object Round4 extends Operators {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- dd13: banded-LSH recall/precision evaluation -----------------

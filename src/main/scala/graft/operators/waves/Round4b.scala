@@ -15,7 +15,7 @@ import graft.functions.{Det, Hashing}
   * hash-matches, broadcast only for frames that are provably small
   * (per-dim stats, packed model rows).
   */
-object Round4b {
+object Round4b extends Operators {
 
   /** ev27: events/user/day a client may send before throttling. */
   val RateLimit = 5

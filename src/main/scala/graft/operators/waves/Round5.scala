@@ -12,7 +12,7 @@ import graft.functions.Det
   * occupancy (the dd07 scale lesson as a measurable harness) and
   * per-key skew (the salted-join decision input).
   */
-object Round5 {
+object Round5 extends Operators {
 
   /** ev29: every 4th metadata key "fails its lookup" — the
     * deterministic stand-in for token.rs's RPC failures, so the oracle

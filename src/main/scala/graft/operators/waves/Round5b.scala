@@ -19,7 +19,7 @@ import graft.functions.{Det, Hashing}
   * are provably tiny frames (a 1-row total, a lang-count allocation, a
   * 64-row codebook).
   */
-object Round5b {
+object Round5b extends Operators {
 
   /** pk04: a token ends a chunk when hash64(token) % CdcDivisor == 0 —
     * expected chunk length = the divisor. 16 keeps chunk counts

@@ -16,7 +16,7 @@ import graft.functions.{Det, Hashing}
   * fixed-point/integer arithmetic wherever the DuckDB oracle must
   * hash-match, broadcasts only for 1-row bounds or top-K lists.
   */
-object Round5c {
+object Round5c extends Operators {
 
   /** q39: rolling window width in days (MAU-over-7 a.k.a. WAU). */
   val MauDays = 7

@@ -20,7 +20,7 @@ import graft.functions.Det
   * hash-match, and the only unpartitioned windows run over keys-sized
   * or constant-sized frames.
   */
-object Round5d {
+object Round5d extends Operators {
 
   /** tx19: the stopword probe list (C4/Gopher-style rule filtering
     * uses a tiny fixed list — presence of common function words is

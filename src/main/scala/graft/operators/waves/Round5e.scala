@@ -17,7 +17,7 @@ import graft.functions.Det
   * recipe (×|candidate lengths|). Ratios are fixed-point integers so
   * the oracle hash-matches without float tolerance.
   */
-object Round5e {
+object Round5e extends Operators {
 
   /** q41: how many top affinity pairs to report. */
   val BasketTopK = 20

@@ -20,7 +20,7 @@ import graft.functions.Hashing
   * ratios are fixed-point integers (`div`), so the oracle hash-matches
   * with no float tolerance.
   */
-object Round5f {
+object Round5f extends Operators {
 
   /** ev32: ids per continuity bucket. Buckets tile the height space,
     * so per-bucket missing counts + boundary gaps partition ALL

@@ -20,7 +20,7 @@ import graft.functions.Hashing
   * content-stable hash64 mod N — the manifest is an N-row frame and
   * the only broadcast is the 1-row corpus total.
   */
-object Round5g {
+object Round5g extends Operators {
 
   /** ev33: one in RedeliverMod events is delivered twice (the
     * deterministic stand-in for at-least-once redelivery). */

@@ -19,7 +19,7 @@ import graft.functions.{Det, Hashing}
   * is dd12's estimator-vs-exact harness swept over signature prefixes
   * (bounded ×|Ks| explode) in pure integer arithmetic.
   */
-object Round5h {
+object Round5h extends Operators {
 
   /** ev34: journey prefix length and how many paths to report. */
   val PathLen = 3

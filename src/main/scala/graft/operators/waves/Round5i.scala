@@ -18,7 +18,7 @@ import graft.functions.{Det, Hashing}
   * — the pre-flight that predicts MinHash candidate blowup from
   * boilerplate shingles before any pair join runs.
   */
-object Round5i {
+object Round5i extends Operators {
 
   /** pk08: epochs to materialize and the shard fan-out. */
   val Epochs: Seq[Int] = Seq(0, 1)

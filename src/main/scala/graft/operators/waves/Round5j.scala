@@ -18,7 +18,7 @@ import graft.core.Tables
   * hash-aggregates over the facts with windows/broadcasts only on
   * bounded group tables (buckets, types×168 cells, rank octaves).
   */
-object Round5j {
+object Round5j extends Operators {
 
   /** Fixed-point scale shared by the share/ratio columns. */
   private val Fx = 1000000L

@@ -24,7 +24,7 @@ import graft.functions.Hashing
   * diversity measure, rational in the counts, so the census stays
   * integer-exact where an entropy would drag in libm.
   */
-object Round5k {
+object Round5k extends Operators {
 
   private val Fx = 1000000L
 

@@ -20,7 +20,7 @@ import graft.functions.Det
   * a bounded octave table; the recall curve's per-radius shortlists
   * are TakeOrdered branches off ONE barriered scored frame.
   */
-object Round5l {
+object Round5l extends Operators {
 
   private val Fx = 1000000L
 

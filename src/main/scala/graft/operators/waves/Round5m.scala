@@ -16,7 +16,7 @@ import graft.core.Tables
   * audit every serving deployment runs before switching an index
   * live.
   */
-object Round5m {
+object Round5m extends Operators {
 
   private val Fx = 1000000L
 

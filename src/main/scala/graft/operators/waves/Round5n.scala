@@ -17,7 +17,7 @@ import graft.functions.Det
   * dims-sized table with integer-fixed-point sums (Σv² through
   * decimal, the ev28 recipe), so mean/variance are engine-exact.
   */
-object Round5n {
+object Round5n extends Operators {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- ev38: burst alerting THROUGH Structured Streaming ------------

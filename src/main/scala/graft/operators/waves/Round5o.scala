@@ -18,7 +18,7 @@ import graft.core.Tables
   * length deltas — all ASCII, verified) folded to a sources-sized
   * census.
   */
-object Round5o {
+object Round5o extends Operators {
 
   private val Fx = 1000000L
 

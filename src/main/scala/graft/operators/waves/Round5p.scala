@@ -17,7 +17,7 @@ import graft.core.Tables
   * size-keyed census — windows partition by user, the census table
   * is bounded by the max session length.
   */
-object Round5p {
+object Round5p extends Operators {
 
   private val Fx = 1000000L
 

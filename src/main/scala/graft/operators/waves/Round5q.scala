@@ -21,7 +21,7 @@ import graft.functions.Hashing
   * the value is the PROOF (oracle + spec) that the composition of
   * the shipped stages is itself exactly reproducible.
   */
-object Round5q {
+object Round5q extends Operators {
 
   private val Fx = 1000000L
 

@@ -16,7 +16,7 @@ import graft.core.Tables
   * and a thresholds-sized census — the dup-rate-vs-threshold curve
   * that decides how aggressive the dedup pass should be.
   */
-object Round5r {
+object Round5r extends Operators {
 
   private val Fx = 1000000L
 

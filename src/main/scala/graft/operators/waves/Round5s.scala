@@ -19,7 +19,7 @@ import graft.functions.Det
   * difference between "recall was 0.7 on the vector we happened to
   * pick" and a defensible index decision.
   */
-object Round5s {
+object Round5s extends Operators {
 
   private val Fx = 1000000L
 

@@ -17,7 +17,7 @@ import graft.core.Tables
   * the deterministic fixed-point treatment every gated money column
   * uses), month indexes are year·12+month integer arithmetic.
   */
-object Round5t {
+object Round5t extends Operators {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- q45: cohort LTV curves ---------------------------------------

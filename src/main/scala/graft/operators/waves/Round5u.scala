@@ -18,7 +18,7 @@ import graft.functions.Det
   * a cluster is the signal to re-run Lloyd (ss09) or split the
   * cell (ss14's balance view).
   */
-object Round5u {
+object Round5u extends Operators {
 
   private val Fx = 1000000L
 

@@ -21,7 +21,7 @@ import graft.functions.{Det, Hashing}
   * deterministic hash64 so the manifest is reproducible on any
   * cluster layout.
   */
-object Round6 {
+object Round6 extends Operators {
 
   private val Fx = 1000000L
   private val DayUs = 86400000000L

@@ -20,7 +20,7 @@ import graft.functions.Hashing
   * reads two 256-row summaries, never the fact tables, exactly how a
   * 100 TB table pair is diffed without a row-level join.
   */
-object Round6aa {
+object Round6aa extends Operators {
 
   private val Fx = 1000000L
 

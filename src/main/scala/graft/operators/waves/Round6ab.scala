@@ -16,7 +16,7 @@ import org.apache.spark.sql.Column
   * verify only on the shortlist, slim-pair style — arrays rejoin
   * from the barriered shingle table for survivors only.
   */
-object Round6ab {
+object Round6ab extends Operators {
 
   private val Fx = 1000000L
 

@@ -18,7 +18,7 @@ import graft.functions.Det
   * exact over the corpus) split at an index snapshot cutoff — the
   * window is panel-partitioned, never global.
   */
-object Round6ac {
+object Round6ac extends Operators {
 
   private val Fx = 1000000L
 

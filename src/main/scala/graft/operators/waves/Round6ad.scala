@@ -14,7 +14,7 @@ import graft.core.Tables
   * orders, folded to a |status|-row report — all money in integer
   * cents/basis points so both engines agree bit-for-bit.
   */
-object Round6ad {
+object Round6ad extends Operators {
 
   private val Fx = 1000000L
 

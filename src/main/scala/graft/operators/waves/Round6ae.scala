@@ -11,7 +11,7 @@ import graft.core.Tables
   * once on the driver and spliced into both engines' plans
   * identically), so no runtime float crosses an engine boundary.
   */
-object Round6ae {
+object Round6ae extends Operators {
 
   private val Fx = 1000000L
 

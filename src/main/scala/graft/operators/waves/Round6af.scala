@@ -14,7 +14,7 @@ import graft.core.Tables
   * fold every tx op shares, cut per language — vocab-sized shuffle,
   * bounded output.
   */
-object Round6af {
+object Round6af extends Operators {
 
   private val Fx = 1000000L
 
@@ -38,7 +38,7 @@ object Round6af {
       // scatter (r13 opt): the 16-cell grid join is a
       // BroadcastNestedLoopJoin with a 16x fanout + per-cell max_by
       // fold, and it inherits the events scan's ONE partition
-      // (StageProbe: a 1.25 s single-task stage = most of the query)
+      // (Probe stage census: a 1.25 s single-task stage = most of the query)
       val ev = graft.core.Par.scatter(Tables.events(s, d)
         .select(col("user_id"), col("event_id"), col("value"),
           expr("unix_micros(ts)").as("us")))

@@ -14,7 +14,7 @@ import graft.functions.IntersectCountExpr
   * union of the two shortlists with arrays rejoined from the
   * barriered shingle table.
   */
-object Round6ag {
+object Round6ag extends Operators {
 
   private val Fx = 1000000L
 

@@ -17,7 +17,7 @@ import graft.functions.Hashing
   * pure integer against the 2^60 hash space — EXACTLY oracle-gated,
   * like q13's relational HLL (Sketch.hllDistinct) since round 13.
   */
-object Round6ah {
+object Round6ah extends Operators {
 
   private val Fx = 1000000L
 

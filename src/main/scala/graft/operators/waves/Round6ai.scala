@@ -15,7 +15,7 @@ import graft.functions.{Det, Hashing}
   * user's prior clicks; the range predicate rides the join) — the
   * ev17 interval recipe — folded to a 24-row hour census.
   */
-object Round6ai {
+object Round6ai extends Operators {
 
   private val Fx = 1000000L
 

@@ -18,7 +18,7 @@ import graft.functions.Det
   * a 100 TB global sort/range-write needs, computed without doing
   * the sort.
   */
-object Round6aj {
+object Round6aj extends Operators {
 
   private val Fx = 1000000L
 

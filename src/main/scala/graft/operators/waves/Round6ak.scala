@@ -14,7 +14,7 @@ import graft.functions.Det
   * baseline folds from the |sources|-row share table. ev61 is one
   * hour-bucketed fact fold against a 1-row broadcast baseline.
   */
-object Round6ak {
+object Round6ak extends Operators {
 
   private val Fx = 1000000L
 

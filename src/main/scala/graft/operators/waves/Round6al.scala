@@ -14,7 +14,7 @@ import graft.functions.Det
   * twice (no global sort windows) and joins the two quartile frames
   * co-partitioned on doc_id, folding to the 16-cell matrix.
   */
-object Round6al {
+object Round6al extends Operators {
 
   private val Fx = 1000000L
 

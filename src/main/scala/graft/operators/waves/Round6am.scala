@@ -16,7 +16,7 @@ import graft.functions.Det
   * bounded hour table, then within-hour running sums carry in the
   * hour's offset — no global-order window anywhere.
   */
-object Round6am {
+object Round6am extends Operators {
 
   /** ev62: candidate session gaps (seconds). */
   private val Gaps: Seq[Long] = Seq(600L, 1800L, 3600L)

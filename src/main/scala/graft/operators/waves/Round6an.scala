@@ -10,7 +10,7 @@ import graft.core.Tables
   * (tx03's shared lists) per doc, folded per label — no joins, no
   * windows.
   */
-object Round6an {
+object Round6an extends Operators {
 
   private val Fx = 1000000L
 

@@ -14,7 +14,7 @@ import graft.core.Tables
   * unioned. ss30 derives from ss11's 3-row sweep output with one
   * window over that aggregate frame.
   */
-object Round6ao {
+object Round6ao extends Operators {
 
   private val Fx = 1000000L
 

@@ -13,7 +13,7 @@ import graft.functions.{Det, Hashing}
   * table; no pair enumeration at all. q66 folds facts to per-day
   * counts once and self-joins the bounded day table on day+lag.
   */
-object Round6ap {
+object Round6ap extends Operators {
 
   private val Fx = 1000000L
 

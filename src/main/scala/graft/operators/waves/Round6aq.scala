@@ -16,7 +16,7 @@ import graft.functions.Det
   * fact-sized window. q67 is closed-form OLS over per-(group, day)
   * partials — two bounded folds, no iteration.
   */
-object Round6aq {
+object Round6aq extends Operators {
 
   private val Fx = 1000000L
 

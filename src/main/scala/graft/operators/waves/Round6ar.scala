@@ -14,7 +14,7 @@ import graft.functions.{Det, Hashing}
   * only. ev64 folds the event log per (user, day) with
   * user-partitioned windows and censuses the bounded day table.
   */
-object Round6ar {
+object Round6ar extends Operators {
 
   private val Fx = 1000000L
 

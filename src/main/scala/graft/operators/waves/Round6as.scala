@@ -18,7 +18,7 @@ import graft.functions.{Det, Hashing}
   * state, not a gram join; the exact arm (dd16's equi-join) is kept
   * only as the measured error reference.
   */
-object Round6as {
+object Round6as extends Operators {
 
   private val Fx = 1000000L
 

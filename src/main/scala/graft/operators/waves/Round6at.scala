@@ -12,7 +12,7 @@ import graft.functions.Hashing
   * re-runs), the evaluation is two user-keyed folds, and the lift
   * arithmetic runs on the 2-row arm table.
   */
-object Round6at {
+object Round6at extends Operators {
 
   private val Fx = 1000000L
 

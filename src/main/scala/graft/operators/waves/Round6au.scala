@@ -15,7 +15,7 @@ import graft.core.Tables
   * integer: cusum_k = n·prefix_k − k·total needs no division, and
   * every window runs over the bounded day table.
   */
-object Round6au {
+object Round6au extends Operators {
 
   private val Fx = 1000000L
 

@@ -14,7 +14,7 @@ import graft.functions.Det
   * under trunc4 (second-per-gap integers first, so the double is
   * exact far beyond any realistic gap).
   */
-object Round6av {
+object Round6av extends Operators {
 
   private val Fx = 1000000L
 

@@ -13,7 +13,7 @@ import graft.core.Tables
   * whose cumulative weight crosses the line. No row-level sort, no
   * per-quantile pass.
   */
-object Round6aw {
+object Round6aw extends Operators {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- q70: weighted quantiles -----------------------------------------

@@ -15,7 +15,7 @@ import graft.core.Tables
   * with byte weights — the joins and banding are identical, only the
   * aggregate changes.
   */
-object Round6ax {
+object Round6ax extends Operators {
 
   private val Fx = 1000000L
 

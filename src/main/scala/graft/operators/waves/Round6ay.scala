@@ -16,7 +16,7 @@ import graft.functions.Det
   * Rank.ntileExact, and reads gap percentiles off the histogram-CDF
   * recipe per quartile.
   */
-object Round6ay {
+object Round6ay extends Operators {
 
   private val Fx = 1000000L
 

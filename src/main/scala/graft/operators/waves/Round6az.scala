@@ -11,7 +11,7 @@ import graft.core.Tables
   * per-(vec, subspace) argmin window) folded to a |subspaces|-row
   * health census — no new plan shapes.
   */
-object Round6az {
+object Round6az extends Operators {
 
   private val Fx = 1000000L
 

@@ -22,7 +22,7 @@ import graft.functions.{Det, Hashing}
   * (shard partials + bounded offset window + within-shard cumsum)
   * so no source's documents ever funnel through one task.
   */
-object Round6b {
+object Round6b extends Operators {
 
   private val Fx = 1000000L
   private val DayUs = 86400000000L

@@ -11,7 +11,7 @@ import graft.functions.Hashing
   * (hash and id-range from broadcast bounds); the per-shard and
   * per-strategy censuses run on bounded tables.
   */
-object Round6ba {
+object Round6ba extends Operators {
 
   private val Fx = 1000000L
 

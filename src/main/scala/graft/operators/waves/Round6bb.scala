@@ -12,7 +12,7 @@ import graft.functions.Det
   * windows, folded per session then censused by the 24-row
   * hour-of-day key.
   */
-object Round6bb {
+object Round6bb extends Operators {
 
   private val Fx = 1000000L
 

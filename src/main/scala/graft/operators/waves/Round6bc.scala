@@ -12,7 +12,7 @@ import graft.functions.Det
   * prefix dimensionalities — per (query, d) scoring reuses the one
   * barriered scored table; windows stay panel-partitioned.
   */
-object Round6bc {
+object Round6bc extends Operators {
 
   private val Fx = 1000000L
 

@@ -12,7 +12,7 @@ import graft.functions.{Det, Hashing, IntersectCountExpr}
   * the agreement count (k(16−k)/3840 — no resampling executes), and
   * the exact arm pays only for the sampled shortlist.
   */
-object Round6bd {
+object Round6bd extends Operators {
 
   private val Fx = 1000000L
 

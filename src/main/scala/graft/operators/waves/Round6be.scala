@@ -16,7 +16,7 @@ import graft.functions.Det
   * lag windows — per candidate debounce, episodes merge when the
   * quiet gap is shorter than the debounce.
   */
-object Round6be {
+object Round6be extends Operators {
 
   private val Fx = 1000000L
 

@@ -11,7 +11,7 @@ import graft.functions.Det
   * Posture note: one fact fold to the bounded minute table; the lag
   * window, thresholds and 2×2 census all run on that frame.
   */
-object Round6bf {
+object Round6bf extends Operators {
 
   private val Fx = 1000000L
 

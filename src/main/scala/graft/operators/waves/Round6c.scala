@@ -17,7 +17,7 @@ import graft.functions.Hashing
   * global pass. tx25 sizes the dedup yield of each normalization
   * level before anyone commits a corpus to one.
   */
-object Round6c {
+object Round6c extends Operators {
 
   private val Fx = 1000000L
 

@@ -13,7 +13,7 @@ import graft.functions.{Det, Hashing}
   * corpus-quadratic); q47 is one conditional aggregate with a 1-row
   * broadcast tip date.
   */
-object Round6d {
+object Round6d extends Operators {
 
   private val Fx = 1000000L
 

@@ -14,7 +14,7 @@ import graft.functions.Hashing
   * pairing runs entirely on the 16-row shard census — windows above
   * aggregates only, the audit-enforced shape.
   */
-object Round6e {
+object Round6e extends Operators {
 
   private val Fx = 1000000L
 

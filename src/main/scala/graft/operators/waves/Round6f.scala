@@ -14,7 +14,7 @@ import graft.functions.{Det, Hashing}
   * aggregate levels on the digest key. No joins beyond tx27's
   * doc_id equi-join of two narrow derived frames.
   */
-object Round6f {
+object Round6f extends Operators {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- tx27: does dedup remove the good copies? ---------------------

@@ -14,7 +14,7 @@ import graft.functions.Det
   * state — the exact-distinct analog of ev11's windowed counts — and
   * finishes the distinct fold on the bounded snapshot.
   */
-object Round6g {
+object Round6g extends Operators {
 
   private val Fx = 1000000L
 

@@ -13,7 +13,7 @@ import graft.core.Tables
   * semantics; pk14 is one narrow scan folding both tokenizations per
   * doc map-side.
   */
-object Round6h {
+object Round6h extends Operators {
 
   private val Fx = 1000000L
 

@@ -12,7 +12,7 @@ import graft.functions.Hashing
   * against the old side only (new×new and old×old pairs never
   * generated); the verify rejoins shingle sets for survivors alone.
   */
-object Round6i {
+object Round6i extends Operators {
 
   /** dd02/dd03's duplicate threshold, shared semantics. */
   private val JaccT = 0.5

@@ -14,7 +14,7 @@ import graft.functions.Det
   * TakeOrdered truth arm); the filter applies on the scored frame,
   * narrow on both arms.
   */
-object Round6j {
+object Round6j extends Operators {
 
   /** The metadata predicate under evaluation: label = FilterLabel. */
   val FilterLabel = 3

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * O(limit) timestamps per key), driven over the event file stream
   * and folded to batch-oracle-checkable censuses.
   */
-object Round6k {
+object Round6k extends Operators {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- ev46: streaming CDC compaction, oracle-gated ------------------

@@ -13,7 +13,7 @@ import graft.core.Tables
   * this corpus's max occupancy here, so the gate proves the streaming
   * path finds EXACTLY the batch banded join's pairs.
   */
-object Round6l {
+object Round6l extends Operators {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- ev48: streaming near-dup, oracle-gated -------------------------

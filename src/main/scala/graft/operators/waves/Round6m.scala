@@ -20,7 +20,7 @@ import graft.functions.Hashing
   * runs on the class table; dd28 is equi-joins on bloom bit positions
   * (the k·|keys| bit table), never key×key pairs.
   */
-object Round6m {
+object Round6m extends Operators {
 
   private val Fx = 1000000L
 

@@ -18,7 +18,7 @@ import graft.functions.Hashing
   * are equi-key aggregations whose only windows/folds run on bounded
   * group tables (shards × modalities, panel × shards).
   */
-object Round6n {
+object Round6n extends Operators {
 
   private val Fx = 1000000L
 

@@ -17,7 +17,7 @@ import graft.functions.Hashing
   * are hash-groupBy censuses on fingerprint keys with bounded group
   * tables.
   */
-object Round6o {
+object Round6o extends Operators {
 
   private val Fx = 1000000L
 

@@ -16,7 +16,7 @@ import graft.functions.{Det, Hashing}
   * per-(query, nprobe)-partitioned windows). q51 is three hash
   * aggregates on the feature-bucket key, one per candidate dimension.
   */
-object Round6p {
+object Round6p extends Operators {
 
   private val Fx = 1000000L
 

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * finished work" contract produces, and it is batch-replayable in
   * SQL, so the stateful path is provable against DuckDB.
   */
-object Round6q {
+object Round6q extends Operators {
 
   /** ev51's session gap (seconds) — ev09's batch convention. */
   private val GapSec = 1800L

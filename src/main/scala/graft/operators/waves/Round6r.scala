@@ -14,7 +14,7 @@ import graft.core.Tables
   * "explosion" is priced on the key tables (distinct keys), never by
   * running the join.
   */
-object Round6r {
+object Round6r extends Operators {
 
   private val Fx = 1000000L
 

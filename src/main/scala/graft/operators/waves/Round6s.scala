@@ -17,7 +17,7 @@ import graft.functions.{Det, Hashing}
   * ranks in one window pass over the per-doc frame and melts policies
   * by a bounded explode.
   */
-object Round6s {
+object Round6s extends Operators {
 
   private val Fx = 1000000L
 

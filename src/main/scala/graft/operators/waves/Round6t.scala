@@ -11,7 +11,7 @@ import graft.core.Tables
   * the census must equal the single-source oracle, proving the
   * overlap window introduces no double counting.
   */
-object Round6t {
+object Round6t extends Operators {
 
   /** Cutover instant: the live stream takes over here. */
   private val Cutover = "2024-01-16 00:00:00"

@@ -14,7 +14,7 @@ import graft.core.Tables
   * only — 1/SampleEvery of the frame count), digests verify the
   * sampled stream byte-exactly.
   */
-object Round6u {
+object Round6u extends Operators {
 
   /** Frame geometry: FrameBytes-sized frames, keep every Nth. */
   private val FrameBytes = 32

@@ -15,7 +15,7 @@ import graft.functions.Hashing
   * over exploded n-gram hashes — group tables bounded by distinct
   * shingles, no pair joins.
   */
-object Round6v {
+object Round6v extends Operators {
 
   private val Fx = 1000000L
 

@@ -14,7 +14,7 @@ import graft.functions.Det
   * decision reads ONLY the norm column (an index-only scan against a
   * broadcast threshold table), never the vectors.
   */
-object Round6w {
+object Round6w extends Operators {
 
   private val Fx = 1000000L
 

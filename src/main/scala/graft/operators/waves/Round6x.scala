@@ -16,7 +16,7 @@ import graft.core.Tables
   * Rank.ntileExact twice (no global sort windows) and joins the two
   * decile frames co-partitioned on the customer key.
   */
-object Round6x {
+object Round6x extends Operators {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- ev55: changelog-delta view maintenance ------------------------

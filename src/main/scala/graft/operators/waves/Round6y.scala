@@ -12,7 +12,7 @@ import graft.core.Tables
   * partition max event times (a |partitions|-row table) and compares
   * against the global tip broadcast.
   */
-object Round6y {
+object Round6y extends Operators {
 
   private val Fx = 1000000L
 

@@ -17,7 +17,7 @@ import graft.functions.Hashing
   * bounds. pk17 is a hash-bucket fold to |shards| rows then |workers|
   * rows; both bounded.
   */
-object Round6z {
+object Round6z extends Operators {
 
   private val Fx = 1000000L
 

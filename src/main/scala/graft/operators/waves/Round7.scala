@@ -16,7 +16,7 @@ import graft.streaming.EventStreams
   * batch reader, ev73 through the `readStream` twin over a real file
   * directory, both against the same direct-prediction oracle.
   */
-object Round7 {
+object Round7 extends Operators {
 
   /** ENCODE the events table into genuine StreamerMessage JSON
     * documents: 5 events per block, shard = user_id mod 4, receipt
@@ -126,7 +126,7 @@ object Round7 {
       // the per-block from_json over the full StreamerMessage schema
       // is the query's real compute, and the encode's grouped output
       // otherwise parses on the handful of coalesced shard partitions
-      // (StageProbe: a 5-task 2.3 s stage + a 1-task 0.9 s stage)
+      // (Probe stage census: a 5-task 2.3 s stage + a 1-task 0.9 s stage)
       ingestCensus(EventStreams.validated(EventStreams.extractEvents(
         LakeIngest.outcomeLogs(graft.core.Par.scatter(messages), col("value")))))
     },

@@ -16,7 +16,7 @@ import graft.functions.Hashing
   * aggregate and the 10-row decile frame; tx35 is one explode +
   * groupBy with a literal stopword set.
   */
-object Round7b {
+object Round7b extends Operators {
 
   private val Fx = 1000000L
 

@@ -16,7 +16,7 @@ import graft.functions.Det
   * the quantile picks are exact integer rank arithmetic, no
   * percentile_approx.
   */
-object Round7c {
+object Round7c extends Operators {
 
   /** ss34: sign-signature width (60 of the 64 dims — keeps the word
     * positive, the [[Dedup.SimhashBits]] convention) and the

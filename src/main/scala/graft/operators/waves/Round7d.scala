@@ -13,7 +13,7 @@ import graft.core.Tables
   * [[Rank.exactQuantilesByKey]] (group-partitioned windows, exact
   * integer rank picks).
   */
-object Round7d {
+object Round7d extends Operators {
 
   private val Fx = 1000000L
 

@@ -14,7 +14,7 @@ import graft.core.Tables
   * digest equi-self-join (bounded by actual duplicate digests, the
   * mm09 CAS construction), never a payload comparison.
   */
-object Round7e {
+object Round7e extends Operators {
 
   private val Fx = 1000000L
 

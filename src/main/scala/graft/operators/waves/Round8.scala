@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * itself is a 4-literal explode over the bounded pair census — no
   * per-cap rejoin.
   */
-object Round8 {
+object Round8 extends Operators {
 
   private val Fx = 1000000L
 
@@ -45,7 +45,7 @@ object Round8 {
         // keyed scatter (r13 opt): the per-pair fold, the 4-cap
         // explode and the sweep's partial aggregates all sit in the
         // stage after this exchange — byte-tiny, so AQE coalesced the
-        // whole 2.8 s of compute onto ONE task (StageProbe). doc_a is
+        // whole 2.8 s of compute onto ONE task (Probe stage census). doc_a is
         // a subset of the grouping keys: same shuffle, AQE-exempt.
         // DENSE form (r14): the fold is heavy per pair — the r14
         // size-aware cap measured 2.98 s vs 1.89 s dense in a

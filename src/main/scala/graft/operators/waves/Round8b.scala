@@ -27,7 +27,7 @@ import graft.core.Tables
   * each barriered so round k+1 reads round k's materialization, not
   * a 2^k recompute tree.
   */
-object Round8b {
+object Round8b extends Operators {
 
   private val Fx = 1000000L
 

@@ -12,7 +12,7 @@ import graft.core.Tables
   * (features are extracted in place and only the slim feature rows
   * aggregate).
   */
-object Round8c {
+object Round8c extends Operators {
 
   private val Fx = 1000000L
 

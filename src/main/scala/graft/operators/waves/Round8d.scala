@@ -22,7 +22,7 @@ import graft.functions.Hashing
   * content-only linker (exact/LSH link counts and how many hit the
   * true predecessor) the way dd13 scores banding recall.
   */
-object Round8d {
+object Round8d extends Operators {
 
   /** dd02/dd27's duplicate threshold in fixed-point (jfx ≥ 5000). */
   private val JfxT = 5000L

@@ -14,7 +14,7 @@ import graft.core.Tables
   * and the top-50 churn rides TakeOrdered limits (never a global
   * row_number sort). Everything after the census is vocab-sized.
   */
-object Round8e {
+object Round8e extends Operators {
 
   /** Fixed-point scale for per-token probabilities (1e9: vocab-sized
     * sums stay far under Long range at gate SFs; at true 100 TB token

@@ -18,7 +18,7 @@ import graft.functions.Hashing
   * makes the gate sensitive to every record id AND body length while
   * staying order-independent and overflow-free.
   */
-object Round8f {
+object Round8f extends Operators {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- mm16: WARC archive build→parse census ---------------------------

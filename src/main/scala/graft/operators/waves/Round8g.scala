@@ -20,7 +20,7 @@ import graft.functions.Det
   * panel×corpus truth join (dd13's precedent) — bounded by the ~n/97
   * panel, never all-pairs.
   */
-object Round8g {
+object Round8g extends Operators {
 
   private val Fx = 1000000L
   private val NLists = Seq(2, 4, 8, 16)

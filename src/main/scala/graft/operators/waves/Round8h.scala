@@ -17,7 +17,7 @@ import graft.core.Tables
   * only changed docs: at real scale that's the difference between a
   * full-corpus scan and a 3% scan.
   */
-object Round8h {
+object Round8h extends Operators {
 
   /** Shared census measures over a (source, text) frame, signed. */
   private def contrib(docs: DataFrame, sign: Int): DataFrame =

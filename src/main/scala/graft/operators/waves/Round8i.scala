@@ -16,7 +16,7 @@ import graft.core.Tables
   * recursion, no UDAF, no per-row loop. Windows partition by
   * event_type over the bounded hour grid (ev24's one-scan build).
   */
-object Round8i {
+object Round8i extends Operators {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- ev76: hourly backlog under 110%-of-mean capacity -----------------

@@ -16,7 +16,7 @@ import graft.core.Tables
   * all-pairs) next to the bits-per-signature it buys. All estimator
   * arithmetic is fixed-point integer on both engines.
   */
-object Round8j {
+object Round8j extends Operators {
 
   private val Bs = Seq(1, 2, 4, 8)
   private val Fx = 10000L

@@ -21,7 +21,7 @@ import graft.functions.Hashing
   *    primitive and has different cost behavior (unbounded result
   *    set, so the census reports the degree distribution envelope).
   */
-object Round8k {
+object Round8k extends Operators {
 
   private val Fx = 10000L
 

@@ -28,7 +28,7 @@ import graft.functions.Hashing
   * L·T = ΣW, not a reimplementation check (q75's cross-algorithm
   * pattern).
   */
-object Round8l {
+object Round8l extends Operators {
 
   private val Fx = 10000L
 

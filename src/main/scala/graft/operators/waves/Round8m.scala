@@ -18,7 +18,7 @@ import graft.core.Tables
   * 62-bit words because DuckDB raises on signed `1::BIGINT << 63`
   * (and 62 keeps every mask positive on both engines).
   */
-object Round8m {
+object Round8m extends Operators {
 
   private val Fx = 10000L
 
@@ -89,7 +89,7 @@ object Round8m {
       // scatter (r13 opt): the barriered corpus otherwise keeps the
       // single-row-group scan's ONE partition, and the O(n²)
       // BroadcastNestedLoopJoin + dot + WindowGroupLimit all run on
-      // one core (StageProbe: a 3.8 s single-task stage = most of the
+      // one core (Probe stage census: a 3.8 s single-task stage = most of the
       // query). Round-robin the 2k rows first; the quadratic stage
       // then uses every core. Guide §2.6 (idle capacity).
       val e = Dedup.barrier(graft.core.Par.scatter(Tables.embeddings(s, d)

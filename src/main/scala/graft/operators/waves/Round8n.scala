@@ -17,7 +17,7 @@ import graft.core.Tables
   * (departures are capped at c1), so stage 2's backlog is driven by
   * the c1→c2 capacity gap, not by raw arrival bursts.
   */
-object Round8n {
+object Round8n extends Operators {
 
   private val Fx = 10000L
 

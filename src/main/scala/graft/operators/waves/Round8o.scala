@@ -19,7 +19,7 @@ import graft.core.Tables
   * max_{j≤k} A(j) − k where A(j) is the arrival rank of the j-th
   * event by event time — one running-max window, closed form.
   */
-object Round8o {
+object Round8o extends Operators {
 
   private val Fx = 10000L
 

@@ -25,7 +25,7 @@ import graft.functions.Hashing
   * 1/16, 1/4 and 1/1 against the exact share computed in the same
   * query (the 1/1 arm doubles as an in-query exactness gate).
   */
-object Round8p {
+object Round8p extends Operators {
 
   private val Fx = 10000L
 

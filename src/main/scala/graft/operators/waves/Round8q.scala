@@ -19,7 +19,7 @@ import graft.core.Tables
   * region) draws far more probes than its fair share — the skew this
   * census measures is what picks replication factors per IVF shard.
   */
-object Round8q {
+object Round8q extends Operators {
 
   private val Fx = 10000L
 

@@ -24,7 +24,7 @@ import graft.core.Tables
   * Poisson sizing is sound; ≫ 1 flags bursty types that need ev78's
   * backlog treatment rather than mean-rate provisioning.
   */
-object Round8r {
+object Round8r extends Operators {
 
   private val Fx = 10000L
 

@@ -25,7 +25,7 @@ import graft.functions.Hashing
   * for the shortlist, arrays never cross the pair shuffle (dd08's
   * slim-explode recipe).
   */
-object Round8s {
+object Round8s extends Operators {
 
   private val Fx = 10000L
 

@@ -16,7 +16,7 @@ import graft.core.Tables
   * instead of assuming it. All integer: cents domain, integer widths,
   * truncating division on both engines.
   */
-object Round8t {
+object Round8t extends Operators {
 
   private val Fx = 10000L
   private val Buckets = 16

@@ -22,7 +22,7 @@ import graft.functions.Hashing
   * the language-agnostic curation move. Vocab-sized state; the census
   * reports how much token mass the adaptive list absorbs per language.
   */
-object Round8u {
+object Round8u extends Operators {
 
   private val Fx = 10000L
 

@@ -18,7 +18,7 @@ import graft.functions.Hashing
   * selection is one fingerprint aggregate joined back — no new
   * machinery, which is the point: the stages COMPOSE.
   */
-object Round8v {
+object Round8v extends Operators {
 
   private val Fx = 10000L
   private val TargetBytes = 1L << 20

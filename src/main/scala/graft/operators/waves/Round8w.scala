@@ -18,7 +18,7 @@ import graft.core.Tables
   * (ss27 priced staleness by LOSS; ss39 prices the two-segment serving
   * path that avoids it).
   */
-object Round8w {
+object Round8w extends Operators {
 
   private val Fx = 10000L
   private val NProbe = 2

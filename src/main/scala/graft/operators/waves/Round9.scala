@@ -23,7 +23,7 @@ import graft.core.Tables
   * reference's only multimodal surface; the compressed container is
   * the brief's 100 TB training-data requirement.
   */
-object Round9 {
+object Round9 extends Operators {
 
   private val Fx = 1000000L
 

@@ -119,14 +119,13 @@ object BenchCompare {
     */
   def runFocused(sfDir: String, shortIds: Seq[String], samples: Int,
       warmupMs: Long): Map[String, Double] = {
-    val spark = graft.Bench.buildSession(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = graft.Bench.buildSession(graft.Bench.cpus)
     graft.Bench.warmupLoop(spark, sfDir, warmupMs)
     shortIds.flatMap { id =>
       graft.SparkEntry.queries
         .find(_._1.takeWhile(_ != '_') == id).flatMap { case (n, f) =>
           val ts = (1 to samples).flatMap(_ =>
-            graft.Bench.sampleQuery(spark, sfDir, n, f))
+            graft.Bench.sampleQuery(spark, sfDir, n, f).toOption)
           graft.streaming.StreamJobs.cleanupFileSnapshots()
           if (ts.nonEmpty) Some(id -> ts.min) else None
         }

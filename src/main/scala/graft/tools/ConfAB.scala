@@ -17,18 +17,13 @@ object ConfAB {
       val Array(k, v) = kv.split("=", 2); (k, v)
     }.toSeq
     val n = if (args.length > 3) args(3).toInt else 4
-    val spark = graft.Bench.buildSession(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = graft.Bench.buildSession(graft.Bench.cpus)
     val base = overrides.map { case (k, _) =>
       (k, spark.conf.getOption(k)) }
     graft.Bench.warmupLoop(spark, d, 20000L)
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
-      def run(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, d).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      def run(): Double = graft.Bench.sampleQuery(spark, d, name, fn).get
       def setA(): Unit = base.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)
@@ -42,12 +37,7 @@ object ConfAB {
       def ms3(v: Double) = math.round(v * 1000) / 1000.0
       // escape interpolated strings (ADVICE r13): an override value
       // holding a quote/backslash must not emit malformed JSON
-      def esc(s: String) = s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
+      import graft.Bench.esc
       println(s"""{"query":"${esc(name)}","a_min":${ms3(as.min)},"b_min":${ms3(bs.min)},""" +
         s""""ratio":${ms3(bs.min / as.min)},"a":[${as.map(ms3).mkString(",")}],""" +
         s""""b":[${bs.map(ms3).mkString(",")}],"overrides":"${esc(args(2))}"}""")

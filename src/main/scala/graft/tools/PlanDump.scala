@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps formatted physical plans for representative queries to
   * stdout (captured into docs/PLANS.txt). Dev tool — the enforced
   * versions of these plan claims live in PlanAuditSpec; this file is
@@ -152,28 +150,19 @@ object PlanDump {
     "q81_salt_autopick", "q82_partition_autopick",
     "pk27_shard_size_autopick")
 
+  /** Usage: runMain graft.tools.PlanDump [sfDir] [name...] — any
+    * names after the data dir dump ONLY those queries (the
+    * before/after plan artifacts under plans/ are cut from these
+    * dumps). The session is the bench contract at SPARK_GRAFT_CPUS:
+    * plan artifacts that claim a parallelism-dependent shape (the
+    * size-aware scatterBy caps) must be dumped at the bench's core
+    * count, or the cap clamps to the dump session's and the
+    * before/after diff vanishes.
+    */
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.01")
-    // optional focus list (r13 optimization round): any names after the
-    // data dir dump ONLY those queries — the before/after plan
-    // artifacts in plans/r13/ are cut from these dumps
     val names = if (args.length > 1) args.drop(1).toSeq else Representative
-    // SPARK_GRAFT_CPUS (default 4, the historical dump posture): plan
-    // artifacts that claim a parallelism-dependent shape (r14's
-    // size-aware scatterBy caps) must be dumped at the bench's core
-    // count or the cap clamps to the dump session's 4 and the
-    // before/after diff vanishes.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // match the bench/verify optimizer posture so dumped plans are
-      // the plans the gates run (r13 opt)
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Bench.buildSession(graft.Bench.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"========== $name ==========")

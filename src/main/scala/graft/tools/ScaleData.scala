@@ -46,8 +46,7 @@ object ScaleData {
     val want: Set[String] = args.lift(3)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set("documents", "embeddings", "events", "facts", "dims"))
-    val spark = graft.core.ClusterConf.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt).getOrCreate()
+    val spark = graft.core.ClusterConf.local(graft.Bench.cpus.toInt).getOrCreate()
 
     val rep = spark.range(reps.toLong).select(col("id").cast("int").as("rep"))
 

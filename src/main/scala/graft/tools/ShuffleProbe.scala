@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Per-operator shuffle budget (VERDICT r9 #5): counts Exchange nodes
   * in each batch operator's initial physical plan and generates
@@ -19,21 +18,18 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.tools.ShuffleProbe [sfDir] [outFile]
   * Defaults: /root/testdata/sf0.001 (the spec's corpus) and
-  * docs/SHUFFLES.md.
+  * docs/SHUFFLES.md; SPARK_GRAFT_CPUS unset (4) is the spec session.
   */
 object ShuffleProbe {
 
   /** (shuffle exchanges, broadcast exchanges) in a frame's initial plan. */
-  def countPlan(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
-    val s = df.queryExecution.executedPlan.toString
-    val sh = "Exchange (hash|range|RoundRobin|Single)".r.findAllIn(s).size
-    val bc = "BroadcastExchange".r.findAllIn(s).size
-    (sh, bc)
-  }
+  def countPlan(df: org.apache.spark.sql.DataFrame): (Int, Int) =
+    countPlan(df.queryExecution.executedPlan.toString)
 
-  /** (shuffle exchanges, broadcast exchanges) in an operator's plan. */
-  def counts(spark: SparkSession, d: String, name: String): (Int, Int) =
-    countPlan(graft.SparkEntry.queries(name)(spark, d))
+  /** (shuffle exchanges, broadcast exchanges) in a physical plan string. */
+  def countPlan(plan: String): (Int, Int) =
+    ("Exchange (hash|range|RoundRobin|Single)".r.findAllIn(plan).size,
+      "BroadcastExchange".r.findAllIn(plan).size)
 
   /** Batch-lane operator names (streaming excluded — see scaladoc). */
   def batchOps: Seq[String] =
@@ -43,10 +39,12 @@ object ShuffleProbe {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "docs/SHUFFLES.md"
-    val spark = graft.core.ClusterConf.local(8).getOrCreate()
+    // the spec harness's session, so the committed table is the one
+    // ShuffleBudgetSpec checks against
+    val spark = graft.Bench.buildSession(graft.Bench.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val rows = batchOps.map { name =>
-      val (sh, bc) = counts(spark, d, name)
+      val (sh, bc) = countPlan(graft.SparkEntry.queries(name)(spark, d))
       (name, sh, bc)
     }
     val sb = new StringBuilder

@@ -532,7 +532,7 @@ class PlanAuditSpec extends SparkSpec {
     // loop would hide all offenders after the first
     val offenders = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(singleRowCross.contains).flatMap { name =>
-        val s = planString(name)
+        val s = built(name).physical
         if (s.contains("CartesianProduct")) Some(s"$name: cartesian")
         else if (s.contains("BroadcastNestedLoopJoin")) Some(s"$name: nested loop")
         else None
@@ -650,9 +650,7 @@ class PlanAuditSpec extends SparkSpec {
     // collect every offender before failing, like the cartesian sweep
     val offenders = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(singleConsumerBanded.contains).flatMap { name =>
-      generateTrapOffenders(
-        SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan)
-        .map(o => s"$name: $o")
+      generateTrapOffenders(built(name).optimized).map(o => s"$name: $o")
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
@@ -745,8 +743,7 @@ class PlanAuditSpec extends SparkSpec {
       fullWidthOk: Set[String]): Seq[String] = {
     SparkEntry.queries.keys.toSeq.sorted
       .filterNot(fullWidthOk.contains).flatMap { name =>
-        val f = formatted(name)
-        f.split("\\(\\d+\\) Scan parquet").drop(1).toSeq.flatMap { block =>
+        built(name).formatted.split("\\(\\d+\\) Scan parquet").drop(1).toSeq.flatMap { block =>
           val loc = block.linesIterator
             .find(_.trim.startsWith("Location:")).getOrElse("")
           val rs = block.linesIterator

@@ -51,6 +51,13 @@ class QueriesSmokeSpec extends SparkSpec {
     }
   }
 
+  test("each query and oracle name is registered by exactly one operator object") {
+    // a Map fold lets a later object silently shadow an earlier one's
+    // operator of the same name
+    assert(SparkEntry.operators.map(_.queries.size).sum === SparkEntry.queries.size)
+    assert(SparkEntry.operators.map(_.oracles.size).sum === SparkEntry.oracleSql.size)
+  }
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs at sf0.001") {
       val df = fn(spark, sf)

@@ -42,7 +42,7 @@ class ShuffleBudgetSpec extends SparkSpec {
           Some(s"$name has no committed shuffle budget — regenerate " +
             "docs/SHUFFLES.md (runMain graft.tools.ShuffleProbe)")
         case Some(b) =>
-          val (sh, _) = graft.tools.ShuffleProbe.counts(spark, sf, name)
+          val (sh, _) = graft.tools.ShuffleProbe.countPlan(built(name).physical)
           if (sh > b) Some(s"$name shuffles grew $b -> $sh") else None
       }
     }

@@ -3,22 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs (one per suite, lazy). */
+/** Shared local session for specs: the bench session contract at 4
+  * cores, so the plan audits and the shuffle budget check the plans
+  * the bench and the oracle lap run.
+  */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .withExtensions(new graft.plans.GraftExtensions)
-    .appName("graft-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // same optimizer posture as Bench/Verify/PlanDump (ADVICE r13):
-    // the plan-audit gates must audit the plans the bench actually
-    // runs, not an InferFiltersFromGenerate-flavored variant
-    .config("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Bench.buildSession("4")
 
   val sf: String = "/root/testdata/sf0.001"
+
+  /** `name`'s inventory entry: built and planned once per session. */
+  def built(name: String): Inventory.Built = Inventory(spark, sf, name)
 }
