@@ -11,25 +11,17 @@ object Bench {
   /** The one session contract. Bench, Verify, the dev tools and the
     * spec harness all run on it, so a DuckDB hash, a plan audit and a
     * shuffle budget all describe the same plans — same extensions,
-    * dials and env pins. `ClusterConf` stays the separate deployment
+    * confs and env pins. `ClusterConf` stays the separate deployment
     * posture.
     */
   def buildSession(cpus: String): SparkSession = {
-    // Spill-aware partition sizing (the 100 TB knob): cpus partitions
-    // is right when each holds a memory-sized slice, but a scale-
-    // ladder corpus at the SAME partition count concentrates 100x the
-    // rows per sort — the r10 sf10 leg OOM'd dd11/dd33's sorts at 32.
-    // On a cluster this is spark.sql.shuffle.partitions sized to data;
-    // here it's the same dial as an env override.
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // the sign-LSH density dial for ladder corpora (Dedup.signBandColsFor)
-    val embBits = sys.env.getOrElse("SPARK_GRAFT_EMB_BAND_BITS",
-      graft.operators.Dedup.EmbBandBits.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.graft.emb.bandBits", embBits)
+      // one shuffle partition per local slot; a cluster sizes it to
+      // data through ClusterConf, and q82's chooser reports the stop a
+      // corpus needs
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
@@ -148,14 +140,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = buildSession(cpus)
-    // SPARK_GRAFT_TUNED=1: let the ENGINE set the scale dials from its
-    // gated censuses (Tuned.session — q82 shuffle partitions, dd46
-    // band geometry) instead of the env overrides above. The ladder's
-    // tuned legs run under this; oracle laps leave it unset.
-    if (sys.env.get("SPARK_GRAFT_TUNED").contains("1")) {
-      val p = graft.operators.Tuned.session(spark, sfDir)
-      println(s"""{"tuned":{"parts":${p.shuffleParts},"bandBits":${p.bandBits},"watermark_s":${p.watermarkDelayS}}}""")
-    }
     // warmup: pay session/IO/codegen one-time costs outside the timings.
     // One pass is NOT enough: JIT compilation of Spark internals keeps
     // inflating timings for the first ~30-60 s of JVM life, which is

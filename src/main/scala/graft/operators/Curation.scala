@@ -456,22 +456,11 @@ object Curation extends Operators {
     // join): the hot left key is split across 8 salt partitions, the
     // dim side replicated 8 ways — the static fallback when one
     // contract emits most events and AQE's runtime split isn't enough.
-    // Under a tuned session (Tuned.session / SPARK_GRAFT_TUNED) the
-    // static 8 gives way to q81's measured PER-TYPE salt picks:
-    // replication is paid only where the skew census saw a hot key
-    // (VERDICT r12 #2). Both shapes are result-identical to the
-    // plain join, so the oracle gates either path.
+    // q81 reports the per-type salt a corpus needs.
     "q27_salted_join" -> { (s, d) =>
       val ev = Tables.events(s, d)
       val c = Tables.customer(s, d)
-      val tunedSalts = Tuned.confSaltByType(s)
-      val joined =
-        if (tunedSalts.nonEmpty)
-          Skew.autoSaltedJoin(ev, c, "user_id", "c_custkey",
-            col("event_id"), col("event_type"), tunedSalts)
-        else
-          Skew.saltedJoin(ev, c, "user_id", "c_custkey", col("event_id"), 8)
-      joined
+      Skew.saltedJoin(ev, c, "user_id", "c_custkey", col("event_id"), 8)
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_events"),
           sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))

@@ -318,9 +318,8 @@ object Dedup extends Operators {
   val EmbBandBits = 4
   val EmbThreshold = 0.2
 
-  /** The legal stops of spark.graft.emb.bandBits — the widths dd45
-    * prices and dd46 auto-picks. One definition so the planner, the
-    * chooser, and the conf validation cannot drift.
+  /** The band widths dd45 prices and dd46 auto-picks. One definition
+    * so the planner and the chooser cannot drift.
     */
   val DialBits: Seq[Int] = Seq(4, 8, 16)
 
@@ -339,8 +338,9 @@ object Dedup extends Operators {
     * vectors at 4 bits planned ~2×10⁹ pairs (>54 GB of sort spill);
     * at 16 bits the same corpus yields a tractable candidate set, the
     * dd21 b×r S-curve trade (recall recovered by multi-probe, ss07).
-    * Sessions opt in via spark.graft.emb.bandBits ∈ {4, 8, 16};
-    * oracle laps never set it, so gated results are bit-identical.
+    * dd45 prices the widths in [[DialBits]] with it and dd46 picks
+    * one; candidate generation ([[embCandidates]]) bands at the 4-bit
+    * geometry the oracle mirrors.
     */
   def signBandColsFor(emb: Column, bits: Int): Seq[Column] = {
     require(64 % bits == 0 && bits >= 1 && bits <= 62,
@@ -367,19 +367,9 @@ object Dedup extends Operators {
     * self-join.
     */
   private[operators] def embCandidates(s: SparkSession, d: String): DataFrame = {
-    val bits = s.conf.getOption("spark.graft.emb.bandBits")
-      .map(_.toInt).getOrElse(EmbBandBits)
-    // the dial's legal stops only (ADVICE r10): signBandColsFor's own
-    // require also admits 1/2/32, and any non-default value silently
-    // breaks parity with the hard-coded 4-bit DuckDB oracle — fail at
-    // read time, before a gated lap can run on the wrong geometry
-    require(DialBits.contains(bits),
-      s"spark.graft.emb.bandBits=$bits is outside the legal dial set " +
-        DialBits.mkString("{", ", ", "}") +
-        " — oracle laps must leave it unset (4-bit default)")
     val banded = barrier(embBase(s, d)
       .select(col("vec_id"), col("label"),
-        posexplode(array(signBandColsFor(col("emb"), bits): _*)))
+        posexplode(array(signBandCols(col("emb")): _*)))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "band_val"))
     val a = banded.select(col("label"), col("band"), col("band_val"),
@@ -428,17 +418,6 @@ object Dedup extends Operators {
     val p = df.persist()
     liveCaches.add(p)
     p
-  }
-
-  /** Release every live barrier frame NOW (instead of at the next
-    * [[barrier]] call). For callers whose barriered frames are fully
-    * consumed into driver-side values (the Tuned censuses): a
-    * lingering persisted frame occupies the single cache slot and
-    * storage memory a subsequent query wants.
-    */
-  private[operators] def releaseBarriers(): Unit = {
-    var old = liveCaches.poll()
-    while (old != null) { old.unpersist(blocking = false); old = liveCaches.poll() }
   }
 
   /** A SECOND materialization point in the same query: persists

@@ -31,29 +31,4 @@ object Skew {
     l.join(r, l(leftKey) === r(rightKey) && l("__salt") === r("__salt"))
       .drop("__salt")
   }
-
-  /** [[saltedJoin]] with a PER-TYPE salt factor — the q81 chooser's
-    * consumer (VERDICT r12 #2): each left row salts by its own type's
-    * measured factor (`saltByType`, q81's picks; 1 = unsalted for
-    * types the census never saw), so a corpus where one event type
-    * carries the hot keys pays replication ONLY for that type's
-    * matches. The right side replicates max(salt) ways — each left
-    * row's salt lands in [0, salt_type), so it meets exactly one
-    * replica and the result set stays identical to the plain join
-    * for ANY salt map (spec-pinned in TunedSpec).
-    */
-  def autoSaltedJoin(
-      left: DataFrame, right: DataFrame,
-      leftKey: String, rightKey: String,
-      leftUnique: Column, typeCol: Column,
-      saltByType: Map[String, Long]): DataFrame = {
-    val maxSalt = saltByType.values.foldLeft(1L)(math.max).toInt
-    val perRow = coalesce(element_at(typedLit(saltByType), typeCol), lit(1L))
-      .cast("int")
-    val l = left.withColumn("__salt", pmod(hash(leftUnique), perRow))
-    val r = right.withColumn("__salt",
-      explode(sequence(lit(0), lit(maxSalt - 1))))
-    l.join(r, l(leftKey) === r(rightKey) && l("__salt") === r("__salt"))
-      .drop("__salt")
-  }
 }

@@ -43,10 +43,8 @@ object Round10 extends Operators {
     */
   private val PanelSize = 64
 
-  /** dd45: the sign-LSH band widths priced by the density planner —
-    * the legal values of spark.graft.emb.bandBits, defined once in
-    * [[Dedup.DialBits]] (the conf read validates against the same
-    * set).
+  /** dd45: the sign-LSH band widths priced by the density planner,
+    * defined once in [[Dedup.DialBits]] (dd46 picks from the same set).
     */
   private val DialBits = Dedup.DialBits
 
@@ -136,7 +134,7 @@ object Round10 extends Operators {
     },
 
     // --- dd45: sign-LSH density planner across the bandBits dial ------
-    // The planning census behind spark.graft.emb.bandBits: per band
+    // The planning census behind the band geometry: per band
     // width ∈ {4, 8, 16} (bands = 64/bits), the occupied-bucket count,
     // max occupancy, and total candidate-pair mass Σ C(occ, 2) over
     // (label, band, band_val) buckets — the number a deployment reads

@@ -75,16 +75,8 @@ object Round11 extends Operators {
         col("pair_budget"), col("within_budget"), col("chosen"))
   }
 
-  /** Driver-side convenience: the chosen bandBits for a corpus — what
-    * a deployment sets spark.graft.emb.bandBits to. Bounded 3-row
-    * collect.
-    */
-  def autoBandBits(s: SparkSession, d: String): Int =
-    bandAutopick(Round10.bandDensityCensus(s, d), corpusCount(s, d))
-      .filter(col("chosen") === 1L)
-      .select(col("band_bits")).head().getLong(0).toInt
-
-  private[operators] def corpusCount(s: SparkSession, d: String): DataFrame =
+  /** dd46's 1-row corpus count (n_corpus), the budget's base. */
+  def corpusCount(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d)
       .agg(count(lit(1)).cast("long").as("n_corpus"))
 
@@ -296,7 +288,7 @@ object Round11 extends Operators {
     * folding to per-(type, late_us) counts first bounds the sort at
     * the distinct lateness values, with bit-identical picks.
     */
-  private[operators] def latenessCensus(s: SparkSession, d: String): DataFrame = {
+  def latenessCensus(s: SparkSession, d: String): DataFrame = {
     val wa = Window.partitionBy(col("user_id")).orderBy(col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val late = Tables.events(s, d)
@@ -330,8 +322,8 @@ object Round11 extends Operators {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- dd46: band-geometry autopick ---------------------------------
     // dd45's census + the budget rule, one row per dial stop with the
-    // winner flagged — the frame a deployment reads (or autoBandBits
-    // collects) before setting spark.graft.emb.bandBits.
+    // winner flagged — the frame a deployment reads before choosing
+    // the band geometry.
     "dd46_band_autopick" -> { (s, d) =>
       bandAutopick(Round10.bandDensityCensus(s, d), corpusCount(s, d))
         .orderBy(col("band_bits"))

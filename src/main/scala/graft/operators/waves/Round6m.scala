@@ -57,17 +57,10 @@ object Round6m extends Operators {
       // AvailableNow over one file: a deliberately lagging watermark
       // (1 hour) never evicts state before the single micro-batch
       // finishes, so the join is exact; on a live feed the same job
-      // holds ~(bound + watermark) of state per side.
-      // Under a tuned session each SIDE watermarks by its OWN type's
-      // ev82 pick (the measured disorder bound for that type), so the
-      // join holds exactly the state its inputs' lateness requires
-      // instead of the folklore hour (VERDICT r12 #2). Untuned
-      // sessions keep the 1-hour lag; gated runs are single-batch so
-      // both delays are result-identical (spec-pinned in TunedSpec).
-      val l = clicks.withWatermark("c_ts",
-        Tuned.confWatermarkFor(s, "click", "1 hour"))
-      val r = purchases.withWatermark("p_ts",
-        Tuned.confWatermarkFor(s, "purchase", "1 hour"))
+      // holds ~(bound + watermark) of state per side; ev82 reports
+      // the per-type delay a live feed's lateness needs.
+      val l = clicks.withWatermark("c_ts", "1 hour")
+      val r = purchases.withWatermark("p_ts", "1 hour")
       val pairs = l.join(r,
         l("user_id") === r("p_user") &&
           r("p_ts") >= l("c_ts") &&

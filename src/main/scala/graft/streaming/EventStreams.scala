@@ -48,7 +48,8 @@ object EventStreams {
 
   /** The NEP name-validation predicate (event_types.rs:8-24) — shared
     * by [[validated]], [[extractWithDeadLetter]] and status-column
-    * censuses so the split condition can never diverge.
+    * censuses so the split condition can never diverge. Never null
+    * (the isNotNull conjuncts), so `!isValid` is its exact complement.
     */
   def isValid: Column =
     col("standard").isNotNull && col("event").isNotNull &&
@@ -77,8 +78,7 @@ object EventStreams {
     */
   def extractWithDeadLetter(logs: DataFrame): (DataFrame, DataFrame) = {
     val all = extractEvents(logs)
-    (all.filter(isValid),
-      all.filter(!isValid || col("standard").isNull || col("event").isNull))
+    (all.filter(isValid), all.filter(!isValid))
   }
 
   /** Whitelist/blacklist on contract id; empty list = no constraint. */

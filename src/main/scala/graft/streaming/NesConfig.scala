@@ -115,27 +115,35 @@ object NesConfig {
 
   /** Flatten TOML text to the `fromProperties` key map. Quote-aware:
     * `#` inside strings is content, `\"`/`\\` escapes in basic
-    * (double-quoted) strings are honored, and array elements split on
-    * TOP-LEVEL commas only. One flattening caveat: list values
-    * re-join on commas for the `fromProperties` key space, which is
-    * lossless for the reference's lists (NEAR account ids — the
-    * validated charset `[a-zA-Z0-9._-]` cannot contain a comma).
+    * (double-quoted) strings are honored, keys may be quoted, arrays
+    * may span lines (comments and a trailing comma inside them are
+    * fine), and array elements split on TOP-LEVEL commas only. An
+    * array still open at end of input is an error naming its key. One
+    * flattening caveat: list values re-join on commas for the
+    * `fromProperties` key space, which is lossless for the reference's
+    * lists (NEAR account ids — the validated charset `[a-zA-Z0-9._-]`
+    * cannot contain a comma).
     */
   def parseToml(text: String): Map[String, String] = {
-    def stripComment(s: String): String = {
-      val b = new StringBuilder; var q: Char = 0; var esc = false
-      for (c <- s) {
-        if (esc) { b += c; esc = false }
-        else if (q == '"' && c == '\\') { b += c; esc = true }
-        else {
-          if (q == 0 && c == '#') return b.toString
-          if (q == 0 && (c == '"' || c == '\'')) q = c
-          else if (q == c) q = 0
-          b += c
-        }
+    // (index, char) of every char outside a string
+    def topLevel(s: String): Seq[(Int, Char)] = {
+      val out = Seq.newBuilder[(Int, Char)]; var q: Char = 0; var esc = false
+      for ((c, i) <- s.zipWithIndex) {
+        if (esc) esc = false
+        else if (q == '"' && c == '\\') esc = true
+        else if (q == 0) { if (c == '"' || c == '\'') q = c else out += i -> c }
+        else if (c == q) q = 0
       }
-      b.toString
+      out.result()
     }
+    def stripComment(s: String): String =
+      topLevel(s).collectFirst { case (i, '#') => s.take(i) }.getOrElse(s)
+    def splitTop(s: String, sep: Char): Seq[String] = {
+      val cuts = topLevel(s).collect { case (i, c) if c == sep => i }
+      (-1 +: cuts).zip(cuts :+ s.length).map { case (a, b) => s.substring(a + 1, b) }
+    }
+    def depth(s: String): Int =
+      topLevel(s).map { case (_, '[') => 1; case (_, ']') => -1; case _ => 0 }.sum
     def unquote(s: String): String = {
       val t = s.trim
       if (t.length >= 2 && t.head == '"' && t.last == '"') {
@@ -150,40 +158,33 @@ object NesConfig {
         t.substring(1, t.length - 1) // literal string: no escapes
       else t
     }
-    def splitTop(s: String): Seq[String] = {
-      val parts = Seq.newBuilder[String]; val cur = new StringBuilder
-      var q: Char = 0; var esc = false
-      for (c <- s) {
-        if (esc) { cur += c; esc = false }
-        else if (q == '"' && c == '\\') { cur += c; esc = true }
-        else if (q == 0 && c == ',') { parts += cur.toString; cur.clear() }
-        else {
-          if (q == 0 && (c == '"' || c == '\'')) q = c
-          else if (q == c) q = 0
-          cur += c
-        }
-      }
-      parts += cur.toString
-      parts.result()
-    }
     var section = ""
     val out = Map.newBuilder[String, String]
-    text.linesIterator.map(stripComment).map(_.trim).filter(_.nonEmpty).foreach {
-      case l if l.startsWith("[") && l.endsWith("]") =>
-        section = l.substring(1, l.length - 1).trim match {
-          case "" => ""; case s => s + "."
+    // a key line whose array is still open takes the next lines too
+    var pending = ""
+    def key(l: String): String = section + unquote(splitTop(l, '=').head)
+    text.linesIterator.map(l => stripComment(l).trim).filter(_.nonEmpty).foreach { l =>
+      pending = if (pending.isEmpty) l else pending + " " + l
+      if (pending.startsWith("[") || depth(pending) <= 0) {
+        pending match {
+          case h if h.startsWith("[") && h.endsWith("]") =>
+            section = h.substring(1, h.length - 1).trim match {
+              case "" => ""; case s => s + "."
+            }
+          case kv if kv.contains("=") =>
+            val value = splitTop(kv, '=').tail.mkString("=").trim match {
+              case a if a.startsWith("[") && a.endsWith("]") =>
+                splitTop(a.substring(1, a.length - 1), ',')
+                  .map(unquote).filter(_.nonEmpty).mkString(",")
+              case v => unquote(v)
+            }
+            out += key(kv) -> value
+          case _ => // lenient: ignore anything else, like the reference's parser
         }
-      case l if l.contains("=") =>
-        val Array(k, v) = l.split("=", 2)
-        val value = v.trim match {
-          case a if a.startsWith("[") && a.endsWith("]") =>
-            splitTop(a.substring(1, a.length - 1))
-              .map(unquote).filter(_.nonEmpty).mkString(",")
-          case s => unquote(s)
-        }
-        out += (section + k.trim) -> value
-      case _ => // lenient: ignore anything else, like the reference's parser
+        pending = ""
+      }
     }
+    require(pending.isEmpty, s"nes.toml: the array of '${key(pending)}' is never closed")
     out.result()
   }
 

@@ -97,6 +97,12 @@ class NesConfigSpec extends SparkSpec {
     assert(v.contains("token_id") && v.contains("_id"))
   }
 
+  private def loadToml(toml: String): NesConfig = {
+    val f = java.nio.file.Files.createTempFile("graft-nes", ".toml")
+    java.nio.file.Files.write(f, toml.getBytes("UTF-8"))
+    NesConfig.fromTomlFile(f.toString)
+  }
+
   test("fromTomlFile round-trips a reference-shaped nes.toml") {
     val toml =
       """# near-event-streams config (configs.rs NesConfig surface)
@@ -116,9 +122,7 @@ class NesConfigSpec extends SparkSpec {
         |sasl.password = "p#ss"  # hash inside quotes is not a comment
         |sasl.username = "u\"w#x"  # escaped quote must not close the string
         |""".stripMargin
-    val f = java.nio.file.Files.createTempFile("graft-nes", ".toml")
-    java.nio.file.Files.write(f, toml.getBytes("UTF-8"))
-    val c = NesConfig.fromTomlFile(f.toString)
+    val c = loadToml(toml)
     assert(c.nearEventsTopicPrefix === "near.events")
     assert(c.nearEventsAllTopic === "near.events.all")
     assert(c.whitelistContractIds === Seq("nft.near", "market.near"))
@@ -131,6 +135,29 @@ class NesConfigSpec extends SparkSpec {
     assert(c.kafka("sasl.username") === "u\"w#x")
     // and the client-option shaping still applies downstream
     assert(c.kafkaClientOptions("kafka.bootstrap.servers") === "broker-1:9092,broker-2:9092")
+    // multi-line arrays (a comment and a trailing comma inside) and
+    // quoted keys
+    val m = loadToml(
+      """whitelist_contract_ids = [
+        |  "nft.near",   # a comment inside the array
+        |  'market.near',
+        |]
+        |blacklist_contract_ids = ["spam.near",
+        |  "bad]near"]
+        |[kafka]
+        |"bootstrap.servers" = "broker-1:9092"
+        |'sasl.mechanism' = 'PLAIN'
+        |""".stripMargin)
+    assert(m.whitelistContractIds === Seq("nft.near", "market.near"))
+    assert(m.blacklistContractIds === Seq("spam.near", "bad]near"))
+    assert(m.kafka === Map(
+      "bootstrap.servers" -> "broker-1:9092", "sasl.mechanism" -> "PLAIN"))
+    assert(m.kafkaClientOptions("kafka.bootstrap.servers") === "broker-1:9092")
+    // an array still open at end of file names its key
+    val ex = intercept[IllegalArgumentException] {
+      loadToml("[kafka]\nwhitelist_contract_ids = [\n  \"nft.near\",\n")
+    }
+    assert(ex.getMessage.contains("kafka.whitelist_contract_ids"))
   }
 
   test("enrich_metadata without a tokens frame fails fast") {

@@ -111,22 +111,4 @@ class Round10Spec extends SparkSpec {
       assert(mean >= 0L && mean <= 255L * 1000000L)
     }
   }
-
-  test("bandBits dial: an off-dial conf value fails at read time") {
-    // ADVICE r10: signBandColsFor's require admits 1/2/32, but any
-    // non-{4,8,16} value silently breaks 4-bit oracle parity if set
-    // during a gated lap — the conf read must reject it loudly
-    spark.conf.set("spark.graft.emb.bandBits", "5")
-    try {
-      val ex = intercept[IllegalArgumentException] {
-        SparkEntry.queries("dd05_embed_cosine")(spark, sf)
-      }
-      assert(ex.getMessage.contains("legal dial set"))
-      // legal stops still construct
-      graft.operators.Dedup.DialBits.foreach { b =>
-        spark.conf.set("spark.graft.emb.bandBits", b.toString)
-        SparkEntry.queries("dd05_embed_cosine")(spark, sf)
-      }
-    } finally spark.conf.unset("spark.graft.emb.bandBits")
-  }
 }

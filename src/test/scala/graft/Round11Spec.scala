@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Round11}
+import graft.operators.{Dedup, Round10, Round11}
 
 class Round11Spec extends SparkSpec {
 
@@ -34,7 +34,11 @@ class Round11Spec extends SparkSpec {
     // the budget constant is calibrated so the chooser only widens
     // when density genuinely grows — a test corpus must not flip the
     // default that every gated lap runs under
-    assert(Round11.autoBandBits(spark, sf) === Dedup.EmbBandBits)
+    val chosen = Round11.bandAutopick(Round10.bandDensityCensus(spark, sf),
+        Round11.corpusCount(spark, sf))
+      .filter(col("chosen") === 1L).collect()
+    assert(chosen.map(_.getAs[Long]("band_bits")).toSeq ===
+      Seq(Dedup.EmbBandBits.toLong))
   }
 
   test("the sf10 ladder's measured census picks 16 bits (VERDICT r10 #3)") {
@@ -85,6 +89,13 @@ class Round11Spec extends SparkSpec {
       assert(rs.find(_.getAs[Long]("chosen") == 1L).get
         .getAs[Long]("delay_s") === expected)
     }
+    // the gated corpus arrives in order: every type picks the
+    // shortest stop
+    val picks = Round11.watermarkAutopick(Round11.latenessCensus(spark, sf))
+      .filter(col("chosen") === 1L).collect()
+    assert(picks.nonEmpty)
+    assert(picks.map(_.getAs[Long]("delay_s")).toSet ===
+      Set(Round11.WatermarkDialS.min))
   }
 
   test("ev82 rule on synthetic censuses: covering pick and the overflow flag") {
