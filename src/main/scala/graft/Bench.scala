@@ -25,20 +25,7 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
-      // InferFiltersFromGenerate is excluded at the session level
-      // (r13 opt): on a COMPUTED array it copies the full generator
-      // expression into an inferred size>0/isnotnull filter, which
-      // then pushes below exchanges and re-evaluates the pipeline
-      // per row at the scan's parallelism — the dd20 trap (8.5→0.7 s
-      // in round 6), re-found in ev20's from_json flatten (two
-      // duplicated 8×-from_json filter chains on the one-task scan;
-      // 2.74→1.94 s excluded, controls flat). The rule's only effect
-      // is adding filters that `explode` semantics already imply, so
-      // plans are result-identical at every scale; at 100 TB the
-      // duplicated-generator cost only grows, so exclusion is the
-      // production posture too, not a local-mode dial.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+      .config(graft.core.ClusterConf.ExcludedRules._1, graft.core.ClusterConf.ExcludedRules._2)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -35,8 +35,24 @@ import org.apache.spark.sql.SparkSession
   *    contract every oracle-gated operator is proven under.
   *  - GraftExtensions: the AsOfJoin strategy, native hash/dot/
   *    intersect kernels, and their rewrite rules.
+  *  - [[ExcludedRules]]: the optimizer rules no posture may run.
   */
 object ClusterConf {
+
+  /** InferFiltersFromGenerate is excluded in every posture (this one
+    * and `Bench.buildSession`'s): on a COMPUTED array it copies the
+    * full generator expression into an inferred size>0/isnotnull
+    * filter, which then pushes below exchanges and re-evaluates the
+    * pipeline per row at the scan's parallelism — the dd20 trap
+    * (8.5→0.7 s in round 6), re-found in ev20's from_json flatten (two
+    * duplicated 8×-from_json filter chains on the one-task scan;
+    * 2.74→1.94 s excluded, controls flat). The rule's only effect is
+    * adding filters that `explode` semantics already imply, so plans
+    * are result-identical at every scale; at 100 TB the
+    * duplicated-generator cost only grows.
+    */
+  val ExcludedRules: (String, String) = "spark.sql.optimizer.excludedRules" ->
+    "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
   /** Apply the posture to a builder. `totalCores` = executors ×
     * cores/executor (e.g. 1000 × 4). Returns the builder for
@@ -61,6 +77,7 @@ object ClusterConf {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.aggregatePushdown", "true")
+      .config(ExcludedRules._1, ExcludedRules._2)
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")

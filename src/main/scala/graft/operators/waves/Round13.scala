@@ -21,7 +21,8 @@ object Round13 extends Operators {
     // --- ev83: the v2-engine sessionizer, oracle-gated ------------------
     // Same session semantics as ev51 (gap sessionization, emissions =
     // sessions a successor closed) but through transformWithState +
-    // ValueState under the RocksDB provider the v2 engine requires.
+    // ValueState under the RocksDB provider the v2 engine requires
+    // (the drain pins it on seeing the transformWithState node).
     // The census is per session size with a DISTINCT-user column, so
     // ev83's oracle is not a row-for-row copy of ev51's: it also
     // proves the v2 engine attributes sessions to the right keys.
@@ -31,10 +32,7 @@ object Round13 extends Operators {
       val feed = StreamJobs.eventsFileStream(s, d)
         .select(col("user_id"), col("ts"))
         .as[StreamJobs.SessionEvent]
-      val snap = StateV2.withRocksDb(s) {
-        StreamJobs.runFileSnapshot(
-          StateV2.sessionizeTws(feed, GapSec).toDF())
-      }
+      val snap = StreamJobs.runFileSnapshot(StateV2.sessionizeTws(feed, GapSec).toDF())
       snap.groupBy(col("n_events"))
         .agg(count(lit(1)).cast("long").as("n_sessions"),
           countDistinct(col("user_id")).cast("long").as("n_users"),
@@ -57,9 +55,7 @@ object Round13 extends Operators {
           col("event_type"),
           expr("unix_micros(ts)").as("t"))
         .as[StateV2.TypedEvent]
-      val snap = StateV2.withRocksDb(s) {
-        StreamJobs.runFileSnapshot(StateV2.firstSeenTws(feed).toDF())
-      }
+      val snap = StreamJobs.runFileSnapshot(StateV2.firstSeenTws(feed).toDF())
       snap.groupBy(col("event_type"))
         .agg(count(lit(1)).cast("long").as("n_users"),
           min(col("first_us")).cast("long").as("earliest_us"),

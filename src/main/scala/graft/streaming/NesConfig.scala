@@ -80,10 +80,14 @@ object NesConfig {
   def fromProperties(props: Map[String, String]): NesConfig = {
     def list(key: String): Seq[String] =
       props.get(key).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    def bool(key: String, dflt: Boolean): Boolean =
-      props.get(key).map(_.trim.toBoolean).getOrElse(dflt)
-    def int(key: String, dflt: Int): Int =
-      props.get(key).map(_.trim.toInt).getOrElse(dflt)
+    def typed[T](key: String, dflt: T, kind: String)(read: String => T): T =
+      props.get(key).fold(dflt) { v =>
+        try read(v.trim) catch { case e: IllegalArgumentException =>
+          throw new IllegalArgumentException(s"nes.toml: '$key' must be $kind, got '$v'", e)
+        }
+      }
+    def bool(key: String, dflt: Boolean): Boolean = typed(key, dflt, "a boolean")(_.toBoolean)
+    def int(key: String, dflt: Int): Int = typed(key, dflt, "an integer")(_.toInt)
     NesConfig(
       kafka = props.collect {
         case (k, v) if k.startsWith("kafka.") => k.stripPrefix("kafka.") -> v
@@ -100,12 +104,8 @@ object NesConfig {
   }
 
   /** Load a real `nes.toml` from disk (configs.rs:166-177 builds the
-    * config from `home_dir/nes.toml`). Parses the TOML subset the
-    * reference config actually uses — `[table]` headers, `key =
-    * "string" | int | bool | ["a", "b"]` and `#` comments — and
-    * flattens it onto the [[fromProperties]] key space (`kafka.`
-    * prefix for table entries, lists comma-joined, mirroring the
-    * reference's lenient `config::Config` file source).
+    * config from `home_dir/nes.toml`) and flatten it onto the
+    * [[fromProperties]] key space with [[parseToml]].
     */
   def fromTomlFile(path: String): NesConfig = fromToml(new String(
     java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
@@ -113,88 +113,156 @@ object NesConfig {
 
   def fromToml(text: String): NesConfig = fromProperties(parseToml(text))
 
-  /** Flatten TOML text to the `fromProperties` key map. Quote-aware:
-    * `#` inside strings is content, `\"`/`\\` escapes in basic
-    * (double-quoted) strings are honored, keys may be quoted, arrays
-    * may span lines (comments and a trailing comma inside them are
-    * fine), and array elements split on TOP-LEVEL commas only. An
-    * array still open at end of input is an error naming its key. One
-    * flattening caveat: list values re-join on commas for the
-    * `fromProperties` key space, which is lossless for the reference's
-    * lists (NEAR account ids — the validated charset `[a-zA-Z0-9._-]`
-    * cannot contain a comma).
+  /** Flatten TOML text to the `fromProperties` key map. A `[table]`
+    * header, a dotted key (`sasl."jaas.config"`) and an inline table
+    * (`kafka = { "bootstrap.servers" = "b:9092" }`) all prefix their
+    * keys with `table.`; strings may be basic or literal, single- or
+    * multi-line, with TOML escapes; numbers drop their underscores
+    * (`1_000` reads `1000`); arrays may span lines with comments and a
+    * trailing comma, and re-join on commas — lossless for the
+    * reference's lists (NEAR account ids cannot contain a comma).
+    * Anything else TOML allows (arrays of tables, nested arrays) or
+    * forbids is an IllegalArgumentException naming the key, or the
+    * line where no key is known yet.
     */
   def parseToml(text: String): Map[String, String] = {
-    // (index, char) of every char outside a string
-    def topLevel(s: String): Seq[(Int, Char)] = {
-      val out = Seq.newBuilder[(Int, Char)]; var q: Char = 0; var esc = false
-      for ((c, i) <- s.zipWithIndex) {
-        if (esc) esc = false
-        else if (q == '"' && c == '\\') esc = true
-        else if (q == 0) { if (c == '"' || c == '\'') q = c else out += i -> c }
-        else if (c == q) q = 0
+    var i = 0
+    def peek: Char = if (i < text.length) text(i) else '\u0000'
+    def eof = i >= text.length
+    def fail(where: String, what: String): Nothing =
+      throw new IllegalArgumentException(s"nes.toml: $where $what")
+    def line = s"line ${text.take(i).count(_ == '\n') + 1}:"
+    def skip(chars: String): Unit = while (!eof && chars.contains(peek)) i += 1
+    def skipComment(): Unit = if (peek == '#') while (!eof && peek != '\n') i += 1
+    def skipBlank(): Unit = { skip(" \t\r\n"); if (peek == '#') { skipComment(); skipBlank() } }
+    def expect(c: Char, where: String, what: String): Unit = {
+      skip(" \t")
+      if (peek == c) i += 1 else fail(where, what)
+    }
+    def endOfLine(k: String): Unit = {
+      skip(" \t"); skipComment()
+      if (!eof && peek != '\n' && peek != '\r') fail(s"'$k'", s"has '$peek' after its value")
+    }
+    // a basic or literal string, single- or multi-line
+    def string(where: String): String = {
+      val q = peek
+      val delim = q.toString * (if (text.startsWith(q.toString * 3, i)) 3 else 1)
+      i += delim.length
+      if (delim.length == 3) { skip("\r"); if (peek == '\n') i += 1 } // trimmed first newline
+      val b = new StringBuilder
+      while (!text.startsWith(delim, i)) {
+        if (eof || (delim.length == 1 && peek == '\n')) fail(where, "string is never closed")
+        if (q == '"' && peek == '\\') {
+          i += 1
+          peek match {
+            // a line-ending backslash trims the whitespace and newlines after it
+            case c if delim.length == 3 && " \t\r\n".contains(c) => skip(" \t\r\n")
+            case 'u' | 'U' =>
+              val n = if (peek == 'u') 4 else 8
+              b.appendAll(Character.toChars(scala.util.Try(Integer.parseInt(text.slice(i + 1, i + 1 + n), 16))
+                .getOrElse(fail(where, "has an invalid unicode escape"))))
+              i += 1 + n
+            case c =>
+              b += TomlEscapes.getOrElse(c, fail(where, s"has an invalid escape '\\$c'"))
+              i += 1
+          }
+        } else { b += peek; i += 1 }
       }
-      out.result()
+      i += delim.length
+      b.toString
     }
-    def stripComment(s: String): String =
-      topLevel(s).collectFirst { case (i, '#') => s.take(i) }.getOrElse(s)
-    def splitTop(s: String, sep: Char): Seq[String] = {
-      val cuts = topLevel(s).collect { case (i, c) if c == sep => i }
-      (-1 +: cuts).zip(cuts :+ s.length).map { case (a, b) => s.substring(a + 1, b) }
-    }
-    def depth(s: String): Int =
-      topLevel(s).map { case (_, '[') => 1; case (_, ']') => -1; case _ => 0 }.sum
-    def unquote(s: String): String = {
-      val t = s.trim
-      if (t.length >= 2 && t.head == '"' && t.last == '"') {
-        val b = new StringBuilder; var esc = false
-        for (c <- t.substring(1, t.length - 1)) {
-          if (esc) { b += c; esc = false }
-          else if (c == '\\') esc = true
-          else b += c
+    // a dotted key; quoted parts keep their dots as content
+    def key(): String = {
+      skip(" \t")
+      val part =
+        if (peek == '"' || peek == '\'') string(line)
+        else {
+          val s = i
+          while (peek.isLetterOrDigit || peek == '_' || peek == '-') i += 1
+          if (s == i) fail(line, s"expected a key, found '$peek'")
+          text.substring(s, i)
         }
-        b.toString
-      } else if (t.length >= 2 && t.head == '\'' && t.last == '\'')
-        t.substring(1, t.length - 1) // literal string: no escapes
-      else t
+      skip(" \t")
+      if (peek == '.') { i += 1; part + "." + key() } else part
     }
-    var section = ""
+    // the flattened (key, value) entries of the value at i
+    def value(k: String): Seq[(String, String)] = peek match {
+      case '[' =>
+        i += 1
+        val elems = Seq.newBuilder[String]
+        skipBlank()
+        while (peek != ']') {
+          if (eof) fail(s"'$k'", "array is never closed")
+          if (peek == '[' || peek == '{') fail(s"'$k'", "nests an array or table")
+          elems ++= value(k).map(_._2)
+          skipBlank()
+          if (peek == ',') { i += 1; skipBlank() }
+          else if (peek != ']' && !eof) fail(s"'$k'", s"has '$peek' inside its array")
+        }
+        i += 1
+        Seq(k -> elems.result().mkString(","))
+      case '{' =>
+        i += 1
+        skip(" \t")
+        val entries = Seq.newBuilder[(String, String)]
+        while (peek != '}') {
+          val kk = k + "." + key()
+          expect('=', s"'$kk'", "has no '='")
+          skip(" \t")
+          entries ++= value(kk)
+          skip(" \t")
+          if (peek == ',') i += 1 else if (peek != '}') fail(s"'$k'", "inline table is never closed")
+        }
+        i += 1
+        entries.result()
+      case '"' | '\'' => Seq(k -> string(s"'$k'"))
+      case _ =>
+        val s = i
+        while (!eof && !" \t\r\n,]}#".contains(peek)) i += 1
+        Seq(k -> (text.substring(s, i) match {
+          case n @ TomlNumber(_*) => n.replace("_", "").stripPrefix("+")
+          case v if v == "true" || v == "false" || v.headOption.exists(_.isDigit) => v // dates too
+          case v => fail(s"'$k'", s"has an invalid value '$v'")
+        }))
+    }
     val out = Map.newBuilder[String, String]
-    // a key line whose array is still open takes the next lines too
-    var pending = ""
-    def key(l: String): String = section + unquote(splitTop(l, '=').head)
-    text.linesIterator.map(l => stripComment(l).trim).filter(_.nonEmpty).foreach { l =>
-      pending = if (pending.isEmpty) l else pending + " " + l
-      if (pending.startsWith("[") || depth(pending) <= 0) {
-        pending match {
-          case h if h.startsWith("[") && h.endsWith("]") =>
-            section = h.substring(1, h.length - 1).trim match {
-              case "" => ""; case s => s + "."
-            }
-          case kv if kv.contains("=") =>
-            val value = splitTop(kv, '=').tail.mkString("=").trim match {
-              case a if a.startsWith("[") && a.endsWith("]") =>
-                splitTop(a.substring(1, a.length - 1), ',')
-                  .map(unquote).filter(_.nonEmpty).mkString(",")
-              case v => unquote(v)
-            }
-            out += key(kv) -> value
-          case _ => // lenient: ignore anything else, like the reference's parser
-        }
-        pending = ""
+    var table = ""
+    skipBlank()
+    while (!eof) {
+      if (peek == '[') {
+        i += 1
+        if (peek == '[') fail(line, "arrays of tables are not supported")
+        val t = key()
+        expect(']', line, s"table header '$t' is never closed")
+        table = t + "."
+        endOfLine(t)
+      } else {
+        val k = table + key()
+        expect('=', s"'$k'", "has no '='")
+        skip(" \t")
+        out ++= value(k)
+        endOfLine(k)
       }
+      skipBlank()
     }
-    require(pending.isEmpty, s"nes.toml: the array of '${key(pending)}' is never closed")
     out.result()
   }
+
+  private val TomlEscapes = Map('n' -> '\n', 't' -> '\t', 'r' -> '\r', 'b' -> '\b',
+    'f' -> '\f', '"' -> '"', '\\' -> '\\')
+  private val TomlNumber = """[+-]?\d+(_\d+)*(\.\d+(_\d+)*)?([eE][+-]?\d+(_\d+)*)?""".r
 
   /** Convenience: run the configured pipeline as the file-based
     * streaming job — `config.pipeline` builds the stage chain (so
     * enrich_metadata is honored; pass `tokens` when it is set), and
-    * the records land as per-topic partitioned parquet. The kafka.*
-    * client options don't apply to the file sink (swap the
-    * foreachBatch body for [[StreamJobs.Kafka.sink]] on a cluster);
-    * stats_enabled is a separate side query the caller starts with
+    * the records land as per-topic partitioned parquet through Spark's
+    * file sink, which is exactly-once: its `_spark_metadata` log
+    * records each committed batch, so a batch replayed after a crash
+    * between the parquet write and the checkpoint commit is skipped,
+    * and readers of `outDir` see only committed files. The kafka.*
+    * client options don't apply to the file sink (use
+    * [[StreamJobs.Kafka.sink]] on a cluster); stats_enabled is a
+    * separate side query the caller starts with
     * [[StreamJobs.windowedStats]].
     */
   def runConfigured(
@@ -203,12 +271,9 @@ object NesConfig {
       tokens: Option[DataFrame] = None): org.apache.spark.sql.streaming.StreamingQuery = {
     val logs = spark.readStream.schema(StreamJobs.logSchema).json(sourceDir)
     config.pipeline(logs, tokens).writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
+      .format("parquet").partitionBy("topic")
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").partitionBy("topic").parquet(outDir)
-      }
-      .start()
+      .start(outDir)
   }
 }

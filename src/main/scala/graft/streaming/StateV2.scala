@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.streaming._
-import java.sql.Timestamp
 
 /** Spark 4 state API v2 (`transformWithState`) twins of the
   * [[StreamJobs]] stateful engines — the current-generation arbitrary
@@ -22,9 +21,14 @@ import java.sql.Timestamp
   *
   * Engine constraint: transformWithState requires the RocksDB state
   * store provider (the HDFS-backed heap provider does not support
-  * multiple column families). [[withRocksDb]] pins the provider for
-  * the duration of a drain the way the snapshot helpers pin
-  * shuffle-partition counts — same single-threaded-session contract.
+  * multiple column families). The snapshot drains detect a
+  * `transformWithState` node in the plan they drain and pin
+  * [[RocksDb]] for the run; a stream started by hand wraps itself in
+  * [[withRocksDb]].
+  *
+  * Each state fold is written once, in [[StreamJobs]], over plain
+  * values; the processors here only move state between the fold and
+  * their typed handles.
   *
   * Scale posture is unchanged from the v1 lane: state is keyed by a
   * high-cardinality column (user/contract id), O(1)-or-O(limit) per
@@ -32,73 +36,40 @@ import java.sql.Timestamp
   * anyway (docs/RUNBOOK.md §4).
   */
 object StateV2 {
-  import StreamJobs.{SessionEvent, SessionState, SessionOut, RateIn, RateState, RateOut}
+  import StreamJobs.{SessionEvent, SessionState, SessionOut, RateIn, RateOut}
 
-  val RocksProvider =
+  /** The state-store provider conf the v2 engine requires. */
+  val RocksDb: (String, String) = "spark.sql.streaming.stateStore.providerClass" ->
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Pin the RocksDB state-store provider around `body` (conf is read
-    * at stream start, so the stream must start AND terminate inside).
-    * Restores the previous session value — including its absence.
-    */
-  def withRocksDb[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, RocksProvider)
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
-
-  /** The shared session fold: advance `st` by one batch of events,
-    * returning the sessions a successor closed — one logic for every
-    * sessionizing processor so parity is structural, not coincidental.
-    */
-  private def advanceSessions(st: ValueState[SessionState], user: Long,
-      rows: Iterator[SessionEvent], gapSec: Long): Iterator[SessionOut] = {
-    val sorted = rows.map(_.ts.getTime / 1000).toSeq.sorted
-    var cur = if (st.exists()) st.get() else SessionState(-1, -1, 0)
-    val closed = scala.collection.mutable.ListBuffer[SessionOut]()
-    sorted.foreach { t =>
-      if (cur.start < 0) cur = SessionState(t, t, 1)
-      else if (t - cur.last > gapSec) {
-        closed += SessionOut(user, cur.n, cur.last - cur.start)
-        cur = SessionState(t, t, 1)
-      } else cur = cur.copy(last = t, n = cur.n + 1)
-    }
-    st.update(cur)
-    closed.iterator
-  }
+  /** Pin [[RocksDb]] around `body` (see [[StreamJobs.withConf]]). */
+  def withRocksDb[T](s: SparkSession)(body: => T): T = StreamJobs.withConf(s, RocksDb)(body)
 
   /** The [[StreamJobs.sessionize]] gap sessionizer on the v2 engine:
     * one `ValueState[SessionState]` per user, emissions = sessions a
-    * successor event closed. TimeMode.None — the bounded-replay cut
-    * (each key's trailing open session is held back, the "completed
-    * work only" contract ev51 gates).
+    * successor event closed ([[StreamJobs.advanceSessions]]).
+    *
+    * Untimed (TimeMode.None) it is the bounded-replay cut the gated
+    * ev83 runs: each key's trailing open session is held back, the
+    * "completed work only" contract ev51 gates, and the session set is
+    * batch-replayable independent of micro-batch boundaries.
+    *
+    * `timed` is the live-deployment variant: an EVENT-TIME timer at
+    * `last + gap` closes and evicts an idle key's session when the
+    * watermark passes it — the v2 answer to the v1 engine's
+    * processing-time-timeout dilemma (pending wall-clock timers keep
+    * an AvailableNow run alive; event-time timers ride the watermark,
+    * so bounded replays terminate AND idle-in-the-data sessions still
+    * flush). Input must carry a watermark.
+    *
+    * Seeded with initial state it is the v1→v2 migration target:
+    * state dumped from a flatMapGroupsWithState checkpoint by
+    * [[StateInspect]] loads into the v2 store before the first batch,
+    * and processing continues as if the v1 job had never stopped
+    * (StateInspectSpec proves emission-for-emission continuation
+    * equality).
     */
-  class SessionProcessor(gapSec: Long)
-      extends StatefulProcessor[Long, SessionEvent, SessionOut] {
-    @transient private var st: ValueState[SessionState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[SessionState](
-        "session", Encoders.product[SessionState], TTLConfig.NONE)
-
-    override def handleInputRows(user: Long, rows: Iterator[SessionEvent],
-        timers: TimerValues): Iterator[SessionOut] =
-      advanceSessions(st, user, rows, gapSec)
-  }
-
-  /** [[SessionProcessor]] seeded with migrated state — the v1→v2
-    * migration target: state dumped from a flatMapGroupsWithState
-    * checkpoint by [[StateInspect]] loads into the v2 store before
-    * the first batch, and processing continues as if the v1 job had
-    * never stopped (StateV2Spec proves emission-for-emission
-    * continuation equality).
-    */
-  class MigratedSessionProcessor(gapSec: Long)
+  class SessionProcessor(gapSec: Long, timed: Boolean)
       extends StatefulProcessorWithInitialState[
         Long, SessionEvent, SessionOut, SessionState] {
     @transient private var st: ValueState[SessionState] = _
@@ -111,58 +82,16 @@ object StateV2 {
         timers: TimerValues): Unit = st.update(s0)
 
     override def handleInputRows(user: Long, rows: Iterator[SessionEvent],
-        timers: TimerValues): Iterator[SessionOut] =
-      advanceSessions(st, user, rows, gapSec)
-  }
-
-  /** Continue sessionizing FROM migrated per-key state (see
-    * [[MigratedSessionProcessor]]).
-    */
-  def sessionizeTwsFrom(events: Dataset[SessionEvent],
-      initial: Dataset[(Long, SessionState)],
-      gapSec: Long = 1800): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState[SessionOut, SessionState](
-        new MigratedSessionProcessor(gapSec), TimeMode.None(),
-        OutputMode.Append(), initial.groupByKey(_._1).mapValues(_._2))
-  }
-
-  /** The live-deployment variant: an EVENT-TIME timer at
-    * `last + gap` closes and evicts an idle key's session when the
-    * watermark passes it — the v2 answer to the v1 engine's
-    * processing-time-timeout dilemma (pending wall-clock timers keep
-    * an AvailableNow run alive; event-time timers ride the watermark,
-    * so bounded replays terminate AND idle-in-the-data sessions still
-    * flush). Input must carry a watermark. Spec-exercised; the gated
-    * ev83 uses the TimeMode.None cut whose session set is
-    * batch-replayable independent of micro-batch boundaries.
-    */
-  class TimedSessionProcessor(gapSec: Long)
-      extends StatefulProcessor[Long, SessionEvent, SessionOut] {
-    @transient private var st: ValueState[SessionState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[SessionState](
-        "session", Encoders.product[SessionState], TTLConfig.NONE)
-
-    override def handleInputRows(user: Long, rows: Iterator[SessionEvent],
         timers: TimerValues): Iterator[SessionOut] = {
-      val sorted = rows.map(_.ts.getTime / 1000).toSeq.sorted
-      var cur = if (st.exists()) st.get() else SessionState(-1, -1, 0)
-      val closed = scala.collection.mutable.ListBuffer[SessionOut]()
-      sorted.foreach { t =>
-        if (cur.start < 0) cur = SessionState(t, t, 1)
-        else if (t - cur.last > gapSec) {
-          closed += SessionOut(user, cur.n, cur.last - cur.start)
-          cur = SessionState(t, t, 1)
-        } else cur = cur.copy(last = t, n = cur.n + 1)
-      }
+      val (cur, closed) = StreamJobs.advanceSessions(
+        Option.when(st.exists())(st.get()), user, rows.map(_.ts.getTime / 1000).toSeq, gapSec)
       st.update(cur)
-      // one live timer per key: the session closes when the watermark
-      // passes last + gap (timer values are event-time millis)
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      getHandle.registerTimer((cur.last + gapSec) * 1000L)
+      if (timed) {
+        // one live timer per key: the session closes when the watermark
+        // passes last + gap (timer values are event-time millis)
+        getHandle.listTimers().foreach(getHandle.deleteTimer)
+        getHandle.registerTimer((cur.last + gapSec) * 1000L)
+      }
       closed.iterator
     }
 
@@ -171,18 +100,29 @@ object StateV2 {
       if (st.exists()) {
         val cur = st.get()
         st.clear()
-        Iterator.single(SessionOut(user, cur.n, cur.last - cur.start))
+        Iterator.single(cur.close(user))
       } else Iterator.empty
   }
 
   def sessionizeTws(events: Dataset[SessionEvent], gapSec: Long = 1800,
       timed: Boolean = false): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-    val (proc, mode) =
-      if (timed) (new TimedSessionProcessor(gapSec), TimeMode.EventTime())
-      else (new SessionProcessor(gapSec), TimeMode.None())
     events.groupByKey(_.user_id)
-      .transformWithState[SessionOut](proc, mode, OutputMode.Append())
+      .transformWithState[SessionOut](new SessionProcessor(gapSec, timed),
+        if (timed) TimeMode.EventTime() else TimeMode.None(), OutputMode.Append())
+  }
+
+  /** Continue sessionizing FROM migrated per-key state (see
+    * [[SessionProcessor]]).
+    */
+  def sessionizeTwsFrom(events: Dataset[SessionEvent],
+      initial: Dataset[(Long, SessionState)],
+      gapSec: Long = 1800): Dataset[SessionOut] = {
+    import events.sparkSession.implicits._
+    events.groupByKey(_.user_id)
+      .transformWithState[SessionOut, SessionState](
+        new SessionProcessor(gapSec, timed = false), TimeMode.None(),
+        OutputMode.Append(), initial.groupByKey(_._1).mapValues(_._2))
   }
 
   case class TypedEvent(user_id: Long, event_type: String, t: Long)
@@ -246,21 +186,8 @@ object StateV2 {
 
     override def handleInputRows(user: Long, rows: Iterator[RateIn],
         timers: TimerValues): Iterator[RateOut] = {
-      var recent: Seq[Long] = recentState.get().toSeq
-      val runs = rows.toSeq.sortBy(_.t)
-        .foldRight(List.empty[List[RateIn]]) { (e, acc) =>
-          acc match {
-            case (h :: t2) :: rest if h.t == e.t => (e :: h :: t2) :: rest
-            case _ => List(e) :: acc
-          }
-        }
-      val out = runs.flatMap { peers =>
-        val t = peers.head.t
-        val live = recent.filter(_ > t - windowUs)
-        val throttled = live.size + peers.size > limit
-        recent = (live ++ peers.map(_.t)).takeRight(limit)
-        peers.map(e => RateOut(user, e.event_type, e.t, throttled))
-      }
+      val (recent, out) = StreamJobs.admit(recentState.get().toSeq, user, rows.toSeq,
+        limit, windowUs)
       recentState.clear()
       recent.foreach(recentState.appendValue)
       out.iterator

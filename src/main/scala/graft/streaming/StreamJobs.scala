@@ -10,9 +10,11 @@ import java.sql.Timestamp
   * as streaming queries.
   *
   * Scale: every job keys state by a high-cardinality column and uses
-  * watermarks so state is bounded; sinks go through foreachBatch →
-  * partitioned writes, which on a cluster become per-topic Kafka
-  * producers or partitioned object-store commits.
+  * watermarks so state is bounded; sinks are partitioned file-sink
+  * commits or, on a cluster, per-topic Kafka producers. Each stateful
+  * rule is a pure fold over plain values ([[advanceSessions]],
+  * [[admit]]) that the v1 operators here and the v2 processors in
+  * [[StateV2]] both call.
   */
 object StreamJobs {
 
@@ -55,8 +57,24 @@ object StreamJobs {
   }
 
   case class SessionEvent(user_id: Long, ts: Timestamp)
-  case class SessionState(start: Long, last: Long, n: Long)
+  case class SessionState(start: Long, last: Long, n: Long) {
+    def close(user: Long): SessionOut = SessionOut(user, n, last - start)
+  }
   case class SessionOut(user_id: Long, n_events: Long, duration_sec: Long)
+
+  /** The gap-session fold both engines run: advance a key's open
+    * session (if any) by one batch of event seconds, in time order,
+    * returning the new open session and the sessions a successor
+    * closed. Pure over plain values, so v1↔v2 parity is structural.
+    */
+  def advanceSessions(open: Option[SessionState], user: Long, secs: Seq[Long],
+      gapSec: Long): (SessionState, Seq[SessionOut]) =
+    secs.sorted.foldLeft((open.getOrElse(SessionState(-1, -1, 0)), Vector.empty[SessionOut])) {
+      case ((cur, closed), t) =>
+        if (cur.start < 0) (SessionState(t, t, 1), closed)
+        else if (t - cur.last > gapSec) (SessionState(t, t, 1), closed :+ cur.close(user))
+        else (cur.copy(last = t, n = cur.n + 1), closed)
+    }
 
   /** Gap-based sessionization with explicit state — the streaming twin
     * of batch ev09. Uses a processing-time timeout of one gap so an
@@ -87,20 +105,12 @@ object StreamJobs {
             // idle key: close and evict
             val st = state.get
             state.remove()
-            Iterator.single(SessionOut(user, st.n, st.last - st.start))
+            Iterator.single(st.close(user))
           } else {
-            val sorted = rows.map(_.ts.getTime / 1000).toSeq.sorted
-            var st = state.getOption.getOrElse(SessionState(-1, -1, 0))
-            val closed = scala.collection.mutable.ListBuffer[SessionOut]()
-            sorted.foreach { t =>
-              if (st.start < 0) st = SessionState(t, t, 1)
-              else if (t - st.last > gapSec) {
-                closed += SessionOut(user, st.n, st.last - st.start)
-                st = SessionState(t, t, 1)
-              } else st = st.copy(last = t, n = st.n + 1)
-            }
+            val (st, closed) = advanceSessions(
+              state.getOption, user, rows.map(_.ts.getTime / 1000).toSeq, gapSec)
             state.update(st)
-            if (flushIdle && !state.hasTimedOut) {
+            if (flushIdle) {
               try state.setTimeoutDuration(gapSec * 1000)
               catch { case _: UnsupportedOperationException => () } // batch: no timeouts
             }
@@ -148,58 +158,6 @@ object StreamJobs {
     }
   }
 
-  /** State-store footprint of the most recent snapshot run — ladder
-    * instrumentation (VERDICT r11 #4): (state rows, state bytes)
-    * summed over the final progress's stateful operators. Bytes come
-    * from memoryUsedBytes on the heap provider and the RocksDB total
-    * SST size metric under the RocksDB provider (whichever is
-    * larger, since each provider zeroes the other's metric).
-    * Stateless jobs leave the previous value — read it immediately
-    * after the run you're measuring.
-    */
-  @volatile var lastStateMetrics: Option[(Long, Long)] = None
-
-  /** Per-batch duration breakdown of the most recent snapshot run —
-    * dev instrumentation for the stream-lane floor hunt (VERDICT r13
-    * #5): one (batchId, durationMs map) per progress event of the
-    * last drained query. Read immediately after the run.
-    */
-  @volatile var lastRunDurations: Seq[(Long, Map[String, Long])] = Nil
-
-  private def recordDurations(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    import scala.jdk.CollectionConverters._
-    lastRunDurations = q.recentProgress.toSeq.map(p =>
-      (p.batchId, p.durationMs.asScala.map { case (k, v) => (k, v.longValue) }.toMap))
-  }
-
-  /** The RocksDB provider's SST-footprint custom metric in the pinned
-    * Spark. RocksDbStateSpec asserts this name against
-    * `RocksDBStateStoreProvider.supportedCustomMetrics` so a metric
-    * rename in a Spark upgrade fails a test instead of silently
-    * zeroing the ladder's state_bytes (ADVICE r12).
-    */
-  val RocksSstMetric = "rocksdbSstFileSize"
-
-  private def recordStateMetrics(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    for (p <- Option(q.lastProgress); if p.stateOperators.nonEmpty) {
-      val rows = p.stateOperators.map(_.numRowsTotal).sum
-      val bytes = p.stateOperators.map { o =>
-        // "rocksdbSstFileSize" is the provider's SST-footprint metric
-        // in the pinned Spark (ADVICE r12: the previously-read
-        // "rocksdbTotalSizeBytes" does not exist in 4.1.2, so the
-        // RocksDB branch always yielded 0 and state_bytes silently
-        // fell back to memoryUsedBytes). StateMetricsSpec asserts the
-        // key against RocksDBStateStoreProvider.supportedCustomMetrics
-        // so a rename in a future Spark fails a test, not a ledger.
-        val rocks = Option(o.customMetrics.get(RocksSstMetric))
-          .map(_.longValue).getOrElse(0L)
-        math.max(o.memoryUsedBytes, rocks)
-      }.sum
-      lastStateMetrics = Some((rows, bytes))
-    }
-
   /** Scratch dirs created by the snapshot drains and not yet
     * reclaimed. At ladder scale a file snapshot holds multi-GiB
     * parquet + checkpoint state, so leaking them across bench samples
@@ -209,26 +167,43 @@ object StreamJobs {
   private val snapshotDirs =
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
   private lazy val snapshotHook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteSnapshotDirs()))
-  }
-
-  private def deleteSnapshotDirs(): Unit = {
-    var p = snapshotDirs.poll()
-    while (p != null) {
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case _: java.io.IOException => () }
-      p = snapshotDirs.poll()
-    }
+    Runtime.getRuntime.addShutdownHook(new Thread(() => cleanupFileSnapshots()))
   }
 
   /** Delete every snapshot dir created so far. Safe once the frames
     * read from them are fully consumed (the next [[runFileSnapshot]]
     * call makes a fresh dir) — bench calls this between queries.
     */
-  def cleanupFileSnapshots(): Unit = deleteSnapshotDirs()
+  def cleanupFileSnapshots(): Unit =
+    Iterator.continually(snapshotDirs.poll()).takeWhile(_ != null).foreach { p =>
+      try {
+        import scala.jdk.CollectionConverters._
+        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
+          .foreach(f => java.nio.file.Files.deleteIfExists(f))
+      } catch { case _: java.io.IOException => () }
+    }
+
+  /** Run `body` with the session confs set to `confs`, restoring each
+    * previous value — including its absence — afterwards. Streaming
+    * confs are captured at stream start, so a stream must start AND
+    * terminate inside `body`.
+    *
+    * SINGLE-THREADED-SESSION ASSUMPTION: the values are session-global
+    * while `body` runs, so a query planned concurrently on the same
+    * session would see them, and concurrent calls could clobber each
+    * other's restore. All call sites (the gated streaming queries,
+    * specs) run queries sequentially on the session; isolating the
+    * conf would need the SOURCE frame built on a cloned session.
+    */
+  def withConf[T](s: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
 
   /** Stateful-shuffle partitions of a snapshot drain (the r13
     * posture; r14 measured 1 vs 4 as a wash at sf0.1). Partition
@@ -240,37 +215,28 @@ object StreamJobs {
   /** The drain both snapshot runners share: run `df` to completion
     * under AvailableNow with its checkpoint in a fresh tracked scratch
     * dir under java.io.tmpdir, and return that dir. Shuffle partitions
-    * are trimmed to [[StateParts]] for the stream only: the conf is
-    * captured at stream start and the session value restored after
-    * termination (restoring right after `start()` races with async
-    * micro-batch planning).
-    *
-    * SINGLE-THREADED-SESSION ASSUMPTION: the shuffle-partition override
-    * is session-global while the stream drains, so any query planned
-    * concurrently on the same session would silently run at
-    * [[StateParts]] partitions, and concurrent snapshot calls could
-    * clobber each other's restore. All call sites (the streaming
-    * queries in the gated map, specs) run queries sequentially on the
-    * session; a stream built on a `SparkSession.cloneSession()` would
-    * isolate the conf, but the query must then start from the clone —
-    * i.e. the SOURCE frame has to be constructed on the clone, which
-    * this helper (handed an already-built frame) cannot do.
+    * are trimmed to [[StateParts]] for the stream only, and a plan
+    * holding a `transformWithState` node runs on the RocksDB state
+    * store the v2 engine requires ([[StateV2.RocksDb]]) — both through
+    * [[withConf]], restored after termination (restoring right after
+    * `start()` races with async micro-batch planning).
     */
   private def drain(df: DataFrame, prefix: String)(
       sink: (DataStreamWriter[Row], String) => DataStreamWriter[Row]): String = {
-    val s = df.sparkSession
     snapshotHook
     val dir = java.nio.file.Files.createTempDirectory(prefix)
     snapshotDirs.add(dir)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StateParts.toString)
-    try {
+    val tws = df.queryExecution.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.TransformWithState])
+    val confs = Seq("spark.sql.shuffle.partitions" -> StateParts.toString) ++
+      Option.when(tws)(StateV2.RocksDb)
+    withConf(df.sparkSession, confs: _*) {
       val q = sink(df.writeStream, dir.toString)
         .option("checkpointLocation", s"$dir/ckpt")
         .trigger(Trigger.AvailableNow())
         .start()
-      try { q.awaitTermination(); recordStateMetrics(q); recordDurations(q) } finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      try q.awaitTermination() finally q.stop()
+    }
     dir.toString
   }
 
@@ -328,14 +294,13 @@ object StreamJobs {
       .flatMapGroupsWithState[AsOfCarry, AsOfOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (k: Long, rows: Iterator[AsOfIn], state: GroupState[AsOfCarry]) =>
-          val sorted = rows.toSeq.sortBy(r => (r.ts, r.side))
-          var st = state.getOption.getOrElse(AsOfCarry(Long.MinValue, None))
-          val out = scala.collection.mutable.ListBuffer[AsOfOut]()
-          sorted.foreach { r =>
-            if (r.side == 0) {
-              if (r.ts >= st.ts) st = AsOfCarry(r.ts, r.v)
-            } else out += AsOfOut(k, r.ts, st.v)
-          }
+          val (st, out) = rows.toSeq.sortBy(r => (r.ts, r.side))
+            .foldLeft((state.getOption.getOrElse(AsOfCarry(Long.MinValue, None)),
+              Vector.empty[AsOfOut])) {
+              case ((c, out), r) if r.side == 0 =>
+                (if (r.ts >= c.ts) AsOfCarry(r.ts, r.v) else c, out)
+              case ((c, out), r) => (c, out :+ AsOfOut(k, r.ts, c.v))
+            }
           state.update(st)
           out.iterator
       }
@@ -414,27 +379,37 @@ object StreamJobs {
       .flatMapGroupsWithState[RateState, RateOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (user: Long, rows: Iterator[RateIn], state: GroupState[RateState]) =>
-          var recent = state.getOption.map(_.recent).getOrElse(Seq.empty)
-          // runs of equal timestamps, in ascending t order (foldRight
-          // builds the runs without reversing)
-          val runs = rows.toSeq.sortBy(_.t)
-            .foldRight(List.empty[List[RateIn]]) { (e, acc) =>
-              acc match {
-                case (h :: t2) :: rest if h.t == e.t => (e :: h :: t2) :: rest
-                case _ => List(e) :: acc
-              }
-            }
-          val out = runs.flatMap { peers =>
-            val t = peers.head.t
-            val live = recent.filter(_ > t - windowUs)
-            // the RANGE frame holds live + ALL k peers for each peer
-            val throttled = live.size + peers.size > limit
-            recent = (live ++ peers.map(_.t)).takeRight(limit)
-            peers.map(e => RateOut(user, e.event_type, e.t, throttled))
-          }
+          val (recent, out) = admit(state.getOption.map(_.recent).getOrElse(Nil),
+            user, rows.toSeq, limit, windowUs)
           state.update(RateState(recent))
           out.iterator
       }
+  }
+
+  /** The admission fold both engines run (see [[rateLimit]]): decide
+    * one batch of a user's events against the `recent` timestamps
+    * kept so far, returning the newest `limit` timestamps to keep and
+    * one decision per event. Pure over plain values.
+    */
+  def admit(recent: Seq[Long], user: Long, rows: Seq[RateIn], limit: Int,
+      windowUs: Long): (Seq[Long], Seq[RateOut]) = {
+    // runs of equal timestamps, in ascending t order (foldRight
+    // builds the runs without reversing)
+    val runs = rows.sortBy(_.t)
+      .foldRight(List.empty[List[RateIn]]) { (e, acc) =>
+        acc match {
+          case (h :: t2) :: rest if h.t == e.t => (e :: h :: t2) :: rest
+          case _ => List(e) :: acc
+        }
+      }
+    runs.foldLeft((recent, Vector.empty[RateOut])) { case ((kept, out), peers) =>
+      val t = peers.head.t
+      val live = kept.filter(_ > t - windowUs)
+      // the RANGE frame holds live + ALL k peers for each peer
+      val throttled = live.size + peers.size > limit
+      ((live ++ peers.map(_.t)).takeRight(limit),
+        out ++ peers.map(e => RateOut(user, e.event_type, e.t, throttled)))
+    }
   }
 
   /** configs.rs SyncModeSubCommand re-expressed as source positioning:
@@ -495,11 +470,6 @@ object StreamJobs {
     * twin for file sources.
     */
   val logSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("log", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("receipt_id", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("block_timestamp", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("block_height", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("shard_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("contract_account_id", org.apache.spark.sql.types.StringType)))
+    org.apache.spark.sql.types.StructType.fromDDL("log STRING, receipt_id STRING, " +
+      "block_timestamp BIGINT, block_height BIGINT, shard_id BIGINT, contract_account_id STRING")
 }

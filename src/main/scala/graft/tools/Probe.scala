@@ -1,9 +1,11 @@
 package graft.tools
 
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 import graft.Bench
 import graft.streaming.StreamJobs
 
@@ -18,9 +20,9 @@ import graft.streaming.StreamJobs
   *    pins any narrow compute stage to one core unless the operator
   *    scatters);
   *  - for streaming queries, the engine's per-batch `durationMs`
-  *    breakdown ([[StreamJobs.lastRunDurations]]) and the drained
-  *    query's state rows and bytes ([[StreamJobs.lastStateMetrics]];
-  *    -1 when the query keeps no state).
+  *    breakdown and the state rows and bytes of the last stateful
+  *    query it drained (-1 when no query kept state), both read off
+  *    the engine's own progress events by a `StreamingQueryListener`.
   * A failed query prints `{"query":…,"error":…}` and the run goes on.
   *
   * The memory-sink snapshot operators ship their pre-census rows to
@@ -49,6 +51,24 @@ object Probe {
     spark.stop()
   }
 
+  /** The RocksDB provider's SST-footprint custom metric in the pinned
+    * Spark; RocksDbStateSpec pins it against the provider's own list,
+    * so a rename fails a test instead of zeroing state_bytes.
+    */
+  val RocksSstMetric = "rocksdbSstFileSize"
+
+  /** (state rows, state bytes) of a progress event, summed over its
+    * stateful operators. Bytes are memoryUsedBytes on the heap provider
+    * and the SST footprint under RocksDB (whichever is larger, since
+    * each provider zeroes the other's metric).
+    */
+  private def stateFootprint(p: StreamingQueryProgress): (Long, Long) =
+    (p.stateOperators.map(_.numRowsTotal).sum,
+      p.stateOperators.map { o =>
+        val rocks = Option(o.customMetrics.get(RocksSstMetric)).map(_.longValue).getOrElse(0L)
+        math.max(o.memoryUsedBytes, rocks)
+      }.sum)
+
   /** Probes `queries` in order, handing each query's line to `emit`. */
   def run(spark: SparkSession, sfDir: String, queries: Seq[(String, Query)])(
       emit: String => Unit): Unit = {
@@ -62,45 +82,58 @@ object Probe {
         stages.add((si.stageId, si.numTasks, ms))
       }
     }
-    // stage events reach the listener asynchronously
-    def drained(): Seq[(Int, Int, Long)] = {
+    // onQueryStarted runs inside start(); a stream's progress events
+    // reach the listener before its termination event
+    val running = new AtomicInteger()
+    val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val streams = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        running.incrementAndGet()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        progress.add(e.progress)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        running.decrementAndGet()
+    }
+    // listener events arrive asynchronously
+    def drained(): (Seq[(Int, Int, Long)], Seq[StreamingQueryProgress]) = {
       Thread.sleep(300)
-      val ss = stages.asScala.toSeq
-      stages.clear()
-      ss
+      val deadline = System.nanoTime() + 10000000000L
+      while (running.get > 0 && System.nanoTime() < deadline) Thread.sleep(50)
+      val out = (stages.asScala.toSeq, progress.asScala.toSeq)
+      stages.clear(); progress.clear()
+      out
     }
     spark.sparkContext.addSparkListener(census)
+    spark.streams.addListener(streams)
     try queries.foreach { case (name, fn) =>
       drained() // the previous query's row count
-      StreamJobs.lastRunDurations = Nil
-      StreamJobs.lastStateMetrics = None
       var out: DataFrame = null
       val sample = Bench.sampleQuery(spark, sfDir, name, (s, d) => { out = fn(s, d); out })
-      val ran = drained()
-      emit(sample.map { sec =>
-        val (stateRows, stateBytes) = StreamJobs.lastStateMetrics.getOrElse((-1L, -1L))
-        line(name, sec, nEvents, out.count(), ran, StreamJobs.lastRunDurations,
-          stateRows, stateBytes)
-      }.recover { case e: Throwable =>
+      val (ran, batches) = drained()
+      emit(sample.map(sec => line(name, sec, nEvents, out.count(), ran, batches)).recover { case e: Throwable =>
         val msg = Option(e.getMessage).map(_.take(120)).getOrElse(e.getClass.getName)
         s"""{"query":"${Bench.esc(name)}","error":"${Bench.esc(msg)}"}"""
       }.get)
       StreamJobs.cleanupFileSnapshots()
-    } finally spark.sparkContext.removeSparkListener(census)
+    } finally {
+      spark.streams.removeListener(streams)
+      spark.sparkContext.removeSparkListener(census)
+    }
   }
 
   private def line(name: String, sec: Double, nEvents: Long, outRows: Long,
-      stages: Seq[(Int, Int, Long)], batches: Seq[(Long, Map[String, Long])],
-      stateRows: Long, stateBytes: Long): String = {
+      stages: Seq[(Int, Int, Long)], batches: Seq[StreamingQueryProgress]): String = {
     def r(v: Double, p: Int) = BigDecimal(v).setScale(p, BigDecimal.RoundingMode.HALF_UP)
     val top = stages.sortBy(-_._3).take(5)
       .map { case (id, tasks, ms) => s"""{"stage":$id,"tasks":$tasks,"ms":$ms}""" }
     val singleTaskHot = stages.filter(s => s._2 == 1 && s._3 >= 100).sortBy(-_._3).take(5)
       .map { case (id, _, ms) => s"""{"stage":$id,"ms":$ms}""" }
-    val batchJson = batches.map { case (id, m) =>
-      (s""""batch":$id""" +: m.toSeq.sortBy(-_._2).map { case (k, v) => s""""$k":$v""" })
-        .mkString("{", ",", "}")
+    val batchJson = batches.map { p =>
+      (s""""batch":${p.batchId}""" +: p.durationMs.asScala.toSeq.sortBy(-_._2.longValue)
+        .map { case (k, v) => s""""$k":$v""" }).mkString("{", ",", "}")
     }
+    val (stateRows, stateBytes) = batches.reverseIterator.find(_.stateOperators.nonEmpty)
+      .map(stateFootprint).getOrElse((-1L, -1L))
     s"""{"query":"${Bench.esc(name)}","sec":${r(sec, 3)},""" +
       s""""us_per_event":${r(sec * 1e6 / math.max(nEvents, 1L), 2)},"out_rows":$outRows,""" +
       s""""n_stages":${stages.size},"stage_ms":${stages.map(_._3).sum},""" +

@@ -22,7 +22,14 @@ class ClusterConfSpec extends SparkSpec {
 
   test("ClusterConf.local applies the posture settings and activates the extensions") {
     withFreshSessionSlot {
-      val s = graft.core.ClusterConf.local(3).getOrCreate()
+      val b = graft.core.ClusterConf.local(3)
+      // the duplicated-generator trap is excluded in the cluster
+      // posture too, not only in the bench/spec session. Read off the
+      // builder: the spec JVM's SparkContext already carries the bench
+      // session's exclusion, which every new session inherits.
+      assert(ClusterConfSpec.options(b).get("spark.sql.optimizer.excludedRules") ===
+        Some("org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"))
+      val s = b.getOrCreate()
       assert(s.conf.get("spark.sql.adaptive.enabled") === "true")
       assert(s.conf.get("spark.sql.adaptive.skewJoin.enabled") === "true")
       assert(s.conf.get("spark.sql.session.timeZone") === "UTC")
@@ -43,5 +50,28 @@ class ClusterConfSpec extends SparkSpec {
       assert(s.conf.get("spark.sql.files.maxPartitionBytes") ===
         (256L * 1024 * 1024).toString)
     }
+  }
+}
+
+object ClusterConfSpec {
+
+  /** A builder's accumulated options, read reflectively (there is no
+    * public accessor).
+    */
+  def options(b: SparkSession.Builder): Map[String, String] = {
+    val out = scala.collection.mutable.Map[String, String]()
+    Iterator.iterate[Class[_]](b.getClass)(_.getSuperclass).takeWhile(_ != null)
+      .flatMap(_.getDeclaredFields).foreach { f =>
+        f.setAccessible(true)
+        f.get(b) match {
+          case m: scala.collection.mutable.Map[_, _] =>
+            m.foreach {
+              case (k: String, v: String) => out += k -> v
+              case _ =>
+            }
+          case _ =>
+        }
+      }
+    out.toMap
   }
 }

@@ -153,6 +153,26 @@ class NesConfigSpec extends SparkSpec {
     assert(m.kafka === Map(
       "bootstrap.servers" -> "broker-1:9092", "sasl.mechanism" -> "PLAIN"))
     assert(m.kafkaClientOptions("kafka.bootstrap.servers") === "broker-1:9092")
+    // a multi-line basic string, an underscored integer and a quoted
+    // dotted-key part read the way TOML defines them
+    val t = loadToml(
+      "near_events_topic_prefix = \"\"\"\nprod.events\"\"\"\n" +
+      "new_topic_partitions = 1_000\n" +
+      "[kafka]\nsasl.\"jaas.config\" = \"x y\"\n")
+    assert(t.nearEventsTopicPrefix === "prod.events")
+    assert(t.newTopicPartitions === 1000)
+    assert(t.kafka === Map("sasl.jaas.config" -> "x y"))
+    // and an inline table flattens like a [table] section
+    val inline = loadToml(
+      """kafka = { "bootstrap.servers" = "b:9092", security.protocol = 'SASL_SSL' }""")
+    assert(inline.kafka === Map(
+      "bootstrap.servers" -> "b:9092", "security.protocol" -> "SASL_SSL"))
+    // a value fromProperties cannot type names its key
+    val bad = intercept[IllegalArgumentException](loadToml("new_topic_replication = 3.5\n"))
+    assert(bad.getMessage.contains("new_topic_replication"))
+    val badBool = intercept[IllegalArgumentException](
+      NesConfig.fromProperties(Map("stats_enabled" -> "yes")))
+    assert(badBool.getMessage.contains("stats_enabled"))
     // an array still open at end of file names its key
     val ex = intercept[IllegalArgumentException] {
       loadToml("[kafka]\nwhitelist_contract_ids = [\n  \"nft.near\",\n")

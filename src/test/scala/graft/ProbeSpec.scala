@@ -34,6 +34,12 @@ class ProbeSpec extends SparkSpec {
     assert(batch.get("batches").size === 0, batch)
     assert(stream.get("batches").size > 0, stream)
     assert(stream.get("batches").get(0).has("triggerExecution"), stream)
+    // the state census: ev19's complete-mode aggregate keeps state,
+    // the batch query keeps none
+    assert(stream.get("state_rows").asLong > 0, stream)
+    assert(stream.get("state_bytes").asLong > 0, stream)
+    assert(batch.get("state_rows").asLong === -1L, batch)
+    assert(batch.get("state_bytes").asLong === -1L, batch)
   }
 
   test("a failing query prints one escaped error line and the run goes on") {

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{Round6k, Round6q}
 import graft.core.ClusterConf
+import graft.streaming.StateV2
 
 /** RocksDB state-store posture lap (VERDICT r7): ClusterConf ships
   * `spark.sql.streaming.stateStore.providerClass = RocksDB…` for the
@@ -13,45 +14,14 @@ import graft.core.ClusterConf
   */
 class RocksDbStateSpec extends SparkSpec {
 
-  private val Key = "spark.sql.streaming.stateStore.providerClass"
-  private val Rocks =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withProvider[T](f: => T): T = {
-    val old = spark.conf.getOption(Key)
-    spark.conf.set(Key, Rocks)
-    try f
-    finally old match {
-      case Some(v) => spark.conf.set(Key, v)
-      case None    => spark.conf.unset(Key)
-    }
-  }
+  private val Key = StateV2.RocksDb._1
+  private val Rocks = StateV2.RocksDb._2
 
   test("ClusterConf cluster profile pins the RocksDB provider") {
     val b = ClusterConf(org.apache.spark.sql.SparkSession.builder(), 4000)
-    // read the builder's accumulated options reflectively (no public
-    // accessor) so deleting/typo-ing the providerClass line in
-    // ClusterConf actually fails this test
-    def opts(o: AnyRef): Map[String, String] = {
-      var c: Class[_] = o.getClass
-      val out = scala.collection.mutable.Map[String, String]()
-      while (c != null) {
-        c.getDeclaredFields.foreach { f =>
-          f.setAccessible(true)
-          f.get(o) match {
-            case m: scala.collection.mutable.Map[_, _] =>
-              m.foreach {
-                case (k: String, v: String) => out += k -> v
-                case _ =>
-              }
-            case _ =>
-          }
-        }
-        c = c.getSuperclass
-      }
-      out.toMap
-    }
-    val pinned = opts(b)
+    // the builder's own options, so deleting/typo-ing the
+    // providerClass line in ClusterConf actually fails this test
+    val pinned = ClusterConfSpec.options(b)
     assert(pinned.get("spark.sql.streaming.stateStore.providerClass")
       .contains(Rocks),
       s"cluster profile lost the RocksDB pin; builder options: ${pinned.keys.toSeq.sorted}")
@@ -60,7 +30,7 @@ class RocksDbStateSpec extends SparkSpec {
   }
 
   test("the SST-footprint metric key exists in this Spark's RocksDB provider") {
-    // ADVICE r12: recordStateMetrics once read "rocksdbTotalSizeBytes",
+    // ADVICE r12: the state census once read "rocksdbTotalSizeBytes",
     // which does not exist in the pinned Spark — the RocksDB branch
     // always yielded 0 and state_bytes silently fell back to
     // memoryUsedBytes. Pin the key against the provider's own
@@ -74,14 +44,14 @@ class RocksDbStateSpec extends SparkSpec {
       .asInstanceOf[Seq[AnyRef]]
     val names = metrics.map(m =>
       m.getClass.getMethod("name").invoke(m).asInstanceOf[String])
-    assert(names.contains(graft.streaming.StreamJobs.RocksSstMetric),
+    assert(names.contains(graft.tools.Probe.RocksSstMetric),
       s"provider metrics: ${names.sorted.mkString(", ")}")
   }
 
   test("ev46 stream compaction is provider-independent (dedup state)") {
     val default = Round6k.queries("ev46_stream_compact")(spark, sf)
       .collect().map(_.toSeq).toSeq
-    val rocks = withProvider {
+    val rocks = StateV2.withRocksDb(spark) {
       Round6k.queries("ev46_stream_compact")(spark, sf)
         .collect().map(_.toSeq).toSeq
     }
@@ -92,7 +62,7 @@ class RocksDbStateSpec extends SparkSpec {
   test("ev51 sessionization (flatMapGroupsWithState) is provider-independent") {
     val default = Round6q.queries("ev51_stream_sessions")(spark, sf)
       .collect().map(_.toSeq).toSeq
-    val rocks = withProvider {
+    val rocks = StateV2.withRocksDb(spark) {
       Round6q.queries("ev51_stream_sessions")(spark, sf)
         .collect().map(_.toSeq).toSeq
     }

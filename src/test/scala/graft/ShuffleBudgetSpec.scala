@@ -49,6 +49,13 @@ class ShuffleBudgetSpec extends SparkSpec {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("Bench.StreamingLane names exactly the operators whose build starts a stream") {
+    // batchOps (and so this budget and the inventory's build order)
+    // trusts the hand list; the inventory pass saw which builds
+    // actually started a streaming query
+    assert(Inventory.streaming(spark, sf) === Bench.StreamingLane)
+  }
+
   test("positive control: the counter sees real Exchange nodes") {
     import org.apache.spark.sql.functions._
     // one hash-partition shuffle
