@@ -26,6 +26,7 @@ object Bench {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config(graft.core.ClusterConf.ExcludedRules._1, graft.core.ClusterConf.ExcludedRules._2)
+      .config(graft.core.ClusterConf.LocalFsConfs.toMap)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -36,6 +36,8 @@ import org.apache.spark.sql.SparkSession
   *  - GraftExtensions: the AsOfJoin strategy, native hash/dot/
   *    intersect kernels, and their rewrite rules.
   *  - [[ExcludedRules]]: the optimizer rules no posture may run.
+  *  - [[LocalFsConfs]]: local files through [[LocalFs]], which forks
+  *    no process per file.
   */
 object ClusterConf {
 
@@ -53,6 +55,18 @@ object ClusterConf {
     */
   val ExcludedRules: (String, String) = "spark.sql.optimizer.excludedRules" ->
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+
+  /** Hadoop's local file system, both APIs, as [[LocalFs]] in every
+    * posture (this one and `Bench.buildSession`'s). Without libhadoop
+    * the stock one forks `chmod` per file and directory created and
+    * `readlink` per checkpoint rename: 1,438 and 424 processes in one
+    * 69 s perfbench live run of the event pipeline. Same files,
+    * permissions and `.crc` checksums, so it is not a choice but a
+    * fix; a session built by hand can set the same two confs.
+    */
+  val LocalFsConfs: Seq[(String, String)] = Seq(
+    "spark.hadoop.fs.file.impl" -> classOf[LocalFs.Checked].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.Context].getName)
 
   /** Apply the posture to a builder. `totalCores` = executors ×
     * cores/executor (e.g. 1000 × 4). Returns the builder for
@@ -78,6 +92,7 @@ object ClusterConf {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.aggregatePushdown", "true")
       .config(ExcludedRules._1, ExcludedRules._2)
+      .config(LocalFsConfs.toMap)
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import graft.model.NearEvent
 
 /** The reference pipeline over real `EVENT_JSON:` log lines — shared
@@ -35,11 +36,13 @@ object EventStreams {
     logs
       .filter(startswith(trim(col("log")), lit(EventJsonPrefix)))
       .withColumn("payload", trim(payload))
-      .withColumn("env", from_json(col("payload"), envelopeSchema))
+      // parse the envelope once, in a generator: a filter on its
+      // fields ([[validated]]) stays above a generator, while through
+      // a projection it would be pushed down with each field rewritten
+      // to its own pruned from_json — four more parses per line
+      .select(col("*"), inline(array(from_json(col("payload"), envelopeSchema))))
       .select(
-        col("env.standard").as("standard"),
-        col("env.version").as("version"),
-        col("env.event").as("event"),
+        col("standard"), col("version"), col("event"),
         col("payload").as("data"),
         struct(
           col("receipt_id"), col("block_timestamp"), col("block_height"),
@@ -99,28 +102,41 @@ object EventStreams {
   def eventTopic(prefix: String): Column =
     concat_ws(".", lit(prefix), col("standard"), col("event"))
 
-  /** NEP-171 mint/transfer array payloads → one row per element
-    * token. `data` parses once against the merged element schema and
-    * explodes once; each event keeps only its own role fields (mint:
-    * owner_id; transfer: old/new_owner_id), so a stray field of the
-    * other event stays null. Other events yield no rows (the
-    * reference returns an empty vec for those).
+  private def isMint: Column = col("event") === "nft_mint"
+  private def isTransfer: Column = col("event") === "nft_transfer"
+
+  /** The events [[flattenNep171]] flattens: NEP-171 mint and transfer. */
+  private def isFlattened: Column = col("standard") === "nep171" && (isMint || isTransfer)
+
+  /** `data`'s element array, parsed once against the merged element
+    * schema for mint and transfer alike.
     */
-  def flattenNep171(events: DataFrame): DataFrame = {
-    val isMint = col("event") === "nft_mint"
-    val isTransfer = col("event") === "nft_transfer"
-    val elems = from_json(get_json_object(col("data"), "$.data"),
-      org.apache.spark.sql.types.ArrayType(nep171DataSchema))
-    events.filter(col("standard") === "nep171" && (isMint || isTransfer))
+  private def nep171Elements: Column =
+    from_json(get_json_object(col("data"), "$.data"), ArrayType(nep171DataSchema))
+
+  /** A flat token record's own fields, in record order, for element
+    * `d` and one of its tokens: each event keeps only its own role
+    * fields (mint: owner_id; transfer: old/new_owner_id), so a stray
+    * field of the other event stays null.
+    */
+  private def tokenFields(d: Column, tokenId: Column): Seq[Column] = Seq(
+    when(isMint, d.getField("owner_id")).as("owner_id"),
+    when(isTransfer, d.getField("old_owner_id")).as("old_owner_id"),
+    when(isTransfer, d.getField("new_owner_id")).as("new_owner_id"),
+    tokenId.as("token_id"),
+    d.getField("memo").as("memo"))
+
+  /** NEP-171 mint/transfer array payloads → one row per element
+    * token ([[tokenFields]]). `data` parses once and explodes once.
+    * Other events yield no rows (the reference returns an empty vec
+    * for those).
+    */
+  def flattenNep171(events: DataFrame): DataFrame =
+    events.filter(isFlattened)
       .select(col("standard"), col("version"), col("event"), col("emit_info"),
-        explode(elems).as("d"))
-      .select(col("standard"), col("version"), col("event"), col("emit_info"),
-        when(isMint, col("d.owner_id")).as("owner_id"),
-        when(isTransfer, col("d.old_owner_id")).as("old_owner_id"),
-        when(isTransfer, col("d.new_owner_id")).as("new_owner_id"),
-        explode(col("d.token_ids")).as("token_id"),
-        col("d.memo").as("memo"))
-  }
+        explode(nep171Elements).as("d"))
+      .select(Seq(col("standard"), col("version"), col("event"), col("emit_info")) ++
+        tokenFields(col("d"), explode(col("d.token_ids"))): _*)
 
   /** Broadcast-join flat events with a token-metadata dim table keyed
     * (contract_account_id, token_id); derives `_id = contract:token`
@@ -150,7 +166,7 @@ object EventStreams {
     // serialize the stage shape that arrives: the envelope after
     // extract/validate, or the flat per-token record after
     // flatten+enrich (events.rs:198-250 serializes the FLAT event)
-    val value = to_json(struct(events.columns.map(col).toSeq: _*))
+    val value = recordValue(events.columns.toSeq)
     // explode over the two destinations rather than unionAll: a union
     // re-evaluates the whole upstream parse pipeline per branch, the
     // explode computes it once and fans out rows
@@ -191,10 +207,51 @@ object EventStreams {
     * the flat record serializes whole, like the reference's enriched
     * event JSON.
     */
-  def metadataRecords(enriched: DataFrame, prefix: String): DataFrame = {
-    val value = to_json(struct(enriched.columns.map(col).toSeq: _*))
+  def metadataRecords(enriched: DataFrame, prefix: String): DataFrame =
     enriched.select(
-      eventKey.as("key"), value.as("value"),
-      concat(eventTopic(prefix), lit("_metadata")).as("topic"))
+      eventKey.as("key"), recordValue(enriched.columns.toSeq).as("value"),
+      metadataTopic(prefix).as("topic"))
+
+  /** A record's Kafka value: the named columns serialized whole. */
+  private def recordValue(columns: Seq[String]): Column = to_json(struct(columns.map(col): _*))
+
+  private def metadataTopic(prefix: String): Column = concat(eventTopic(prefix), lit("_metadata"))
+
+  /** [[toKafkaRecords]] ∪ [[metadataRecords]] of
+    * [[enrichMetadata]]([[flattenNep171]](events)) in one pass over
+    * `events`: the same (key, value, topic) rows, but the upstream
+    * stages run once per event instead of once per union branch.
+    * Each event explodes once into its topic row, its all-topic row
+    * (both carrying the envelope JSON) and one row per flat token;
+    * one left broadcast join enriches them (envelope rows have a null
+    * token id, so they never match); one projection keeps the
+    * envelope JSON or serializes the enriched flat record.
+    */
+  def enrichedKafkaRecords(events: DataFrame, tokens: DataFrame,
+      prefix: String, allTopic: String): DataFrame = {
+    // an exploded row: (topic, envelope JSON, element, token id)
+    def row(topic: Column, value: Column, d: Column, token: Column): Column =
+      struct(topic.as("topic"), value.as("value"), d.as("d"), token.as("t"))
+    def envelopeRow(topic: Column): Column = row(topic, col("envelope"),
+      lit(null).cast(nep171DataSchema), lit(null).cast(StringType))
+    val noTokens = array().cast(ArrayType(StringType))
+    val tokenRows = flatten(transform(col("elements"), d =>
+      transform(coalesce(d.getField("token_ids"), noTokens), t =>
+        row(metadataTopic(prefix), lit(null).cast(StringType), d, t))))
+    val scanned = events
+      .select(col("standard"), col("version"), col("event"), col("emit_info"),
+        recordValue(events.columns.toSeq).as("envelope"),
+        coalesce(when(isFlattened, nep171Elements),
+          array().cast(ArrayType(nep171DataSchema))).as("elements"))
+      .select(col("standard"), col("version"), col("event"), col("emit_info"),
+        explode(concat(array(envelopeRow(eventTopic(prefix)), envelopeRow(lit(allTopic))),
+          tokenRows)).as("r"))
+      .select(Seq(col("standard"), col("version"), col("event"), col("emit_info"),
+        col("r.topic").as("topic"), col("r.value").as("value")) ++
+        tokenFields(col("r.d"), col("r.t")): _*)
+    val enriched = enrichMetadata(scanned, tokens)
+    val flatRecord = enriched.columns.toSeq.filterNot(Set("topic", "value"))
+    enriched.select(eventKey.as("key"),
+      coalesce(col("value"), recordValue(flatRecord)).as("value"), col("topic"))
   }
 }

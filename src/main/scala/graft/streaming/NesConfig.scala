@@ -13,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                                 → [[EventStreams.toKafkaRecords]] routing
   *  - `whitelist/blacklist_contract_ids`
   *                                 → [[EventStreams.filterContracts]]
-  *  - `enrich_metadata`            → [[EventStreams.enrichMetadata]] stage
+  *  - `enrich_metadata`            → [[EventStreams.enrichedKafkaRecords]]
   *  - `stats_enabled`              → [[StreamJobs.windowedStats]] side query
   *  - `new_topic_partitions/replication`, `force_create_new_topic`
   *                                 → carried as sink properties (Spark's
@@ -45,28 +45,21 @@ final case class NesConfig(
     * the flat enriched copies to `<topic>_metadata`; enrichment never
     * replaces the envelope deliveries). `tokens` supplies the
     * metadata dim (the reference's per-token RPC lookup, re-expressed
-    * as a broadcast join). Enriched, the plan reads its source twice
-    * per micro-batch: once for the envelope deliveries, once for the
-    * flatten (itself a single parse-and-explode) — the union's two
-    * branches each re-evaluate the extract upstream, the cost of the
-    * dual-shape fanout; the reference likewise serializes the event
-    * once per delivery.
+    * as a broadcast join). Enriched or not, the plan reads its source
+    * once per micro-batch: [[EventStreams.enrichedKafkaRecords]]
+    * explodes each event once into all three deliveries instead of
+    * unioning two branches that would each re-run the extract.
     */
   def pipeline(logs: DataFrame, tokens: Option[DataFrame] = None): DataFrame = {
     val filtered = EventStreams.filterContracts(
       EventStreams.validated(EventStreams.extractEvents(logs)),
       whitelistContractIds, blacklistContractIds)
-    val main = EventStreams.toKafkaRecords(
-      filtered, nearEventsTopicPrefix, nearEventsAllTopic)
-    if (!enrichMetadata) main
-    else {
-      val enriched = EventStreams.enrichMetadata(
-        EventStreams.flattenNep171(filtered),
-        tokens.getOrElse(throw new IllegalArgumentException(
-          "enrich_metadata=true requires a tokens metadata frame")))
-      main.unionByName(
-        EventStreams.metadataRecords(enriched, nearEventsTopicPrefix))
-    }
+    if (!enrichMetadata)
+      EventStreams.toKafkaRecords(filtered, nearEventsTopicPrefix, nearEventsAllTopic)
+    else EventStreams.enrichedKafkaRecords(filtered,
+      tokens.getOrElse(throw new IllegalArgumentException(
+        "enrich_metadata=true requires a tokens metadata frame")),
+      nearEventsTopicPrefix, nearEventsAllTopic)
   }
 }
 

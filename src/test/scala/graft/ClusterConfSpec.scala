@@ -23,17 +23,24 @@ class ClusterConfSpec extends SparkSpec {
   test("ClusterConf.local applies the posture settings and activates the extensions") {
     withFreshSessionSlot {
       val b = graft.core.ClusterConf.local(3)
+      // read off the builder: a session built over the spec JVM's
+      // running SparkContext inherits the bench session's confs, so
+      // it would pass even if ClusterConf stopped setting these
+      val opts = ClusterConfSpec.options(b)
       // the duplicated-generator trap is excluded in the cluster
-      // posture too, not only in the bench/spec session. Read off the
-      // builder: the spec JVM's SparkContext already carries the bench
-      // session's exclusion, which every new session inherits.
-      assert(ClusterConfSpec.options(b).get("spark.sql.optimizer.excludedRules") ===
+      // posture too, not only in the bench/spec session
+      assert(opts.get("spark.sql.optimizer.excludedRules") ===
         Some("org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"))
+      assert(opts.get("spark.sql.adaptive.enabled") === Some("true"))
+      assert(opts.get("spark.sql.adaptive.skewJoin.enabled") === Some("true"))
+      assert(opts.get("spark.sql.session.timeZone") === Some("UTC"))
+      assert(opts.get("spark.sql.optimizer.runtime.bloomFilter.enabled") === Some("true"))
+      // local files through the fork-free file system, both Hadoop APIs
+      assert(opts.get("spark.hadoop.fs.file.impl") ===
+        Some(classOf[graft.core.LocalFs.Checked].getName))
+      assert(opts.get("spark.hadoop.fs.AbstractFileSystem.file.impl") ===
+        Some(classOf[graft.core.LocalFs.Context].getName))
       val s = b.getOrCreate()
-      assert(s.conf.get("spark.sql.adaptive.enabled") === "true")
-      assert(s.conf.get("spark.sql.adaptive.skewJoin.enabled") === "true")
-      assert(s.conf.get("spark.sql.session.timeZone") === "UTC")
-      assert(s.conf.get("spark.sql.optimizer.runtime.bloomFilter.enabled") === "true")
       // the graft extensions registered on THIS session — must hold
       // even when the builder reuses an already-running SparkContext
       // (the static spark.sql.extensions conf is ignored there; the

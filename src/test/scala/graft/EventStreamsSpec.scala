@@ -41,18 +41,19 @@ class EventStreamsSpec extends SparkSpec {
   test("extractWithDeadLetter splits every extracted event into valid or dead") {
     val truncated = """EVENT_JSON:{"standard":"nep171","""
     val noEvent = """EVENT_JSON:{"standard":"nep171","version":"1.0.0","data":[]}"""
-    val all = logs.union(
-      Seq(logRow(truncated), logRow(noEvent)).toDF(logs.columns.toIndexedSeq: _*))
+    val notObject = "EVENT_JSON:42" // parses to a null envelope
+    val all = logs.union(Seq(logRow(truncated), logRow(noEvent), logRow(notObject))
+      .toDF(logs.columns.toIndexedSeq: _*))
     def payloads(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.select(col("data")).as[String].collect().sorted.toSeq
     def bodies(lines: String*): Seq[String] =
       lines.map(_.trim.stripPrefix("EVENT_JSON:")).sorted
     val (valid, dead) = EventStreams.extractWithDeadLetter(all)
     val extracted = payloads(EventStreams.extractEvents(all))
-    assert(extracted.size === 7)
+    assert(extracted.size === 8)
     assert((payloads(valid) ++ payloads(dead)).sorted === extracted)
     assert(payloads(valid) === bodies(mintLog, mintLog, transferLog, genericLog))
-    assert(payloads(dead) === bodies(invalidNameLog, truncated, noEvent))
+    assert(payloads(dead) === bodies(invalidNameLog, truncated, noEvent, notObject))
   }
 
   test("filterContracts applies white/blacklists like collect_events") {

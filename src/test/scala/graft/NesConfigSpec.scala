@@ -188,9 +188,9 @@ class NesConfigSpec extends SparkSpec {
     }
   }
 
-  test("an enriched streaming pipeline reads its source twice per micro-batch") {
-    // the envelope deliveries read once and the NEP-171 flatten reads
-    // once (one parse-and-explode for mint and transfer alike)
+  test("an enriched streaming pipeline reads its source once per micro-batch") {
+    // the envelope deliveries and the NEP-171 flatten share one
+    // extract: each event explodes once into all its records
     val src = java.nio.file.Files.createTempDirectory("graft-nesreads").toString
     val logs = spark.readStream.schema(graft.streaming.StreamJobs.logSchema).json(src)
     val tokens = Seq(("c0.near", "1:0", "T", "ipfs://m", "{}"))
@@ -199,6 +199,62 @@ class NesConfigSpec extends SparkSpec {
       .queryExecution.analyzed
     val reads = plan.collectLeaves().count(
       _.isInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingRelation])
-    assert(reads === 2)
+    assert(reads === 1)
+  }
+
+  test("the single-scan enriched pipeline equals the stage composition record for record") {
+    import graft.streaming.EventStreams
+    def ev(event: String, data: String) =
+      s"""EVENT_JSON:{"standard":"nep171","version":"1.0.0","event":"$event"$data}"""
+    val lines = Seq(
+      // repeated token ids, a memo, a hit (1:1) and a miss (1:9)
+      "nft.near" -> ev("nft_mint", ""","data":[{"owner_id":"a.near","token_ids":["1:1","1:1","1:9"],"memo":"m"}]"""),
+      "nft.near" -> ev("nft_transfer",
+        ""","data":[{"old_owner_id":"a.near","new_owner_id":"b.near","token_ids":["2:1"],"memo":"gift"}]"""),
+      "nft.near" -> ev("nft_mint", ""","data":[]"""),                             // empty data
+      "nft.near" -> ev("nft_mint", ""),                                          // no data
+      "nft.near" -> ev("nft_mint", ""","data":[{"owner_id":"a.near"}]"""),        // no token_ids
+      "nft.near" -> ev("nft_mint", ""","data":[null,{"owner_id":"c.near","token_ids":["2:1",null]}]"""),
+      "nft.near" -> ev("nft_mint", ""","data":{"owner_id":"d.near","token_ids":["1:1"]}"""), // non-array
+      "nft.near" -> ev("nft_burn", ""","data":[{"owner_id":"a.near","token_ids":["1:1"]}]"""),
+      "spam.near" -> ev("nft_mint", ""","data":[{"owner_id":"s.near","token_ids":["1:1"]}]"""), // blacklisted
+      "dex.near" -> """EVENT_JSON:{"standard":"ft_exchange","version":"2.0.0","event":"swap","data":{"x":1}}""",
+      // no contract: a blacklist's `isin` test is null, so both sides drop it
+      (null: String) -> ev("nft_mint", ""","data":[{"owner_id":"e.near","token_ids":["5:1"]}]"""),
+      "nft.near" -> """EVENT_JSON:{"standard":"bad name!","version":"1","event":"x"}""",
+      "nft.near" -> "a plain log line")
+    val logs = lines.zipWithIndex.map { case ((contract, log), i) =>
+      (log, s"r$i", 1700000000000L + i, 100L + i, 0L, contract)
+    }.toDF("log", "receipt_id", "block_timestamp", "block_height", "shard_id", "contract_account_id")
+    val tokens = Seq(
+      ("nft.near", "1:1", "One", "ipfs://1", """{"rarity":"epic"}"""),
+      ("nft.near", "2:1", "Two", null, null),
+      ("spam.near", "1:1", "Spam", null, null))
+      .toDF("contract_account_id", "token_id", "title", "media", "extra")
+    val cfg = NesConfig(blacklistContractIds = Seq("spam.near"), enrichMetadata = true)
+    val (prefix, all) = (cfg.nearEventsTopicPrefix, cfg.nearEventsAllTopic)
+    val filtered = EventStreams.filterContracts(
+      EventStreams.validated(EventStreams.extractEvents(logs)), Nil, Seq("spam.near"))
+    val staged = EventStreams.toKafkaRecords(filtered, prefix, all).unionByName(
+      EventStreams.metadataRecords(EventStreams.enrichMetadata(
+        EventStreams.flattenNep171(filtered), tokens), prefix))
+    val single = cfg.pipeline(logs, Some(tokens))
+    assert(single.columns.toSeq === staged.columns.toSeq)
+    def bag(df: org.apache.spark.sql.DataFrame): Map[(String, String, String), Int] =
+      df.select(col("topic"), col("key"), col("value")).as[(String, String, String)]
+        .collect().toSeq.groupBy(identity).map { case (r, rs) => r -> rs.length }
+    val got = bag(single)
+    assert(got === bag(staged))
+    // the fixture exercises what it claims: 9 kept events → 18
+    // envelope records; flat rows 3 (repeats kept) + 1 + 2 (one a
+    // null token id) + 1 (the lone object)
+    val meta = got.toSeq.filter(_._1._1.endsWith("_metadata"))
+    def count(p: String => Boolean) = meta.collect { case (r, n) if p(r._3) => n }.sum
+    assert(got.values.sum - meta.map(_._2).sum === 18)
+    assert(count(_ => true) === 7)
+    assert(count(_.contains("\"title\":\"One\"")) === 3)
+    assert(count(v => v.contains("\"token_id\":\"1:9\"") && !v.contains("title")) === 1)
+    assert(count(_.contains("\"memo\":\"gift\"")) === 1)
+    assert(!got.keys.exists(_._2 == "spam.near"))
   }
 }
