@@ -27,6 +27,7 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .config(graft.core.ClusterConf.ExcludedRules._1, graft.core.ClusterConf.ExcludedRules._2)
       .config(graft.core.ClusterConf.LocalFsConfs.toMap)
+      .config(graft.core.ClusterConf.SharedArtifacts._1, graft.core.ClusterConf.SharedArtifacts._2)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

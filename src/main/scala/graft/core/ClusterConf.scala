@@ -38,6 +38,8 @@ import org.apache.spark.sql.SparkSession
   *  - [[ExcludedRules]]: the optimizer rules no posture may run.
   *  - [[LocalFsConfs]]: local files through [[LocalFs]], which forks
   *    no process per file.
+  *  - [[SharedArtifacts]]: one codegen cache for all queries, so a
+  *    new streaming query reuses the classes earlier ones compiled.
   */
 object ClusterConf {
 
@@ -68,6 +70,20 @@ object ClusterConf {
     "spark.hadoop.fs.file.impl" -> classOf[LocalFs.Checked].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.Context].getName)
 
+  /** Generated code shared by every query of the application, in every
+    * posture (this one and `Bench.buildSession`'s). Spark 4 isolates
+    * each session's artifacts, and a streaming query runs on a clone
+    * of its session: with isolation on, every streaming query (each
+    * drain, each restart) gets executor class loaders of its own,
+    * misses the JVM-wide codegen cache, and compiles and JIT-warms
+    * all its generated classes again — 17 Janino compiles per
+    * perfbench drain of the event pipeline, 19 in the first batch of
+    * its live run, against 0 and 2 with isolation off. graft adds no
+    * session artifacts, so sharing them changes nothing else; a
+    * session built by hand can set the same conf at creation.
+    */
+  val SharedArtifacts: (String, String) = "spark.sql.artifact.isolation.enabled" -> "false"
+
   /** Apply the posture to a builder. `totalCores` = executors ×
     * cores/executor (e.g. 1000 × 4). Returns the builder for
     * chaining; nothing here depends on cluster manager or deploy
@@ -93,6 +109,7 @@ object ClusterConf {
       .config("spark.sql.parquet.aggregatePushdown", "true")
       .config(ExcludedRules._1, ExcludedRules._2)
       .config(LocalFsConfs.toMap)
+      .config(SharedArtifacts._1, SharedArtifacts._2)
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")

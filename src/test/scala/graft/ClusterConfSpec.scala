@@ -40,6 +40,8 @@ class ClusterConfSpec extends SparkSpec {
         Some(classOf[graft.core.LocalFs.Checked].getName))
       assert(opts.get("spark.hadoop.fs.AbstractFileSystem.file.impl") ===
         Some(classOf[graft.core.LocalFs.Context].getName))
+      // one codegen cache across the application's streaming queries
+      assert(opts.get("spark.sql.artifact.isolation.enabled") === Some("false"))
       val s = b.getOrCreate()
       // the graft extensions registered on THIS session — must hold
       // even when the builder reuses an already-running SparkContext

@@ -97,6 +97,29 @@ class NesConfigSpec extends SparkSpec {
     assert(v.contains("token_id") && v.contains("_id"))
   }
 
+  test("a second streaming query of the pipeline reuses the first one's generated classes") {
+    val base = java.nio.file.Files.createTempDirectory("graft-nesconf").toString
+    val srcDir = s"$base/src"
+    spark.read.format("graft.sources.BlockSource")
+      .option("startHeight", 400).option("numBlocks", 5)
+      .option("logsPerBlock", 3).option("numPartitions", 1)
+      .load().write.mode("overwrite").json(srcDir)
+    val tokens = Seq(("contract0.near", "400:0", "T400", "ipfs://m", """{"k":1}"""))
+      .toDF("contract_account_id", "token_id", "title", "media", "extra")
+    val conf = NesConfig.fromProperties(Map("enrich_metadata" -> "true"))
+    def drain(run: String): Unit = NesConfig.runConfigured(spark, conf, srcDir,
+      s"$base/$run/out", s"$base/$run/chk", Some(tokens)).awaitTermination()
+    // Janino compiles, JVM-wide: one per codegen-cache miss
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    drain("first")
+    val before = compiles
+    drain("second")
+    // each streaming query runs on a clone of the session; with Spark's
+    // per-session artifact isolation it would compile every class anew
+    assert(compiles - before === 0L)
+    assert(spark.read.parquet(s"$base/second/out").count() === 5L * 3)
+  }
+
   private def loadToml(toml: String): NesConfig = {
     val f = java.nio.file.Files.createTempFile("graft-nes", ".toml")
     java.nio.file.Files.write(f, toml.getBytes("UTF-8"))
