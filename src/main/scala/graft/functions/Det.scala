@@ -35,7 +35,7 @@ object Det {
     * sign. This is NOT floor division: callers that genuinely need
     * FLOOR bucketing for negative keys must guard BOTH engine sides
     * symmetrically, as q44 does with its `((x % N) + N) % N`
-    * day/hour keys (operators/Round5j.scala).
+    * day/hour keys (CoreAnalytics.scala).
     */
   def truncDiv(numerator: String, divisor: Long): String =
     s"($numerator) div $divisor"

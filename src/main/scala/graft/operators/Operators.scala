@@ -11,3 +11,12 @@ trait Operators {
   def queries: Map[String, (SparkSession, String) => DataFrame]
   def oracles: Map[String, String]
 }
+
+/** The two fixed-point scales the oracles share: a ratio is reported as
+  * `(a * Fx) div b` (six decimals) or `(a * Fx4) div b` (four), integer
+  * arithmetic that both engines round the same way.
+  */
+object Operators {
+  val Fx = 1000000L
+  val Fx4 = 10000L
+}

@@ -84,12 +84,17 @@ object EventStreams {
     (all.filter(isValid), all.filter(!isValid))
   }
 
-  /** Whitelist/blacklist on contract id; empty list = no constraint. */
+  /** Whitelist/blacklist on contract id; empty list = no constraint.
+    * A blacklist drops only the contracts it lists, so an event without
+    * a contract passes it (and is keyed `standard.event`), as it does
+    * with no lists set. A whitelist admits only the ids it lists, and
+    * null is not one of them. Both stay plain column predicates, so
+    * they push down into the JSON scan.
+    */
   def filterContracts(events: DataFrame, whitelist: Seq[String], blacklist: Seq[String]): DataFrame = {
-    val wl = if (whitelist.isEmpty) lit(true)
-      else col("emit_info.contract_account_id").isin(whitelist: _*)
-    val bl = if (blacklist.isEmpty) lit(true)
-      else !col("emit_info.contract_account_id").isin(blacklist: _*)
+    val c = col("emit_info.contract_account_id")
+    val wl = if (whitelist.isEmpty) lit(true) else c.isin(whitelist: _*)
+    val bl = if (blacklist.isEmpty) lit(true) else c.isNull || !c.isin(blacklist: _*)
     events.filter(wl && bl)
   }
 

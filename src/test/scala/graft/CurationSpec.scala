@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.operators.{Curation, Dedup, RangeJoin}
+import graft.operators.{Dedup, RangeJoin}
 
 class CurationSpec extends SparkSpec {
 

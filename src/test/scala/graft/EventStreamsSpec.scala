@@ -63,6 +63,15 @@ class EventStreamsSpec extends SparkSpec {
     assert(EventStreams.filterContracts(ev, Nil, Nil).count() === 4)
   }
 
+  test("a blacklist keeps a contract-less event, keyed standard.event") {
+    val ev = EventStreams.validated(EventStreams.extractEvents(
+      Seq(logRow(genericLog, null)).toDF(logs.columns.toIndexedSeq: _*)))
+    val kept = EventStreams.filterContracts(ev, Nil, Seq("dex.near"))
+    assert(kept.select(EventStreams.eventKey).as[String].collect().toSeq ===
+      Seq("ft_exchange.swap"))
+    assert(EventStreams.filterContracts(ev, Seq("dex.near"), Nil).count() === 0)
+  }
+
   test("flattenNep171 explodes mint/transfer arrays per token like try_flatten") {
     val ev = EventStreams.validated(EventStreams.extractEvents(logs))
       .dropDuplicates("standard", "event", "data")

@@ -242,7 +242,8 @@ class NesConfigSpec extends SparkSpec {
       "nft.near" -> ev("nft_burn", ""","data":[{"owner_id":"a.near","token_ids":["1:1"]}]"""),
       "spam.near" -> ev("nft_mint", ""","data":[{"owner_id":"s.near","token_ids":["1:1"]}]"""), // blacklisted
       "dex.near" -> """EVENT_JSON:{"standard":"ft_exchange","version":"2.0.0","event":"swap","data":{"x":1}}""",
-      // no contract: a blacklist's `isin` test is null, so both sides drop it
+      // no contract: a blacklist drops only the contracts it lists, so
+      // both sides keep it, keyed standard.event
       (null: String) -> ev("nft_mint", ""","data":[{"owner_id":"e.near","token_ids":["5:1"]}]"""),
       "nft.near" -> """EVENT_JSON:{"standard":"bad name!","version":"1","event":"x"}""",
       "nft.near" -> "a plain log line")
@@ -268,16 +269,17 @@ class NesConfigSpec extends SparkSpec {
         .collect().toSeq.groupBy(identity).map { case (r, rs) => r -> rs.length }
     val got = bag(single)
     assert(got === bag(staged))
-    // the fixture exercises what it claims: 9 kept events → 18
+    // the fixture exercises what it claims: 10 kept events → 20
     // envelope records; flat rows 3 (repeats kept) + 1 + 2 (one a
-    // null token id) + 1 (the lone object)
+    // null token id) + 1 (the lone object) + 1 (the contract-less mint)
     val meta = got.toSeq.filter(_._1._1.endsWith("_metadata"))
     def count(p: String => Boolean) = meta.collect { case (r, n) if p(r._3) => n }.sum
-    assert(got.values.sum - meta.map(_._2).sum === 18)
-    assert(count(_ => true) === 7)
+    assert(got.values.sum - meta.map(_._2).sum === 20)
+    assert(count(_ => true) === 8)
     assert(count(_.contains("\"title\":\"One\"")) === 3)
     assert(count(v => v.contains("\"token_id\":\"1:9\"") && !v.contains("title")) === 1)
     assert(count(_.contains("\"memo\":\"gift\"")) === 1)
     assert(!got.keys.exists(_._2 == "spam.near"))
+    assert(got.keys.exists(_._2 == "nep171.nft_mint"))
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Round8c
+import graft.operators.Multimodal
 import graft.sources.PgmCodec
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
@@ -63,6 +63,6 @@ class PgmCodecSpec extends AnyFunSuite {
     val img = PgmCodec.decode(PgmCodec.encode(w, h, 255, px)).get
     assert(img.pixel(0) === ((7 * 31) % 256))
     assert(img.pixel(w * h - 1) === ((7 * 31 + (w * h - 1) * 17) % 256))
-    assert(Round8c.queries.contains("mm15_pgm_decode"))
+    assert(Multimodal.queries.contains("mm15_pgm_decode"))
   }
 }

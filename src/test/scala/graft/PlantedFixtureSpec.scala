@@ -212,7 +212,7 @@ class PlantedFixtureSpec extends SparkSpec {
     // the cascade's hamming<=3 band (guards the one-byte-bump
     // assumption; if a future phash change breaks it, fail HERE with
     // a clear message, not with a silent never-fires)
-    val ph = graft.operators.Round5d.stripePhash(
+    val ph = graft.operators.Multimodal.stripePhash(
       graft.operators.Multimodal.asMedia(
         graft.core.Tables.documents(spark, dir)))
       .collect().map(r => r.getAs[Long]("media_id") -> r.getAs[Long]("phash")).toMap

@@ -58,6 +58,25 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(SparkEntry.operators.map(_.oracles.size).sum === SparkEntry.oracleSql.size)
   }
 
+  test("seven family objects, each owning exactly its own prefix") {
+    // a duplicate key inside one family's Map(...) literal collapses
+    // silently, so the per-family counts are pinned, not just summed
+    import graft.operators._
+    assert(SparkEntry.operators === Seq(EventPipeline, CoreAnalytics,
+      TextAnalysis, Packing, Dedup, Similarity, Multimodal))
+    val expected = Seq("ev" -> 83, "q" -> 82, "tx" -> 42, "pk" -> 27,
+      "dd" -> 46, "ss" -> 40, "mm" -> 23)
+    SparkEntry.operators.zip(expected).foreach { case (ops, (prefix, n)) =>
+      val owned = s"^$prefix[0-9]+[a-z]?_.*"
+      for (names <- Seq(ops.queries.keySet, ops.oracles.keySet)) {
+        assert(names.filterNot(_.matches(owned)).isEmpty, s"$ops: $names")
+        assert(names.size === n, s"$prefix count")
+      }
+    }
+    assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
+    assert(SparkEntry.queries.size === 343)
+  }
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs at sf0.001") {
       val df = fn(spark, sf)

@@ -203,7 +203,7 @@ class RandomizedEquivalenceSpec extends SparkSpec {
           org.apache.spark.sql.expressions.Window.currentRow)) - col("t"))
       .select(col("id"), col("late"))
     // a bucket width that does NOT divide the id range evenly
-    val got = graft.operators.Round5d.latenessTwoLevel(df, "id", "t", bucket = 97L)
+    val got = graft.operators.EventPipeline.latenessTwoLevel(df, "id", "t", bucket = 97L)
       .select(col("id"), col("late"))
     assert(got.except(direct).isEmpty && direct.except(got).isEmpty,
       "two-level lateness must equal the single-window replay")
@@ -214,7 +214,7 @@ class RandomizedEquivalenceSpec extends SparkSpec {
     // shares an element in A's (|A| - ceil(t|A|) + 1)-prefix under ANY
     // total order; random docs built by mutating shared bases so
     // containment pairs actually exist
-    val t = graft.operators.Round4b.ContainT
+    val t = graft.operators.Dedup.ContainT
     for (seed <- Seq(13, 29)) {
       val rnd = new Random(seed)
       val bases = (0 until 6).map(_ =>
@@ -465,7 +465,7 @@ class RandomizedEquivalenceSpec extends SparkSpec {
   }
 
   test("q75 delta algebra equals a direct v2 recompute on random corpora") {
-    import graft.operators.Round8d
+    import graft.operators.Dedup
     for (seed <- Seq(11, 47)) {
       val rnd = new Random(seed)
       val sources = Vector("web", "book", "code", "wiki")
@@ -483,20 +483,20 @@ class RandomizedEquivalenceSpec extends SparkSpec {
           sum(octet_length(col("text"))).cast("long").as("total_bytes"))
       // direct: census(v2). delta: census(v1) composed with the four
       // signed delta classes — the algebra the operator ships
-      val direct = census(Round8d.snapshotV2(docs))
+      val direct = census(Dedup.snapshotV2(docs))
         .collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
       def signed(v: org.apache.spark.sql.DataFrame, s: Int) = v
         .select(col("source"),
           lit(s.toLong).as("d0"),
           (lit(s) * size(split(trim(col("text")), "\\s+"))).cast("long").as("d1"),
           (lit(s) * octet_length(col("text"))).cast("long").as("d2"))
-      val v1 = Round8d.snapshotV1(docs)
+      val v1 = Dedup.snapshotV1(docs)
       val m7 = pmod(col("doc_id"), lit(7)); val m5 = pmod(col("doc_id"), lit(5))
       val delta = signed(v1, 1)
         .unionByName(signed(v1.filter(m7 === 0), -1))
-        .unionByName(signed(Round8d.snapshotV2(docs).filter(m7 === 6), 1))
+        .unionByName(signed(Dedup.snapshotV2(docs).filter(m7 === 6), 1))
         .unionByName(signed(v1.filter(m7 =!= 0 && m5 === 2), -1))
-        .unionByName(signed(Round8d.snapshotV2(docs)
+        .unionByName(signed(Dedup.snapshotV2(docs)
           .filter(m7 =!= 6 && m5 === 2), 1))
         .groupBy(col("source"))
         .agg(sum(col("d0")).cast("long").as("n_docs"),

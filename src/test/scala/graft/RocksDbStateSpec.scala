@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Round6k, Round6q}
+import graft.operators.EventPipeline
 import graft.core.ClusterConf
 import graft.streaming.StateV2
 
@@ -49,10 +49,10 @@ class RocksDbStateSpec extends SparkSpec {
   }
 
   test("ev46 stream compaction is provider-independent (dedup state)") {
-    val default = Round6k.queries("ev46_stream_compact")(spark, sf)
+    val default = EventPipeline.queries("ev46_stream_compact")(spark, sf)
       .collect().map(_.toSeq).toSeq
     val rocks = StateV2.withRocksDb(spark) {
-      Round6k.queries("ev46_stream_compact")(spark, sf)
+      EventPipeline.queries("ev46_stream_compact")(spark, sf)
         .collect().map(_.toSeq).toSeq
     }
     assert(spark.conf.getOption(Key).isEmpty || spark.conf.get(Key) != Rocks)
@@ -60,10 +60,10 @@ class RocksDbStateSpec extends SparkSpec {
   }
 
   test("ev51 sessionization (flatMapGroupsWithState) is provider-independent") {
-    val default = Round6q.queries("ev51_stream_sessions")(spark, sf)
+    val default = EventPipeline.queries("ev51_stream_sessions")(spark, sf)
       .collect().map(_.toSeq).toSeq
     val rocks = StateV2.withRocksDb(spark) {
-      Round6q.queries("ev51_stream_sessions")(spark, sf)
+      EventPipeline.queries("ev51_stream_sessions")(spark, sf)
         .collect().map(_.toSeq).toSeq
     }
     assert(rocks === default)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round10
+import graft.operators.Similarity
 
 class Round10Spec extends SparkSpec {
 
@@ -25,9 +25,9 @@ class Round10Spec extends SparkSpec {
     // whole corpus, so est_indeg IS the exact in-degree. The
     // comparison therefore isolates the sampling error, not a second
     // implementation of the algebra.
-    val est = Round10.panelIndeg(spark, sf, 64)
+    val est = Similarity.panelIndeg(spark, sf, 64)
       .select(col("vec_id"), col("est_indeg"))
-    val exact = Round10.panelIndeg(spark, sf, 1000000)
+    val exact = Similarity.panelIndeg(spark, sf, 1000000)
       .select(col("vec_id"), col("est_indeg").as("exact_indeg"))
     val joined = est.join(exact, Seq("vec_id")).cache()
     val n = joined.count()

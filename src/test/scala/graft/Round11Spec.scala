@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Round10, Round11}
+import graft.operators.{Dedup, CoreAnalytics, EventPipeline, Packing}
 
 class Round11Spec extends SparkSpec {
 
@@ -14,7 +14,7 @@ class Round11Spec extends SparkSpec {
     val n = rows.head.getAs[Long]("n_corpus")
     rows.foreach { r =>
       assert(r.getAs[Long]("pair_budget") ===
-        n * Round11.PairBudgetPerVec)
+        n * Dedup.PairBudgetPerVec)
       val within = r.getAs[Long]("candidate_pairs") <=
         r.getAs[Long]("pair_budget")
       assert(r.getAs[Long]("within_budget") === (if (within) 1L else 0L))
@@ -34,8 +34,8 @@ class Round11Spec extends SparkSpec {
     // the budget constant is calibrated so the chooser only widens
     // when density genuinely grows — a test corpus must not flip the
     // default that every gated lap runs under
-    val chosen = Round11.bandAutopick(Round10.bandDensityCensus(spark, sf),
-        Round11.corpusCount(spark, sf))
+    val chosen = Dedup.bandAutopick(Dedup.bandDensityCensus(spark, sf),
+        Dedup.corpusCount(spark, sf))
       .filter(col("chosen") === 1L).collect()
     assert(chosen.map(_.getAs[Long]("band_bits")).toSeq ===
       Seq(Dedup.EmbBandBits.toLong))
@@ -53,7 +53,7 @@ class Round11Spec extends SparkSpec {
       (16L, 180000000L, 400L, 4000000L))
       .toDF("band_bits", "n_buckets", "max_occupancy", "candidate_pairs")
     val n = Seq(200000L).toDF("n_corpus")
-    val picked = Round11.bandAutopick(census, n)
+    val picked = Dedup.bandAutopick(census, n)
       .filter(col("chosen") === 1L).collect()
     assert(picked.map(_.getAs[Long]("band_bits")).toSeq === Seq(16L))
     // and when NOTHING fits, the widest stop minimizes the overshoot
@@ -62,7 +62,7 @@ class Round11Spec extends SparkSpec {
       (8L, 1L, 1L, 8000000000L),
       (16L, 1L, 1L, 7000000000L))
       .toDF("band_bits", "n_buckets", "max_occupancy", "candidate_pairs")
-    val picked2 = Round11.bandAutopick(dense, n)
+    val picked2 = Dedup.bandAutopick(dense, n)
       .filter(col("chosen") === 1L).collect()
     assert(picked2.map(_.getAs[Long]("band_bits")).toSeq === Seq(16L))
     assert(picked2.head.getAs[Long]("within_budget") === 0L)
@@ -75,7 +75,7 @@ class Round11Spec extends SparkSpec {
     assert(byType.nonEmpty)
     byType.foreach { case (_, rs) =>
       assert(rs.map(_.getAs[Long]("delay_s")).sorted.toSeq ===
-        Round11.WatermarkDialS.sorted)
+        EventPipeline.WatermarkDialS.sorted)
       assert(rs.count(_.getAs[Long]("chosen") == 1L) === 1)
       rs.foreach { r =>
         val covers = r.getAs[Long]("delay_s") * 1000000L >=
@@ -91,11 +91,11 @@ class Round11Spec extends SparkSpec {
     }
     // the gated corpus arrives in order: every type picks the
     // shortest stop
-    val picks = Round11.watermarkAutopick(Round11.latenessCensus(spark, sf))
+    val picks = EventPipeline.watermarkAutopick(EventPipeline.latenessCensus(spark, sf))
       .filter(col("chosen") === 1L).collect()
     assert(picks.nonEmpty)
     assert(picks.map(_.getAs[Long]("delay_s")).toSet ===
-      Set(Round11.WatermarkDialS.min))
+      Set(EventPipeline.WatermarkDialS.min))
   }
 
   test("ev82 rule on synthetic censuses: covering pick and the overflow flag") {
@@ -106,7 +106,7 @@ class Round11Spec extends SparkSpec {
       ("mint", 1000L, 120L * 1000000L),
       ("burn", 1000L, 7200L * 1000000L))
       .toDF("event_type", "n_events", "p99_us")
-    val picked = Round11.watermarkAutopick(census)
+    val picked = EventPipeline.watermarkAutopick(census)
       .filter(col("chosen") === 1L).collect()
       .map(r => r.getAs[String]("event_type") ->
         (r.getAs[Long]("delay_s"), r.getAs[Long]("within_target"))).toMap
@@ -121,12 +121,12 @@ class Round11Spec extends SparkSpec {
     // stop taken and flagged
     val big = Seq((1000000L, 100L * 1024 * 1048576L))
       .toDF("n_docs", "total_chars")
-    val pickedBig = Round11.shardAutopick(big)
+    val pickedBig = Packing.shardAutopick(big)
       .filter(col("chosen") === 1L).collect()
     assert(pickedBig.map(_.getAs[Long]("target_mib")).toSeq === Seq(512L))
     assert(pickedBig.head.getAs[Long]("within_parallel") === 1L)
     val small = Seq((10000L, 1024L * 1048576L)).toDF("n_docs", "total_chars")
-    val pickedSmall = Round11.shardAutopick(small)
+    val pickedSmall = Packing.shardAutopick(small)
       .filter(col("chosen") === 1L).collect()
     assert(pickedSmall.map(_.getAs[Long]("target_mib")).toSeq === Seq(64L))
     assert(pickedSmall.head.getAs[Long]("within_parallel") === 0L)
@@ -134,7 +134,7 @@ class Round11Spec extends SparkSpec {
     val rows = SparkEntry.queries("pk27_shard_size_autopick")(spark, sf)
       .collect()
     assert(rows.map(_.getAs[Long]("target_mib")).sorted.toSeq ===
-      Round11.ShardDialMiB.sorted)
+      Packing.ShardDialMiB.sorted)
     assert(rows.count(_.getAs[Long]("chosen") == 1L) === 1)
   }
 
@@ -156,7 +156,7 @@ class Round11Spec extends SparkSpec {
       ("hot", 800L, 32000L, 16000L),
       ("broken", 1L, 32L, 1000L))
       .toDF("event_type", "n_keys", "n_rows", "max_rows")
-    val picked = Round11.saltAutopick(census)
+    val picked = CoreAnalytics.saltAutopick(census)
       .filter(col("chosen") === 1L).collect()
       .map(r => r.getAs[String]("event_type") ->
         (r.getAs[Long]("salt"), r.getAs[Long]("within_budget"))).toMap
@@ -187,18 +187,18 @@ class Round11Spec extends SparkSpec {
     // 2x-overshoot variant)
     def census(bytes: Long) =
       Seq(("t", 1L, bytes)).toDF("tbl", "n_rows", "est_bytes")
-    val picked = Round11.partitionAutopick(census(10L * 1024 * 1048576))
+    val picked = CoreAnalytics.partitionAutopick(census(10L * 1024 * 1048576))
       .filter(col("chosen") === 1L).collect()
     assert(picked.map(_.getAs[Long]("parts")).toSeq === Seq(192L))
     assert(picked.head.getAs[Long]("needed_parts") === 160L)
-    val sf10 = Round11.partitionAutopick(census(4440L * 1000 * 1000))
+    val sf10 = CoreAnalytics.partitionAutopick(census(4440L * 1000 * 1000))
       .filter(col("chosen") === 1L).collect()
     assert(sf10.map(_.getAs[Long]("parts")).toSeq === Seq(128L))
     assert(sf10.head.getAs[Long]("needed_parts") === 67L)
-    val small = Round11.partitionAutopick(census(1048576L))
+    val small = CoreAnalytics.partitionAutopick(census(1048576L))
       .filter(col("chosen") === 1L).collect()
     assert(small.map(_.getAs[Long]("parts")).toSeq === Seq(32L))
-    val giant = Round11.partitionAutopick(census(40L * 1024 * 1048576))
+    val giant = CoreAnalytics.partitionAutopick(census(40L * 1024 * 1048576))
       .filter(col("chosen") === 1L).collect()
     assert(giant.map(_.getAs[Long]("parts")).toSeq === Seq(256L))
     assert(giant.head.getAs[Long]("within_stop") === 0L)
@@ -206,7 +206,7 @@ class Round11Spec extends SparkSpec {
     val rows = SparkEntry.queries("q82_partition_autopick")(spark, sf)
       .collect()
     assert(rows.map(_.getAs[Long]("parts")).sorted.toSeq ===
-      Round11.PartitionDial.sorted)
+      CoreAnalytics.PartitionDial.sorted)
     assert(rows.count(_.getAs[Long]("chosen") == 1L) === 1)
     assert(rows.find(_.getAs[Long]("chosen") == 1L).get
       .getAs[Long]("parts") === 32L)

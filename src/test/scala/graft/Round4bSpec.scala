@@ -122,7 +122,7 @@ class Round4bSpec extends SparkSpec {
   }
 
   test("ev27 throttle census matches a driver-side sliding-window recompute") {
-    val limit = operators.Round4b.RateLimit
+    val limit = operators.EventPipeline.RateLimit
     // per-event trailing 24h count within the user's event set
     val cnts = events.groupBy(_._1).toSeq.flatMap { case (_, es) =>
       es.toSeq.map { e =>
@@ -186,7 +186,7 @@ class Round4bSpec extends SparkSpec {
       (idb, sb) <- shingleSets
       if ida != idb
       c = math.floor(sa.intersect(sb).size.toDouble / sa.size * 10000) / 10000
-      if c >= operators.Round4b.ContainT
+      if c >= operators.Dedup.ContainT
     } yield (ida, idb, c)).toSet
     val got = SparkEntry.queries("dd15_containment")(spark, sf).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round5
+import graft.operators.{CoreAnalytics, Dedup, EventPipeline, Similarity}
 
 /** Round-5 operators + the ensure-topic admin contract + the stats
   * listener.
@@ -11,7 +11,7 @@ class Round5Spec extends SparkSpec {
   // --- ev29: degraded-mode enrichment ------------------------------
 
   test("ev29 keeps every event: ok + fallback partition the input") {
-    val out = Round5.queries("ev29_enrich_fallback")(spark, sf)
+    val out = EventPipeline.queries("ev29_enrich_fallback")(spark, sf)
       .groupBy(col("enrich_status")).agg(sum(col("n_events")).as("n")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val total = graft.core.Tables.events(spark, sf).count()
@@ -21,7 +21,7 @@ class Round5Spec extends SparkSpec {
   }
 
   test("ev29 fallback rows carry the default metadata shape") {
-    val rows = Round5.queries("ev29_enrich_fallback")(spark, sf).collect()
+    val rows = EventPipeline.queries("ev29_enrich_fallback")(spark, sf).collect()
     val (fb, ok) = rows.partition(_.getString(0) == "fallback")
     assert(fb.forall(_.getString(1) == "UNKNOWN"),
       "every fallback row must carry the default segment")
@@ -37,9 +37,9 @@ class Round5Spec extends SparkSpec {
       .select(col("c_custkey")).collect().map(_.getLong(0)).toSet
     val expectedFallback = ev.select(col("user_id")).collect().count { r =>
       val u = r.getLong(0)
-      u % Round5.LookupFailMod == 0 || !custKeys.contains(u)
+      u % EventPipeline.LookupFailMod == 0 || !custKeys.contains(u)
     }
-    val got = Round5.queries("ev29_enrich_fallback")(spark, sf)
+    val got = EventPipeline.queries("ev29_enrich_fallback")(spark, sf)
       .filter(col("enrich_status") === "fallback")
       .agg(sum(col("n_events"))).collect()(0).getLong(0)
     assert(got === expectedFallback)
@@ -49,7 +49,7 @@ class Round5Spec extends SparkSpec {
 
   test("dd17 accounts every doc in every band and pairs match occupancy math") {
     val nDocs = graft.core.Tables.documents(spark, sf).count()
-    val rows = Round5.queries("dd17_lsh_occupancy")(spark, sf).collect()
+    val rows = Dedup.queries("dd17_lsh_occupancy")(spark, sf).collect()
     assert(rows.length === 4, "one row per band")
     rows.foreach { r =>
       assert(r.getLong(2) === nDocs, s"band ${r.getLong(0)} must hold all docs")
@@ -62,7 +62,7 @@ class Round5Spec extends SparkSpec {
     // Σ c·(c−1)/2 over buckets IS the number of (doc_a < doc_b) band
     // matches the dd07 self-join generates — the audit must predict
     // the join's true cost, not an approximation of it
-    val audit = Round5.queries("dd17_lsh_occupancy")(spark, sf)
+    val audit = Dedup.queries("dd17_lsh_occupancy")(spark, sf)
       .agg(sum(col("n_cand_pairs"))).collect()(0).getLong(0)
     // recompute directly: per (band,bval) occupancy from dd04's hashes
     val direct = graft.operators.Dedup.queries("dd04_simhash")(spark, sf)
@@ -77,7 +77,7 @@ class Round5Spec extends SparkSpec {
   // --- ss11: IVF nprobe-recall curve -------------------------------
 
   test("ss11 recall and candidate volume are monotone in nprobe") {
-    val rows = Round5.queries("ss11_ivf_nprobe_eval")(spark, sf)
+    val rows = Similarity.queries("ss11_ivf_nprobe_eval")(spark, sf)
       .orderBy(col("nprobe")).collect()
     assert(rows.map(_.getLong(0)).toSeq === Seq(1L, 2L, 4L))
     val cands = rows.map(_.getLong(1))
@@ -92,7 +92,7 @@ class Round5Spec extends SparkSpec {
   // --- q37: key-skew profile ---------------------------------------
 
   test("q37 skew profile bounds hold and fractions are consistent") {
-    val rows = Round5.queries("q37_key_skew")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q37_key_skew")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (nKeys, nRows, maxRows, top1) =

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round5b
+import graft.operators.{CoreAnalytics, Packing, Similarity, TextAnalysis}
 import graft.core.Tables
 
 /** Round-5 second-wave operators: CDC chunking, product quantization,
@@ -15,7 +15,7 @@ class Round5bSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("n"))
-    val got = Round5b.queries("pk04_cdc_chunks")(spark, sf)
+    val got = Packing.queries("pk04_cdc_chunks")(spark, sf)
       .groupBy(col("doc_id")).agg(sum(col("chunk_toks")).as("covered"))
     val bad = docs.join(got, Seq("doc_id"))
       .filter(col("n") =!= col("covered")).count()
@@ -32,7 +32,7 @@ class Round5bSpec extends SparkSpec {
     val doc = Tables.documents(spark, sf)
       .filter(col("doc_id") === 3).select(col("text")).collect()(0).getString(0)
     val toks = doc.trim.split("\\s+")
-    assume(toks.length > Round5b.CdcDivisor * 2, "need a doc long enough to chunk")
+    assume(toks.length > Packing.CdcDivisor * 2, "need a doc long enough to chunk")
     val ss = spark
     import ss.implicits._
     def chunksOf(text: String): Seq[(Long, Long)] = {
@@ -46,7 +46,7 @@ class Round5bSpec extends SparkSpec {
         .withColumn("starts", concat(array(lit(0)),
           transform(filter(sequence(lit(0), col("n") - 1),
             i => i < col("n") - 1 &&
-              element_at(col("ths"), i + 1) % lit(Round5b.CdcDivisor) === 0),
+              element_at(col("ths"), i + 1) % lit(Packing.CdcDivisor) === 0),
             i => i + 1)))
       base.select(col("toks"), col("n"), col("starts"), posexplode(col("starts")))
         .withColumn("cend", coalesce(get(col("starts"), col("pos") + 1), col("n")))
@@ -68,7 +68,7 @@ class Round5bSpec extends SparkSpec {
   test("ss12 codebook members reconstruct themselves exactly") {
     // a vector that IS a centroid in every subspace (vec_id < PqK)
     // must quantize to itself: recon cosine 1.0, zero error
-    val rows = Round5b.queries("ss12_pq_quantize")(spark, sf).collect()
+    val rows = Similarity.queries("ss12_pq_quantize")(spark, sf).collect()
     assert(rows.nonEmpty)
     // spot-check via the full pipeline on the codebook slice: rerun
     // the operator restricted to codebook vectors by checking the
@@ -88,7 +88,7 @@ class Round5bSpec extends SparkSpec {
     // random directions), far below the ~0.99 a trained codebook
     // reaches on clustered real data. Assert the chance gap, not a
     // quality bar the synthetic data can't support.
-    val rows = Round5b.queries("ss12_pq_quantize")(spark, sf).collect()
+    val rows = Similarity.queries("ss12_pq_quantize")(spark, sf).collect()
     val n = rows.map(_.getLong(1)).sum
     val wavg = rows.map(r => r.getDouble(2) * r.getLong(1)).sum / n
     assert(n === Tables.embeddings(spark, sf).count())
@@ -98,7 +98,7 @@ class Round5bSpec extends SparkSpec {
   // --- q38: incremental merge --------------------------------------
 
   test("q38 merged partials equal the direct single-pass aggregate") {
-    val merged = Round5b.queries("q38_incr_merge")(spark, sf)
+    val merged = CoreAnalytics.queries("q38_incr_merge")(spark, sf)
       .select(col("event_type"), col("n_events"), col("sum_value"),
         col("min_value"), col("max_value"))
     val direct = Tables.events(spark, sf)
@@ -116,7 +116,7 @@ class Round5bSpec extends SparkSpec {
       .select(expr("unix_micros(ts) div 86400000000").as("day"), col("event_type"))
       .distinct().groupBy(col("event_type")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    Round5b.queries("q38_incr_merge")(spark, sf).collect().foreach { r =>
+    CoreAnalytics.queries("q38_incr_merge")(spark, sf).collect().foreach { r =>
       assert(r.getLong(1) === expected(r.getString(0)))
     }
   }
@@ -124,13 +124,13 @@ class Round5bSpec extends SparkSpec {
   // --- tx17: corpus mixing -----------------------------------------
 
   test("tx17 allocation respects the budget and never overfills a source beyond its language quota") {
-    val rows = Round5b.queries("tx17_mix_plan")(spark, sf).collect()
+    val rows = TextAnalysis.queries("tx17_mix_plan")(spark, sf).collect()
     val total = rows.map(_.getLong(4)).sum
-    assert(total <= Round5b.MixBudget,
-      s"floor allocation can only under-fill: $total > ${Round5b.MixBudget}")
+    assert(total <= TextAnalysis.MixBudget,
+      s"floor allocation can only under-fill: $total > ${TextAnalysis.MixBudget}")
     // floor-of-floor loses at most (#langs + #sources) tokens' worth
     // of granularity relative to the budget — sanity-check we're close
-    assert(total > Round5b.MixBudget * 9 / 10,
+    assert(total > TextAnalysis.MixBudget * 9 / 10,
       s"allocation should land near the budget, got $total")
   }
 
@@ -140,7 +140,7 @@ class Round5bSpec extends SparkSpec {
     // temperature mixing)
     val ss = spark
     import ss.implicits._
-    val perLang = Round5b.queries("tx17_mix_plan")(spark, sf)
+    val perLang = TextAnalysis.queries("tx17_mix_plan")(spark, sf)
       .groupBy(col("lang"))
       .agg(sum(col("avail_tokens")).as("avail"), sum(col("alloc_tokens")).as("alloc"))
       .select(col("lang"), col("avail"),
@@ -153,7 +153,7 @@ class Round5bSpec extends SparkSpec {
   }
 
   test("tx17 mix weights sum to ~1") {
-    val w = Round5b.queries("tx17_mix_plan")(spark, sf)
+    val w = TextAnalysis.queries("tx17_mix_plan")(spark, sf)
       .select(col("lang"), col("mix_weight")).distinct()
       .agg(sum(col("mix_weight"))).collect()(0).getDouble(0)
     assert(math.abs(w - 1.0) < 0.01, s"weights must form a distribution, got $w")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round5c
+import graft.operators.{CoreAnalytics, Packing, Similarity, TextAnalysis}
 import graft.core.Tables
 
 /** Round-5 third-wave operators: rolling MAU, RRF fusion, pack plan,
@@ -12,7 +12,7 @@ class Round5cSpec extends SparkSpec {
   // --- q39: rolling 7-day active users -----------------------------
 
   test("q39 mau7 equals a direct trailing-window distinct recount") {
-    val got = Round5c.queries("q39_rolling_mau")(spark, sf)
+    val got = CoreAnalytics.queries("q39_rolling_mau")(spark, sf)
     val ud = Tables.events(spark, sf)
       .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("day"))
       .distinct()
@@ -22,7 +22,7 @@ class Round5cSpec extends SparkSpec {
     val pairs = ud.collect().map(r => (r.getLong(0), r.getLong(1)))
     days.foreach { r =>
       val d = r.getLong(0)
-      val expectMau = pairs.filter(p => p._2 <= d && p._2 > d - Round5c.MauDays)
+      val expectMau = pairs.filter(p => p._2 <= d && p._2 > d - CoreAnalytics.MauDays)
         .map(_._1).distinct.length.toLong
       val expectDau = pairs.filter(_._2 == d).map(_._1).distinct.length.toLong
       assert(r.getLong(2) === expectMau, s"mau7 mismatch on day $d")
@@ -31,7 +31,7 @@ class Round5cSpec extends SparkSpec {
   }
 
   test("q39 invariants: dau <= mau7, mau7 monotone vs dau sum bound, no phantom tail") {
-    val got = Round5c.queries("q39_rolling_mau")(spark, sf).cache()
+    val got = CoreAnalytics.queries("q39_rolling_mau")(spark, sf).cache()
     try {
       assert(got.filter(col("dau") > col("mau7")).count() === 0L)
       val maxEventDay = Tables.events(spark, sf)
@@ -44,14 +44,14 @@ class Round5cSpec extends SparkSpec {
   // --- ss13: reciprocal-rank fusion --------------------------------
 
   test("ss13 fuses both arms: scores decompose into the two rank terms") {
-    val got = Round5c.queries("ss13_rank_fusion")(spark, sf).collect()
+    val got = Similarity.queries("ss13_rank_fusion")(spark, sf).collect()
     assert(got.length === 10)
     got.foreach { r =>
       val rc = if (r.isNullAt(1)) None else Some(r.getLong(1))
       val rd = if (r.isNullAt(2)) None else Some(r.getLong(2))
       assert(rc.isDefined || rd.isDefined, "a fused row must appear in >=1 arm")
-      val expect = rc.map(x => 1000000L / (Round5c.RrfC + x)).getOrElse(0L) +
-        rd.map(x => 1000000L / (Round5c.RrfC + x)).getOrElse(0L)
+      val expect = rc.map(x => 1000000L / (Similarity.RrfC + x)).getOrElse(0L) +
+        rd.map(x => 1000000L / (Similarity.RrfC + x)).getOrElse(0L)
       assert(r.getLong(3) === expect, "rrf_fx must equal the closed-form sum")
     }
     // descending, tie-broken by vec_id
@@ -60,10 +60,10 @@ class Round5cSpec extends SparkSpec {
   }
 
   test("ss13 a vector ranked 1 in both arms dominates the fusion") {
-    val got = Round5c.queries("ss13_rank_fusion")(spark, sf).collect()
+    val got = Similarity.queries("ss13_rank_fusion")(spark, sf).collect()
     val top = got.head
     // the top fused score is bounded by the both-arms-rank-1 maximum
-    assert(top.getLong(3) <= 2 * (1000000L / (Round5c.RrfC + 1)))
+    assert(top.getLong(3) <= 2 * (1000000L / (Similarity.RrfC + 1)))
   }
 
   // --- pk05: pack plan ---------------------------------------------
@@ -74,7 +74,7 @@ class Round5cSpec extends SparkSpec {
         size(split(trim(col("text")), "\\s+")).cast("long").as("ntok"))
       .groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("n"), sum(col("ntok")).as("toks"))
-    val plan = Round5c.queries("pk05_pack_plan")(spark, sf)
+    val plan = Packing.queries("pk05_pack_plan")(spark, sf)
       .groupBy(col("lang"), col("source"))
       .agg(sum(col("n_docs")).as("pn"), sum(col("bin_tokens")).as("ptoks"))
     val bad = docs.join(plan, Seq("lang", "source"))
@@ -83,9 +83,9 @@ class Round5cSpec extends SparkSpec {
   }
 
   test("pk05 bins respect the budget geometry: tokens < budget + max doc") {
-    val plan = Round5c.queries("pk05_pack_plan")(spark, sf)
+    val plan = Packing.queries("pk05_pack_plan")(spark, sf)
     val bad = plan.filter(
-      col("bin_tokens") >= lit(Round5c.PackBudget) + col("max_doc_tokens")).count()
+      col("bin_tokens") >= lit(Packing.BinBudget) + col("max_doc_tokens")).count()
     assert(bad === 0L,
       "next-fit-on-sorted-order bins exceed budget by less than one document")
     // bin ids are dense from 0 per shard
@@ -99,7 +99,7 @@ class Round5cSpec extends SparkSpec {
   // --- tx18: vocabulary growth -------------------------------------
 
   test("tx18 counts are internally consistent") {
-    val got = Round5c.queries("tx18_vocab_growth")(spark, sf).cache()
+    val got = TextAnalysis.queries("tx18_vocab_growth")(spark, sf).cache()
     try {
       assert(got.filter(col("hapax") > col("vocab")).count() === 0L)
       assert(got.filter(col("vocab") > col("tokens")).count() === 0L)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.{Multimodal, Round5d}
+import graft.operators.{Multimodal, CoreAnalytics, Dedup, EventPipeline, TextAnalysis}
 import graft.core.Tables
 
 /** Round-5 fourth-wave operators: rule-based quality filtering,
@@ -15,7 +15,7 @@ class Round5dSpec extends SparkSpec {
   // --- tx19: rule-based quality filter -----------------------------
 
   test("tx19 keep is exactly the conjunction of the four rule flags") {
-    val got = Round5d.queries("tx19_rule_filter")(spark, sf).cache()
+    val got = TextAnalysis.queries("tx19_rule_filter")(spark, sf).cache()
     try {
       assert(got.filter(col("keep") =!=
         (col("wc_ok") && col("mwl_ok") && col("alpha_ok") && col("stop_ok")))
@@ -31,7 +31,7 @@ class Round5dSpec extends SparkSpec {
     val doc = Tables.documents(spark, sf)
       .filter(col("doc_id") === 0).select(col("text")).collect()(0).getString(0)
     val toks = doc.trim.split("\\s+").toSeq
-    val row = Round5d.queries("tx19_rule_filter")(spark, sf)
+    val row = TextAnalysis.queries("tx19_rule_filter")(spark, sf)
       .filter(col("doc_id") === 0).collect()(0)
     assert(row.getAs[Long]("n_words") === toks.length.toLong)
     assert(row.getAs[Long]("mwl_fx") ===
@@ -39,13 +39,13 @@ class Round5dSpec extends SparkSpec {
     assert(row.getAs[Long]("alpha_words") ===
       toks.count(_.exists(_.isLetter)).toLong)
     assert(row.getAs[Long]("stop_hits") ===
-      toks.count(t => Round5d.StopWords.contains(t.toLowerCase)).toLong)
+      toks.count(t => TextAnalysis.ProbeStopWords.contains(t.toLowerCase)).toLong)
   }
 
   // --- ev30: watermark-delay sizing audit --------------------------
 
   test("ev30 two-level lateness equals the direct global runmax recount") {
-    val got = Round5d.queries("ev30_watermark_fit")(spark, sf).collect()
+    val got = EventPipeline.queries("ev30_watermark_fit")(spark, sf).collect()
       .map(r => (r.getAs[Long]("delay_s"), r.getAs[Long]("n_late"))).toMap
     // direct single-window replay (fine at spec scale)
     val direct = Tables.events(spark, sf)
@@ -53,15 +53,15 @@ class Round5dSpec extends SparkSpec {
       .withColumn("wm", max(col("t")).over(Window.orderBy(col("event_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .withColumn("late_us", col("wm") - col("t"))
-    Round5d.WmDelaysS.foreach { ds =>
+    EventPipeline.WmDelaysS.foreach { ds =>
       val expect = direct.filter(col("late_us") > ds * 1000000L).count()
       assert(got(ds) === expect, s"delay ${ds}s")
     }
   }
 
   test("ev30 drop count is monotone non-increasing in the delay") {
-    val rows = Round5d.queries("ev30_watermark_fit")(spark, sf).collect()
-    assert(rows.length === Round5d.WmDelaysS.length)
+    val rows = EventPipeline.queries("ev30_watermark_fit")(spark, sf).collect()
+    assert(rows.length === EventPipeline.WmDelaysS.length)
     val byDelay = rows.sortBy(_.getAs[Long]("delay_s")).map(_.getAs[Long]("n_late"))
     byDelay.sliding(2).foreach { case Array(a, b) => assert(a >= b) }
     val n = rows.map(_.getAs[Long]("n_events")).distinct
@@ -71,7 +71,7 @@ class Round5dSpec extends SparkSpec {
   // --- q40: spend-concentration Lorenz curve -----------------------
 
   test("q40 tiles every ordering customer once and the curve closes at 1") {
-    val got = Round5d.queries("q40_spend_lorenz")(spark, sf).collect()
+    val got = CoreAnalytics.queries("q40_spend_lorenz")(spark, sf).collect()
     assert(got.length === 10)
     val nCust = Tables.orders(spark, sf).select(col("o_custkey")).distinct().count()
     assert(got.map(_.getAs[Long]("n_customers")).sum === nCust)
@@ -106,7 +106,7 @@ class Round5dSpec extends SparkSpec {
   // --- dd18: fuzzy decontamination ---------------------------------
 
   test("dd18 census covers every train doc and rates stay consistent") {
-    val got = Round5d.queries("dd18_fuzzy_contamination")(spark, sf).collect()
+    val got = Dedup.queries("dd18_fuzzy_contamination")(spark, sf).collect()
     val evalOf = Tables.documents(spark, sf)
       .withColumn("is_eval",
         graft.functions.Hashing.hash64(col("doc_id").cast("string")) % 20 === 0)
@@ -117,7 +117,7 @@ class Round5dSpec extends SparkSpec {
       val mx = r.getAs[Long]("max_j_fx")
       assert(mx >= 0L && mx <= 1000000L)
       if (r.getAs[Long]("n_flagged") === 0L) assert(mx === 0L)
-      else assert(mx >= Round5d.FuzzyJfx)
+      else assert(mx >= Dedup.FuzzyJfx)
     }
   }
 
@@ -141,8 +141,8 @@ class Round5dSpec extends SparkSpec {
       }.maxOption.getOrElse(0L)
       id -> best
     }.toMap
-    val nTrueHits = bestJ.count(_._2 >= Round5d.FuzzyJfx)
-    val got = Round5d.queries("dd18_fuzzy_contamination")(spark, sf).collect()
+    val nTrueHits = bestJ.count(_._2 >= Dedup.FuzzyJfx)
+    val got = Dedup.queries("dd18_fuzzy_contamination")(spark, sf).collect()
     val flagged = got.map(_.getAs[Long]("n_flagged")).sum
     assert(flagged <= nTrueHits, "banding must never invent a hit")
     // reported maxima must match a true pair's Jaccard
@@ -161,30 +161,30 @@ class Round5dSpec extends SparkSpec {
       (1L, "text/plain", "the quick brown fox jumps over the lazy dog".getBytes, 43L, "a"),
       (2L, "text/plain", "dog lazy the over jumps fox brown quick the".getBytes, 43L, "a"))
       .toDF("media_id", "media_type", "payload", "byte_len", "source")
-    val codes = Round5d.stripePhash(media).collect()
+    val codes = Multimodal.stripePhash(media).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(codes(0L) === codes(1L), "identical payloads must collide exactly")
     assert(codes(0L) !== codes(2L), "permuted payload must differ")
-    assert((0 until Round5d.PhashStripes).forall { s =>
+    assert((0 until Multimodal.PhashStripes).forall { s =>
       ((codes(0L) >> (4 * s)) & 15L) >= 0L
     })
   }
 
   test("mm07 audit rows are band collisions with exact hamming and a consistent flag") {
-    val got = Round5d.queries("mm07_phash_neardup")(spark, sf).cache()
+    val got = Multimodal.queries("mm07_phash_neardup")(spark, sf).cache()
     try {
       assert(got.filter(col("media_a") >= col("media_b")).count() === 0L)
       assert(got.filter(col("is_dup") =!= (col("hamming") <= 3)).count() === 0L)
       // every reported pair genuinely shares a band value
       val ascii = Tables.documents(spark, sf)
         .filter(length(col("text")) > 0 && col("text").rlike("^[\\x00-\\x7F]*$"))
-      val codes = Round5d.stripePhash(Multimodal.asMedia(ascii)).collect()
+      val codes = Multimodal.stripePhash(Multimodal.asMedia(ascii)).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toMap
       got.collect().foreach { r =>
         val (a, b) = (r.getAs[Long]("media_a"), r.getAs[Long]("media_b"))
-        val shared = (0 until Round5d.PhashBands).exists { band =>
-          ((codes(a) >> (band * Round5d.PhashBandBits)) & Round5d.PhashBandMask) ==
-            ((codes(b) >> (band * Round5d.PhashBandBits)) & Round5d.PhashBandMask)
+        val shared = (0 until Multimodal.PhashBands).exists { band =>
+          ((codes(a) >> (band * Multimodal.PhashBandBits)) & Multimodal.PhashBandMask) ==
+            ((codes(b) >> (band * Multimodal.PhashBandBits)) & Multimodal.PhashBandMask)
         }
         assert(shared, s"pair ($a,$b) shares no band")
         assert(r.getAs[Long]("hamming") ===

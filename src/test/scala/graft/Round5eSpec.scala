@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round5e
+import graft.operators.{CoreAnalytics, EventPipeline, Packing}
 import graft.core.Tables
 
 /** Round-5 fifth-wave operators: basket affinity, type transitions,
@@ -12,8 +12,8 @@ class Round5eSpec extends SparkSpec {
   // --- q41: market-basket affinity ---------------------------------
 
   test("q41 support and lift recompute exactly for the reported head pair") {
-    val got = Round5e.queries("q41_basket_affinity")(spark, sf).collect()
-    assert(got.nonEmpty && got.length <= Round5e.BasketTopK)
+    val got = CoreAnalytics.queries("q41_basket_affinity")(spark, sf).collect()
+    assert(got.nonEmpty && got.length <= CoreAnalytics.BasketTopK)
     val items = Tables.lineitem(spark, sf)
       .select(col("l_orderkey"), col("l_partkey")).distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -39,7 +39,7 @@ class Round5eSpec extends SparkSpec {
   // --- ev31: event-type transition matrix --------------------------
 
   test("ev31 census conserves transitions and normalizes per from-type") {
-    val got = Round5e.queries("ev31_type_transitions")(spark, sf).collect()
+    val got = EventPipeline.queries("ev31_type_transitions")(spark, sf).collect()
     val totalTrans = got.map(_.getAs[Long]("n_transitions")).sum
     val expect = Tables.events(spark, sf)
       .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
@@ -58,8 +58,8 @@ class Round5eSpec extends SparkSpec {
   // --- pk06: context-length pricing curve --------------------------
 
   test("pk06 conserves tokens at every candidate length") {
-    val got = Round5e.queries("pk06_ctx_curve")(spark, sf).collect()
-    assert(got.length === Round5e.CtxLens.length)
+    val got = Packing.queries("pk06_ctx_curve")(spark, sf).collect()
+    assert(got.length === Packing.CtxLens.length)
     val totalToks = Tables.documents(spark, sf)
       .select(size(split(trim(col("text")), "\\s+")).cast("long").as("n"))
       .agg(sum(col("n"))).collect()(0).getLong(0)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Round5f, Similarity}
+import graft.operators.{Similarity, CoreAnalytics, EventPipeline}
 import graft.core.Tables
 import graft.functions.Hashing
 
@@ -13,7 +13,7 @@ class Round5fSpec extends SparkSpec {
   // --- ev32: block-height continuity audit -------------------------
 
   test("ev32 buckets partition ALL missing heights (conservation law)") {
-    val got = Round5f.queries("ev32_height_gaps")(spark, sf).collect()
+    val got = EventPipeline.queries("ev32_height_gaps")(spark, sf).collect()
     assert(got.nonEmpty)
     val nIds = got.map(_.getAs[Long]("n_ids")).sum
     val missIn = got.map(_.getAs[Long]("missing_in")).sum
@@ -34,7 +34,7 @@ class Round5fSpec extends SparkSpec {
   }
 
   test("ev32 missing count equals the injected drop-out census") {
-    val got = Round5f.queries("ev32_height_gaps")(spark, sf).collect()
+    val got = EventPipeline.queries("ev32_height_gaps")(spark, sf).collect()
     val missIn = got.map(_.getAs[Long]("missing_in")).sum
     val gaps = got.map(_.getAs[Long]("gap_before")).sum
     val gMin = got.head.getAs[Long]("id_min")
@@ -43,7 +43,7 @@ class Round5fSpec extends SparkSpec {
     val dropped = Tables.events(spark, sf)
       .select(col("event_id"))
       .filter(pmod(Hashing.hash64(col("event_id").cast("string")),
-        lit(Round5f.DropMod)) === 0)
+        lit(EventPipeline.DropMod)) === 0)
       .filter(col("event_id") >= gMin && col("event_id") <= gMax)
       .count()
     assert(missIn + gaps === dropped,
@@ -53,7 +53,7 @@ class Round5fSpec extends SparkSpec {
   // --- q42: revenue bridge -----------------------------------------
 
   test("q42 bridge closes and the residual is rounding-bounded") {
-    val got = Round5f.queries("q42_revenue_bridge")(spark, sf).collect()
+    val got = CoreAnalytics.queries("q42_revenue_bridge")(spark, sf).collect()
     assert(got.nonEmpty)
     got.foreach { r =>
       val rev0 = r.getAs[Long]("rev0_fx"); val rev1 = r.getAs[Long]("rev1_fx")
@@ -74,12 +74,12 @@ class Round5fSpec extends SparkSpec {
   }
 
   test("q42 per-nation totals recompute from the raw tables") {
-    val got = Round5f.queries("q42_revenue_bridge")(spark, sf).collect()
+    val got = CoreAnalytics.queries("q42_revenue_bridge")(spark, sf).collect()
     val expect = Tables.lineitem(spark, sf)
       .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
       .join(Tables.customer(spark, sf), col("o_custkey") === col("c_custkey"))
       .join(Tables.nation(spark, sf), col("c_nationkey") === col("n_nationkey"))
-      .filter(year(col("o_orderdate")) === Round5f.BridgeY0)
+      .filter(year(col("o_orderdate")) === CoreAnalytics.BridgeY0)
       .groupBy(col("n_name"))
       .agg((sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
         .cast("decimal(18,6)")) * lit(1000000)).cast("long").as("rev0"))
@@ -92,7 +92,7 @@ class Round5fSpec extends SparkSpec {
   // --- ss14: IVF cell balance --------------------------------------
 
   test("ss14 census covers every vector and shares sum to ~1e6") {
-    val got = Round5f.queries("ss14_cell_balance")(spark, sf).collect()
+    val got = Similarity.queries("ss14_cell_balance")(spark, sf).collect()
     assert(got.length <= Similarity.IvfK)
     val nTotal = Tables.embeddings(spark, sf).count()
     assert(got.map(_.getAs[Long]("n_vecs")).sum === nTotal,
@@ -112,7 +112,7 @@ class Round5fSpec extends SparkSpec {
     val cells = Similarity.assignCells(spark, sf)
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val got = Round5f.queries("ss14_cell_balance")(spark, sf).collect()
+    val got = Similarity.queries("ss14_cell_balance")(spark, sf).collect()
     got.foreach { r =>
       assert(r.getAs[Long]("n_vecs") === cells(r.getAs[Long]("cell")))
     }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Round5g, Round5d}
+import graft.operators.{EventPipeline, Packing, TextAnalysis}
 import graft.core.Tables
 import graft.functions.Hashing
 
@@ -13,7 +13,7 @@ class Round5gSpec extends SparkSpec {
   // --- tx20: curation-yield funnel ---------------------------------
 
   test("tx20 funnel is monotone and recounts the tx19 keep column") {
-    val got = Round5g.queries("tx20_curation_yield")(spark, sf).collect()
+    val got = TextAnalysis.queries("tx20_curation_yield")(spark, sf).collect()
     assert(got.nonEmpty)
     got.foreach { r =>
       assert(r.getAs[Long]("docs_in") >= r.getAs[Long]("docs_rules"))
@@ -24,7 +24,7 @@ class Round5gSpec extends SparkSpec {
         r.getAs[Long]("tokens_final") * 1000000L / r.getAs[Long]("tokens_in"))
     }
     // docs_rules must equal the SHIPPED tx19 battery's keep census
-    val keeps = Round5d.queries("tx19_rule_filter")(spark, sf)
+    val keeps = TextAnalysis.queries("tx19_rule_filter")(spark, sf)
       .filter(col("keep"))
       .join(Tables.documents(spark, sf).select(col("doc_id"), col("source")), "doc_id")
       .groupBy(col("source")).agg(count(lit(1)).as("n"))
@@ -36,10 +36,10 @@ class Round5gSpec extends SparkSpec {
   }
 
   test("tx20 dedup stage keeps exactly one doc per surviving fingerprint") {
-    val got = Round5g.queries("tx20_curation_yield")(spark, sf).collect()
+    val got = TextAnalysis.queries("tx20_curation_yield")(spark, sf).collect()
     val docsFinal = got.map(_.getAs[Long]("docs_final")).sum
     // distinct normalized fingerprints among rule-kept docs
-    val kept = Round5d.queries("tx19_rule_filter")(spark, sf)
+    val kept = TextAnalysis.queries("tx19_rule_filter")(spark, sf)
       .filter(col("keep")).select(col("doc_id"))
     val nFps = Tables.documents(spark, sf)
       .join(kept, "doc_id")
@@ -53,11 +53,11 @@ class Round5gSpec extends SparkSpec {
   // --- ev33: redelivery audit --------------------------------------
 
   test("ev33 duplicate count equals the injected replay census exactly") {
-    val got = Round5g.queries("ev33_redelivery_dedup")(spark, sf).collect()
+    val got = EventPipeline.queries("ev33_redelivery_dedup")(spark, sf).collect()
     assert(got.nonEmpty)
     val replayed = Tables.events(spark, sf)
       .filter(pmod(Hashing.hash64(col("event_id").cast("string")),
-        lit(Round5g.RedeliverMod)) === 0)
+        lit(EventPipeline.RedeliverMod)) === 0)
       .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val trueCounts = Tables.events(spark, sf)
@@ -76,8 +76,8 @@ class Round5gSpec extends SparkSpec {
   // --- pk07: shard manifest ----------------------------------------
 
   test("pk07 manifest covers the corpus and balances within hash noise") {
-    val got = Round5g.queries("pk07_shard_manifest")(spark, sf).collect()
-    assert(got.length <= Round5g.NShards)
+    val got = Packing.queries("pk07_shard_manifest")(spark, sf).collect()
+    assert(got.length <= Packing.ManifestShards)
     val nTotal = Tables.documents(spark, sf).count()
     val tokTotal = Tables.documents(spark, sf)
       .select(size(split(trim(col("text")), "\\s+")).cast("long").as("n"))
@@ -89,7 +89,7 @@ class Round5gSpec extends SparkSpec {
     val shareSum = got.map(_.getAs[Long]("share_fx")).sum
     assert(shareSum <= 1000000L && shareSum > 1000000L - got.length)
     got.foreach { r =>
-      assert(r.getAs[Long]("shard") >= 0L && r.getAs[Long]("shard") < Round5g.NShards)
+      assert(r.getAs[Long]("shard") >= 0L && r.getAs[Long]("shard") < Packing.ManifestShards)
       assert(r.getAs[Long]("n_docs") > 0L, "empty shards don't emit rows")
     }
   }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Round5h}
+import graft.operators.{Dedup, CoreAnalytics, EventPipeline}
 import graft.core.Tables
 
 /** Round-5 eighth-wave operators: journey paths, exact ship-latency
@@ -12,13 +12,13 @@ class Round5hSpec extends SparkSpec {
   // --- ev34: user journey paths ------------------------------------
 
   test("ev34 full census conserves users and shares are exact fixed-point") {
-    val got = Round5h.queries("ev34_journey_paths")(spark, sf).collect()
-    assert(got.nonEmpty && got.length <= Round5h.PathTopK)
+    val got = EventPipeline.queries("ev34_journey_paths")(spark, sf).collect()
+    assert(got.nonEmpty && got.length <= EventPipeline.PathTopK)
     val nUsers = Tables.events(spark, sf)
       .select(col("user_id")).distinct().count()
     got.foreach { r =>
       // a journey prefix never has more than PathLen steps
-      assert(r.getAs[String]("path").split(">").length <= Round5h.PathLen)
+      assert(r.getAs[String]("path").split(">").length <= EventPipeline.PathLen)
       assert(r.getAs[Long]("share_fx") ===
         r.getAs[Long]("n_users") * 1000000L / nUsers)
     }
@@ -38,13 +38,13 @@ class Round5hSpec extends SparkSpec {
       .select(unix_micros(col("ts")).as("ts"), col("event_id"), col("event_type"))
       .collect()
       .sortBy(r => (r.getLong(0), r.getLong(1)))
-      .take(Round5h.PathLen).map(_.getString(2)).mkString(">")
+      .take(EventPipeline.PathLen).map(_.getString(2)).mkString(">")
     // recompute the full (un-limited) census for just that user
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val gotPath = Tables.events(spark, sf)
       .withColumn("rn", row_number().over(w))
-      .filter(col("user_id") === u && col("rn") <= Round5h.PathLen)
+      .filter(col("user_id") === u && col("rn") <= EventPipeline.PathLen)
       .orderBy(col("rn")).select(col("event_type"))
       .as[String].collect().mkString(">")
     assert(gotPath === expected)
@@ -53,7 +53,7 @@ class Round5hSpec extends SparkSpec {
   // --- q43: ship-latency percentiles -------------------------------
 
   test("q43 percentiles match a driver-side exact recompute") {
-    val got = Round5h.queries("q43_ship_latency")(spark, sf).collect()
+    val got = CoreAnalytics.queries("q43_ship_latency")(spark, sf).collect()
     assert(got.nonEmpty)
     val li = Tables.lineitem(spark, sf)
     val o = Tables.orders(spark, sf)
@@ -78,8 +78,8 @@ class Round5hSpec extends SparkSpec {
   // --- dd19: MinHash-k sweep ---------------------------------------
 
   test("dd19 sweep prices every k over the same pair frame with bounded error") {
-    val got = Round5h.queries("dd19_minhash_k_sweep")(spark, sf).collect()
-    assert(got.map(_.getAs[Int]("k")).toSeq === Round5h.SweepKs)
+    val got = Dedup.queries("dd19_minhash_k_sweep")(spark, sf).collect()
+    assert(got.map(_.getAs[Int]("k")).toSeq === Dedup.SweepKs)
     val pairCounts = got.map(_.getAs[Long]("n_pairs")).distinct
     assert(pairCounts.length === 1 && pairCounts(0) > 0,
       "every k is evaluated on the identical candidate-pair frame")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Round5i}
+import graft.operators.{Dedup, Packing, Similarity}
 import graft.core.Tables
 import graft.functions.Hashing
 
@@ -13,9 +13,9 @@ class Round5iSpec extends SparkSpec {
   // --- pk08: epoch shuffle -----------------------------------------
 
   test("pk08 is a permutation per epoch with contiguous shard-local positions") {
-    val got = Round5i.queries("pk08_epoch_shuffle")(spark, sf).collect()
+    val got = Packing.queries("pk08_epoch_shuffle")(spark, sf).collect()
     val nDocs = Tables.documents(spark, sf).count()
-    assert(got.length === nDocs * Round5i.Epochs.length)
+    assert(got.length === nDocs * Packing.Epochs.length)
     // every (epoch, doc) exactly once
     assert(got.map(r => (r.getAs[Int]("epoch"), r.getAs[Long]("doc_id")))
       .distinct.length === got.length)
@@ -28,13 +28,13 @@ class Round5iSpec extends SparkSpec {
   }
 
   test("pk08 epochs permute independently and the hash replays driver-side") {
-    val got = Round5i.queries("pk08_epoch_shuffle")(spark, sf).collect()
+    val got = Packing.queries("pk08_epoch_shuffle")(spark, sf).collect()
     // the two epoch orderings differ (an identical permutation would
     // mean the seed never reached the hash)
     val byEpoch = got.groupBy(_.getAs[Int]("epoch")).view
       .mapValues(_.sortBy(r => (r.getAs[Long]("shard"), r.getAs[Long]("pos")))
         .map(_.getAs[Long]("doc_id")).toSeq).toMap
-    assert(byEpoch(Round5i.Epochs(0)) !== byEpoch(Round5i.Epochs(1)))
+    assert(byEpoch(Packing.Epochs(0)) !== byEpoch(Packing.Epochs(1)))
     // replay one doc's shard assignment through the hash definition
     import spark.implicits._
     val doc = got(0).getAs[Long]("doc_id")
@@ -42,14 +42,14 @@ class Round5iSpec extends SparkSpec {
     val h = spark.range(1).select(Hashing.hash64(
       concat_ws("|", lit(epoch.toString), lit(doc.toString)))).as[Long].collect()(0)
     assert(got(0).getAs[Long]("shard") ===
-      ((h % Round5i.ShuffleShards) + Round5i.ShuffleShards) % Round5i.ShuffleShards)
+      ((h % Packing.ShuffleShards) + Packing.ShuffleShards) % Packing.ShuffleShards)
   }
 
   // --- ss15: quantization bit sweep --------------------------------
 
   test("ss15 reconstruction quality is monotone in bit width") {
-    val got = Round5i.queries("ss15_quant_bits_sweep")(spark, sf).collect()
-    assert(got.map(_.getAs[Int]("bits")).toSeq === Round5i.SweepBits)
+    val got = Similarity.queries("ss15_quant_bits_sweep")(spark, sf).collect()
+    assert(got.map(_.getAs[Int]("bits")).toSeq === Similarity.SweepBits)
     val n = got.map(_.getAs[Long]("n_vecs")).distinct
     assert(n.length === 1 && n(0) === Tables.embeddings(spark, sf).count())
     val cos = got.map(_.getAs[Double]("avg_recon_cos"))
@@ -66,8 +66,8 @@ class Round5iSpec extends SparkSpec {
   // --- dd20: hot-shingle audit -------------------------------------
 
   test("dd20 head shingle recounts directly and shares bound the mass") {
-    val got = Round5i.queries("dd20_hot_shingles")(spark, sf).collect()
-    assert(got.nonEmpty && got.length <= Round5i.HotTopK)
+    val got = Dedup.queries("dd20_hot_shingles")(spark, sf).collect()
+    assert(got.nonEmpty && got.length <= Dedup.HotTopK)
     val dfs = got.map(_.getAs[Long]("df"))
     assert(dfs.sameElements(dfs.sortBy(-_)), "ordered by document frequency")
     got.foreach { r =>

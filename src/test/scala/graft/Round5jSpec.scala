@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Round5j, TextAnalysis}
+import graft.operators.{TextAnalysis, CoreAnalytics, Packing}
 import graft.core.Tables
 
 /** Round-5 tenth-wave operators: length bucketing, weekly
@@ -12,7 +12,7 @@ class Round5jSpec extends SparkSpec {
   // --- pk09: length buckets ----------------------------------------
 
   test("pk09 buckets tile the corpus and waste arithmetic recounts") {
-    val got = Round5j.queries("pk09_length_buckets")(spark, sf).collect()
+    val got = Packing.queries("pk09_length_buckets")(spark, sf).collect()
     assert(got.nonEmpty)
     val nDocs = Tables.documents(spark, sf)
       .filter(size(TextAnalysis.tokens(col("text"))) > 0).count()
@@ -35,7 +35,7 @@ class Round5jSpec extends SparkSpec {
   // --- q44: weekly seasonality -------------------------------------
 
   test("q44 grid keys are in range and shares sum to ~1 per type") {
-    val got = Round5j.queries("q44_hour_seasonality")(spark, sf).collect()
+    val got = CoreAnalytics.queries("q44_hour_seasonality")(spark, sf).collect()
     assert(got.nonEmpty)
     got.foreach { r =>
       assert(r.getAs[Int]("dow") >= 0 && r.getAs[Int]("dow") <= 6)
@@ -51,7 +51,7 @@ class Round5jSpec extends SparkSpec {
   }
 
   test("q44 dow/hour replay against java.time for a sampled event") {
-    val got = Round5j.queries("q44_hour_seasonality")(spark, sf)
+    val got = CoreAnalytics.queries("q44_hour_seasonality")(spark, sf)
     val ev = Tables.events(spark, sf)
       .select(col("ts"), col("event_type")).limit(1).collect()(0)
     val ins = ev.getAs[java.sql.Timestamp]("ts").toInstant
@@ -76,7 +76,7 @@ class Round5jSpec extends SparkSpec {
         (r.getAs[String]("event_type"), z.getDayOfWeek.getValue % 7, z.getHour)
       }
       .groupBy(identity).view.mapValues(_.length.toLong).toMap
-    val got = Round5j.queries("q44_hour_seasonality")(spark, sf).collect()
+    val got = CoreAnalytics.queries("q44_hour_seasonality")(spark, sf).collect()
       .map(r => (r.getAs[String]("event_type"), r.getAs[Int]("dow"),
         r.getAs[Int]("hour")) -> r.getAs[Long]("n")).toMap
     assert(got === want, "java.time grid replay")
@@ -85,7 +85,7 @@ class Round5jSpec extends SparkSpec {
   // --- tx21: Zipf octaves ------------------------------------------
 
   test("tx21 octaves cover the vocab and the mass conserves") {
-    val got = Round5j.queries("tx21_zipf_octaves")(spark, sf).collect()
+    val got = TextAnalysis.queries("tx21_zipf_octaves")(spark, sf).collect()
     assert(got.nonEmpty)
     val octs = got.map(_.getAs[Int]("octave"))
     assert(octs.toSeq === (0 until octs.length), "octaves are contiguous from 0")
@@ -129,7 +129,7 @@ class Round5jSpec extends SparkSpec {
       .agg(count(lit(1)).as("n_toks"), sum(col("freq")).cast("long").as("mass"))
       .collect().map(r => r.getAs[Int]("octave") ->
         (r.getAs[Long]("n_toks"), r.getAs[Long]("mass"))).toMap
-    val got = Round5j.queries("tx21_zipf_octaves")(spark, sf).collect()
+    val got = TextAnalysis.queries("tx21_zipf_octaves")(spark, sf).collect()
       .map(r => r.getAs[Int]("octave") ->
         (r.getAs[Long]("n_toks"), r.getAs[Long]("mass"))).toMap
     assert(got === naive)

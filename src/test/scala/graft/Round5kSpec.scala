@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Round5k}
+import graft.operators.{Dedup, EventPipeline, TextAnalysis}
 import graft.core.Tables
 import graft.functions.Hashing
 
@@ -13,9 +13,9 @@ class Round5kSpec extends SparkSpec {
   // --- dd21: banding S-curve tuner ---------------------------------
 
   test("dd21 recall is monotone in bands and replays the S-curve driver-side") {
-    val got = Round5k.queries("dd21_band_scurve")(spark, sf).collect()
+    val got = Dedup.queries("dd21_band_scurve")(spark, sf).collect()
     assert(got.map(r => (r.getAs[Int]("bands"), r.getAs[Int]("rows_per_band")))
-      .toSeq === Round5k.Layouts)
+      .toSeq === Dedup.Layouts)
     // every layout sees the same true-pair population
     assert(got.map(_.getAs[Long]("n_true_pairs")).distinct.length === 1)
     // more bands (fewer rows per band) never lowers expected recall
@@ -35,8 +35,8 @@ class Round5kSpec extends SparkSpec {
       .collect().map(_.getAs[Long]("sfx"))
     def powFx(x: Long, e: Int): Long =
       if (e == 1) x else { val h = powFx(x, e / 2); h * h / 1000000L }
-    val (bb, rr) = Round5k.Layouts(1) // (8, 2)
-    val trueBins = sims.map(s => math.min(s / 50000L, 19L)).filter(_ >= Round5k.TrueBin)
+    val (bb, rr) = Dedup.Layouts(1) // (8, 2)
+    val trueBins = sims.map(s => math.min(s / 50000L, 19L)).filter(_ >= Dedup.TrueBin)
     val mass = trueBins.map { bin =>
       val s1 = bin * 50000L + 25000L
       1000000L - powFx(1000000L - powFx(s1, rr), bb)
@@ -48,7 +48,7 @@ class Round5kSpec extends SparkSpec {
   // --- ev35: out-of-order audit ------------------------------------
 
   test("ev35 inversion census matches a driver-side replay of the jitter") {
-    val got = Round5k.queries("ev35_order_inversions")(spark, sf).collect()
+    val got = EventPipeline.queries("ev35_order_inversions")(spark, sf).collect()
     assert(got.nonEmpty)
     // disorder was actually injected somewhere
     assert(got.map(_.getAs[Long]("n_inversions")).sum > 0L,
@@ -59,7 +59,7 @@ class Round5kSpec extends SparkSpec {
       assert(r.getAs[Long]("inv_rate_fx") === inv * 1000000L / n)
       if (inv > 0) {
         val mb = r.getAs[Long]("max_backstep_us")
-        assert(mb > 0L && mb < Round5k.MaxJitterUs)
+        assert(mb > 0L && mb < EventPipeline.MaxJitterUs)
       }
     }
     // replay the whole census driver-side from raw events
@@ -71,7 +71,7 @@ class Round5kSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("event_id"),
         r.getAs[String]("event_type"), {
           val h = r.getAs[Long]("h"); val us = r.getAs[Long]("us")
-          if (h % Round5k.JitterMod == 0) us - h % Round5k.MaxJitterUs else us
+          if (h % EventPipeline.JitterMod == 0) us - h % EventPipeline.MaxJitterUs else us
         }))
     val wantInv = raw.groupBy(_._1).values.flatMap { evs =>
       evs.sortBy(_._2).sliding(2).collect {
@@ -87,7 +87,7 @@ class Round5kSpec extends SparkSpec {
   // --- tx22: char-Gini census --------------------------------------
 
   test("tx22 per-lang census bounds hold and one doc recomputes exactly") {
-    val got = Round5k.queries("tx22_char_gini")(spark, sf).collect()
+    val got = TextAnalysis.queries("tx22_char_gini")(spark, sf).collect()
     val langs = Tables.documents(spark, sf).select(col("lang")).distinct()
       .collect().map(_.getString(0)).sorted
     assert(got.map(_.getAs[String]("lang")).toSeq === langs.toSeq)

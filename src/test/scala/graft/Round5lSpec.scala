@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Round5l}
+import graft.operators.{Dedup, EventPipeline, Similarity}
 import graft.core.Tables
 
 /** Round-5 twelfth-wave operators: gap octaves, probe-recall curve,
@@ -12,7 +12,7 @@ class Round5lSpec extends SparkSpec {
   // --- ev36: session-gap octaves -----------------------------------
 
   test("ev36 gap census conserves pairs and the split curve is monotone") {
-    val got = Round5l.queries("ev36_gap_octaves")(spark, sf).collect()
+    val got = EventPipeline.queries("ev36_gap_octaves")(spark, sf).collect()
     assert(got.nonEmpty)
     val nEvents = Tables.events(spark, sf).count()
     val nUsers = Tables.events(spark, sf).select(col("user_id")).distinct().count()
@@ -33,7 +33,7 @@ class Round5lSpec extends SparkSpec {
   }
 
   test("ev36 split count at one threshold replays driver-side") {
-    val got = Round5l.queries("ev36_gap_octaves")(spark, sf).collect()
+    val got = EventPipeline.queries("ev36_gap_octaves")(spark, sf).collect()
     // pick the octave containing 1800 s (ev09's 30-min dial): 2^10
     val oct10 = got.find(_.getAs[Int]("octave") === 10)
     if (oct10.isDefined) {
@@ -52,8 +52,8 @@ class Round5lSpec extends SparkSpec {
   // --- ss16: probe-radius recall curve -----------------------------
 
   test("ss16 curve is monotone in radius and candidates bound hits") {
-    val got = Round5l.queries("ss16_probe_recall")(spark, sf).collect()
-    assert(got.map(_.getAs[Int]("radius")).toSeq === Round5l.Radii)
+    val got = Similarity.queries("ss16_probe_recall")(spark, sf).collect()
+    assert(got.map(_.getAs[Int]("radius")).toSeq === Similarity.Radii)
     val cands = got.map(_.getAs[Long]("n_cands"))
     val hits = got.map(_.getAs[Long]("n_hits"))
     assert(cands.zip(cands.tail).forall { case (a, b) => a <= b },
@@ -67,11 +67,11 @@ class Round5lSpec extends SparkSpec {
   }
 
   test("ss16 radius-2 candidate count recounts via the sketch directly") {
-    val got = Round5l.queries("ss16_probe_recall")(spark, sf).collect()
+    val got = Similarity.queries("ss16_probe_recall")(spark, sf).collect()
     val e = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       .withColumn("sketch",
-        graft.operators.Similarity.signBucket(col("emb"), graft.operators.Round3.SketchBits))
+        graft.operators.Similarity.signBucket(col("emb"), graft.operators.Similarity.SketchBits))
     val qs = e.filter(col("vec_id") === 0).collect()(0).getAs[Long]("sketch")
     val want = e.filter(col("vec_id") =!= 0)
       .filter(bit_count(col("sketch").bitwiseXOR(lit(qs))) <= 2).count()
@@ -81,7 +81,7 @@ class Round5lSpec extends SparkSpec {
   // --- dd22: cluster-size octaves ----------------------------------
 
   test("dd22 octaves tile the dd02 population and recount dd06") {
-    val got = Round5l.queries("dd22_cluster_octaves")(spark, sf).collect()
+    val got = Dedup.queries("dd22_cluster_octaves")(spark, sf).collect()
     assert(got.nonEmpty)
     val pop = Dedup.docShingles(spark, sf).count()
     assert(got.map(_.getAs[Long]("n_docs")).sum === pop,
@@ -92,7 +92,7 @@ class Round5lSpec extends SparkSpec {
       assert(r.getAs[Long]("n_docs") >= 2 * r.getAs[Long]("n_clusters"))
     }
     // recount the clustered mass against dd06's own census
-    val dd06 = graft.operators.Curation.queries("dd06_dedup_clusters")(spark, sf)
+    val dd06 = Dedup.queries("dd06_dedup_clusters")(spark, sf)
       .agg(sum(col("n_members")).cast("long")).collect()(0).getLong(0)
     val singles = got.find(_.getAs[Int]("octave") === 0)
       .map(_.getAs[Long]("n_docs")).getOrElse(0L)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round5m
+import graft.operators.{EventPipeline, Similarity}
 import graft.core.Tables
 
 /** Round-5 thirteenth-wave operators: burst minutes, index coverage. */
@@ -10,7 +10,7 @@ class Round5mSpec extends SparkSpec {
   // --- ev37: burst minutes -----------------------------------------
 
   test("ev37 conserves events and the burst rule replays driver-side") {
-    val got = Round5m.queries("ev37_burst_minutes")(spark, sf).collect()
+    val got = EventPipeline.queries("ev37_burst_minutes")(spark, sf).collect()
     assert(got.nonEmpty)
     assert(got.map(_.getAs[Long]("total_events")).sum ===
       Tables.events(spark, sf).count())
@@ -24,14 +24,14 @@ class Round5mSpec extends SparkSpec {
       .filter(col("event_type") === t0)
       .select(expr("unix_micros(ts) div 60000000").as("m"))
       .groupBy(col("m")).count().collect().map(_.getAs[Long]("count"))
-    val want = cells.count(n => n * cells.length >= Round5m.BurstX * cells.sum)
+    val want = cells.count(n => n * cells.length >= EventPipeline.BurstX * cells.sum)
     assert(got(0).getAs[Long]("n_burst_minutes") === want.toLong)
   }
 
   // --- ss17: index coverage ----------------------------------------
 
   test("ss17 census recounts via direct anti-joins") {
-    val got = Round5m.queries("ss17_index_coverage")(spark, sf).collect()
+    val got = Similarity.queries("ss17_index_coverage")(spark, sf).collect()
     assert(got.length === 1)
     val r = got(0)
     val docs = Tables.documents(spark, sf).select(col("doc_id"))

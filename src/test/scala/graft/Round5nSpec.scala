@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Round5m, Round5n}
+import graft.operators.{EventPipeline, Similarity}
 import graft.core.Tables
 
 /** Round-5 fourteenth-wave operators: streaming bursts, dim stats. */
@@ -10,8 +10,8 @@ class Round5nSpec extends SparkSpec {
   // --- ev38: streaming burst twin ----------------------------------
 
   test("ev38 streamed burst census equals the batch ev37 census") {
-    val streamed = Round5n.queries("ev38_stream_bursts")(spark, sf).collect()
-    val batch = Round5m.queries("ev37_burst_minutes")(spark, sf).collect()
+    val streamed = EventPipeline.queries("ev38_stream_bursts")(spark, sf).collect()
+    val batch = EventPipeline.queries("ev37_burst_minutes")(spark, sf).collect()
     assert(streamed.map(_.toSeq).toSeq === batch.map(_.toSeq).toSeq,
       "the lambda halves must agree cell-for-cell")
     assert(streamed.nonEmpty)
@@ -20,7 +20,7 @@ class Round5nSpec extends SparkSpec {
   // --- ss18: per-dimension moments ---------------------------------
 
   test("ss18 covers every dimension with full counts and sane moments") {
-    val got = Round5n.queries("ss18_dim_stats")(spark, sf).collect()
+    val got = Similarity.queries("ss18_dim_stats")(spark, sf).collect()
     val nVecs = Tables.embeddings(spark, sf).count()
     val dims = Tables.embeddings(spark, sf)
       .select(size(col("embedding"))).distinct().collect().map(_.getInt(0))
@@ -36,7 +36,7 @@ class Round5nSpec extends SparkSpec {
   }
 
   test("ss18 one dimension's moments replay driver-side") {
-    val got = Round5n.queries("ss18_dim_stats")(spark, sf).collect()
+    val got = Similarity.queries("ss18_dim_stats")(spark, sf).collect()
     val vs = Tables.embeddings(spark, sf)
       .select(element_at(col("embedding").cast("array<double>"), 1).as("v"))
       .collect().map(r => math.floor(r.getAs[Double]("v") * 1000000.0).toLong)

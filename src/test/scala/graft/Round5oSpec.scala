@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Round5o}
+import graft.operators.{Dedup, TextAnalysis}
 import graft.core.Tables
 
 /** Round-5 fifteenth-wave operators: capped banding, char classes. */
@@ -10,7 +10,7 @@ class Round5oSpec extends SparkSpec {
   // --- dd23: capped banding ----------------------------------------
 
   test("dd23 conservation laws hold and capped candidates recount vs dd03") {
-    val got = Round5o.queries("dd23_capped_banding")(spark, sf).collect()
+    val got = Dedup.queries("dd23_capped_banding")(spark, sf).collect()
     assert(got.length === 1)
     val r = got(0)
     assert(r.getAs[Long]("cand_capped") <= r.getAs[Long]("cand_full"))
@@ -29,20 +29,20 @@ class Round5oSpec extends SparkSpec {
   }
 
   test("dd23 bucket census recounts from the banding table directly") {
-    val got = Round5o.queries("dd23_capped_banding")(spark, sf).collect()(0)
+    val got = Dedup.queries("dd23_capped_banding")(spark, sf).collect()(0)
     val occ = Dedup.queries("dd03_minhash_lsh")(spark, sf) // warm unrelated
     val occs = graft.operators.Dedup.bandedSignatures(spark, sf)
       .groupBy(col("band"), col("band_hash")).count()
       .collect().map(_.getAs[Long]("count"))
     assert(got.getAs[Long]("n_buckets") === occs.length.toLong)
     assert(got.getAs[Long]("n_hot_dropped") ===
-      occs.count(_ > Round5o.BucketCap).toLong)
+      occs.count(_ > Dedup.BucketCap).toLong)
   }
 
   // --- tx23: char-class profile ------------------------------------
 
   test("tx23 shares tile each source and one doc replays driver-side") {
-    val got = Round5o.queries("tx23_charclass_profile")(spark, sf).collect()
+    val got = TextAnalysis.queries("tx23_charclass_profile")(spark, sf).collect()
     val sources = Tables.documents(spark, sf).select(col("source")).distinct().count()
     assert(got.length === sources.toInt)
     got.foreach { r =>

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Round5p, TextAnalysis}
+import graft.operators.{TextAnalysis, EventPipeline, Packing}
 import graft.core.Tables
 
 /** Round-5 sixteenth-wave operators: curriculum phases, session
@@ -12,12 +12,12 @@ class Round5pSpec extends SparkSpec {
   // --- pk10: curriculum phases -------------------------------------
 
   test("pk10 phases tile the corpus into ordered quality quartiles") {
-    val got = Round5p.queries("pk10_curriculum_phases")(spark, sf).collect()
-    assert(got.map(_.getAs[Int]("phase")).toSeq === (1 to Round5p.Phases))
+    val got = Packing.queries("pk10_curriculum_phases")(spark, sf).collect()
+    assert(got.map(_.getAs[Int]("phase")).toSeq === (1 to Packing.Phases))
     val nDocs = Tables.documents(spark, sf).count()
     assert(got.map(_.getAs[Long]("n_docs")).sum === nDocs)
     // ANSI ntile sizing: ceil/floor split of the population
-    val base = nDocs / Round5p.Phases
+    val base = nDocs / Packing.Phases
     got.foreach { r =>
       val n = r.getAs[Long]("n_docs")
       assert(n === base || n === base + 1)
@@ -41,12 +41,12 @@ class Round5pSpec extends SparkSpec {
     val ranked = scored.sortBy(r => (r._2, r._1))
     val n = ranked.length
     // ANSI NTILE: first (n % k) buckets get ceil(n/k)
-    val k = Round5p.Phases
+    val k = Packing.Phases
     val (q, rem) = (n / k, n % k)
     val phaseTokens = ranked.zipWithIndex.groupBy { case (_, i) =>
       if (i < (q + 1) * rem) i / (q + 1) + 1 else (i - rem) / q + 1
     }.view.mapValues(_.map(_._1._3).sum).toMap
-    val got = Round5p.queries("pk10_curriculum_phases")(spark, sf).collect()
+    val got = Packing.queries("pk10_curriculum_phases")(spark, sf).collect()
       .map(r => r.getAs[Int]("phase") -> r.getAs[Long]("n_tokens")).toMap
     assert(got === phaseTokens.map { case (p, t) => p -> t })
   }
@@ -54,7 +54,7 @@ class Round5pSpec extends SparkSpec {
   // --- ev39: session profile ---------------------------------------
 
   test("ev39 session census conserves events and sessions vs ev09") {
-    val got = Round5p.queries("ev39_session_profile")(spark, sf).collect()
+    val got = EventPipeline.queries("ev39_session_profile")(spark, sf).collect()
     assert(got.nonEmpty)
     // Σ sz·n_sessions = all events
     assert(got.map(r => r.getAs[Long]("sz") * r.getAs[Long]("n_sessions")).sum ===

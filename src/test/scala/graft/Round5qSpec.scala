@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Curation, Round5d, Round5q}
+import graft.operators.{Packing, TextAnalysis}
 import graft.core.Tables
 import graft.functions.Hashing
 
@@ -9,11 +9,11 @@ import graft.functions.Hashing
 class Round5qSpec extends SparkSpec {
 
   test("pk11 stage counts agree with the shipped stages it chains") {
-    val got = Round5q.queries("pk11_curate_pack_e2e")(spark, sf).collect()
+    val got = Packing.queries("pk11_curate_pack_e2e")(spark, sf).collect()
     assert(got.nonEmpty)
     // docs_final totals must equal tx20's per-source docs_final total
     // (same rules, same fingerprint keeper — different census key)
-    val tx20Final = graft.operators.Round5g.queries("tx20_curation_yield")(spark, sf)
+    val tx20Final = graft.operators.TextAnalysis.queries("tx20_curation_yield")(spark, sf)
       .agg(sum(col("docs_final"))).collect()(0).getLong(0)
     assert(got.map(_.getAs[Long]("docs_final")).sum === tx20Final)
     got.foreach { r =>
@@ -24,12 +24,12 @@ class Round5qSpec extends SparkSpec {
       // more packs than docs
       assert(packs <= r.getAs[Long]("docs_final"))
       assert(r.getAs[Long]("fill_fx") ===
-        toks * 1000000L / (packs * Curation.PackBudget))
+        toks * 1000000L / (packs * Packing.PackBudget))
     }
   }
 
   test("pk11 packing replays driver-side for one lang") {
-    val fl = Round5d.ruleFlags(Tables.documents(spark, sf))
+    val fl = TextAnalysis.ruleFlags(Tables.documents(spark, sf))
       .withColumn("fp", Hashing.hash64(
         lower(regexp_replace(trim(col("text")), "\\s+", " "))))
       .select(col("doc_id"), col("lang"), col("n_words"), col("keep"), col("fp"))
@@ -43,9 +43,9 @@ class Round5qSpec extends SparkSpec {
     // pack of doc k = floor(cum-before-k / budget); replay the walk
     var cum = 0L; var packs = Set.empty[Long]
     docs.foreach { dcc =>
-      packs += (cum / Curation.PackBudget); cum += dcc._3
+      packs += (cum / Packing.PackBudget); cum += dcc._3
     }
-    val got = Round5q.queries("pk11_curate_pack_e2e")(spark, sf).collect()
+    val got = Packing.queries("pk11_curate_pack_e2e")(spark, sf).collect()
       .find(_.getAs[String]("lang") == lang0).get
     assert(got.getAs[Long]("docs_final") === docs.length.toLong)
     assert(got.getAs[Long]("tokens_final") === docs.map(_._3).sum)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Round5r}
+import graft.operators.{Dedup, EventPipeline}
 import graft.core.Tables
 
 /** Round-5 eighteenth-wave operators: mix drift, threshold sweep. */
@@ -10,7 +10,7 @@ class Round5rSpec extends SparkSpec {
   // --- ev40: day-over-day mix drift --------------------------------
 
   test("ev40 drift is bounded and one day pair replays driver-side") {
-    val got = Round5r.queries("ev40_mix_drift")(spark, sf).collect()
+    val got = EventPipeline.queries("ev40_mix_drift")(spark, sf).collect()
     assert(got.nonEmpty)
     got.foreach { r =>
       val drift = r.getAs[Long]("drift_fx")
@@ -36,7 +36,7 @@ class Round5rSpec extends SparkSpec {
   // --- dd24: threshold sweep ---------------------------------------
 
   test("dd24 curve is monotone and anchors to dd02 at the 0.2 threshold") {
-    val got = Round5r.queries("dd24_threshold_sweep")(spark, sf).collect()
+    val got = Dedup.queries("dd24_threshold_sweep")(spark, sf).collect()
     assert(got.nonEmpty)
     val byThr = got.map(r => r.getAs[Long]("thr_fx") -> r.getAs[Long]("n_pairs"))
     assert(byThr.map(_._1).toSeq === byThr.map(_._1).sorted.toSeq)

@@ -1,17 +1,17 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Round5s, Similarity}
+import graft.operators.Similarity
 import graft.core.Tables
 
 /** Round-5 nineteenth wave: panel recall eval. */
 class Round5sSpec extends SparkSpec {
 
   test("ss19 census shape holds and bounds order correctly") {
-    val got = Round5s.queries("ss19_panel_recall")(spark, sf).collect()
+    val got = Similarity.queries("ss19_panel_recall")(spark, sf).collect()
     assert(got.length === 1)
     val r = got(0)
-    assert(r.getAs[Long]("n_queries") === Round5s.PanelN.toLong)
+    assert(r.getAs[Long]("n_queries") === Similarity.PanelN.toLong)
     val (mean, lo, hi) = (r.getAs[Long]("mean_recall_fx"),
       r.getAs[Long]("min_recall_fx"), r.getAs[Long]("max_recall_fx"))
     assert(lo <= mean && mean <= hi)
@@ -37,10 +37,10 @@ class Round5sSpec extends SparkSpec {
       val approx = scored.filter(_._3).sortBy(v => (-v._2, v._1)).take(10).map(_._1)
       approx.count(truth) * 100000L
     }
-    val recalls = (0L until Round5s.PanelN.toLong).map(recallOf)
-    val got = Round5s.queries("ss19_panel_recall")(spark, sf).collect()(0)
+    val recalls = (0L until Similarity.PanelN.toLong).map(recallOf)
+    val got = Similarity.queries("ss19_panel_recall")(spark, sf).collect()(0)
     assert(got.getAs[Long]("min_recall_fx") === recalls.min)
     assert(got.getAs[Long]("max_recall_fx") === recalls.max)
-    assert(got.getAs[Long]("mean_recall_fx") === recalls.sum / Round5s.PanelN)
+    assert(got.getAs[Long]("mean_recall_fx") === recalls.sum / Similarity.PanelN)
   }
 }

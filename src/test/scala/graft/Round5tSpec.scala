@@ -1,14 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round5t
+import graft.operators.CoreAnalytics
 import graft.core.Tables
 
 /** Round-5 twentieth wave: cohort LTV. */
 class Round5tSpec extends SparkSpec {
 
   test("q45 conserves revenue and the LTV curve is monotone per cohort") {
-    val got = Round5t.queries("q45_ltv_cohorts")(spark, sf).collect()
+    val got = CoreAnalytics.queries("q45_ltv_cohorts")(spark, sf).collect()
     assert(got.nonEmpty)
     // total revenue conserves (cents)
     val want = Tables.orders(spark, sf)

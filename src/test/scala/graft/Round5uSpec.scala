@@ -1,14 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round5u
+import graft.operators.Similarity
 import graft.core.Tables
 
 /** Round-5 twenty-first wave: cluster margin census. */
 class Round5uSpec extends SparkSpec {
 
   test("ss20 census covers every label with full counts and sane margins") {
-    val got = Round5u.queries("ss20_cluster_margin")(spark, sf).collect()
+    val got = Similarity.queries("ss20_cluster_margin")(spark, sf).collect()
     val labels = Tables.embeddings(spark, sf).select(col("label"))
       .distinct().collect().map(_.getInt(0)).sorted
     assert(got.map(_.getAs[Int]("cluster")).toSeq === labels.toSeq)
@@ -48,7 +48,7 @@ class Round5uSpec extends SparkSpec {
       val other = cents.filter(_._1 != l).values.map(c => cos(v, c)).max
       math.floor((own - other) * 10000) < 0
     }.toLong).toMap
-    val got = Round5u.queries("ss20_cluster_margin")(spark, sf).collect()
+    val got = Similarity.queries("ss20_cluster_margin")(spark, sf).collect()
       .map(r => r.getAs[Int]("cluster") -> r.getAs[Long]("n_negative")).toMap
     assert(got === negByLabel)
   }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6
+import graft.operators.{CoreAnalytics, EventPipeline, Packing, TextAnalysis}
 import graft.core.Tables
 
 /** Round-6 first-wave operators: new-vs-returning accounting, exact
@@ -10,7 +10,7 @@ import graft.core.Tables
 class Round6Spec extends SparkSpec {
 
   test("ev41 conserves events, splits actives, and opens all-new") {
-    val got = Round6.queries("ev41_new_returning")(spark, sf).collect()
+    val got = EventPipeline.queries("ev41_new_returning")(spark, sf).collect()
     assert(got.nonEmpty)
     assert(got.map(_.getAs[Long]("n_events")).sum ===
       Tables.events(spark, sf).count())
@@ -28,7 +28,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("q46 quartiles are ordered, in-domain, and match a naive replay") {
-    val got = Round6.queries("q46_grouped_quartiles")(spark, sf).collect()
+    val got = CoreAnalytics.queries("q46_grouped_quartiles")(spark, sf).collect()
     assert(got.length === 3) // R, N, A
     got.foreach { r =>
       assert(r.getAs[Long]("p25") <= r.getAs[Long]("p50"))
@@ -49,7 +49,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("tx24 census bounds hold and a java-regex replay agrees") {
-    val got = Round6.queries("tx24_pii_census")(spark, sf).collect()
+    val got = TextAnalysis.queries("tx24_pii_census")(spark, sf).collect()
     assert(got.nonEmpty)
     got.foreach { r =>
       assert(r.getAs[Long]("docs_with_pii") <= r.getAs[Long]("n_docs"))
@@ -69,7 +69,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("pk12 splits partition the corpus deterministically with sane shares") {
-    val got = Round6.queries("pk12_split_manifest")(spark, sf).collect()
+    val got = Packing.queries("pk12_split_manifest")(spark, sf).collect()
     assert(got.map(_.getAs[Long]("n_docs")).sum ===
       Tables.documents(spark, sf).count())
     // shares within each split sum to ~1 (floor division loses <1e-6 per source)
@@ -82,7 +82,7 @@ class Round6Spec extends SparkSpec {
       .view.mapValues(_.map(_.getAs[Long]("n_docs")).sum).toMap
     assert(bySplit("train") > 10L * bySplit.getOrElse("val", 0L).max(1L) / 2L)
     // deterministic: a second run is bit-identical
-    val again = Round6.queries("pk12_split_manifest")(spark, sf).collect()
+    val again = Packing.queries("pk12_split_manifest")(spark, sf).collect()
     assert(got.map(_.toSeq).toSeq === again.map(_.toSeq).toSeq)
   }
 }

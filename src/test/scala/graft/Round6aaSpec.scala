@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6aa
+import graft.operators.CoreAnalytics
 import graft.core.Tables
 
 class Round6aaSpec extends SparkSpec {
 
   test("q56 pagerank replays exactly against a scala-side propagation") {
-    val rows = Round6aa.queries("q56_supplier_pagerank")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q56_supplier_pagerank")(spark, sf).collect()
     assert(rows.nonEmpty && rows.length <= 20)
     val ranks = rows.map(_.getAs[Long]("rank_fx"))
     assert(ranks.sameElements(ranks.sortBy(-(_: Long))))
@@ -39,7 +39,7 @@ class Round6aaSpec extends SparkSpec {
   }
 
   test("q57 merkle summaries detect exactly the buckets that gained rows") {
-    val rows = Round6aa.queries("q57_merkle_diff")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q57_merkle_diff")(spark, sf).collect()
     assert(rows.nonEmpty && rows.length <= 256)
     rows.foreach { r =>
       val delta = r.getAs[Long]("rows_delta")

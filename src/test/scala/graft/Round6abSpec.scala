@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Round6ab}
+import graft.operators.{Dedup, EventPipeline}
 import graft.core.Tables
 
 class Round6abSpec extends SparkSpec {
 
   test("ev57 sizing is consistent: peak >= mean, consumers cover the load") {
-    val rows = Round6ab.queries("ev57_consumer_sizing")(spark, sf).collect()
+    val rows = EventPipeline.queries("ev57_consumer_sizing")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val peak = r.getAs[Long]("peak_rate")
@@ -24,7 +24,7 @@ class Round6abSpec extends SparkSpec {
   }
 
   test("dd32 pair census folds back to dd03 and precision rises with bands") {
-    val rows = Round6ab.queries("dd32_band_precision")(spark, sf).collect()
+    val rows = Dedup.queries("dd32_band_precision")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Long]("n_dups") <= r.getAs[Long]("n_pairs"))

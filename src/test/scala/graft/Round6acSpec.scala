@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6ac
+import graft.operators.{Multimodal, Similarity}
 import graft.core.Tables
 
 class Round6acSpec extends SparkSpec {
 
   test("mm12 cascade conserves items and attributes removals to stages") {
-    val rows = Round6ac.queries("mm12_dedup_cascade")(spark, sf).collect()
+    val rows = Multimodal.queries("mm12_dedup_cascade")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Long]("n_kept") ===
@@ -26,7 +26,7 @@ class Round6acSpec extends SparkSpec {
   }
 
   test("ss27 staleness is exactly the full-winner-not-indexed predicate") {
-    val rows = Round6ac.queries("ss27_index_staleness")(spark, sf).collect()
+    val rows = Similarity.queries("ss27_index_staleness")(spark, sf).collect()
     assert(rows.length === 10)
     rows.foreach { r =>
       assert(r.getAs[Double]("index_cos") <= r.getAs[Double]("full_cos"),

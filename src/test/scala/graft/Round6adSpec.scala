@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6ad
+import graft.operators.{CoreAnalytics, EventPipeline}
 import graft.core.Tables
 
 class Round6adSpec extends SparkSpec {
 
   test("ev58 decile census conserves both halves and bounds the TVD") {
-    val rows = Round6ad.queries("ev58_value_drift_tvd")(spark, sf).collect()
+    val rows = EventPipeline.queries("ev58_value_drift_tvd")(spark, sf).collect()
     assert(rows.length === 10)
     val n = Tables.events(spark, sf).count()
     assert(rows.map(r => r.getAs[Long]("n_h1") + r.getAs[Long]("n_h2")).sum === n)
@@ -24,7 +24,7 @@ class Round6adSpec extends SparkSpec {
   }
 
   test("q58 reconciliation partitions orders and drift is tolerance-consistent") {
-    val rows = Round6ad.queries("q58_order_reconciliation")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q58_order_reconciliation")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Long]("n_matched") + r.getAs[Long]("n_mismatched") ===

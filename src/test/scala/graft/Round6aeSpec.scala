@@ -1,12 +1,12 @@
 package graft
 
-import graft.operators.Round6ae
+import graft.operators.CoreAnalytics
 import graft.core.Tables
 
 class Round6aeSpec extends SparkSpec {
 
   test("q59 digit census conserves orders and carries exact Benford constants") {
-    val rows = Round6ae.queries("q59_benford_census")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q59_benford_census")(spark, sf).collect()
     assert(rows.nonEmpty && rows.length <= 9)
     assert(rows.map(_.getAs[Long]("n_orders")).sum ===
       Tables.orders(spark, sf).count())

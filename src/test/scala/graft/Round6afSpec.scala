@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6af
+import graft.operators.{CoreAnalytics, TextAnalysis}
 import graft.core.Tables
 
 class Round6afSpec extends SparkSpec {
 
   test("q60 bitemporal cells are monotone along both clocks") {
-    val rows = Round6af.queries("q60_bitemporal_grid")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q60_bitemporal_grid")(spark, sf).collect()
     assert(rows.length === 16)
     val users = rows.map(r =>
       (r.getAs[Int]("tq"), r.getAs[Int]("vq")) -> r.getAs[Long]("n_users")).toMap
@@ -23,7 +23,7 @@ class Round6afSpec extends SparkSpec {
   }
 
   test("q60 corner cell replays the plain latest-per-user fold") {
-    val full = Round6af.queries("q60_bitemporal_grid")(spark, sf)
+    val full = CoreAnalytics.queries("q60_bitemporal_grid")(spark, sf)
       .filter(col("tq") === 4 && col("vq") === 4).collect().head
     val expect = Tables.events(spark, sf)
       .select(col("user_id"), col("event_id"), col("value"),
@@ -39,7 +39,7 @@ class Round6afSpec extends SparkSpec {
   }
 
   test("tx32 hapax counts are bounded by vocab and mass") {
-    val rows = Round6af.queries("tx32_hapax_census")(spark, sf).collect()
+    val rows = TextAnalysis.queries("tx32_hapax_census")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Long]("hapax") <= r.getAs[Long]("vocab"))

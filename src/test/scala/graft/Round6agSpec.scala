@@ -1,12 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Round6ag}
+import graft.operators.Dedup
 
 class Round6agSpec extends SparkSpec {
 
   test("dd33 classes partition the union of both candidate sets") {
-    val rows = Round6ag.queries("dd33_method_agreement")(spark, sf).collect()
+    val rows = Dedup.queries("dd33_method_agreement")(spark, sf).collect()
     assert(rows.nonEmpty)
     val byMethod = rows.map(r => r.getAs[String]("method") -> r).toMap
     assert(byMethod.keySet.subsetOf(Set("both", "minhash_only", "simhash_only")))

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6ah
+import graft.operators.{CoreAnalytics, EventPipeline}
 import graft.core.Tables
 
 class Round6ahSpec extends SparkSpec {
 
   test("ev59 rendezvous moves less than modulo and the census conserves") {
-    val rows = Round6ah.queries("ev59_rebalance_cost")(spark, sf).collect()
+    val rows = EventPipeline.queries("ev59_rebalance_cost")(spark, sf).collect()
     assert(rows.length === 2)
     val byStrategy = rows.map(r => r.getAs[String]("strategy") -> r).toMap
     val mod = byStrategy("modulo"); val rdv = byStrategy("rendezvous")
@@ -38,13 +38,13 @@ class Round6ahSpec extends SparkSpec {
       .select(pmod(col("user_id"), lit(64L)).as("p")).distinct()
       .collect().map(_.getLong(0))
     val expectMoved = occupied.count(p => owner(p, 2) != owner(p, 3))
-    val rows = Round6ah.queries("ev59_rebalance_cost")(spark, sf).collect()
+    val rows = EventPipeline.queries("ev59_rebalance_cost")(spark, sf).collect()
     val rdv = rows.find(_.getAs[String]("strategy") == "rendezvous").get
     assert(rdv.getAs[Long]("n_moved") === expectMoved.toLong)
   }
 
   test("q61 KMV matches exact counts for small types and bounds the error") {
-    val rows = Round6ah.queries("q61_kmv_distinct")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q61_kmv_distinct")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val nTrue = r.getAs[Long]("n_true")

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6ai
+import graft.operators.{CoreAnalytics, EventPipeline}
 import graft.core.Tables
 
 class Round6aiSpec extends SparkSpec {
 
   test("ev60 catch counts are monotone in the window and conserve replays") {
-    val rows = Round6ai.queries("ev60_dedup_window_sweep")(spark, sf).collect()
+    val rows = EventPipeline.queries("ev60_dedup_window_sweep")(spark, sf).collect()
     assert(rows.length === 4)
     val caught = rows.map(_.getAs[Long]("n_caught"))
     assert(caught.sameElements(caught.sorted), "longer window catches more")
@@ -25,7 +25,7 @@ class Round6aiSpec extends SparkSpec {
   }
 
   test("q62 credited mass never exceeds conversion mass and splits exactly") {
-    val rows = Round6ai.queries("q62_linear_attribution")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q62_linear_attribution")(spark, sf).collect()
     assert(rows.nonEmpty)
     val totalCents = Tables.events(spark, sf)
       .filter(col("event_type") === "purchase")

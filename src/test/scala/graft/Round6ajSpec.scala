@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6aj
+import graft.operators.{CoreAnalytics, Similarity}
 import graft.core.Tables
 
 class Round6ajSpec extends SparkSpec {
 
   test("ss28 mutual edges are bounded and the census is internally consistent") {
-    val rows = Round6aj.queries("ss28_mutual_knn")(spark, sf).collect()
+    val rows = Similarity.queries("ss28_mutual_knn")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Long]("n_mutual") <= r.getAs[Long]("n_edges"))
@@ -20,7 +20,7 @@ class Round6ajSpec extends SparkSpec {
   }
 
   test("q63 range plan covers the key domain with non-overlapping tiles") {
-    val rows = Round6aj.queries("q63_range_plan")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q63_range_plan")(spark, sf).collect()
     assert(rows.length === 32)
     assert(rows.map(_.getAs[Long]("n_rows")).sum ===
       Tables.lineitem(spark, sf).count())

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6ak
+import graft.operators.{EventPipeline, Packing}
 import graft.core.Tables
 
 class Round6akSpec extends SparkSpec {
 
   test("pk18 locality shares are valid and the hash shuffle reads random") {
-    val rows = Round6ak.queries("pk18_shuffle_locality")(spark, sf).collect()
+    val rows = Packing.queries("pk18_shuffle_locality")(spark, sf).collect()
     assert(rows.length === 2, "one row per epoch")
     rows.foreach { r =>
       assert(r.getAs[Long]("n_same") <= r.getAs[Long]("n_pairs"))
@@ -22,7 +22,7 @@ class Round6akSpec extends SparkSpec {
   }
 
   test("ev61 burn rates average to ~1 and alerts are threshold-exact") {
-    val rows = Round6ak.queries("ev61_slo_burn_rate")(spark, sf).collect()
+    val rows = EventPipeline.queries("ev61_slo_burn_rate")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Boolean]("slow_alert") === (r.getAs[Long]("burn_fx") >= 2000000L))

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6al
+import graft.operators.{Similarity, TextAnalysis}
 import graft.core.Tables
 
 class Round6alSpec extends SparkSpec {
 
   test("ss29 drift cosines are valid and early counts are about half") {
-    val rows = Round6al.queries("ss29_centroid_drift")(spark, sf).collect()
+    val rows = Similarity.queries("ss29_centroid_drift")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val cos = r.getAs[Double]("drift_cos")
@@ -22,7 +22,7 @@ class Round6alSpec extends SparkSpec {
   }
 
   test("tx33 joint matrix conserves docs and its marginals are quartile-flat") {
-    val rows = Round6al.queries("tx33_len_quality_joint")(spark, sf).collect()
+    val rows = TextAnalysis.queries("tx33_len_quality_joint")(spark, sf).collect()
     assert(rows.nonEmpty && rows.length <= 16)
     val n = rows.map(_.getAs[Long]("n_docs")).sum
     assert(n === Tables.documents(spark, sf).count())

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6am
+import graft.operators.{CoreAnalytics, EventPipeline}
 import graft.core.Tables
 
 class Round6amSpec extends SparkSpec {
 
   test("q64 every part depletes exactly once and months conserve lines") {
-    val rows = Round6am.queries("q64_depletion_ledger")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q64_depletion_ledger")(spark, sf).collect()
     assert(rows.nonEmpty)
     assert(rows.map(_.getAs[Long]("n_lines")).sum ===
       Tables.lineitem(spark, sf).count())
@@ -23,7 +23,7 @@ class Round6amSpec extends SparkSpec {
   }
 
   test("ev62 session counts shrink and peaks grow with the gap") {
-    val rows = Round6am.queries("ev62_state_store_sizing")(spark, sf).collect()
+    val rows = EventPipeline.queries("ev62_state_store_sizing")(spark, sf).collect()
     assert(rows.length === 3)
     val sessions = rows.map(_.getAs[Long]("n_sessions"))
     // longer gap merges sessions

@@ -1,12 +1,12 @@
 package graft
 
-import graft.operators.Round6an
+import graft.operators.TextAnalysis
 import graft.core.Tables
 
 class Round6anSpec extends SparkSpec {
 
   test("tx34 mixed counts are bounded and shares valid") {
-    val rows = Round6an.queries("tx34_code_switching")(spark, sf).collect()
+    val rows = TextAnalysis.queries("tx34_code_switching")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Long]("n_mixed") <= r.getAs[Long]("n_docs"))

@@ -1,11 +1,11 @@
 package graft
 
-import graft.operators.Round6ao
+import graft.operators.{CoreAnalytics, Similarity}
 
 class Round6aoSpec extends SparkSpec {
 
   test("q65 FK edges estimate near-exactly and stats are consistent") {
-    val rows = Round6ao.queries("q65_cardinality_error")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q65_cardinality_error")(spark, sf).collect()
     assert(rows.length === 3)
     rows.foreach { r =>
       assert(r.getAs[Long]("d_a") <= r.getAs[Long]("n_a"))
@@ -19,7 +19,7 @@ class Round6aoSpec extends SparkSpec {
   }
 
   test("ss30 marginal efficiencies fall and exactly one knee is flagged") {
-    val rows = Round6ao.queries("ss30_nprobe_knee")(spark, sf).collect()
+    val rows = Similarity.queries("ss30_nprobe_knee")(spark, sf).collect()
     assert(rows.length === 3)
     assert(rows.count(_.getAs[Boolean]("is_knee")) === 1)
     rows.foreach { r =>

@@ -1,14 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6ap
+import graft.operators.{CoreAnalytics, Dedup, TextAnalysis}
 import graft.core.Tables
 import graft.functions.Hashing
 
 class Round6apSpec extends SparkSpec {
 
   test("dd34 octave census conserves dup groups and removable mass") {
-    val rows = Round6ap.queries("dd34_dup_provenance")(spark, sf).collect()
+    val rows = Dedup.queries("dd34_dup_provenance")(spark, sf).collect()
     // group-level truth recomputed directly
     val groups = Tables.documents(spark, sf)
       .select(Hashing.hash64(concat_ws(" ",
@@ -26,7 +26,7 @@ class Round6apSpec extends SparkSpec {
   }
 
   test("q66 autocorrelations are valid correlations and lag-7 shows structure") {
-    val rows = Round6ap.queries("q66_daily_autocorr")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q66_daily_autocorr")(spark, sf).collect()
     assert(rows.length === 14)
     rows.foreach { r =>
       val ac = r.getAs[Double]("autocorr4")

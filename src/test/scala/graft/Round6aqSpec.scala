@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6aq
+import graft.operators.{CoreAnalytics, EventPipeline}
 import graft.functions.Det
 
 class Round6aqSpec extends SparkSpec {
 
   test("ev63 grid is dense, real points carry their own value, interps are bounded") {
-    val rows = Round6aq.queries("ev63_resample_interpolate")(spark, sf).collect()
+    val rows = EventPipeline.queries("ev63_resample_interpolate")(spark, sf).collect()
     assert(rows.nonEmpty)
     // dense: consecutive hours with no holes
     val hrs = rows.map(_.getAs[Long]("hour"))
@@ -26,7 +26,7 @@ class Round6aqSpec extends SparkSpec {
   }
 
   test("q67 slopes replay against a scala-side closed-form OLS") {
-    val rows = Round6aq.queries("q67_trend_slope")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q67_trend_slope")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val r2 = r.getAs[Double]("r2_4")

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6ar
+import graft.operators.{EventPipeline, Similarity}
 import graft.core.Tables
 
 class Round6arSpec extends SparkSpec {
 
   test("ss31 ghosts + live hits account for the stale list") {
-    val rows = Round6ar.queries("ss31_tombstone_ghosts")(spark, sf).collect()
+    val rows = Similarity.queries("ss31_tombstone_ghosts")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val ghosts = r.getAs[Long]("n_ghosts")
@@ -22,7 +22,7 @@ class Round6arSpec extends SparkSpec {
   }
 
   test("ev64 debt is conserved and the cumulative curve is consistent") {
-    val rows = Round6ar.queries("ev64_compaction_debt")(spark, sf).collect()
+    val rows = EventPipeline.queries("ev64_compaction_debt")(spark, sf).collect()
     assert(rows.nonEmpty)
     assert(rows.map(_.getAs[Long]("n_written")).sum ===
       Tables.events(spark, sf).count())

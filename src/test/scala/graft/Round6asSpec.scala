@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6as
+import graft.operators.{Dedup, EventPipeline}
 import graft.core.Tables
 
 class Round6asSpec extends SparkSpec {
 
   test("ev65 cohorts conserve signups and percentiles order correctly") {
-    val rows = Round6as.queries("ev65_conversion_latency")(spark, sf).collect()
+    val rows = EventPipeline.queries("ev65_conversion_latency")(spark, sf).collect()
     assert(rows.nonEmpty)
     val signupUsers = Tables.events(spark, sf)
       .filter(col("event_type") === "signup")
@@ -23,7 +23,7 @@ class Round6asSpec extends SparkSpec {
   }
 
   test("dd35 sketch estimates stay within the k=16 quantization of exact") {
-    val rows = Round6as.queries("dd35_source_sketch")(spark, sf).collect()
+    val rows = Dedup.queries("dd35_source_sketch")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Long]("est_fx") <= 1000000L)

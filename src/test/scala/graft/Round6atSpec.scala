@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6at
+import graft.operators.CoreAnalytics
 import graft.core.Tables
 
 class Round6atSpec extends SparkSpec {
 
   test("q68 arms partition users, bucketing is stable, and the A/A lift is small") {
-    val rows = Round6at.queries("q68_ab_lift")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q68_ab_lift")(spark, sf).collect()
     assert(rows.length === 2)
     val byArm = rows.map(r => r.getAs[String]("arm") -> r).toMap
     assert(byArm.keySet === Set("control", "treatment"))
@@ -20,7 +20,7 @@ class Round6atSpec extends SparkSpec {
     // an A/A split measures no true effect: |lift| < 50%
     assert(math.abs(lift) < 500000L, s"A/A lift too large: $lift")
     // determinism: identical re-run
-    val again = Round6at.queries("q68_ab_lift")(spark, sf).collect()
+    val again = CoreAnalytics.queries("q68_ab_lift")(spark, sf).collect()
     assert(rows.map(_.toString).sameElements(again.map(_.toString)))
   }
 }

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6au
+import graft.operators.{CoreAnalytics, Dedup}
 import graft.core.Tables
 
 class Round6auSpec extends SparkSpec {
 
   test("dd36 wedge accounting is consistent") {
-    val rows = Round6au.queries("dd36_transitivity")(spark, sf).collect()
+    val rows = Dedup.queries("dd36_transitivity")(spark, sf).collect()
     assert(rows.length === 1)
     val r = rows.head
     assert(r.getAs[Long]("n_closed") <= r.getAs[Long]("n_wedges"))
@@ -17,7 +17,7 @@ class Round6auSpec extends SparkSpec {
   }
 
   test("q69 cusum telescopes to zero at the end and flags the true peak") {
-    val rows = Round6au.queries("q69_cusum_changepoint")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q69_cusum_changepoint")(spark, sf).collect()
     assert(rows.nonEmpty)
     // cusum_n = n*total - n*total = 0 at the last day
     assert(rows.last.getAs[Long]("cusum") === 0L)

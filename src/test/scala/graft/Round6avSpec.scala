@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6av
+import graft.operators.EventPipeline
 import graft.core.Tables
 
 class Round6avSpec extends SparkSpec {
 
   test("ev67 bands cover the qualifying users and shares sum to ~1") {
-    val rows = Round6av.queries("ev67_bot_regularity")(spark, sf).collect()
+    val rows = EventPipeline.queries("ev67_bot_regularity")(spark, sf).collect()
     assert(rows.nonEmpty)
     val users = rows.map(_.getAs[Long]("n_users")).sum
     // qualifying users are bounded by the >= 5-event population and

@@ -1,12 +1,12 @@
 package graft
 
-import graft.operators.Round6aw
+import graft.operators.CoreAnalytics
 import graft.core.Tables
 
 class Round6awSpec extends SparkSpec {
 
   test("q70 weighted quantiles order and dominate sensibly") {
-    val rows = Round6aw.queries("q70_weighted_quantiles")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q70_weighted_quantiles")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Long]("w_p50_cents") <= r.getAs[Long]("w_p90_cents"))

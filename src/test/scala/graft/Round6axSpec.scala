@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Round6ac, Round6ax}
+import graft.operators.{CoreAnalytics, Multimodal}
 import graft.core.Tables
 
 class Round6axSpec extends SparkSpec {
 
   test("q71 MAD replays against a driver-side exact computation") {
-    val rows = Round6ax.queries("q71_mad_robust")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q71_mad_robust")(spark, sf).collect()
     assert(rows.nonEmpty)
     val vals = Tables.lineitem(spark, sf)
       .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
@@ -29,7 +29,7 @@ class Round6axSpec extends SparkSpec {
   }
 
   test("mm13 byte masses partition and agree with mm12's item decisions") {
-    val rows = Round6ax.queries("mm13_cascade_bytes")(spark, sf).collect()
+    val rows = Multimodal.queries("mm13_cascade_bytes")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Long]("bytes_in") ===
@@ -38,7 +38,7 @@ class Round6axSpec extends SparkSpec {
       assert(r.getAs[Long]("keep_fx") <= 1000000L)
     }
     // sources with zero removals in mm12 must drop zero bytes here
-    val items = Round6ac.queries("mm12_dedup_cascade")(spark, sf).collect()
+    val items = Multimodal.queries("mm12_dedup_cascade")(spark, sf).collect()
       .map(r => r.getAs[String]("source") ->
         (r.getAs[Long]("n_exact_removed"), r.getAs[Long]("n_near_removed"))).toMap
     rows.foreach { r =>

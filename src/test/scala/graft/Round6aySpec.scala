@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6ay
+import graft.operators.{CoreAnalytics, EventPipeline}
 import graft.core.Tables
 
 class Round6aySpec extends SparkSpec {
 
   test("ev68 ramp conserves events and day zero covers every user") {
-    val rows = Round6ay.queries("ev68_engagement_ramp")(spark, sf).collect()
+    val rows = EventPipeline.queries("ev68_engagement_ramp")(spark, sf).collect()
     assert(rows.nonEmpty)
     assert(rows.map(_.getAs[Long]("n_events")).sum ===
       Tables.events(spark, sf).count())
@@ -20,7 +20,7 @@ class Round6aySpec extends SparkSpec {
   }
 
   test("q72 gap percentiles order and quartiles cover multi-order customers") {
-    val rows = Round6ay.queries("q72_repurchase_cycle")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q72_repurchase_cycle")(spark, sf).collect()
     assert(rows.nonEmpty && rows.length <= 4)
     rows.foreach { r =>
       assert(r.getAs[Long]("p50_days") <= r.getAs[Long]("p90_days"))

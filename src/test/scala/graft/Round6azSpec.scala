@@ -1,12 +1,12 @@
 package graft
 
-import graft.operators.Round6az
+import graft.operators.Similarity
 import graft.core.Tables
 
 class Round6azSpec extends SparkSpec {
 
   test("ss32 per-subspace accounting is exact") {
-    val rows = Round6az.queries("ss32_pq_utilization")(spark, sf).collect()
+    val rows = Similarity.queries("ss32_pq_utilization")(spark, sf).collect()
     assert(rows.length === 4, "one row per PQ subspace")
     val nVecs = Tables.embeddings(spark, sf).count()
     rows.foreach { r =>

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Round5b, Round6, Round6b}
+import graft.operators.{Dedup, EventPipeline, Multimodal, Similarity}
 import graft.core.Tables
 
 /** Round-6 second-wave operators: n-gram novelty, IVF-residual PQ,
@@ -10,7 +10,7 @@ import graft.core.Tables
 class Round6bSpec extends SparkSpec {
 
   test("dd25 novelty grows with gram order and masses conserve") {
-    val got = Round6b.queries("dd25_ngram_novelty")(spark, sf).collect()
+    val got = Dedup.queries("dd25_ngram_novelty")(spark, sf).collect()
     assert(got.map(_.getAs[Int]("n")).toSeq === Seq(1, 2, 3))
     got.foreach { r =>
       assert(r.getAs[Long]("novel_distinct") <= r.getAs[Long]("test_distinct"))
@@ -23,9 +23,9 @@ class Round6bSpec extends SparkSpec {
   }
 
   test("ss21 residual PQ reconstructs at least as well as direct PQ on average") {
-    val res = Round6b.queries("ss21_ivf_pq_residual")(spark, sf).collect()
+    val res = Similarity.queries("ss21_ivf_pq_residual")(spark, sf).collect()
       .map(r => r.getAs[Int]("label") -> r.getAs[Double]("avg_recon_cos")).toMap
-    val plain = Round5b.queries("ss12_pq_quantize")(spark, sf).collect()
+    val plain = Similarity.queries("ss12_pq_quantize")(spark, sf).collect()
       .map(r => r.getAs[Int]("label") -> r.getAs[Double]("avg_recon_cos")).toMap
     assert(res.keySet === plain.keySet)
     // the IVF-residual layout exists because residuals quantize
@@ -38,16 +38,16 @@ class Round6bSpec extends SparkSpec {
   }
 
   test("ev42 streamed first-seen equals ev41's batch n_new per day") {
-    val streamed = Round6b.queries("ev42_stream_first_seen")(spark, sf).collect()
+    val streamed = EventPipeline.queries("ev42_stream_first_seen")(spark, sf).collect()
       .map(r => r.getAs[Long]("day") -> r.getAs[Long]("n_new")).toMap
-    val batch = Round6.queries("ev41_new_returning")(spark, sf).collect()
+    val batch = EventPipeline.queries("ev41_new_returning")(spark, sf).collect()
       .map(r => r.getAs[Long]("day") -> r.getAs[Long]("n_new"))
       .filter(_._2 > 0).toMap
     assert(streamed === batch)
   }
 
   test("mm08 two-level prefix sum equals the sequential packing replay") {
-    val got = Round6b.queries("mm08_interleaved_pack")(spark, sf).collect()
+    val got = Multimodal.queries("mm08_interleaved_pack")(spark, sf).collect()
       .map(r => (r.getAs[String]("source"), r.getAs[Long]("pack_id")) ->
         (r.getAs[Long]("n_docs"), r.getAs[Long]("pack_cost"))).toMap
     // naive replay: per source, docs in doc_id order, running sum,

@@ -1,11 +1,11 @@
 package graft
 
-import graft.operators.Round6ba
+import graft.operators.Packing
 
 class Round6baSpec extends SparkSpec {
 
   test("pk19 write amplification is consistent and hash scatters at least as wide") {
-    val rows = Round6ba.queries("pk19_write_amplification")(spark, sf).collect()
+    val rows = Packing.queries("pk19_write_amplification")(spark, sf).collect()
     assert(rows.length === 2)
     val byStrategy = rows.map(r => r.getAs[String]("strategy") -> r).toMap
     rows.foreach { r =>

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6bb
+import graft.operators.EventPipeline
 import graft.core.Tables
 
 class Round6bbSpec extends SparkSpec {
 
   test("ev69 bounce census conserves events and bounds shares") {
-    val rows = Round6bb.queries("ev69_bounce_census")(spark, sf).collect()
+    val rows = EventPipeline.queries("ev69_bounce_census")(spark, sf).collect()
     assert(rows.nonEmpty && rows.length <= 24)
     rows.foreach { r =>
       assert(r.getAs[Long]("n_bounces") <= r.getAs[Long]("n_sessions"))

@@ -1,11 +1,11 @@
 package graft
 
-import graft.operators.Round6bc
+import graft.operators.Similarity
 
 class Round6bcSpec extends SparkSpec {
 
   test("ss33 full width scores perfect recall and truncation only loses") {
-    val rows = Round6bc.queries("ss33_matryoshka_recall")(spark, sf).collect()
+    val rows = Similarity.queries("ss33_matryoshka_recall")(spark, sf).collect()
     assert(rows.length === 3)
     val byD = rows.map(r => r.getAs[Int]("d") -> r.getAs[Long]("recall_fx")).toMap
     assert(byD(64) === 1000000L, "full width is its own truth")

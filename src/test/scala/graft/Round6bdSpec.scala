@@ -1,11 +1,11 @@
 package graft
 
-import graft.operators.Round6bd
+import graft.operators.Dedup
 
 class Round6bdSpec extends SparkSpec {
 
   test("dd37 sigma is the closed form and coverage is sane") {
-    val rows = Round6bd.queries("dd37_estimator_ci")(spark, sf).collect()
+    val rows = Dedup.queries("dd37_estimator_ci")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Long]("n_covered") <= r.getAs[Long]("n_pairs"))

@@ -1,11 +1,11 @@
 package graft
 
-import graft.operators.Round6be
+import graft.operators.{CoreAnalytics, EventPipeline}
 
 class Round6beSpec extends SparkSpec {
 
   test("q73 KS statistic is a valid distance and the critical line is exact") {
-    val rows = Round6be.queries("q73_ks_test")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q73_ks_test")(spark, sf).collect()
     assert(rows.length === 1)
     val r = rows.head
     assert(r.getAs[Long]("ks_fx") >= 0L && r.getAs[Long]("ks_fx") <= 1000000L)
@@ -19,7 +19,7 @@ class Round6beSpec extends SparkSpec {
   }
 
   test("ev70 longer debounce merges episodes and conserves alert hours") {
-    val rows = Round6be.queries("ev70_alert_debounce")(spark, sf).collect()
+    val rows = EventPipeline.queries("ev70_alert_debounce")(spark, sf).collect()
     assert(rows.length === 3)
     val eps = rows.map(_.getAs[Long]("n_episodes"))
     assert(eps.reverse.sameElements(eps.reverse.sorted),

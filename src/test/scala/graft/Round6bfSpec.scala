@@ -1,13 +1,13 @@
 package graft
 
-import graft.operators.Round6bf
+import graft.operators.EventPipeline
 import graft.core.Tables
 import org.apache.spark.sql.functions._
 
 class Round6bfSpec extends SparkSpec {
 
   test("ev71 contingency covers all lagged minutes with one shared lift") {
-    val rows = Round6bf.queries("ev71_overload_errors")(spark, sf).collect()
+    val rows = EventPipeline.queries("ev71_overload_errors")(spark, sf).collect()
     assert(rows.nonEmpty && rows.length <= 4)
     // all minutes except the first appear in exactly one cell
     val minutes = Tables.events(spark, sf)

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6c
+import graft.operators.{Dedup, TextAnalysis}
 import graft.core.Tables
 
 class Round6cSpec extends SparkSpec {
 
   test("dd26 locality census bounds and duplicate mass agree with a direct recount") {
-    val r = Round6c.queries("dd26_shard_dup_locality")(spark, sf).head()
+    val r = Dedup.queries("dd26_shard_dup_locality")(spark, sf).head()
     val dupGroups = r.getAs[Long]("dup_groups")
     val dupDocs = r.getAs[Long]("dup_docs")
     assert(r.getAs[Long]("local_groups") <= dupGroups)
@@ -22,7 +22,7 @@ class Round6cSpec extends SparkSpec {
   }
 
   test("tx25 normalization levels are monotone and conserve the corpus") {
-    val got = Round6c.queries("tx25_norm_dedup_sweep")(spark, sf).collect()
+    val got = TextAnalysis.queries("tx25_norm_dedup_sweep")(spark, sf).collect()
     assert(got.map(_.getAs[String]("level")).toSeq ===
       Seq("1_raw", "2_lower", "3_ws", "4_alnum"))
     val total = Tables.documents(spark, sf).count()

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6d
+import graft.operators.{CoreAnalytics, Similarity}
 import graft.core.Tables
 
 class Round6dSpec extends SparkSpec {
 
   test("ss22 coherence census is sane and pair count matches the group arithmetic") {
-    val r = Round6d.queries("ss22_dup_embed_coherence")(spark, sf).head()
+    val r = Similarity.queries("ss22_dup_embed_coherence")(spark, sf).head()
     val nPairs = r.getAs[Long]("n_dup_pairs")
     assert(r.getAs[Long]("n_incoherent") <= nPairs)
     // pairs = Σ C(group,2) over duplicate-text groups restricted to
@@ -27,7 +27,7 @@ class Round6dSpec extends SparkSpec {
   }
 
   test("q47 backlog census counts every non-final order exactly once") {
-    val got = Round6d.queries("q47_order_backlog")(spark, sf).collect()
+    val got = CoreAnalytics.queries("q47_order_backlog")(spark, sf).collect()
     val open = Tables.orders(spark, sf)
       .filter(col("o_orderstatus") =!= "F").count()
     assert(got.map(_.getAs[Long]("n_open")).sum === open)

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6e
+import graft.operators.{EventPipeline, Packing}
 import graft.core.Tables
 
 class Round6eSpec extends SparkSpec {
 
   test("ev43 session counts are monotone in the gap and bounded by users/events") {
-    val got = Round6e.queries("ev43_session_gap_sweep")(spark, sf).collect()
+    val got = EventPipeline.queries("ev43_session_gap_sweep")(spark, sf).collect()
     assert(got.map(_.getAs[Long]("gap_s")).toSeq === Seq(300L, 1800L, 7200L))
     val nEvents = Tables.events(spark, sf).count()
     val nUsers = Tables.events(spark, sf).select(col("user_id")).distinct().count()
@@ -32,7 +32,7 @@ class Round6eSpec extends SparkSpec {
   }
 
   test("pk13 moves shrink imbalance and never overdraw a donor or receiver") {
-    val got = Round6e.queries("pk13_shard_rebalance")(spark, sf).collect()
+    val got = Packing.queries("pk13_shard_rebalance")(spark, sf).collect()
     if (got.nonEmpty) {
       val shards = Tables.documents(spark, sf)
         .withColumn("shard", pmod(graft.functions.Hashing.hash64(

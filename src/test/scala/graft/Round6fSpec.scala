@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Round6c, Round6f}
+import graft.operators.{Dedup, Multimodal, TextAnalysis}
 
 /** tx27 / mm09 — plus dup-path coverage the driver corpus cannot
   * give (this round's testdata has zero exact-duplicate texts), via
@@ -34,14 +34,14 @@ class Round6fSpec extends SparkSpec {
   }
 
   test("tx27 splits roles correctly on a corpus with real duplicates") {
-    val got = Round6f.queries("tx27_dup_quality")(spark, dupDir).collect()
+    val got = TextAnalysis.queries("tx27_dup_quality")(spark, dupDir).collect()
       .map(r => r.getAs[String]("role") -> r.getAs[Long]("n_docs")).toMap
     // group A = {1,2,3} (whitespace/case-normalized), group B = {4,5}
     assert(got === Map("dup_keeper" -> 2L, "dup_removed" -> 3L, "singleton" -> 4L))
   }
 
   test("tx27 on the driver corpus is all-singleton and conserves docs") {
-    val got = Round6f.queries("tx27_dup_quality")(spark, sf).collect()
+    val got = TextAnalysis.queries("tx27_dup_quality")(spark, sf).collect()
     assert(got.map(_.getAs[Long]("n_docs")).sum ===
       graft.core.Tables.documents(spark, sf).count())
     got.foreach { r =>
@@ -50,7 +50,7 @@ class Round6fSpec extends SparkSpec {
   }
 
   test("dd26 counts cross-shard duplicate groups on the crafted corpus") {
-    val r = Round6c.queries("dd26_shard_dup_locality")(spark, dupDir).head()
+    val r = Dedup.queries("dd26_shard_dup_locality")(spark, dupDir).head()
     assert(r.getAs[Long]("dup_groups") === 2L)
     assert(r.getAs[Long]("dup_docs") === 5L)
     assert(r.getAs[Long]("local_groups") + (
@@ -58,7 +58,7 @@ class Round6fSpec extends SparkSpec {
   }
 
   test("mm09 CAS ledger books duplicate bytes as savable") {
-    val got = Round6f.queries("mm09_cas_dedup")(spark, dupDir).collect()
+    val got = Multimodal.queries("mm09_cas_dedup")(spark, dupDir).collect()
       .map(r => r.getAs[String]("source") ->
         (r.getAs[Long]("n_items"), r.getAs[Long]("n_distinct"),
           r.getAs[Long]("savable_bytes"))).toMap

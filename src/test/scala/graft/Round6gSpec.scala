@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6g
+import graft.operators.{CoreAnalytics, EventPipeline}
 import graft.core.Tables
 
 class Round6gSpec extends SparkSpec {
 
   test("q48 audit books every child row and flags a synthetic orphan") {
-    val got = Round6g.queries("q48_referential_audit")(spark, sf).collect()
+    val got = CoreAnalytics.queries("q48_referential_audit")(spark, sf).collect()
       .map(r => r.getAs[String]("relation") -> r).toMap
     assert(got.keySet === Set("lineitem->orders", "orders->customer"))
     val lo = got("lineitem->orders")
@@ -33,7 +33,7 @@ class Round6gSpec extends SparkSpec {
       .write.parquet(s"$dir/customer.parquet")
     Seq((1L, 1L), (2L, 7L)).toDF("l_linenumber", "l_orderkey")
       .write.parquet(s"$dir/lineitem.parquet")
-    val got = Round6g.queries("q48_referential_audit")(spark, dir).collect()
+    val got = CoreAnalytics.queries("q48_referential_audit")(spark, dir).collect()
       .map(r => r.getAs[String]("relation") -> r).toMap
     val oc = got("orders->customer")
     assert(oc.getAs[Long]("orphan_keys") === 1L) // custkey 99
@@ -44,7 +44,7 @@ class Round6gSpec extends SparkSpec {
   }
 
   test("ev44 streamed hourly actives equal the batch distinct count") {
-    val got = Round6g.queries("ev44_stream_hourly_actives")(spark, sf).collect()
+    val got = EventPipeline.queries("ev44_stream_hourly_actives")(spark, sf).collect()
     val want = Tables.events(spark, sf)
       .groupBy(date_trunc("hour", col("ts")).as("hour_ts"))
       .agg(countDistinct(col("user_id")).as("n_active")).collect()

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{AsOf, Round6h}
+import graft.operators.{AsOf, EventPipeline, Packing}
 import graft.core.Tables
 
 class Round6hSpec extends SparkSpec {
 
   test("ev45 streaming census equals the batch as-of join folded the same way") {
-    val got = Round6h.queries("ev45_stream_asof_census")(spark, sf).collect()
+    val got = EventPipeline.queries("ev45_stream_asof_census")(spark, sf).collect()
       .map(r => r.getAs[Long]("user_id") ->
         (r.getAs[Long]("n_purchases"), r.getAs[Long]("n_enriched"),
           r.getAs[Long]("sum_value_micro"))).toMap
@@ -30,7 +30,7 @@ class Round6hSpec extends SparkSpec {
   }
 
   test("pk14 fertility is >= 1 and token masses recount") {
-    val got = Round6h.queries("pk14_tokenizer_fertility")(spark, sf).collect()
+    val got = Packing.queries("pk14_tokenizer_fertility")(spark, sf).collect()
     assert(got.nonEmpty)
     got.foreach { r =>
       // subword tokenization can only split whitespace words further

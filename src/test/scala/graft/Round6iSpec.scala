@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Round6i}
+import graft.operators.Dedup
 import graft.functions.Hashing
 
 class Round6iSpec extends SparkSpec {
 
   test("dd27 census bounds hold and the new-doc count recounts") {
-    val r = Round6i.queries("dd27_incremental_dedup")(spark, sf).head()
+    val r = Dedup.queries("dd27_incremental_dedup")(spark, sf).head()
     val nNew = r.getAs[Long]("n_new_docs")
     assert(r.getAs[Long]("n_new_with_cand") <= nNew)
     assert(r.getAs[Long]("n_new_dups") <= r.getAs[Long]("n_new_with_cand"))
@@ -32,7 +32,7 @@ class Round6iSpec extends SparkSpec {
       ((h % 10) + 10) % 10 == 0
     }
     val wantPairs = full.filter { case (a, b) => isNew(a) != isNew(b) }.length
-    val r = Round6i.queries("dd27_incremental_dedup")(spark, sf).head()
+    val r = Dedup.queries("dd27_incremental_dedup")(spark, sf).head()
     assert(r.getAs[Long]("n_cand_pairs") === wantPairs.toLong)
   }
 }

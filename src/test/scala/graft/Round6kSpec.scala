@@ -1,25 +1,25 @@
 package graft
 
-import graft.operators.{Round3, Round4b, Round6k}
+import graft.operators.EventPipeline
 
 class Round6kSpec extends SparkSpec {
 
   test("ev46 streamed compaction census equals ev22's batch census") {
-    val streamed = Round6k.queries("ev46_stream_compact")(spark, sf).collect()
+    val streamed = EventPipeline.queries("ev46_stream_compact")(spark, sf).collect()
       .map(r => r.getAs[String]("last_event_type") ->
         (r.getAs[Long]("n_users"), r.getAs[Double]("sum_value"))).toMap
-    val batch = Round3.queries("ev22_cdc_upsert")(spark, sf).collect()
+    val batch = EventPipeline.queries("ev22_cdc_upsert")(spark, sf).collect()
       .map(r => r.getAs[String]("last_event_type") ->
         (r.getAs[Long]("n_users"), r.getAs[Double]("sum_value"))).toMap
     assert(streamed === batch)
   }
 
   test("ev47 streamed rate-limit census equals ev27's batch verdict census") {
-    val streamed = Round6k.queries("ev47_stream_rate_limit")(spark, sf).collect()
+    val streamed = EventPipeline.queries("ev47_stream_rate_limit")(spark, sf).collect()
       .map(r => r.getAs[String]("event_type") ->
         (r.getAs[Long]("n_events"), r.getAs[Long]("n_throttled"),
           r.getAs[Long]("n_users_throttled"))).toMap
-    val batch = Round4b.queries("ev27_rate_limit")(spark, sf).collect()
+    val batch = EventPipeline.queries("ev27_rate_limit")(spark, sf).collect()
       .map(r => r.getAs[String]("event_type") ->
         (r.getAs[Long]("n_events"), r.getAs[Long]("n_throttled"),
           r.getAs[Long]("n_users_throttled"))).toMap

@@ -1,23 +1,23 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Round6m, Curation}
+import graft.operators.{CoreAnalytics, Dedup, EventPipeline, TextAnalysis}
 import graft.core.Tables
 
 class Round6mSpec extends SparkSpec {
 
   test("ev49 stream-stream interval join lands on ev17's batch census") {
-    val got = Round6m.queries("ev49_stream_interval_join")(spark, sf)
+    val got = EventPipeline.queries("ev49_stream_interval_join")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1),
         math.round(r.getDouble(2) * 1e6)))
-    val want = Curation.queries("ev17_interval_join")(spark, sf)
+    val want = EventPipeline.queries("ev17_interval_join")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1),
         math.round(r.getDouble(2) * 1e6)))
     assert(got.toSeq === want.toSeq)
   }
 
   test("q49 snapshot diff conserves the t2 snapshot and classifies exhaustively") {
-    val rows = Round6m.queries("q49_snapshot_diff")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q49_snapshot_diff")(spark, sf).collect()
     val segs = rows.map(_.getAs[String]("seg")).toSet
     assert(segs.subsetOf(Set("1_new", "2_grown", "3_unchanged")))
     // customers in the diff = customers with any order by t2 (t1 ⊆ t2
@@ -37,7 +37,7 @@ class Round6mSpec extends SparkSpec {
   }
 
   test("tx26 coverage curve is monotone and matches a direct ranked recount") {
-    val rows = Round6m.queries("tx26_topk_coverage")(spark, sf)
+    val rows = TextAnalysis.queries("tx26_topk_coverage")(spark, sf)
       .collect().map(r => (r.getAs[Int]("k"), r.getAs[Long]("n_top"),
         r.getAs[Long]("mass_top"), r.getAs[Long]("coverage_fx")))
     assert(rows.nonEmpty)
@@ -66,7 +66,7 @@ class Round6mSpec extends SparkSpec {
   }
 
   test("dd28 bloom census is internally consistent") {
-    val r = Round6m.queries("dd28_bloom_prefilter")(spark, sf).head()
+    val r = Dedup.queries("dd28_bloom_prefilter")(spark, sf).head()
     val nBuild = r.getAs[Long]("n_build")
     val nBits = r.getAs[Long]("n_bits_set")
     assert(nBuild > 0 && nBits > 0)

@@ -1,16 +1,16 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Round3, Round6n}
+import graft.operators.{EventPipeline, Multimodal, Packing, Similarity}
 import graft.core.Tables
 
 class Round6nSpec extends SparkSpec {
 
   test("ev50 durable upsert store lands on ev22's batch census") {
-    val got = Round6n.queries("ev50_stream_upsert_sink")(spark, sf)
+    val got = EventPipeline.queries("ev50_stream_upsert_sink")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1),
         math.round(r.getDouble(2) * 1e6)))
-    val want = Round3.queries("ev22_cdc_upsert")(spark, sf)
+    val want = EventPipeline.queries("ev22_cdc_upsert")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1),
         math.round(r.getDouble(2) * 1e6)))
     assert(got.toSeq === want.toSeq)
@@ -36,7 +36,7 @@ class Round6nSpec extends SparkSpec {
   }
 
   test("pk15 census is conserved: cross pairs never exceed total pairs") {
-    val rows = Round6n.queries("pk15_boundary_window")(spark, sf).collect()
+    val rows = Packing.queries("pk15_boundary_window")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Long]("cross_pairs") <= r.getAs[Long]("total_pairs"))
@@ -48,7 +48,7 @@ class Round6nSpec extends SparkSpec {
   }
 
   test("ss24 fanout is bounded by candidates and the shard count") {
-    val rows = Round6n.queries("ss24_shard_fanout")(spark, sf).collect()
+    val rows = Similarity.queries("ss24_shard_fanout")(spark, sf).collect()
     assert(rows.length === 10)
     rows.foreach { r =>
       val cand = r.getAs[Long]("n_candidates")
@@ -60,7 +60,7 @@ class Round6nSpec extends SparkSpec {
   }
 
   test("mm10 modality balance conserves corpus bytes") {
-    val rows = Round6n.queries("mm10_modality_balance")(spark, sf).collect()
+    val rows = Multimodal.queries("mm10_modality_balance")(spark, sf).collect()
     val total = rows.map(_.getAs[Long]("total_bytes")).sum
     val want = Tables.documents(spark, sf)
       .agg(sum(octet_length(col("text")))).head.getLong(0)

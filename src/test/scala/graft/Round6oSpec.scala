@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6o
+import graft.operators.{CoreAnalytics, Dedup, TextAnalysis}
 import graft.core.Tables
 
 class Round6oSpec extends SparkSpec {
 
   test("q50 zone maps cover the space and z-order beats time-sort on the cust slice") {
-    val rows = Round6o.queries("q50_zorder_skipping")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q50_zorder_skipping")(spark, sf).collect()
     assert(rows.length === 6)
     rows.foreach { r =>
       assert(r.getAs[Long]("files_touched") <= r.getAs[Long]("files_total"))
@@ -30,7 +30,7 @@ class Round6oSpec extends SparkSpec {
   }
 
   test("tx28 boilerplate census is conserved and bounded") {
-    val rows = Round6o.queries("tx28_boilerplate")(spark, sf).collect()
+    val rows = TextAnalysis.queries("tx28_boilerplate")(spark, sf).collect()
     val total = rows.map(_.getAs[Long]("n_docs")).sum
     assert(total === Tables.documents(spark, sf).count())
     rows.foreach { r =>
@@ -42,7 +42,7 @@ class Round6oSpec extends SparkSpec {
   }
 
   test("dd29 mix shift sums to zero and conserves keepers") {
-    val rows = Round6o.queries("dd29_dedup_mix_shift")(spark, sf).collect()
+    val rows = Dedup.queries("dd29_dedup_mix_shift")(spark, sf).collect()
     val preTotal = rows.map(_.getAs[Long]("n_docs")).sum
     assert(preTotal === Tables.documents(spark, sf).count())
     val keepers = rows.map(_.getAs[Long]("n_keepers")).sum

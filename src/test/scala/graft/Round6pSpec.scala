@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Round5, Round6p}
+import graft.operators.{CoreAnalytics, Similarity}
 import graft.core.Tables
 
 class Round6pSpec extends SparkSpec {
 
   test("ss25 recall is monotone in nprobe and worst-query bounds the mean") {
-    val rows = Round6p.queries("ss25_panel_nprobe")(spark, sf).collect()
+    val rows = Similarity.queries("ss25_panel_nprobe")(spark, sf).collect()
     assert(rows.map(_.getAs[Long]("nprobe")).toSeq === Seq(1L, 2L, 4L))
     rows.foreach { r =>
       assert(r.getAs[Long]("n_truth") === 100L) // 10 queries x top-10
@@ -23,7 +23,7 @@ class Round6pSpec extends SparkSpec {
   }
 
   test("q51 collisions shrink as the dimension grows; vocabulary is conserved") {
-    val rows = Round6p.queries("q51_feature_hashing")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q51_feature_hashing")(spark, sf).collect()
     assert(rows.map(_.getAs[Long]("dim")).toSeq === Seq(64L, 256L, 1024L))
     val vocab = Tables.orders(spark, sf)
       .select(explode(array(

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6q
+import graft.operators.EventPipeline
 import graft.core.Tables
 
 class Round6qSpec extends SparkSpec {
 
   test("ev51 completed-session census matches a batch window replay") {
-    val got = Round6q.queries("ev51_stream_sessions")(spark, sf)
+    val got = EventPipeline.queries("ev51_stream_sessions")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // batch replay: gap sessions per user, drop each user's last
     import org.apache.spark.sql.expressions.Window

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6r
+import graft.operators.CoreAnalytics
 import graft.core.Tables
 
 class Round6rSpec extends SparkSpec {
 
   test("q52 intervals conserve changes and open exactly one interval per user") {
-    val rows = Round6r.queries("q52_scd2_intervals")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q52_scd2_intervals")(spark, sf).collect()
     // every user's history ends in exactly one open interval
     val users = Tables.events(spark, sf).select(col("user_id")).distinct().count()
     assert(rows.map(_.getAs[Long]("n_open")).sum === users)
@@ -26,7 +26,7 @@ class Round6rSpec extends SparkSpec {
   }
 
   test("q53 explosion census matches the actually-run join and bounds hold") {
-    val r = Round6r.queries("q53_join_explosion")(spark, sf).head()
+    val r = CoreAnalytics.queries("q53_join_explosion")(spark, sf).head()
     // ground truth: run the m:n join and count (fine at spec scale)
     val e = Tables.events(spark, sf)
     val clicks = e.filter(col("event_type") === "click").select(col("user_id"))

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6s
+import graft.operators.{Dedup, EventPipeline, Packing}
 import graft.core.Tables
 
 class Round6sSpec extends SparkSpec {
 
   test("ev52 replay recovers every corrupted event and conserves the total") {
-    val r = Round6s.queries("ev52_dlq_replay")(spark, sf).head()
+    val r = EventPipeline.queries("ev52_dlq_replay")(spark, sf).head()
     val total = Tables.events(spark, sf).count()
     assert(r.getAs[Long]("n_total") === total)
     assert(r.getAs[Long]("n_first_valid") + r.getAs[Long]("n_replayed") +
@@ -20,7 +20,7 @@ class Round6sSpec extends SparkSpec {
   }
 
   test("pk16 loss is monotone decreasing in context length") {
-    val rows = Round6s.queries("pk16_truncation_loss")(spark, sf).collect()
+    val rows = Packing.queries("pk16_truncation_loss")(spark, sf).collect()
     assert(rows.map(_.getAs[Long]("ctx")).toSeq === Seq(512L, 1024L, 2048L, 4096L))
     val total = rows.head.getAs[Long]("total_tokens")
     rows.foreach { r =>
@@ -33,7 +33,7 @@ class Round6sSpec extends SparkSpec {
   }
 
   test("dd30 policies keep one doc per group and best-quality dominates on quality") {
-    val rows = Round6s.queries("dd30_keeper_policy_sweep")(spark, sf).collect()
+    val rows = Dedup.queries("dd30_keeper_policy_sweep")(spark, sf).collect()
     assert(rows.map(_.getAs[String]("policy")).toSeq ===
       Seq("1_first_id", "2_best_quality", "3_longest"))
     val groups = Tables.documents(spark, sf)

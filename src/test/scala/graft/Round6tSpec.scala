@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6t
+import graft.operators.EventPipeline
 import graft.core.Tables
 
 class Round6tSpec extends SparkSpec {
 
   test("ev53 seam reconciliation equals the single-source census exactly") {
-    val got = Round6t.queries("ev53_backfill_seam")(spark, sf)
+    val got = EventPipeline.queries("ev53_backfill_seam")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         math.round(r.getDouble(3) * 1e6)))
     val want = Tables.events(spark, sf)

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6u
+import graft.operators.Multimodal
 import graft.core.Tables
 
 class Round6uSpec extends SparkSpec {
 
   test("mm11 frame sampling is conserved and the sample ratio is exact") {
-    val rows = Round6u.queries("mm11_frame_sample")(spark, sf).collect()
+    val rows = Multimodal.queries("mm11_frame_sample")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val tf = r.getAs[Long]("total_frames")

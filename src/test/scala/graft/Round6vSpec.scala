@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6v
+import graft.operators.{Dedup, EventPipeline}
 import graft.core.Tables
 
 class Round6vSpec extends SparkSpec {
 
   test("ev54 fences exactly the injected zombies that regress below the high-water mark") {
-    val r = Round6v.queries("ev54_producer_fencing")(spark, sf).head()
+    val r = EventPipeline.queries("ev54_producer_fencing")(spark, sf).head()
     assert(r.getAs[Long]("n_records") === Tables.events(spark, sf).count())
     // every fenced record is one of the injected every-97th
     // regressions (the fence can only catch records whose effective
@@ -21,7 +21,7 @@ class Round6vSpec extends SparkSpec {
   }
 
   test("dd31 shingle vocabulary grows and repetition falls as n grows") {
-    val rows = Round6v.queries("dd31_shingle_size_sweep")(spark, sf).collect()
+    val rows = Dedup.queries("dd31_shingle_size_sweep")(spark, sf).collect()
     assert(rows.map(_.getAs[Int]("n")).toSeq === Seq(2, 3, 5, 8))
     rows.foreach { r =>
       assert(r.getAs[Long]("distinct_shingles") <= r.getAs[Long]("total_instances"))

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6w
+import graft.operators.{Similarity, TextAnalysis}
 import graft.core.Tables
 
 class Round6wSpec extends SparkSpec {
 
   test("tx29 artifact census conserves docs and bounds clean share") {
-    val rows = Round6w.queries("tx29_artifact_census")(spark, sf).collect()
+    val rows = TextAnalysis.queries("tx29_artifact_census")(spark, sf).collect()
     assert(rows.map(_.getAs[Long]("n_docs")).sum ===
       Tables.documents(spark, sf).count())
     rows.foreach { r =>
@@ -18,7 +18,7 @@ class Round6wSpec extends SparkSpec {
   }
 
   test("ss26 norm bound never prunes a true top-10 member") {
-    val rows = Round6w.queries("ss26_mips_norm_prune")(spark, sf).collect()
+    val rows = Similarity.queries("ss26_mips_norm_prune")(spark, sf).collect()
     assert(rows.length === 10)
     // soundness: for each query, every actual top-10 vector has
     // norm * q_norm >= theta (the bound only prunes provable losers)

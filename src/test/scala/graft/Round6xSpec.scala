@@ -1,23 +1,23 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Round3, Round6x}
+import graft.operators.{CoreAnalytics, EventPipeline}
 import graft.core.Tables
 
 class Round6xSpec extends SparkSpec {
 
   test("ev55 delta fold equals the declarative compaction census") {
-    val got = Round6x.queries("ev55_retraction_view")(spark, sf)
+    val got = EventPipeline.queries("ev55_retraction_view")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1),
         math.round(r.getDouble(2) * 1e6)))
-    val want = Round3.queries("ev22_cdc_upsert")(spark, sf)
+    val want = EventPipeline.queries("ev22_cdc_upsert")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1),
         math.round(r.getDouble(2) * 1e6)))
     assert(got.toSeq === want.toSeq)
   }
 
   test("q54 transition matrix conserves customers and decile sizes") {
-    val rows = Round6x.queries("q54_decile_transition")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q54_decile_transition")(spark, sf).collect()
     val total = rows.map(_.getAs[Long]("n_customers")).sum
     val want = Tables.orders(spark, sf)
       .filter(col("o_orderdate") <= lit("1997-12-31").cast("timestamp"))

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Round6y
+import graft.operators.{EventPipeline, TextAnalysis}
 import graft.core.Tables
 
 class Round6ySpec extends SparkSpec {
 
   test("tx30 sentence census is conserved and internally consistent") {
-    val rows = Round6y.queries("tx30_sentence_stats")(spark, sf).collect()
+    val rows = TextAnalysis.queries("tx30_sentence_stats")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Long]("n_sentences") >= r.getAs[Long]("n_docs"))
@@ -23,7 +23,7 @@ class Round6ySpec extends SparkSpec {
   }
 
   test("ev56 frontier lags are exact and the tip partition never stalls") {
-    val rows = Round6y.queries("ev56_partition_watermark_skew")(spark, sf).collect()
+    val rows = EventPipeline.queries("ev56_partition_watermark_skew")(spark, sf).collect()
     assert(rows.length === 8)
     val tip = rows.map(_.getAs[Long]("frontier_us")).max
     rows.foreach { r =>

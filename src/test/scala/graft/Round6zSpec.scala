@@ -1,14 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Round6z, TextAnalysis}
+import graft.operators.{Dedup, TextAnalysis, CoreAnalytics, Packing}
 import graft.core.Tables
 import graft.functions.Hashing
 
 class Round6zSpec extends SparkSpec {
 
   test("q55 count-min estimates never undercount and exact-match isolated keys") {
-    val rows = Round6z.queries("q55_countmin_sketch")(spark, sf).collect()
+    val rows = CoreAnalytics.queries("q55_countmin_sketch")(spark, sf).collect()
     assert(rows.length === 20)
     rows.foreach { r =>
       assert(r.getAs[Long]("over_cnt") >= 0L,
@@ -39,7 +39,7 @@ class Round6zSpec extends SparkSpec {
         val b = (sd, bucket(k, sd)); counters(b) = counters.getOrElse(b, 0L) + c
       }
     }
-    Round6z.queries("q55_countmin_sketch")(spark, sf).collect().foreach { r =>
+    CoreAnalytics.queries("q55_countmin_sketch")(spark, sf).collect().foreach { r =>
       val k = r.getAs[Long]("l_partkey")
       val est = (0 until 4).map(sd => counters((sd, bucket(k, sd)))).min
       assert(r.getAs[Long]("est_cnt") === est, s"key $k sketch replay")
@@ -47,7 +47,7 @@ class Round6zSpec extends SparkSpec {
   }
 
   test("tx31 novelty masses are conserved and the curve starts saturated") {
-    val rows = Round6z.queries("tx31_novelty_curve")(spark, sf).collect()
+    val rows = TextAnalysis.queries("tx31_novelty_curve")(spark, sf).collect()
     assert(rows.nonEmpty && rows.length <= 10)
     rows.foreach { r =>
       assert(r.getAs[Long]("n_novel_grams") <= r.getAs[Long]("n_occurrences"))
@@ -67,7 +67,7 @@ class Round6zSpec extends SparkSpec {
   }
 
   test("pk17 worker loads are conserved and round-robin is exactly 8 shards each") {
-    val rows = Round6z.queries("pk17_worker_skew")(spark, sf).collect()
+    val rows = Packing.queries("pk17_worker_skew")(spark, sf).collect()
     assert(rows.length === 8)
     rows.foreach(r => assert(r.getAs[Long]("n_shards") === 8L))
     val loads = rows.map(_.getAs[Long]("load_fx"))
@@ -76,7 +76,7 @@ class Round6zSpec extends SparkSpec {
     assert(rows.map(_.getAs[Long]("n_docs")).sum ===
       Tables.documents(spark, sf).count())
     // deterministic layout: re-run produces identical rows
-    val again = Round6z.queries("pk17_worker_skew")(spark, sf).collect()
+    val again = Packing.queries("pk17_worker_skew")(spark, sf).collect()
     assert(rows.map(_.toString).sameElements(again.map(_.toString)))
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Round7}
+import graft.operators.{Dedup, EventPipeline}
 import graft.sources.LakeIngest
 import graft.streaming.EventStreams
 import org.apache.spark.sql.functions._
@@ -73,7 +73,7 @@ class Round7Spec extends SparkSpec {
   }
 
   test("ev72 census equals the direct events-table prediction") {
-    val out = Round7.queries("ev72_lake_ingest")(spark, sf).collect()
+    val out = EventPipeline.queries("ev72_lake_ingest")(spark, sf).collect()
     assert(out.nonEmpty)
     val direct = graft.core.Tables.events(spark, sf)
       .filter(col("event_type") =!= "error")
@@ -85,8 +85,8 @@ class Round7Spec extends SparkSpec {
   }
 
   test("ev73 streaming ingest census equals ev72's batch census") {
-    val batch = Round7.queries("ev72_lake_ingest")(spark, sf).collect()
-    val stream = Round7.queries("ev73_lake_stream_ingest")(spark, sf).collect()
+    val batch = EventPipeline.queries("ev72_lake_ingest")(spark, sf).collect()
+    val stream = EventPipeline.queries("ev73_lake_stream_ingest")(spark, sf).collect()
     assert(stream.nonEmpty)
     assert(stream.map(_.toSeq).toSeq === batch.map(_.toSeq).toSeq)
   }

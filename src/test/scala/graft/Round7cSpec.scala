@@ -1,14 +1,14 @@
 package graft
 
-import graft.operators.Round7c
+import graft.operators.{EventPipeline, Similarity}
 import org.apache.spark.sql.functions._
 
 class Round7cSpec extends SparkSpec {
 
   test("ss34 recall is monotone in shortlist depth and perfect at full depth bound") {
-    val rows = Round7c.queries("ss34_two_stage_recall")(spark, sf).collect()
+    val rows = Similarity.queries("ss34_two_stage_recall")(spark, sf).collect()
     assert(rows.map(_.getAs[Long]("depth")).toSeq ===
-      Round7c.Depths.map(_.toLong))
+      Similarity.Depths.map(_.toLong))
     val recalls = rows.map(_.getAs[Long]("recall_fx"))
     assert(recalls.toSeq === recalls.sorted.toSeq,
       s"deeper shortlist must never lose recall: ${recalls.toSeq}")
@@ -20,8 +20,8 @@ class Round7cSpec extends SparkSpec {
   }
 
   test("ev75 retained state grows with delay and never exceeds the corpus") {
-    val rows = Round7c.queries("ev75_join_state_model")(spark, sf).collect()
-    assert(rows.map(_.getAs[Long]("delay_s")).toSeq === Round7c.DelaysS)
+    val rows = EventPipeline.queries("ev75_join_state_model")(spark, sf).collect()
+    assert(rows.map(_.getAs[Long]("delay_s")).toSeq === EventPipeline.DelaysS)
     val maxes = rows.map(_.getAs[Long]("max_state_rows"))
     val means = rows.map(_.getAs[Long]("mean_state_fx"))
     assert(maxes.toSeq === maxes.sorted.toSeq)
@@ -33,7 +33,7 @@ class Round7cSpec extends SparkSpec {
   }
 
   test("ev74 lateness quantiles are ordered and bounded per type") {
-    val rows = Round7c.queries("ev74_lateness_quantiles")(spark, sf).collect()
+    val rows = EventPipeline.queries("ev74_lateness_quantiles")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (p50, p90, p99, mx) = (r.getAs[Long]("p50_us"), r.getAs[Long]("p90_us"),

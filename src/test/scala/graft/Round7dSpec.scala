@@ -1,12 +1,12 @@
 package graft
 
-import graft.operators.Round7d
+import graft.operators.{Dedup, TextAnalysis}
 import org.apache.spark.sql.functions._
 
 class Round7dSpec extends SparkSpec {
 
   test("dd39 octave census conserves pairs and shares") {
-    val rows = Round7d.queries("dd39_dup_distance_octaves")(spark, sf).collect()
+    val rows = Dedup.queries("dd39_dup_distance_octaves")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val o = r.getAs[Int]("octave")
@@ -21,7 +21,7 @@ class Round7dSpec extends SparkSpec {
   }
 
   test("tx36 per-language quantiles are ordered and cover all non-empty docs") {
-    val rows = Round7d.queries("tx36_len_quantiles_by_lang")(spark, sf).collect()
+    val rows = TextAnalysis.queries("tx36_len_quantiles_by_lang")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (p50, p90, p99, mx) = (r.getAs[Long]("p50_toks"), r.getAs[Long]("p90_toks"),

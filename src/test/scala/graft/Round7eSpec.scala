@@ -1,13 +1,13 @@
 package graft
 
-import graft.operators.Round7e
+import graft.operators.{Multimodal, Packing}
 import org.apache.spark.sql.functions._
 
 class Round7eSpec extends SparkSpec {
 
   test("pk20 mixing falls as contexts shrink; straddle mass rises with size") {
-    val rows = Round7e.queries("pk20_window_doc_mixing")(spark, sf).collect()
-    assert(rows.map(_.getAs[Long]("ctx")).toSeq === Round7e.CtxSizes)
+    val rows = Packing.queries("pk20_window_doc_mixing")(spark, sf).collect()
+    assert(rows.map(_.getAs[Long]("ctx")).toSeq === Packing.CtxSizes)
     // same docs under every context size
     assert(rows.map(_.getAs[Long]("n_docs")).distinct.length === 1)
     // bigger windows → fewer of them, more docs per window, fewer straddlers
@@ -22,7 +22,7 @@ class Round7eSpec extends SparkSpec {
   }
 
   test("mm14 sharing matrix is symmetric-upper and pairs are real collisions") {
-    val rows = Round7e.queries("mm14_cross_source_sharing")(spark, sf).collect()
+    val rows = Multimodal.queries("mm14_cross_source_sharing")(spark, sf).collect()
     assert(rows.nonEmpty, "fingerprint key must produce cross-source signal")
     rows.foreach { r =>
       assert(r.getAs[String]("src_a") < r.getAs[String]("src_b"))

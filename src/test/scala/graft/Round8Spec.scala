@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Curation, Dedup, Round6ag, Round8}
+import graft.operators.Dedup
 import org.apache.spark.sql.functions._
 
 class Round8Spec extends SparkSpec {
@@ -63,7 +63,7 @@ class Round8Spec extends SparkSpec {
   }
 
   test("dd40 sweep: kept counts are monotone in cap and recalls well-formed") {
-    val out = Round8.queries("dd40_simhash_cap_sweep")(spark, sf)
+    val out = Dedup.queries("dd40_simhash_cap_sweep")(spark, sf)
       .collect().sortBy(_.getAs[Long]("cap"))
     assert(out.map(_.getAs[Long]("cap")).toSeq === Seq(8L, 64L, 512L, 1024L))
     // monotone: a pair kept at cap c stays kept at c' > c (its bucket
@@ -95,7 +95,7 @@ class Round8Spec extends SparkSpec {
   }
 
   test("dd07 capped result equals the uncapped join on honest testdata") {
-    val capped = Curation.queries("dd07_hamming_pairs")(spark, sf).collect()
+    val capped = Dedup.queries("dd07_hamming_pairs")(spark, sf).collect()
     val banded = Dedup.simhashBanded(spark, sf).persist()
     val l = banded.select(col("band"), col("bval"),
       col("doc_id").as("doc_a"), col("simhash").as("sh_a"))
@@ -114,7 +114,7 @@ class Round8Spec extends SparkSpec {
   }
 
   test("dd33 still classifies pairs after the capped simhash side") {
-    val out = Round6ag.queries("dd33_method_agreement")(spark, sf).collect()
+    val out = Dedup.queries("dd33_method_agreement")(spark, sf).collect()
     assert(out.nonEmpty)
     val methods = out.map(_.getAs[String]("method")).toSet
     assert(methods.subsetOf(Set("both", "minhash_only", "simhash_only")))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Round8b
+import graft.operators.Packing
 import org.apache.spark.sql.functions._
 
 class Round8bSpec extends SparkSpec {
@@ -28,7 +28,7 @@ class Round8bSpec extends SparkSpec {
   }
 
   test("pk21 reproduces the hand-derived BPE merges and saturates") {
-    val out = Round8b.queries("pk21_bpe_train")(spark, fixtureDir)
+    val out = Packing.queries("pk21_bpe_train")(spark, fixtureDir)
       .collect().sortBy(_.getAs[Long]("round"))
     assert(out.length === 3) // rounds 0..2, then saturation
     val r0 = out(0)
@@ -61,7 +61,7 @@ class Round8bSpec extends SparkSpec {
       Seq.fill(6)("cab")).mkString(" ")
     Seq((1L, text, "en")).toDF("doc_id", "text", "lang")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = Round8b.queries("pk21_bpe_train")(spark, dir)
+    val out = Packing.queries("pk21_bpe_train")(spark, dir)
       .collect().sortBy(_.getAs[Long]("round"))
     assert(out.length === 4)
     def row(i: Int) = (out(i).getAs[String]("sym_x"),
@@ -74,9 +74,9 @@ class Round8bSpec extends SparkSpec {
   }
 
   test("pk21 on the real corpus: full curve, strictly compressing, deterministic") {
-    val out = Round8b.queries("pk21_bpe_train")(spark, sf)
+    val out = Packing.queries("pk21_bpe_train")(spark, sf)
       .collect().sortBy(_.getAs[Long]("round"))
-    assert(out.length === Round8b.NMerges + 1)
+    assert(out.length === Packing.NMerges + 1)
     val syms = out.map(_.getAs[Long]("corpus_syms")).toSeq
     assert(syms === syms.sorted.reverse, "corpus symbols must not grow")
     assert(syms.distinct === syms, "every merge must strictly compress")
@@ -88,13 +88,13 @@ class Round8bSpec extends SparkSpec {
     out.drop(1).foreach(r =>
       assert((r.getAs[String]("sym_x") + r.getAs[String]("sym_y"))
         .matches("[a-z]+")))
-    val again = Round8b.queries("pk21_bpe_train")(spark, sf)
+    val again = Packing.queries("pk21_bpe_train")(spark, sf)
       .collect().sortBy(_.getAs[Long]("round"))
     assert(again.map(_.toSeq).toSeq === out.map(_.toSeq).toSeq)
   }
 
   test("pk22 fertility: word mass conserved, fertility between 1 and the char bound") {
-    val out = Round8b.queries("pk22_bpe_fertility")(spark, sf).collect()
+    val out = Packing.queries("pk22_bpe_fertility")(spark, sf).collect()
     assert(out.nonEmpty)
     val direct = graft.core.Tables.documents(spark, sf)
       .select(col("lang"),

@@ -35,9 +35,9 @@ class Round8eSpec extends SparkSpec {
       (2L, "alpha beta gamma"),
       (6L, "delta delta epsilon"),
       (7L, "zeta eta theta")).toDF("doc_id", "text")
-    import graft.operators.Round8d
-    val v1 = Round8d.snapshotV1(docs) // ids 1, 2, 7
-    val v2 = Round8d.snapshotV2(docs) // ids 1, 2(+append), 6
+    import graft.operators.Dedup
+    val v1 = Dedup.snapshotV1(docs) // ids 1, 2, 7
+    val v2 = Dedup.snapshotV2(docs) // ids 1, 2(+append), 6
     assert(v1.count() === 3 && v2.count() === 3)
     val mod = v2.filter(col("doc_id") === 2).head().getAs[String]("text")
     assert(mod === "alpha beta gamma rev2 appendix note")

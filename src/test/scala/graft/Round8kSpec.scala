@@ -44,7 +44,7 @@ class Round8kSpec extends SparkSpec {
     assert(nI === nA + nB - nU)
     assert(nU >= math.max(nA, nB))
     // exact branch: a cohort with < k distinct hashes reports truth
-    val k = graft.operators.Round8k.KmvK
+    val k = graft.operators.CoreAnalytics.KmvK
     if (nA < k) assert(r.getAs[Long]("est_a") === nA)
     if (nB < k) assert(r.getAs[Long]("est_b") === nB)
     if (nU < k) assert(r.getAs[Long]("est_union") === nU)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Round8u
+import graft.operators.Multimodal
 
 class Round8uSpec extends SparkSpec {
 
@@ -17,20 +17,20 @@ class Round8uSpec extends SparkSpec {
 
   test("the sniffer is magic-byte exact, not extension-trusting") {
     import graft.sources._
-    assert(Round8u.sniff(PgmCodec.encode(2, 2, 255,
+    assert(Multimodal.sniff(PgmCodec.encode(2, 2, 255,
       Array[Byte](1, 2, 3, 4))) === "pgm")
-    assert(Round8u.sniff(WarcCodec.encodeRecord(
+    assert(Multimodal.sniff(WarcCodec.encodeRecord(
       Seq("WARC-Record-ID" -> "x"), Array[Byte](9))) === "warc")
-    assert(Round8u.sniff(TarCodec.encodeArchive(
+    assert(Multimodal.sniff(TarCodec.encodeArchive(
       Seq("a" -> Array[Byte](1)))) === "tar")
-    assert(Round8u.sniff(WavCodec.encode(8000,
+    assert(Multimodal.sniff(WavCodec.encode(8000,
       Array[Short](1, 2, 3))) === "wav")
-    assert(Round8u.sniff(Array[Byte](1, 2, 3)) === "unknown")
-    assert(Round8u.sniff("RIFF1234NOTW".getBytes) === "unknown")
+    assert(Multimodal.sniff(Array[Byte](1, 2, 3)) === "unknown")
+    assert(Multimodal.sniff("RIFF1234NOTW".getBytes) === "unknown")
     // a TAR body containing "RIFF"/"P5" at offset 0 of the BODY does
     // not confuse the sniffer (magic positions are format-specific)
     val trap = TarCodec.encodeArchive(Seq("t" -> "P5 fake".getBytes))
-    assert(Round8u.sniff(trap) === "tar")
+    assert(Multimodal.sniff(trap) === "tar")
   }
 
   test("tx42 adaptive stopwords: flags match a driver df recount") {

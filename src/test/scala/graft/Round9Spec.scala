@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Multimodal, Round8u}
+import graft.operators.Multimodal
 import graft.sources.PngCodec
 import org.apache.spark.sql.functions._
 
@@ -14,7 +14,7 @@ class Round9Spec extends SparkSpec {
     media.foreach { r =>
       val bytes = r.getAs[Array[Byte]]("payload")
       assert(bytes.take(8).toSeq === PngCodec.Magic.toSeq)
-      assert(Round8u.sniff(bytes) === "png")
+      assert(Multimodal.sniff(bytes) === "png")
     }
     // container sizes VARY (compression is content-dependent) — a
     // fixed-size "container" would mean the bytes are a disguised
