@@ -24,17 +24,19 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")
-  /** Normalize `events.ts` to a session-zoned TIMESTAMP whatever the
-    * driver wrote that round: parquet TIMESTAMP(NANOS) reads as raw
-    * long nanos (`spark.sql.legacy.parquet.nanosAsLong=true`, set in
+  def events(s: SparkSession, d: String): DataFrame = normalizeTs(load(s, d, "events"))
+
+  /** Normalize an events frame's `ts` (batch or streaming) to a
+    * session-zoned TIMESTAMP whatever the driver wrote that round:
+    * parquet TIMESTAMP(NANOS) reads as raw long nanos
+    * (`spark.sql.legacy.parquet.nanosAsLong=true`, set in
     * Verify/Bench/specs) → truncate to micros; TIMESTAMP(MICROS,
     * isAdjustedToUTC=false) reads as TIMESTAMP_NTZ → cast, exact
     * because every session pins spark.sql.session.timeZone=UTC, the
     * same naive reading DuckDB uses. Downstream operators can then
     * rely on `unix_micros(ts)` and timestamp casts unconditionally.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
-    val raw = load(s, d, "events")
+  def normalizeTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
@@ -42,7 +44,7 @@ object Tables {
         raw.withColumn("ts", org.apache.spark.sql.functions.col("ts").cast("timestamp"))
       case _ => raw
     }
-  }
+
   /** Every `documents` consumer runs expensive per-row text compute
     * (md5 shingling, regex tokenization, winnowing), so the loader
     * scatters rows across cores up front ([[Par.scatter]]) — the

@@ -31,45 +31,14 @@ object Components {
       case _ => ()
     }
 
-  /** The RESULT frame of each invocation is backed by a final
-    * checkpoint that must outlive the call; it is released on the
-    * NEXT invocation of EITHER algorithm (one queue shared by
-    * propagation and star), bounding a long-lived session to one
-    * retained RDD total instead of one per call. Consequences:
-    * materialize (collect/write/aggregate) a result before computing
-    * another set of components with either variant — a stale result
-    * frame read after a newer call throws on the missing checkpoint
-    * blocks rather than silently recomputing (checkpoint release is
-    * destructive, unlike Dedup.barrier's recompute-safe unpersist).
-    * Like Dedup.barrier, this assumes calls are sequential on the
-    * session; concurrent invocations could release a result another
-    * thread has not yet consumed.
-    */
-  private val liveResults =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-  private def trackResult(df: DataFrame): DataFrame = {
-    var old = liveResults.poll()
-    while (old != null) { release(old); old = liveResults.poll() }
-    liveResults.add(df)
-    df
-  }
-
-  /** Reduce-and-detach: eagerly materializes a (small) aggregate of a
-    * CC result and swaps it into the live-result slot, releasing the
-    * node-level checkpoint immediately. Callers that fold the
-    * component map down to a census (dd10/dd11) return a
-    * self-contained frame instead of one tethered to the big CC
-    * checkpoint — so building several CC-backed queries before
-    * collecting the first is safe, and the retained RDD shrinks from
-    * node-level to census-level between calls.
-    */
-  def detach(census: DataFrame): DataFrame = trackResult(census.localCheckpoint())
-
   /** @param pairs  undirected edges, two long columns
     * @return (node, comp) — comp = min node id reachable. The frame is
     *         backed by the final round's local checkpoint; all
     *         intermediate round checkpoints (and the edge cache) are
-    *         unpersisted before returning.
+    *         unpersisted before returning. The result checkpoint lives
+    *         as long as the frame: Spark's ContextCleaner reclaims it
+    *         once the frame is unreachable, so any number of results
+    *         can be held and read in any order.
     */
   def connectedComponents(
       pairs: DataFrame, srcCol: String, dstCol: String,
@@ -112,7 +81,7 @@ object Components {
       rounds += 1
     }
     release(edges)
-    trackResult(comp)
+    comp
   }
 
   /** Connected components via alternating large-star / small-star
@@ -202,6 +171,6 @@ object Components {
       .localCheckpoint()
     release(edges)
     release(nodes)
-    trackResult(out)
+    out
   }
 }

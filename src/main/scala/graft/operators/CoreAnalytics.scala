@@ -130,7 +130,7 @@ object CoreAnalytics extends Operators {
   private def contrib(docs: DataFrame, sign: Int): DataFrame =
     docs.select(col("source"),
       lit(sign.toLong).as("d_docs"),
-      (lit(sign) * size(split(trim(col("text")), "\\s+"))).cast("long").as("d_tokens"),
+      (lit(sign) * size(TextAnalysis.tokens(col("text")))).cast("long").as("d_tokens"),
       (lit(sign) * octet_length(col("text"))).cast("long").as("d_bytes"))
 
   /** q76: sketch size (matches q61's bottom-k). */
@@ -284,6 +284,21 @@ object CoreAnalytics extends Operators {
       .agg(count(lit(1)).cast("long").as("n_keys"),
         sum(col("c")).cast("long").as("n_rows"),
         max(col("c")).cast("long").as("max_rows"))
+
+  /** A value histogram's CDF: per `key`, the running sum `cum` of
+    * `weight` in `value` order and the total `tot`, both long — exact
+    * integer quantile picks read `cum * 100 >= tot * p`.
+    */
+  private def withCdf(hist: DataFrame, key: String, value: String, weight: String,
+      cum: String, tot: String): DataFrame = {
+    val wCum = Window.partitionBy(col(key)).orderBy(col(value))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wAll = Window.partitionBy(col(key))
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    hist
+      .withColumn(cum, sum(col(weight)).over(wCum).cast("long"))
+      .withColumn(tot, sum(col(weight)).over(wAll).cast("long"))
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q01_pricing_summary" -> { (s, d) =>
@@ -1129,13 +1144,7 @@ object CoreAnalytics extends Operators {
             .cast("long").as("days"))
         .groupBy(col("priority"), col("days"))
         .agg(count(lit(1)).as("cnt"))
-      val wCum = Window.partitionBy(col("priority")).orderBy(col("days"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = Window.partitionBy(col("priority"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      hist
-        .withColumn("cum", sum(col("cnt")).over(wCum).cast("long"))
-        .withColumn("n", sum(col("cnt")).over(wAll).cast("long"))
+      withCdf(hist, "priority", "days", "cnt", "cum", "n")
         .groupBy(col("priority"))
         .agg(max(col("n")).as("n_lines"),
           min(when(col("cum") * 100 >= col("n") * 50, col("days"))).as("p50_days"),
@@ -2095,15 +2104,8 @@ object CoreAnalytics extends Operators {
       val hist = li.groupBy(col("priority"), col("unit_cents"))
         .agg(count(lit(1)).cast("long").as("n_lines"),
           sum(col("qty")).cast("long").as("w"))
-      val wCum = Window.partitionBy(col("priority")).orderBy(col("unit_cents"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = Window.partitionBy(col("priority"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      hist
-        .withColumn("cum_w", sum(col("w")).over(wCum).cast("long"))
-        .withColumn("tw", sum(col("w")).over(wAll).cast("long"))
-        .withColumn("cum_n", sum(col("n_lines")).over(wCum).cast("long"))
-        .withColumn("tn", sum(col("n_lines")).over(wAll).cast("long"))
+      withCdf(withCdf(hist, "priority", "unit_cents", "w", "cum_w", "tw"),
+          "priority", "unit_cents", "n_lines", "cum_n", "tn")
         .groupBy(col("priority"))
         .agg(max(col("tn")).as("n_lines"), max(col("tw")).as("total_units"),
           min(when(col("cum_w") * 100 >= col("tw") * 50, col("unit_cents")))
@@ -2198,13 +2200,7 @@ object CoreAnalytics extends Operators {
       val hist = gaps.join(tiled, Seq("o_custkey"))
         .groupBy(col("quartile"), col("gap_d"))
         .agg(count(lit(1)).cast("long").as("cnt"))
-      val wCum = Window.partitionBy(col("quartile")).orderBy(col("gap_d"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = Window.partitionBy(col("quartile"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      hist
-        .withColumn("cum", sum(col("cnt")).over(wCum).cast("long"))
-        .withColumn("n", sum(col("cnt")).over(wAll).cast("long"))
+      withCdf(hist, "quartile", "gap_d", "cnt", "cum", "n")
         .groupBy(col("quartile").cast("int").as("quartile"))
         .agg(max(col("n")).as("n_gaps"),
           min(when(col("cum") * 2 >= col("n"), col("gap_d"))).as("p50_days"),

@@ -93,7 +93,7 @@ object Dedup extends Operators {
   private[graft] def simhashesOf(docs: DataFrame): DataFrame = {
     val tok = docs
       .select(col("doc_id"),
-        explode(array_distinct(split(trim(col("text")), "\\s+"))).as("token"))
+        explode(array_distinct(TextAnalysis.tokens(col("text")))).as("token"))
       .withColumn("h", Hashing.hash64(col("token")))
     val bitSums = (0 until SimhashBits).map(b =>
       sum(when(shiftright(col("h"), b).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"s_$b"))
@@ -134,17 +134,26 @@ object Dedup extends Operators {
     // the array — the shingle array is traversed once per doc, not
     // once per hash family
     bandedFromSigCol(
-      shingles.select(col("doc_id"), minhashSig(col("shs")).as("_sig")), "_sig")
+      shingles.select(col("doc_id"), minhashSig(col("shs")).as("_sig")), "_sig", col("doc_id"))
 
-  /** Band an EXISTING signature column. Callers whose barriered frame
-    * already carries the fused signature (dd37) band off the cached
-    * array instead of paying a second MinhashSigExpr pass over every
-    * cached shingle array (ADVICE r13).
+  /** Band an EXISTING signature column: one (keep…, band, band_hash)
+    * row per band. Callers whose barriered frame already carries the
+    * fused signature (dd37) band off the cached array instead of
+    * paying a second MinhashSigExpr pass over every cached shingle
+    * array (ADVICE r13).
     */
-  private[graft] def bandedFromSigCol(signed: DataFrame, sigCol: String): DataFrame =
-    signed.select(col("doc_id"), posexplode(array(bandHashCols(col(sigCol)): _*)))
+  private[graft] def bandedFromSigCol(signed: DataFrame, sigCol: String, keep: Column*): DataFrame =
+    signed.select(keep :+ posexplode(array(bandHashCols(col(sigCol)): _*)): _*)
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "band_hash")
+
+  /** Candidate pairs (doc_a < doc_b) of a banded (band, band_hash,
+    * doc_id) frame: one row per band the two docs share. */
+  private[graft] def bandPairs(banded: DataFrame): DataFrame = {
+    val l = banded.select(col("band"), col("band_hash"), col("doc_id").as("doc_a"))
+    val r = banded.select(col("band"), col("band_hash"), col("doc_id").as("doc_b"))
+    l.join(r, Seq("band", "band_hash")).filter(col("doc_a") < col("doc_b"))
+  }
 
   /** The [[Bands]] band-hash columns sliced from a [[minhashSig]]
     * array — shared by every banding variant so the (4, 4) geometry
@@ -163,7 +172,7 @@ object Dedup extends Operators {
   /** Frame-input variant, for specs feeding crafted corpora. */
   private[graft] def docShinglesOf(docs: DataFrame): DataFrame =
     docs
-      .withColumn("toks", split(trim(col("text")), "\\s+"))
+      .withColumn("toks", TextAnalysis.tokens(col("text")))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), shingleHashes(col("toks")).as("shs"))
 
@@ -368,13 +377,6 @@ object Dedup extends Operators {
     }
   }
 
-  /** embeddings → (vec_id, label, emb: array<double>, norm). */
-  private[operators] def embBase(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label"),
-        col("embedding").cast("array<double>").as("emb"))
-      .withColumn("norm", Similarity.l2norm(col("emb")))
-
   /** Banded sign-LSH candidate pairs: distinct (label, vec_a, vec_b)
     * sharing ≥1 band. The banded table is slim (ids + band key only —
     * embeddings rejoin AFTER the pair set is known, so the band
@@ -382,7 +384,7 @@ object Dedup extends Operators {
     * self-join.
     */
   private[operators] def embCandidates(s: SparkSession, d: String): DataFrame = {
-    val banded = barrier(embBase(s, d)
+    val banded = barrier(Similarity.vectors(s, d)
       .select(col("vec_id"), col("label"),
         posexplode(array(signBandCols(col("emb")): _*)))
       .withColumnRenamed("pos", "band")
@@ -409,14 +411,13 @@ object Dedup extends Operators {
     */
   private[operators] def scoreCandidates(
       s: SparkSession, d: String, cand: DataFrame): DataFrame = {
-    val e = embBase(s, d)
+    val e = Similarity.vectors(s, d)
     cand
       .join(e.select(col("vec_id").as("vec_a"), col("emb").as("emb_a"),
         col("norm").as("norm_a")), Seq("vec_a"))
       .join(e.select(col("vec_id").as("vec_b"), col("emb").as("emb_b"),
         col("norm").as("norm_b")), Seq("vec_b"))
-      .withColumn("cos_sim", graft.functions.Det.trunc4(
-        Similarity.dot(col("emb_a"), col("emb_b")) / (col("norm_a") * col("norm_b"))))
+      .withColumn("cos_sim", Similarity.cos4("emb_a", "emb_b", "norm_a", "norm_b"))
   }
 
   /** Materialization barrier for signature tables that are self-joined
@@ -734,10 +735,7 @@ object Dedup extends Operators {
     // MinHash + banded LSH candidate pairs
     "dd03_minhash_lsh" -> { (s, d) =>
       val banded = barrier(bandedSignatures(s, d))
-      val l = banded.select(col("band"), col("band_hash"), col("doc_id").as("doc_a"))
-      val r = banded.select(col("band"), col("band_hash"), col("doc_id").as("doc_b"))
-      l.join(r, Seq("band", "band_hash"))
-        .filter(col("doc_a") < col("doc_b"))
+      bandPairs(banded)
         .groupBy(col("doc_a"), col("doc_b"))
         .agg(count(lit(1)).as("n_shared_bands"))
         .orderBy(col("doc_a"), col("doc_b"))
@@ -832,7 +830,7 @@ object Dedup extends Operators {
       // hot shingle into half the prefixes (Σ DF² bucket blowup)
       val ds0 = Dedup.barrier(
         Tables.documents(s, d)
-          .withColumn("toks", split(trim(col("text")), "\\s+"))
+          .withColumn("toks", TextAnalysis.tokens(col("text")))
           .filter(size(col("toks")) >= 3)
           .select(col("doc_id"), Dedup.shingleHashes(col("toks")).as("shs")))
       val dfreq = ds0.select(explode(col("shs")).as("h"))
@@ -959,13 +957,16 @@ object Dedup extends Operators {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
       val w = Window.partitionBy(col("comp"))
         .orderBy(col("n_chars").desc, col("node"))
-      Components.detach(cc.join(docs, cc("node") === docs("doc_id"))
+      // checkpoint the census: the frame no longer reaches back to
+      // the node-level CC checkpoint, which Spark can then reclaim
+      cc.join(docs, cc("node") === docs("doc_id"))
         .withColumn("rk", row_number().over(w))
         .groupBy(col("comp").as("cluster_id"))
         .agg(count(lit(1)).as("n_members"),
           max(when(col("rk") === 1, col("node"))).as("keeper"),
           max(when(col("rk") === 1, col("n_chars"))).as("keeper_chars"))
-        .orderBy(col("cluster_id")))
+        .orderBy(col("cluster_id"))
+        .localCheckpoint()
     },
 
     // --- dd11: semantic dedup clusters (star-CC under the gate) ------
@@ -981,11 +982,11 @@ object Dedup extends Operators {
       val pairs = Dedup.scoreCandidates(s, d, Dedup.embCandidates(s, d))
         .filter(col("cos_sim") >= Dedup.EmbThreshold)
         .select(col("vec_a"), col("vec_b"))
-      Components.detach(
-        Components.connectedComponentsStar(pairs, "vec_a", "vec_b")
-          .groupBy(col("comp").as("cluster_id"))
-          .agg(count(lit(1)).as("n_members"), max(col("node")).as("max_member"))
-          .orderBy(col("cluster_id")))
+      Components.connectedComponentsStar(pairs, "vec_a", "vec_b")
+        .groupBy(col("comp").as("cluster_id"))
+        .agg(count(lit(1)).as("n_members"), max(col("node")).as("max_member"))
+        .orderBy(col("cluster_id"))
+        .localCheckpoint()
     },
 
     // --- dd12: MinHash estimator-quality evaluation ------------------
@@ -1030,15 +1031,14 @@ object Dedup extends Operators {
     // helpers dd05/dd11 execute, so the measured recall is the
     // shipped construction's recall, not a reimplementation's.
     "dd13_lsh_recall" -> { (s, d) =>
-      val e = Dedup.embBase(s, d)
+      val e = Similarity.vectors(s, d)
       val a = e.select(col("label"), col("vec_id").as("vec_a"),
         col("emb").as("emb_a"), col("norm").as("norm_a"))
       val b = e.select(col("label"), col("vec_id").as("vec_b"),
         col("emb").as("emb_b"), col("norm").as("norm_b"))
       val truth = a.join(b, Seq("label"))
         .filter(col("vec_a") < col("vec_b"))
-        .filter(Det.trunc4(Similarity.dot(col("emb_a"), col("emb_b")) /
-          (col("norm_a") * col("norm_b"))) >= Dedup.EmbThreshold)
+        .filter(Similarity.cos4("emb_a", "emb_b", "norm_a", "norm_b") >= Dedup.EmbThreshold)
         .select(col("vec_a"), col("vec_b"))
       val cand = Dedup.embCandidates(s, d)
       val hits = Dedup.scoreCandidates(s, d, cand)
@@ -1068,7 +1068,7 @@ object Dedup extends Operators {
       // uncontaminated) — they stay in the census denominator; only
       // gram GENERATION filters on length
       val docs = Dedup.barrier(graft.core.Tables.documents(s, d)
-        .withColumn("toks", split(trim(col("text")), "\\s+"))
+        .withColumn("toks", TextAnalysis.tokens(col("text")))
         .withColumn("is_eval",
           Hashing.hash64(col("doc_id").cast("string")) % 20 === 0)
         .select(col("doc_id"), col("source"), col("is_eval"), col("toks")))
@@ -1080,8 +1080,7 @@ object Dedup extends Operators {
       // so the isNotNull on the OUTPUT is semantically free.
       val grams = docs.filter(size(col("toks")) >= W)
         .select(col("doc_id"), col("is_eval"),
-          explode_outer(transform(sequence(lit(0), size(col("toks")) - W),
-            i => Hashing.hash64(concat_ws(" ", slice(col("toks"), i + 1, lit(W))))))
+          explode_outer(TextAnalysis.gramHashes(col("toks"), W))
             .as("g"))
         .filter(col("g").isNotNull)
       val evalGrams = grams.filter(col("is_eval"))
@@ -1188,11 +1187,10 @@ object Dedup extends Operators {
     "dd16_source_overlap" -> { (s, d) =>
       val W = 13
       val sg = Dedup.barrier(graft.core.Tables.documents(s, d)
-        .withColumn("toks", split(trim(col("text")), "\\s+"))
+        .withColumn("toks", TextAnalysis.tokens(col("text")))
         .filter(size(col("toks")) >= W)
         .select(col("source"),
-          explode(array_distinct(transform(sequence(lit(0), size(col("toks")) - W),
-            i => Hashing.hash64(concat_ws(" ", slice(col("toks"), i + 1, lit(W)))))))
+          explode(array_distinct(TextAnalysis.gramHashes(col("toks"), W)))
             .as("g"))
         .distinct())
       val totals = sg.groupBy(col("source")).agg(count(lit(1)).as("n_grams"))
@@ -1261,11 +1259,8 @@ object Dedup extends Operators {
         .select(col("doc_id"), col("is_eval"), Dedup.shingleHashes(col("toks")).as("shs")))
       val sig = sh.select(col("doc_id"), col("is_eval"),
         Dedup.minhashSig(col("shs")).as("_sig"))
-      val banded = Dedup.barrierAlso(sig
-        .select(col("doc_id"), col("is_eval"),
-          posexplode(array(Dedup.bandHashCols(col("_sig")): _*)))
-        .withColumnRenamed("pos", "band")
-        .withColumnRenamed("col", "band_hash"))
+      val banded = Dedup.barrierAlso(
+        Dedup.bandedFromSigCol(sig, "_sig", col("doc_id"), col("is_eval")))
       val cand = banded.filter(!col("is_eval"))
         .select(col("band"), col("band_hash"), col("doc_id").as("train_doc"))
         .join(broadcast(banded.filter(col("is_eval"))
@@ -1514,12 +1509,8 @@ object Dedup extends Operators {
           .cast("long").as("n_hot_dropped"))
       val kept = occ.filter(col("occ") <= BucketCap)
         .select(col("band"), col("band_hash"))
-      def pairsOf(src: DataFrame): DataFrame = {
-        val l = src.select(col("band"), col("band_hash"), col("doc_id").as("doc_a"))
-        val r = src.select(col("band"), col("band_hash"), col("doc_id").as("doc_b"))
-        l.join(r, Seq("band", "band_hash")).filter(col("doc_a") < col("doc_b"))
-          .select(col("doc_a"), col("doc_b")).distinct()
-      }
+      def pairsOf(src: DataFrame): DataFrame =
+        bandPairs(src).select(col("doc_a"), col("doc_b")).distinct()
       val fullPairs = pairsOf(banded)
       val cappedPairs = pairsOf(banded.join(kept, Seq("band", "band_hash")))
         .withColumn("kept", lit(1L))
@@ -1687,10 +1678,7 @@ object Dedup extends Operators {
       // generate-trap lint flags exactly this shape). At 100 TB this IS
       // the "banded index is a materialized table" posture above.
       val banded = Dedup.barrierAlso(
-        sig.select(col("doc_id"), col("is_new"),
-          posexplode(array(Dedup.bandHashCols(col("_sig")): _*)))
-        .withColumnRenamed("pos", "band")
-        .withColumnRenamed("col", "band_hash"))
+        Dedup.bandedFromSigCol(sig, "_sig", col("doc_id"), col("is_new")))
       val nb = banded.filter(col("is_new"))
         .select(col("doc_id").as("new_id"), col("band"), col("band_hash"))
       val ob = banded.filter(!col("is_new"))
@@ -1893,10 +1881,7 @@ object Dedup extends Operators {
       // materialized like dd03's: the l/r self-join would otherwise
       // evaluate the signature pipeline twice (generate-trap lint)
       val banded = Dedup.barrierAlso(Dedup.bandedSignaturesOf(shingled))  // r13 opt: read the barriered shingle cache, not a second md5 lineage
-      val l = banded.select(col("band"), col("band_hash"), col("doc_id").as("doc_a"))
-      val r = banded.select(col("band"), col("band_hash"), col("doc_id").as("doc_b"))
-      val pairs = l.join(r, Seq("band", "band_hash"))
-        .filter(col("doc_a") < col("doc_b"))
+      val pairs = bandPairs(banded)
         .groupBy(col("doc_a"), col("doc_b"))
         .agg(count(lit(1)).cast("long").as("n_shared_bands"))
       val scored = pairs
@@ -1942,11 +1927,7 @@ object Dedup extends Operators {
       // raw-union variant was measured at sf10 and its pre-distinct
       // pair mass (each pair repeated per shared band) blew the
       // shuffle-spill disk budget that the distinct'd frames fit.
-      val mhPairs = mhBanded.select(col("band"), col("band_hash"),
-          col("doc_id").as("doc_a"))
-        .join(mhBanded.select(col("band"), col("band_hash"),
-          col("doc_id").as("doc_b")), Seq("band", "band_hash"))
-        .filter(col("doc_a") < col("doc_b"))
+      val mhPairs = bandPairs(mhBanded)
         .select(col("doc_a"), col("doc_b")).distinct()
         .select(col("doc_a"), col("doc_b"),
           lit(1L).as("mh"), lit(0L).as("sh"))
@@ -2083,11 +2064,7 @@ object Dedup extends Operators {
     "dd36_transitivity" -> { (s, d) =>
       val shingled = Dedup.barrier(Dedup.docShingles(s, d))
       val banded = Dedup.barrierAlso(Dedup.bandedSignaturesOf(shingled))  // r13 opt: read the barriered shingle cache, not a second md5 lineage
-      val cand = banded.select(col("band"), col("band_hash"),
-          col("doc_id").as("doc_a"))
-        .join(banded.select(col("band"), col("band_hash"),
-          col("doc_id").as("doc_b")), Seq("band", "band_hash"))
-        .filter(col("doc_a") < col("doc_b"))
+      val cand = bandPairs(banded)
         .select(col("doc_a"), col("doc_b")).distinct()
       val edges = Dedup.barrierAlso(cand
         .join(shingled.select(col("doc_id").as("doc_a"), col("shs").as("sh_a")),
@@ -2142,12 +2119,8 @@ object Dedup extends Operators {
       // r14 opt (ADVICE r13): band off the barrier's EXISTING sig
       // column — bandedSignaturesOf would re-run MinhashSigExpr over
       // every cached shingle array a second time
-      val banded = Dedup.barrierAlso(Dedup.bandedFromSigCol(shingled, "sig"))
-      val pairs = banded.select(col("band"), col("band_hash"),
-          col("doc_id").as("doc_a"))
-        .join(banded.select(col("band"), col("band_hash"),
-          col("doc_id").as("doc_b")), Seq("band", "band_hash"))
-        .filter(col("doc_a") < col("doc_b"))
+      val banded = Dedup.barrierAlso(Dedup.bandedFromSigCol(shingled, "sig", col("doc_id")))
+      val pairs = bandPairs(banded)
         .select(col("doc_a"), col("doc_b")).distinct()
         .filter(pmod(Hashing.hash64(concat_ws("|",
           col("doc_a").cast("string"), col("doc_b").cast("string"))),
@@ -2247,10 +2220,7 @@ object Dedup extends Operators {
     // to a ≤64-row octave census
     "dd39_dup_distance_octaves" -> { (s, d) =>
       val banded = Dedup.barrier(Dedup.bandedSignatures(s, d))
-      val l = banded.select(col("band"), col("band_hash"), col("doc_id").as("doc_a"))
-      val r = banded.select(col("band"), col("band_hash"), col("doc_id").as("doc_b"))
-      val pairs = l.join(r, Seq("band", "band_hash"))
-        .filter(col("doc_a") < col("doc_b"))
+      val pairs = bandPairs(banded)
         .select(col("doc_a"), col("doc_b")).distinct()
       val oct = pairs
         .withColumn("octave",
@@ -2381,12 +2351,9 @@ object Dedup extends Operators {
       // materialized once (the signature tables are the expensive step)
       val sh1 = Dedup.barrier(Dedup.docShinglesOf(v1))
       val shR = Dedup.barrierAlso(Dedup.docShinglesOf(resid))
-      def banded(sh: DataFrame, idAs: String): DataFrame =
-        sh.select(col("doc_id"), Dedup.minhashSig(col("shs")).as("_sig"))
-          .select(col("doc_id").as(idAs),
-            posexplode(array(Dedup.bandHashCols(col("_sig")): _*)))
-          .withColumnRenamed("pos", "band")
-          .withColumnRenamed("col", "band_hash")
+      def banded(sh: DataFrame, idAs: String): DataFrame = Dedup.bandedFromSigCol(
+        sh.select(col("doc_id"), Dedup.minhashSig(col("shs")).as("_sig")), "_sig",
+        col("doc_id").as(idAs))
       val cand = banded(shR, "new_id")
         .join(banded(sh1, "old_id"), Seq("band", "band_hash"))
         .select(col("new_id"), col("old_id")).distinct()
@@ -2457,15 +2424,8 @@ object Dedup extends Operators {
       val sh = Dedup.barrier(Dedup.docShingles(s, d))
       val sig = Dedup.barrierAlso(
         sh.select(col("doc_id"), Dedup.minhashSig(col("shs")).as("sig")))
-      val banded = sig.select(col("doc_id"),
-          posexplode(array(Dedup.bandHashCols(col("sig")): _*)))
-        .withColumnRenamed("pos", "band")
-        .withColumnRenamed("col", "band_hash")
-      val cand = banded.select(col("band"), col("band_hash"),
-          col("doc_id").as("doc_a"))
-        .join(banded.select(col("band"), col("band_hash"),
-          col("doc_id").as("doc_b")), Seq("band", "band_hash"))
-        .filter(col("doc_a") < col("doc_b"))
+      val banded = Dedup.bandedFromSigCol(sig, "sig", col("doc_id"))
+      val cand = bandPairs(banded)
         .select(col("doc_a"), col("doc_b"))
         .distinct()
       val scored = cand
@@ -2586,11 +2546,7 @@ object Dedup extends Operators {
       // the small pair/weight frames, so the intersection compute
       // already runs on the posting list's full parallelism and the
       // explicit repartitions only forced shuffle layouts back in.
-      val cands = banded
-        .select(col("band"), col("band_hash"), col("doc_id").as("doc_a"))
-        .join(banded.select(col("band"), col("band_hash"),
-          col("doc_id").as("doc_b")), Seq("band", "band_hash"))
-        .filter(col("doc_a") < col("doc_b"))
+      val cands = bandPairs(banded)
         .select(col("doc_a"), col("doc_b")).distinct()
       val inter = cands
         .join(wsh.select(col("doc_id").as("doc_a"), col("h"), col("w")),

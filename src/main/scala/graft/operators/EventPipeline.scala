@@ -398,6 +398,23 @@ object EventPipeline extends Operators {
         col("p99_us"))
   }
 
+  /** The dense hourly grid (ev24, ev76, ev78) from ONE fact scan:
+    * `counts` (event_type, h, n_events) is persisted, and the hour
+    * range and the type set derive from it, not from re-scanning
+    * events. Returns (counts, hours: every hour from the first to the
+    * last, grid: hours × event types).
+    */
+  private def hourGrid(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
+    val ev = Tables.events(s, d)
+      .select(col("event_type"), date_trunc("hour", col("ts")).as("h"))
+    val counts = Dedup.barrier(ev.groupBy(col("event_type"), col("h"))
+      .agg(count(lit(1)).as("n_events")))
+    val hours = counts.agg(min(col("h")).as("lo"), max(col("h")).as("hi"))
+      .select(explode(sequence(col("lo"), col("hi"),
+        expr("INTERVAL 1 HOUR"))).as("h"))
+    (counts, hours, hours.crossJoin(counts.select(col("event_type")).distinct()))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // extract_events: JSON payload → typed columns (events.rs:283-350)
     "ev01_extract_parse" -> { (s, d) =>
@@ -455,7 +472,7 @@ object EventPipeline extends Operators {
     // NEP-171 array flatten (event_types.rs:42-66) as token explode
     "ev06_flatten_explode" -> { (s, d) =>
       Tables.documents(s, d)
-        .select(explode(split(trim(col("text")), "\\s+")).as("token"))
+        .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
         .groupBy(col("token"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("token"))
@@ -775,16 +792,7 @@ object EventPipeline extends Operators {
     // table; facts contribute one groupBy, the grid left-joins the
     // tiny count table.
     "ev24_gap_fill" -> { (s, d) =>
-      val ev = Tables.events(s, d)
-        .select(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-      // ONE fact scan: bounds and the type set derive from the
-      // (tiny, persisted) count table, not from re-scanning events
-      val counts = Dedup.barrier(ev.groupBy(col("event_type"), col("h"))
-        .agg(count(lit(1)).as("n_events")))
-      val grid = counts.agg(min(col("h")).as("lo"), max(col("h")).as("hi"))
-        .select(explode(sequence(col("lo"), col("hi"),
-          expr("INTERVAL 1 HOUR"))).as("h"))
-        .crossJoin(counts.select(col("event_type")).distinct())
+      val (counts, _, grid) = hourGrid(s, d)
       grid.join(counts, Seq("event_type", "h"), "left")
         .select(col("event_type"), col("h"),
           coalesce(col("n_events"), lit(0L)).as("n_events"))
@@ -2572,14 +2580,7 @@ object EventPipeline extends Operators {
     // recursion, no UDAF, no per-row loop. Windows partition by
     // event_type over the bounded hour grid (ev24's one-scan build).
     "ev76_backlog_trajectory" -> { (s, d) =>
-      val ev = Tables.events(s, d)
-        .select(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-      val counts = Dedup.barrier(ev.groupBy(col("event_type"), col("h"))
-        .agg(count(lit(1)).as("n_events")))
-      val hours = counts.agg(min(col("h")).as("lo"), max(col("h")).as("hi"))
-        .select(explode(sequence(col("lo"), col("hi"),
-          expr("INTERVAL 1 HOUR"))).as("h"))
-      val grid = hours.crossJoin(counts.select(col("event_type")).distinct())
+      val (counts, hours, grid) = hourGrid(s, d)
       val cap = counts.groupBy(col("event_type"))
         .agg(sum(col("n_events")).as("total"))
         .crossJoin(broadcast(hours.agg(count(lit(1)).as("n_hours"))))
@@ -2663,14 +2664,7 @@ object EventPipeline extends Operators {
     // (departures are capped at c1), so stage 2's backlog is driven by
     // the c1→c2 capacity gap, not by raw arrival bursts.
     "ev78_stage_cascade" -> { (s, d) =>
-      val ev = Tables.events(s, d)
-        .select(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-      val counts = Dedup.barrier(ev.groupBy(col("event_type"), col("h"))
-        .agg(count(lit(1)).as("n_events")))
-      val hours = counts.agg(min(col("h")).as("lo"), max(col("h")).as("hi"))
-        .select(explode(sequence(col("lo"), col("hi"),
-          expr("INTERVAL 1 HOUR"))).as("h"))
-      val grid = hours.crossJoin(counts.select(col("event_type")).distinct())
+      val (counts, hours, grid) = hourGrid(s, d)
       // stage-1 cap: 10% headroom over the mean rate; stage-2: 5% —
       // the writer is the tighter tier, as deployments usually are
       val cap = counts.groupBy(col("event_type"))

@@ -122,6 +122,35 @@ object Multimodal extends Operators {
     spark.createDataFrame(rdd, out)
   }
 
+  /** (media_id, phash) → one (media_id, phash, band, bval) row per
+    * 15-bit phash band. */
+  private def phashBands(hashed: DataFrame): DataFrame =
+    hashed.select(col("media_id"), col("phash"),
+        posexplode(array((0 until PhashBands).map(b =>
+          shiftright(col("phash"), b * PhashBandBits)
+            .bitwiseAND(PhashBandMask)): _*)))
+      .withColumnRenamed("pos", "band")
+      .withColumnRenamed("col", "bval")
+
+  /** Distinct (media_a < media_b, ph_a, ph_b) pairs sharing at least
+    * one band of `codes` — a band equi-join, never all pairs. */
+  private def phashPairs(codes: DataFrame): DataFrame = {
+    val l = codes.select(col("band"), col("bval"),
+      col("media_id").as("media_a"), col("phash").as("ph_a"))
+    val r = codes.select(col("band"), col("bval"),
+      col("media_id").as("media_b"), col("phash").as("ph_b"))
+    l.join(r, Seq("band", "bval"))
+      .filter(col("media_a") < col("media_b"))
+      .select(col("media_a"), col("media_b"), col("ph_a"), col("ph_b"))
+      .distinct()
+  }
+
+  /** Non-empty ASCII documents: byte features equal char features
+    * there, so the oracles recompute them from text. */
+  private def asciiDocs(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .filter(length(col("text")) > 0 && col("text").rlike("^[\\x00-\\x7F]*$"))
+
   /** mm07 oracle: the stripe phash recomputed character-wise (ASCII ⇒
     * ord(char) == payload byte), then the dd07 band-join recipe.
     */
@@ -169,36 +198,88 @@ object Multimodal extends Operators {
     * doc_id mod 4; sniff it back by magic bytes. Runs partition-
     * batched; payloads never touch the driver.
     */
-  private[operators] def sniffedMedia(base: DataFrame): DataFrame = {
-    val spark = base.sparkSession
-    val outSchema = StructType(base.schema.fields ++ Seq(
-      StructField("detected", StringType),
-      StructField("byte_len", LongType)))
-    val idIdx = base.schema.fieldIndex("doc_id")
-    val rdd = base.rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(idIdx)
-        val payload = (id % 4) match {
-          case 0 =>
-            val px = Array.tabulate(16)(k => ((id + k) % 256).toByte)
-            graft.sources.PgmCodec.encode(4, 4, 255, px)
-          case 1 =>
-            graft.sources.WarcCodec.encodeRecord(
-              Seq("WARC-Record-ID" -> s"urn:graft:$id"),
-              s"doc $id".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          case 2 =>
-            graft.sources.TarCodec.encodeArchive(Seq(
-              s"d/$id" -> s"doc $id".getBytes(
-                java.nio.charset.StandardCharsets.UTF_8)))
-          case _ =>
-            graft.sources.WavCodec.encode(16000,
-              Array.tabulate(64)(k => ((id * 3 + k) % 512 - 256).toShort))
-        }
-        Row.fromSeq(r.toSeq ++ Seq(sniff(payload), payload.length.toLong))
+  private[operators] def sniffedMedia(base: DataFrame): DataFrame =
+    byDocId(base, StructField("detected", StringType), StructField("byte_len", LongType)) { id =>
+      val payload = (id % 4) match {
+        case 0 =>
+          val px = Array.tabulate(16)(k => ((id + k) % 256).toByte)
+          graft.sources.PgmCodec.encode(4, 4, 255, px)
+        case 1 =>
+          graft.sources.WarcCodec.encodeRecord(
+            Seq("WARC-Record-ID" -> s"urn:graft:$id"),
+            s"doc $id".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        case 2 =>
+          graft.sources.TarCodec.encodeArchive(Seq(
+            s"d/$id" -> s"doc $id".getBytes(
+              java.nio.charset.StandardCharsets.UTF_8)))
+        case _ =>
+          graft.sources.WavCodec.encode(16000,
+            Array.tabulate(64)(k => ((id * 3 + k) % 512 - 256).toShort))
       }
+      Seq(sniff(payload), payload.length.toLong)
     }
-    spark.createDataFrame(rdd, outSchema)
+
+  /** Appends `fields`, computed from each row's `doc_id` by `build`,
+    * to every row of `base` — the media-build direction, partition-
+    * batched, so payloads never touch the driver.
+    */
+  private def byDocId(base: DataFrame, fields: StructField*)(build: Long => Seq[Any]): DataFrame = {
+    val idIdx = base.schema.fieldIndex("doc_id")
+    val rdd = base.rdd.mapPartitions(_.map(r => Row.fromSeq(r.toSeq ++ build(r.getLong(idIdx)))))
+    base.sparkSession.createDataFrame(rdd, StructType(base.schema.fields ++ fields))
   }
+
+  /** Replaces `payload` with the decoded `fields`: one row per item
+    * `decode` yields (none for undecodable bytes — corrupt bytes are
+    * data, not exceptions), carrying the row's `keep` columns (by
+    * default every column but `payload`). Partition-batched, so codec
+    * init is amortized per partition and payloads never pass through
+    * the driver.
+    */
+  private def decodePayload(media: DataFrame, fields: Seq[StructField],
+      keep: Seq[String] = Nil)(decode: Array[Byte] => IterableOnce[Seq[Any]]): DataFrame = {
+    val kept =
+      if (keep.isEmpty) media.schema.fields.toSeq.filterNot(_.name == "payload")
+      else keep.map(media.schema(_))
+    val keepIdx = kept.map(f => media.schema.fieldIndex(f.name))
+    val payloadIdx = media.schema.fieldIndex("payload")
+    val rdd = media.rdd.mapPartitions(_.flatMap { r =>
+      val head = keepIdx.map(r.get)
+      decode(r.getAs[Array[Byte]](payloadIdx)).iterator.map(v => Row.fromSeq(head ++ v))
+    })
+    media.sparkSession.createDataFrame(rdd, StructType(kept ++ fields))
+  }
+
+  /** The closed-form raster of doc `id`: w = 4 + id%5, h = 3 + id%4,
+    * pixel k = (id·31 + k·17) mod 256 — the DuckDB oracles replay it
+    * without touching bytes, so the decode gates check the codec, not
+    * a shared parser.
+    */
+  private def raster(id: Long): (Int, Int, Array[Byte]) = {
+    val w = (4 + id % 5).toInt
+    val h = (3 + id % 4).toInt
+    (w, h, Array.tabulate(w * h)(k => ((id * 31 + k * 17) % 256).toByte))
+  }
+
+  /** mm17's deterministic 16-bit samples of doc `id`. */
+  private def samples(id: Long): Array[Short] =
+    Array.tabulate((400 + (id % 7) * 64).toInt)(k =>
+      (((id * 7 + k.toLong * 13) % 4096) - 2048).toShort)
+
+  /** The per-key pixel census over decoded image features (columns
+    * `n_px`, `sum_px`, `min_px`, `max_px`, each with suffix `sfx`).
+    */
+  private def pixelCensus(feats: DataFrame, keys: Seq[String], sfx: String = ""): DataFrame =
+    feats.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).cast("long").as("n_images"),
+        sum(col(s"n_px$sfx")).cast("long").as(s"total_pixels$sfx"),
+        sum(col(s"sum_px$sfx")).cast("long").as(s"sum_px$sfx"),
+        min(col(s"min_px$sfx")).cast("long").as(s"min_px$sfx"),
+        max(col(s"max_px$sfx")).cast("long").as(s"max_px$sfx"))
+      .withColumn("mean_px_fx", expr(s"(sum_px$sfx * $Fx) div total_pixels$sfx"))
+      .select((keys ++ Seq("n_images", s"total_pixels$sfx", s"sum_px$sfx",
+        s"min_px$sfx", s"max_px$sfx", "mean_px_fx")).map(col): _*)
+      .orderBy(keys.map(col): _*)
 
   /** Magic-byte classifier over the four shipped container formats. */
   private[graft] def sniff(b: Array[Byte]): String = {
@@ -236,8 +317,7 @@ object Multimodal extends Operators {
     // frame sampling / shard-chunk upload. Chunk slicing happens on the
     // binary column (no string round-trip); digests verify the slices.
     "mm03_chunk_digest" -> { (s, d) =>
-      val ascii = Tables.documents(s, d)
-        .filter(length(col("text")) > 0 && col("text").rlike("^[\\x00-\\x7F]*$"))
+      val ascii = asciiDocs(s, d)
       Multimodal.asMedia(ascii)
         .withColumn("n_chunks", ceil(col("byte_len").cast("double") / 64.0).cast("long"))
         .withColumn("ci", explode(sequence(lit(0L), col("n_chunks") - 1)))
@@ -258,8 +338,7 @@ object Multimodal extends Operators {
     // DuckDB can mirror the transform exactly.
     "mm04_resize_stride" -> { (s, d) =>
       val stride = 4
-      val ascii = Tables.documents(s, d)
-        .filter(length(col("text")) > 0 && col("text").rlike("^[\\x00-\\x7F]*$"))
+      val ascii = asciiDocs(s, d)
       ascii
         .withColumn("resized", array_join(
           transform(
@@ -281,8 +360,7 @@ object Multimodal extends Operators {
     // collected (idx, chunk) structs; ASCII corpus keeps byte and
     // char slicing identical so DuckDB mirrors it.
     "mm05_reassemble" -> { (s, d) =>
-      val ascii = Tables.documents(s, d)
-        .filter(length(col("text")) > 0 && col("text").rlike("^[\\x00-\\x7F]*$"))
+      val ascii = asciiDocs(s, d)
       val re = ascii
         .withColumn("n_chunks",
           ceil(length(col("text")).cast("double") / 64.0).cast("long"))
@@ -344,24 +422,8 @@ object Multimodal extends Operators {
     // hash-match, and the only unpartitioned windows run over keys-sized
     // or constant-sized frames.
     "mm07_phash_neardup" -> { (s, d) =>
-      val ascii = Tables.documents(s, d)
-        .filter(length(col("text")) > 0 && col("text").rlike("^[\\x00-\\x7F]*$"))
-      val codes = Dedup.barrier(
-        stripePhash(Multimodal.asMedia(ascii))
-          .select(col("media_id"), col("phash"),
-            posexplode(array((0 until PhashBands).map(b =>
-              shiftright(col("phash"), b * PhashBandBits)
-                .bitwiseAND(PhashBandMask)): _*)))
-          .withColumnRenamed("pos", "band")
-          .withColumnRenamed("col", "bval"))
-      val l = codes.select(col("band"), col("bval"),
-        col("media_id").as("media_a"), col("phash").as("ph_a"))
-      val r = codes.select(col("band"), col("bval"),
-        col("media_id").as("media_b"), col("phash").as("ph_b"))
-      l.join(r, Seq("band", "bval"))
-        .filter(col("media_a") < col("media_b"))
-        .select(col("media_a"), col("media_b"), col("ph_a"), col("ph_b"))
-        .distinct()
+      val ascii = asciiDocs(s, d)
+      phashPairs(Dedup.barrier(phashBands(stripePhash(Multimodal.asMedia(ascii)))))
         .withColumn("hamming", expr("bit_count(ph_a ^ ph_b)").cast("long"))
         .withColumn("is_dup", col("hamming") <= 3)
         .select(col("media_a"), col("media_b"), col("hamming"), col("is_dup"))
@@ -484,8 +546,7 @@ object Multimodal extends Operators {
     // only — 1/SampleEvery of the frame count), digests verify the
     // sampled stream byte-exactly.
     "mm11_frame_sample" -> { (s, d) =>
-      val ascii = Tables.documents(s, d)
-        .filter(length(col("text")) > 0 && col("text").rlike("^[\\x00-\\x7F]*$"))
+      val ascii = asciiDocs(s, d)
       val framed = ascii
         .withColumn("n_frames",
           ceil(length(col("text")) / lit(FrameBytes.toDouble)).cast("long"))
@@ -524,8 +585,7 @@ object Multimodal extends Operators {
     // exact over the corpus) split at an index snapshot cutoff — the
     // window is panel-partitioned, never global.
     "mm12_dedup_cascade" -> { (s, d) =>
-      val ascii = Tables.documents(s, d)
-        .filter(length(col("text")) > 0 && col("text").rlike("^[\\x00-\\x7F]*$"))
+      val ascii = asciiDocs(s, d)
       val media = Multimodal.asMedia(ascii)
       val dig = Dedup.barrier(media
         .withColumn("digest", md5(col("payload")))
@@ -535,22 +595,9 @@ object Multimodal extends Operators {
         .withColumn("exact_dup", col("media_id") =!= col("keep_id"))
       val survivors = tagged.filter(!col("exact_dup"))
         .select(col("media_id"), col("source"))
-      val codes = stripePhash(media)
-        .join(survivors.select(col("media_id")), Seq("media_id"))
-        .select(col("media_id"), col("phash"),
-          posexplode(array((0 until PhashBands).map(b =>
-            shiftright(col("phash"), b * PhashBandBits)
-              .bitwiseAND(PhashBandMask)): _*)))
-        .withColumnRenamed("pos", "band")
-        .withColumnRenamed("col", "bval")
-      val l = codes.select(col("band"), col("bval"),
-        col("media_id").as("media_a"), col("phash").as("ph_a"))
-      val r = codes.select(col("band"), col("bval"),
-        col("media_id").as("media_b"), col("phash").as("ph_b"))
-      val nearRemoved = l.join(r, Seq("band", "bval"))
-        .filter(col("media_a") < col("media_b"))
-        .select(col("media_a"), col("media_b"), col("ph_a"), col("ph_b"))
-        .distinct()
+      val codes = phashBands(stripePhash(media)
+        .join(survivors.select(col("media_id")), Seq("media_id")))
+      val nearRemoved = phashPairs(codes)
         .filter(expr("bit_count(ph_a ^ ph_b)") <= 3)
         .select(col("media_b").as("media_id")).distinct()
         .withColumn("near_dup", lit(1L))
@@ -577,8 +624,7 @@ object Multimodal extends Operators {
     // dropped by the near stage, bytes kept, and the storage ratio —
     // the number that prices the dedup pipeline against the S3 bill.
     "mm13_cascade_bytes" -> { (s, d) =>
-      val ascii = Tables.documents(s, d)
-        .filter(length(col("text")) > 0 && col("text").rlike("^[\\x00-\\x7F]*$"))
+      val ascii = asciiDocs(s, d)
       val media = Multimodal.asMedia(ascii)
       val dig = Dedup.barrier(media
         .withColumn("digest", md5(col("payload")))
@@ -588,22 +634,8 @@ object Multimodal extends Operators {
         .withColumn("exact_dup", col("media_id") =!= col("keep_id"))
       val survivors = tagged.filter(!col("exact_dup"))
         .select(col("media_id"))
-      val codes = stripePhash(media)
-        .join(survivors, Seq("media_id"))
-        .select(col("media_id"), col("phash"),
-          posexplode(array((0 until PhashBands).map(b =>
-            shiftright(col("phash"), b * PhashBandBits)
-              .bitwiseAND(PhashBandMask)): _*)))
-        .withColumnRenamed("pos", "band")
-        .withColumnRenamed("col", "bval")
-      val nearRemoved = codes.select(col("band"), col("bval"),
-          col("media_id").as("media_a"), col("phash").as("ph_a"))
-        .join(codes.select(col("band"), col("bval"),
-          col("media_id").as("media_b"), col("phash").as("ph_b")),
-          Seq("band", "bval"))
-        .filter(col("media_a") < col("media_b"))
-        .select(col("media_a"), col("media_b"), col("ph_a"), col("ph_b"))
-        .distinct()
+      val codes = phashBands(stripePhash(media).join(survivors, Seq("media_id")))
+      val nearRemoved = phashPairs(codes)
         .filter(expr("bit_count(ph_a ^ ph_b)") <= 3)
         .select(col("media_b").as("media_id")).distinct()
         .withColumn("near_dup", lit(1L))
@@ -646,7 +678,7 @@ object Multimodal extends Operators {
       val media = Multimodal.asMedia(Tables.documents(s, d))
         .withColumn("digest",
           md5(concat_ws(" ",
-            slice(split(trim(col("payload").cast("string")), "\\s+"), 1, 4))))
+            slice(TextAnalysis.tokens(col("payload").cast("string")), 1, 4))))
         .select(col("digest"), col("source"), col("byte_len"))
       val bySrc = media.groupBy(col("digest"), col("source"))
         .agg(count(lit(1)).cast("long").as("n_copies"),
@@ -678,17 +710,7 @@ object Multimodal extends Operators {
     // aggregate).
     "mm15_pgm_decode" -> { (s, d) =>
       val base = Tables.documents(s, d).select(col("doc_id"), col("source"))
-      val feats = Multimodal.pgmFeatures(Multimodal.pgmMedia(base))
-      feats.groupBy(col("source"))
-        .agg(count(lit(1)).cast("long").as("n_images"),
-          sum(col("n_px")).cast("long").as("total_pixels"),
-          sum(col("sum_px")).cast("long").as("sum_px"),
-          min(col("min_px")).cast("long").as("min_px"),
-          max(col("max_px")).cast("long").as("max_px"))
-        .withColumn("mean_px_fx", expr(s"(sum_px * $Fx) div total_pixels"))
-        .select(col("source"), col("n_images"), col("total_pixels"),
-          col("sum_px"), col("min_px"), col("max_px"), col("mean_px_fx"))
-        .orderBy(col("source"))
+      pixelCensus(pgmFeatures(pgmMedia(base)), Seq("source"))
     },
 
     // --- mm16: WARC archive build→parse census ---------------------------
@@ -843,17 +865,7 @@ object Multimodal extends Operators {
     // the brief's 100 TB training-data requirement.
     "mm21_png_decode" -> { (s, d) =>
       val base = Tables.documents(s, d).select(col("doc_id"), col("source"))
-      val feats = Multimodal.pngFeatures(Multimodal.pngMedia(base))
-      feats.groupBy(col("source"))
-        .agg(count(lit(1)).cast("long").as("n_images"),
-          sum(col("n_px")).cast("long").as("total_pixels"),
-          sum(col("sum_px")).cast("long").as("sum_px"),
-          min(col("min_px")).cast("long").as("min_px"),
-          max(col("max_px")).cast("long").as("max_px"))
-        .withColumn("mean_px_fx", expr(s"(sum_px * $Fx) div total_pixels"))
-        .select(col("source"), col("n_images"), col("total_pixels"),
-          col("sum_px"), col("min_px"), col("max_px"), col("mean_px_fx"))
-        .orderBy(col("source"))
+      pixelCensus(pngFeatures(pngMedia(base)), Seq("source"))
     },
 
     // --- mm22: REAL image resize through the compressed container ---------
@@ -864,19 +876,7 @@ object Multimodal extends Operators {
     // form (pixels at even (x, y): k = (2·row)·w + 2·col).
     "mm22_png_resize" -> { (s, d) =>
       val base = Tables.documents(s, d).select(col("doc_id"), col("source"))
-      val feats = Multimodal.pngResizeFeatures(Multimodal.pngMedia(base))
-      feats.groupBy(col("source"))
-        .agg(count(lit(1)).cast("long").as("n_images"),
-          sum(col("n_px_out")).cast("long").as("total_pixels_out"),
-          sum(col("sum_px_out")).cast("long").as("sum_px_out"),
-          min(col("min_px_out")).cast("long").as("min_px_out"),
-          max(col("max_px_out")).cast("long").as("max_px_out"))
-        .withColumn("mean_px_fx",
-          expr(s"(sum_px_out * $Fx) div total_pixels_out"))
-        .select(col("source"), col("n_images"), col("total_pixels_out"),
-          col("sum_px_out"), col("min_px_out"), col("max_px_out"),
-          col("mean_px_fx"))
-        .orderBy(col("source"))
+      pixelCensus(pngResizeFeatures(pngMedia(base)), Seq("source"), "_out")
     },
 
     // --- mm23: color-PNG decode to pinned BT.601 luminance ------------
@@ -893,18 +893,7 @@ object Multimodal extends Operators {
     // (similarity-search hub diagnostics, multimodal decode).
     "mm23_png_color" -> { (s, d) =>
       val base = Tables.documents(s, d).select(col("doc_id"), col("source"))
-      val feats = Multimodal.pngFeatures(Multimodal.pngColorMedia(base))
-      feats.groupBy(col("source"), col("bands"))
-        .agg(count(lit(1)).cast("long").as("n_images"),
-          sum(col("n_px")).cast("long").as("total_pixels"),
-          sum(col("sum_px")).cast("long").as("sum_px"),
-          min(col("min_px")).cast("long").as("min_px"),
-          max(col("max_px")).cast("long").as("max_px"))
-        .withColumn("mean_px_fx", expr("(sum_px * 1000000) div total_pixels"))
-        .select(col("source"), col("bands"), col("n_images"),
-          col("total_pixels"), col("sum_px"), col("min_px"), col("max_px"),
-          col("mean_px_fx"))
-        .orderBy(col("source"), col("bands"))
+      pixelCensus(pngFeatures(pngColorMedia(base)), Seq("source", "bands"))
     }
   )
 
@@ -917,8 +906,7 @@ object Multimodal extends Operators {
     // byte features only align with the oracle's char functions on
     // non-empty ASCII text — restrict BOTH sides identically so the
     // comparison stays meaningful for any future data
-    val ascii = Tables.documents(s, d)
-      .filter(length(col("text")) > 0 && col("text").rlike("^[\\x00-\\x7F]*$"))
+    val ascii = asciiDocs(s, d)
     fakeDecode(asMedia(ascii))
       .select(col("media_id"), col("feat_n_bytes"), col("feat_first"), col("feat_last"))
       .orderBy(col("media_id"))
@@ -929,22 +917,11 @@ object Multimodal extends Operators {
     * a closed form the DuckDB oracle reproduces WITHOUT touching
     * bytes, so the decode gate checks the codec, not a shared parser.
     */
-  def pgmMedia(base: DataFrame): DataFrame = {
-    val spark = base.sparkSession
-    val outSchema = StructType(base.schema.fields ++ Seq(
-      StructField("payload", BinaryType)))
-    val idIdx = base.schema.fieldIndex("doc_id")
-    val rdd = base.rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(idIdx)
-        val w = (4 + id % 5).toInt
-        val h = (3 + id % 4).toInt
-        val px = Array.tabulate(w * h)(k => ((id * 31 + k * 17) % 256).toByte)
-        Row.fromSeq(r.toSeq :+ graft.sources.PgmCodec.encode(w, h, 255, px))
-      }
+  def pgmMedia(base: DataFrame): DataFrame =
+    byDocId(base, StructField("payload", BinaryType)) { id =>
+      val (w, h, px) = raster(id)
+      Seq(graft.sources.PgmCodec.encode(w, h, 255, px))
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** REAL decode via [[graft.sources.PgmCodec]] — partition-batched
     * like [[fakeDecode]] (codec "init" is the object load, amortized
@@ -952,32 +929,25 @@ object Multimodal extends Operators {
     * feature row (the 100 TB media-scan posture: corrupt bytes are
     * data, not exceptions).
     */
-  def pgmFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val keep = media.schema.fields.filterNot(_.name == "payload")
-    val outSchema = StructType(keep ++ Seq(
-      StructField("w", LongType), StructField("h", LongType),
-      StructField("n_px", LongType), StructField("sum_px", LongType),
-      StructField("min_px", LongType), StructField("max_px", LongType)))
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val keepIdx = keep.map(f => media.schema.fieldIndex(f.name))
-    val rdd = media.rdd.mapPartitions { it =>
-      it.flatMap { r =>
-        graft.sources.PgmCodec.decode(r.getAs[Array[Byte]](payloadIdx)).map { img =>
-          var s = 0L; var mn = 255L; var mx = 0L
-          var k = 0
-          while (k < img.pixels.length) {
-            val v = img.pixel(k).toLong
-            s += v; if (v < mn) mn = v; if (v > mx) mx = v
-            k += 1
-          }
-          Row.fromSeq(keepIdx.map(r.get).toSeq ++ Seq[Any](
-            img.width.toLong, img.height.toLong, img.pixels.length.toLong,
-            s, mn, mx))
-        }
+  def pgmFeatures(media: DataFrame): DataFrame =
+    decodePayload(media, longFields("w", "h", "n_px", "sum_px", "min_px", "max_px")) { bytes =>
+      graft.sources.PgmCodec.decode(bytes).map { img =>
+        Seq[Any](img.width.toLong, img.height.toLong) ++ pixelStats(img.pixels.length, img.pixel)
       }
     }
-    spark.createDataFrame(rdd, outSchema)
+
+  private def longFields(names: String*): Seq[StructField] = names.map(StructField(_, LongType))
+
+  /** (n_px, sum_px, min_px, max_px) of an `n`-pixel 8-bit raster. */
+  private def pixelStats(n: Int, pixel: Int => Int): Seq[Any] = {
+    var s = 0L; var mn = 255L; var mx = 0L
+    var k = 0
+    while (k < n) {
+      val v = pixel(k).toLong
+      s += v; if (v < mn) mn = v; if (v > mx) mx = v
+      k += 1
+    }
+    Seq(n.toLong, s, mn, mx)
   }
 
   /** mm15's closed-form raster, through a real COMPRESSED container:
@@ -988,22 +958,11 @@ object Multimodal extends Operators {
     * are compressed, variable-length container bytes — the codec
     * swap-in the object scaladoc promises, executed in-sandbox.
     */
-  def pngMedia(base: DataFrame): DataFrame = {
-    val spark = base.sparkSession
-    val outSchema = StructType(base.schema.fields ++ Seq(
-      StructField("payload", BinaryType)))
-    val idIdx = base.schema.fieldIndex("doc_id")
-    val rdd = base.rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(idIdx)
-        val w = (4 + id % 5).toInt
-        val h = (3 + id % 4).toInt
-        val px = Array.tabulate(w * h)(k => ((id * 31 + k * 17) % 256).toByte)
-        Row.fromSeq(r.toSeq :+ graft.sources.PngCodec.encode(w, h, px))
-      }
+  def pngMedia(base: DataFrame): DataFrame =
+    byDocId(base, StructField("payload", BinaryType)) { id =>
+      val (w, h, px) = raster(id)
+      Seq(graft.sources.PngCodec.encode(w, h, px))
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** REAL compressed decode via [[graft.sources.PngCodec]] —
     * partition-batched like [[pgmFeatures]]; undecodable payloads
@@ -1011,35 +970,15 @@ object Multimodal extends Operators {
     * (compression-dependent, so it feeds specs, not the oracle);
     * `bands` is the source layout (1 = gray, 3 = RGB→BT.601 luma).
     */
-  def pngFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val keep = media.schema.fields.filterNot(_.name == "payload")
-    val outSchema = StructType(keep ++ Seq(
-      StructField("w", LongType), StructField("h", LongType),
-      StructField("n_px", LongType), StructField("sum_px", LongType),
-      StructField("min_px", LongType), StructField("max_px", LongType),
-      StructField("png_bytes", LongType), StructField("bands", LongType)))
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val keepIdx = keep.map(f => media.schema.fieldIndex(f.name))
-    val rdd = media.rdd.mapPartitions { it =>
-      it.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](payloadIdx)
-        graft.sources.PngCodec.decode(bytes).map { img =>
-          var s = 0L; var mn = 255L; var mx = 0L
-          var k = 0
-          while (k < img.pixels.length) {
-            val v = img.pixel(k).toLong
-            s += v; if (v < mn) mn = v; if (v > mx) mx = v
-            k += 1
-          }
-          Row.fromSeq(keepIdx.map(r.get).toSeq ++ Seq[Any](
-            img.width.toLong, img.height.toLong, img.pixels.length.toLong,
-            s, mn, mx, bytes.length.toLong, img.bands.toLong))
-        }
+  def pngFeatures(media: DataFrame): DataFrame =
+    decodePayload(media, longFields("w", "h", "n_px", "sum_px", "min_px", "max_px",
+        "png_bytes", "bands")) { bytes =>
+      graft.sources.PngCodec.decode(bytes).map { img =>
+        Seq[Any](img.width.toLong, img.height.toLong) ++
+          pixelStats(img.pixels.length, img.pixel) ++
+          Seq(bytes.length.toLong, img.bands.toLong)
       }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Mixed gray/color PNG corpus (mm23's build direction): even
     * doc_ids keep [[pngMedia]]'s grayscale closed form; odd doc_ids
@@ -1048,31 +987,16 @@ object Multimodal extends Operators {
     * b = (id·13 + k·29) % 256 — so the decoded BT.601 luminance is a
     * byte-free integer form the DuckDB oracle replays exactly.
     */
-  def pngColorMedia(base: DataFrame): DataFrame = {
-    val spark = base.sparkSession
-    val outSchema = StructType(base.schema.fields ++ Seq(
-      StructField("payload", BinaryType)))
-    val idIdx = base.schema.fieldIndex("doc_id")
-    val rdd = base.rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(idIdx)
-        val w = (4 + id % 5).toInt
-        val h = (3 + id % 4).toInt
-        val bytes =
-          if (id % 2 == 0) {
-            val px = Array.tabulate(w * h)(k => ((id * 31 + k * 17) % 256).toByte)
-            graft.sources.PngCodec.encode(w, h, px)
-          } else {
-            val rr = Array.tabulate(w * h)(k => ((id * 31 + k * 17) % 256).toByte)
-            val gg = Array.tabulate(w * h)(k => ((id * 59 + k * 23) % 256).toByte)
-            val bb = Array.tabulate(w * h)(k => ((id * 13 + k * 29) % 256).toByte)
-            graft.sources.PngCodec.encodeRgb(w, h, rr, gg, bb)
-          }
-        Row.fromSeq(r.toSeq :+ bytes)
+  def pngColorMedia(base: DataFrame): DataFrame =
+    byDocId(base, StructField("payload", BinaryType)) { id =>
+      val (w, h, px) = raster(id)
+      if (id % 2 == 0) Seq(graft.sources.PngCodec.encode(w, h, px))
+      else {
+        val gg = Array.tabulate(w * h)(k => ((id * 59 + k * 23) % 256).toByte)
+        val bb = Array.tabulate(w * h)(k => ((id * 13 + k * 29) % 256).toByte)
+        Seq(graft.sources.PngCodec.encodeRgb(w, h, px, gg, bb))
       }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** REAL image resize through the compressed container (mm22):
     * decode PNG → stride-2 downsample (keep pixels at even (x, y);
@@ -1084,49 +1008,29 @@ object Multimodal extends Operators {
     * leave the partition). mm04's byte-stride stub is superseded for
     * PNG by this real-codec path.
     */
-  def pngResizeFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val keep = media.schema.fields.filterNot(_.name == "payload")
-    val outSchema = StructType(keep ++ Seq(
-      StructField("w_out", LongType), StructField("h_out", LongType),
-      StructField("n_px_out", LongType), StructField("sum_px_out", LongType),
-      StructField("min_px_out", LongType), StructField("max_px_out", LongType),
-      StructField("png_bytes_out", LongType)))
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val keepIdx = keep.map(f => media.schema.fieldIndex(f.name))
-    val rdd = media.rdd.mapPartitions { it =>
-      it.flatMap { r =>
-        graft.sources.PngCodec.decode(r.getAs[Array[Byte]](payloadIdx)).flatMap { img =>
-          val w2 = (img.width + 1) / 2
-          val h2 = (img.height + 1) / 2
-          val out = new Array[Byte](w2 * h2)
-          var y = 0
-          while (y < h2) {
-            var x = 0
-            while (x < w2) {
-              out(y * w2 + x) = img.pixels((2 * y) * img.width + 2 * x)
-              x += 1
-            }
-            y += 1
+  def pngResizeFeatures(media: DataFrame): DataFrame =
+    decodePayload(media, longFields("w_out", "h_out", "n_px_out", "sum_px_out",
+        "min_px_out", "max_px_out", "png_bytes_out")) { bytes =>
+      graft.sources.PngCodec.decode(bytes).flatMap { img =>
+        val w2 = (img.width + 1) / 2
+        val h2 = (img.height + 1) / 2
+        val out = new Array[Byte](w2 * h2)
+        var y = 0
+        while (y < h2) {
+          var x = 0
+          while (x < w2) {
+            out(y * w2 + x) = img.pixels((2 * y) * img.width + 2 * x)
+            x += 1
           }
-          val reenc = graft.sources.PngCodec.encode(w2, h2, out)
-          graft.sources.PngCodec.decode(reenc).map { back =>
-            var s = 0L; var mn = 255L; var mx = 0L
-            var k = 0
-            while (k < back.pixels.length) {
-              val v = back.pixel(k).toLong
-              s += v; if (v < mn) mn = v; if (v > mx) mx = v
-              k += 1
-            }
-            Row.fromSeq(keepIdx.map(r.get).toSeq ++ Seq[Any](
-              back.width.toLong, back.height.toLong,
-              back.pixels.length.toLong, s, mn, mx, reenc.length.toLong))
-          }
+          y += 1
+        }
+        val reenc = graft.sources.PngCodec.encode(w2, h2, out)
+        graft.sources.PngCodec.decode(reenc).map { back =>
+          Seq[Any](back.width.toLong, back.height.toLong) ++
+            pixelStats(back.pixels.length, back.pixel) :+ reenc.length.toLong
         }
       }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Docs → WARC archive members (the build direction for mm16): one
     * archive per (source, doc_id div 16) group — ≤16 records, ordered
@@ -1135,8 +1039,23 @@ object Multimodal extends Operators {
     * ONCE (the archive groupBy); assembly is partition-batched and
     * nothing passes through the driver.
     */
-  def warcMedia(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
+  def warcMedia(docs: DataFrame): DataFrame =
+    archiveMedia(docs) { recs =>
+      graft.sources.WarcCodec.encodeArchive(recs.map { case (id, body) =>
+        val headers = Seq(
+          "WARC-Type" -> "response",
+          "WARC-Record-ID" -> s"urn:graft:$id",
+          "WARC-Date" -> "2026-01-01T00:00:00Z")
+        (headers, body)
+      })
+    }
+
+  /** Docs → one archive member per (source, doc_id div 16) group: the
+    * group's (doc_id, UTF-8 text) pairs in doc_id order, packed by
+    * `encode`. Bodies shuffle ONCE (the archive groupBy); assembly is
+    * partition-batched and nothing passes through the driver.
+    */
+  private def archiveMedia(docs: DataFrame)(encode: Seq[(Long, Array[Byte])] => Array[Byte]): DataFrame = {
     val grouped = docs
       .select(col("source"), expr("doc_id div 16").as("bucket"),
         struct(col("doc_id"), col("text")).as("rec"))
@@ -1145,21 +1064,12 @@ object Multimodal extends Operators {
     val outSchema = StructType(Seq(
       StructField("source", StringType), StructField("bucket", LongType),
       StructField("payload", BinaryType)))
-    val rdd = grouped.rdd.mapPartitions { it =>
-      it.map { r =>
-        val recs = r.getAs[scala.collection.Seq[Row]]("recs").map { rec =>
-          val id = rec.getLong(0)
-          val headers = Seq(
-            "WARC-Type" -> "response",
-            "WARC-Record-ID" -> s"urn:graft:$id",
-            "WARC-Date" -> "2026-01-01T00:00:00Z")
-          (headers, rec.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        }
-        Row(r.getAs[String]("source"), r.getAs[Long]("bucket"),
-          graft.sources.WarcCodec.encodeArchive(recs.toSeq))
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
+    val rdd = grouped.rdd.mapPartitions(_.map { r =>
+      val recs = r.getAs[scala.collection.Seq[Row]]("recs").map(rec =>
+        (rec.getLong(0), rec.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      Row(r.getAs[String]("source"), r.getAs[Long]("bucket"), encode(recs.toSeq))
+    })
+    docs.sparkSession.createDataFrame(rdd, outSchema)
   }
 
   /** Archive members → one row per parsed WARC record (the read
@@ -1168,58 +1078,25 @@ object Multimodal extends Operators {
     * census hashes. Unparseable archives yield no rows (corrupt
     * bytes are data, not exceptions — PgmCodec's posture).
     */
-  def warcRecords(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("source", StringType),
-      StructField("record_id", StringType),
-      StructField("declared_len", LongType),
-      StructField("body_len", LongType)))
-    val srcIdx = media.schema.fieldIndex("source")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val rdd = media.rdd.mapPartitions { it =>
-      it.flatMap { r =>
-        val src = r.getString(srcIdx)
-        graft.sources.WarcCodec.decode(r.getAs[Array[Byte]](payloadIdx))
-          .toSeq.flatten.map { rec =>
-            Row(src,
-              rec.header("WARC-Record-ID").getOrElse(""),
-              rec.header("Content-Length").flatMap(_.toLongOption).getOrElse(-1L),
-              rec.body.length.toLong)
-          }
+  def warcRecords(media: DataFrame): DataFrame =
+    decodePayload(media, Seq(StructField("record_id", StringType)) ++
+        longFields("declared_len", "body_len"), keep = Seq("source")) { bytes =>
+      graft.sources.WarcCodec.decode(bytes).toSeq.flatten.map { rec =>
+        Seq(rec.header("WARC-Record-ID").getOrElse(""),
+          rec.header("Content-Length").flatMap(_.toLongOption).getOrElse(-1L),
+          rec.body.length.toLong)
       }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Docs → TAR (ustar) shard members, WebDataset-style: 16 docs per
     * shard keyed (source, doc_id div 16), entry names
     * `docs/<doc_id>.txt`. Same shape as [[warcMedia]]; bytes built by
     * the REAL [[graft.sources.TarCodec]].
     */
-  def tarMedia(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val grouped = docs
-      .select(col("source"), expr("doc_id div 16").as("bucket"),
-        struct(col("doc_id"), col("text")).as("rec"))
-      .groupBy(col("source"), col("bucket"))
-      .agg(sort_array(collect_list(col("rec"))).as("recs"))
-    val outSchema = StructType(Seq(
-      StructField("source", StringType), StructField("bucket", LongType),
-      StructField("payload", BinaryType)))
-    val rdd = grouped.rdd.mapPartitions { it =>
-      it.map { r =>
-        val entries = r.getAs[scala.collection.Seq[Row]]("recs").map { rec =>
-          val id = rec.getLong(0)
-          (s"docs/$id.txt",
-            rec.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        }
-        Row(r.getAs[String]("source"), r.getAs[Long]("bucket"),
-          graft.sources.TarCodec.encodeArchive(entries.toSeq))
-      }
+  def tarMedia(docs: DataFrame): DataFrame =
+    archiveMedia(docs) { recs =>
+      graft.sources.TarCodec.encodeArchive(recs.map { case (id, body) => (s"docs/$id.txt", body) })
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Shard members → one row per parsed TAR entry (the read
     * direction): entry name, body byte count, and the shard's total
@@ -1227,139 +1104,68 @@ object Multimodal extends Operators {
     * per entry row via shard_bytes/entry accounting columns).
     * Unparseable shards yield no rows (corrupt posture).
     */
-  def tarEntries(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("source", StringType),
-      StructField("bucket", LongType),
-      StructField("entry_name", StringType),
-      StructField("body_len", LongType),
-      StructField("shard_bytes", LongType),
-      StructField("n_shard_entries", LongType)))
-    val srcIdx = media.schema.fieldIndex("source")
-    val bucketIdx = media.schema.fieldIndex("bucket")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val rdd = media.rdd.mapPartitions { it =>
-      it.flatMap { r =>
-        val payload = r.getAs[Array[Byte]](payloadIdx)
-        graft.sources.TarCodec.decode(payload).toSeq.flatMap { entries =>
-          entries.map { e =>
-            Row(r.getString(srcIdx), r.getLong(bucketIdx), e.name,
-              e.body.length.toLong, payload.length.toLong,
-              entries.length.toLong)
-          }
-        }
+  def tarEntries(media: DataFrame): DataFrame =
+    decodePayload(media, Seq(StructField("entry_name", StringType)) ++
+        longFields("body_len", "shard_bytes", "n_shard_entries")) { payload =>
+      graft.sources.TarCodec.decode(payload).toSeq.flatMap { entries =>
+        entries.map(e => Seq(e.name, e.body.length.toLong, payload.length.toLong,
+          entries.length.toLong))
       }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Docs → raw-PCM clips (mm17's build direction): deterministic
     * 16-bit samples synthesized from doc_id (the closed form the
     * oracle recomputes without bytes), packed through the REAL
     * [[graft.sources.PcmCodec]] byte layout.
     */
-  def pcmMedia(base: DataFrame): DataFrame = {
-    val spark = base.sparkSession
-    val outSchema = StructType(base.schema.fields :+
-      StructField("payload", BinaryType))
-    val idIdx = base.schema.fieldIndex("doc_id")
-    val rdd = base.rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(idIdx)
-        val n = (400 + (id % 7) * 64).toInt
-        val samples = Array.tabulate(n)(k =>
-          (((id * 7 + k.toLong * 13) % 4096) - 2048).toShort)
-        Row.fromSeq(r.toSeq :+ graft.sources.PcmCodec.encode(samples))
-      }
+  def pcmMedia(base: DataFrame): DataFrame =
+    byDocId(base, StructField("payload", BinaryType)) { id =>
+      Seq(graft.sources.PcmCodec.encode(samples(id)))
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Docs → WAV clips: mm17's deterministic synthesized samples, but
     * through the REAL RIFF/WAVE container ([[graft.sources.WavCodec]],
     * canonical 44-byte PCM16 mono header) instead of raw PCM bytes.
     */
-  def wavMedia(base: DataFrame, sampleRate: Int): DataFrame = {
-    val spark = base.sparkSession
-    val outSchema = StructType(base.schema.fields :+
-      StructField("payload", BinaryType))
-    val idIdx = base.schema.fieldIndex("doc_id")
-    val rdd = base.rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(idIdx)
-        val n = (400 + (id % 7) * 64).toInt
-        val samples = Array.tabulate(n)(k =>
-          (((id * 7 + k.toLong * 13) % 4096) - 2048).toShort)
-        Row.fromSeq(r.toSeq :+ graft.sources.WavCodec.encode(sampleRate, samples))
-      }
+  def wavMedia(base: DataFrame, sampleRate: Int): DataFrame =
+    byDocId(base, StructField("payload", BinaryType)) { id =>
+      Seq(graft.sources.WavCodec.encode(sampleRate, samples(id)))
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** WAV payloads → one row per parsed clip: declared sample rate,
     * sample count, container byte size. Undecodable payloads yield no
     * row (corrupt posture).
     */
-  def wavClips(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val keep = media.schema.fields.filterNot(_.name == "payload")
-    val outSchema = StructType(keep ++ Seq(
-      StructField("sample_rate", LongType),
-      StructField("n_samples", LongType),
-      StructField("container_bytes", LongType)))
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val keepIdx = keep.map(f => media.schema.fieldIndex(f.name))
-    val rdd = media.rdd.mapPartitions { it =>
-      it.flatMap { r =>
-        val payload = r.getAs[Array[Byte]](payloadIdx)
-        graft.sources.WavCodec.decode(payload).map { case (rate, samples) =>
-          Row.fromSeq(keepIdx.map(r.get).toSeq ++ Seq(
-            rate.toLong, samples.length.toLong, payload.length.toLong))
-        }
+  def wavClips(media: DataFrame): DataFrame =
+    decodePayload(media, longFields("sample_rate", "n_samples", "container_bytes")) { payload =>
+      graft.sources.WavCodec.decode(payload).map { case (rate, samples) =>
+        Seq(rate.toLong, samples.length.toLong, payload.length.toLong)
       }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** REAL PCM decode + frame segmentation (win samples per frame, hop
     * stride): per clip, frame count, frames whose mean |amplitude|
     * clears `gate`, and the loudest frame's mean. Partition-batched
     * like [[pgmFeatures]]; undecodable payloads yield no row.
     */
-  def pcmFrames(media: DataFrame, win: Int, hop: Int, gate: Long): DataFrame = {
-    val spark = media.sparkSession
-    val keep = media.schema.fields.filterNot(_.name == "payload")
-    val outSchema = StructType(keep ++ Seq(
-      StructField("n_samples", LongType), StructField("n_frames", LongType),
-      StructField("active_frames", LongType),
-      StructField("max_frame_mean", LongType)))
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val keepIdx = keep.map(f => media.schema.fieldIndex(f.name))
-    val rdd = media.rdd.mapPartitions { it =>
-      it.flatMap { r =>
-        graft.sources.PcmCodec.decode(r.getAs[Array[Byte]](payloadIdx)).flatMap { s =>
-          if (s.length < win) None
-          else {
-            val nf = (s.length - win) / hop + 1
-            var active = 0L; var maxMean = 0L
-            var f = 0
-            while (f < nf) {
-              var sum = 0L; var j = 0
-              while (j < win) { sum += math.abs(s(f * hop + j).toLong); j += 1 }
-              val mean = sum / win
-              if (mean >= gate) active += 1
-              if (mean > maxMean) maxMean = mean
-              f += 1
-            }
-            Some(Row.fromSeq(keepIdx.map(r.get).toSeq ++ Seq[Any](
-              s.length.toLong, nf.toLong, active, maxMean)))
-          }
+  def pcmFrames(media: DataFrame, win: Int, hop: Int, gate: Long): DataFrame =
+    decodePayload(media, longFields("n_samples", "n_frames", "active_frames",
+        "max_frame_mean")) { bytes =>
+      graft.sources.PcmCodec.decode(bytes).filter(_.length >= win).map { s =>
+        val nf = (s.length - win) / hop + 1
+        var active = 0L; var maxMean = 0L
+        var f = 0
+        while (f < nf) {
+          var sum = 0L; var j = 0
+          while (j < win) { sum += math.abs(s(f * hop + j).toLong); j += 1 }
+          val mean = sum / win
+          if (mean >= gate) active += 1
+          if (mean > maxMean) maxMean = mean
+          f += 1
         }
+        Seq[Any](s.length.toLong, nf.toLong, active, maxMean)
       }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   def oracles: Map[String, String] = Map(
     "mm01_binary_meta" ->

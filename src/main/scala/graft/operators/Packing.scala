@@ -453,7 +453,7 @@ object Packing extends Operators {
       val docs = Tables.documents(s, d)
         .withColumn("shard", pmod(Hashing.hash64(
           col("doc_id").cast("string")), lit(ManifestShards)))
-        .withColumn("n_toks", size(split(trim(col("text")), "\\s+")).cast("long"))
+        .withColumn("n_toks", size(TextAnalysis.tokens(col("text"))).cast("long"))
       val total = docs.agg(count(lit(1)).as("n_total"))
       docs.groupBy(col("shard"))
         .agg(count(lit(1)).as("n_docs"),
@@ -709,7 +709,7 @@ object Packing extends Operators {
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val docs = Tables.documents(s, d)
         .select(col("lang"), col("doc_id"),
-          size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
+          size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
         .withColumn("cum", sum(col("n_tokens")).over(w))
         .withColumn("pack_id",
           floor((col("cum") - col("n_tokens")) / lit(PackBudget)).cast("long"))
@@ -912,7 +912,7 @@ object Packing extends Operators {
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val docs = Tables.documents(s, d)
         .select(col("lang"), col("source"), col("doc_id"),
-          size(split(trim(col("text")), "\\s+")).cast("long").as("ntok"))
+          size(TextAnalysis.tokens(col("text"))).cast("long").as("ntok"))
         .filter(col("ntok") > 0)
         .withColumn("p_end", sum(col("ntok")).over(w).cast("long"))
         .withColumn("p_start", col("p_end") - col("ntok"))
@@ -1015,7 +1015,7 @@ object Packing extends Operators {
     // whitespace-split; state is the bounded (L, prefix) census.
     "pk23_prefix_cache_yield" -> { (s, d) =>
       val base = Dedup.barrier(Tables.documents(s, d)
-        .withColumn("toks", split(trim(col("text")), "\\s+"))
+        .withColumn("toks", TextAnalysis.tokens(col("text")))
         .select(col("doc_id"), size(col("toks")).cast("long").as("ntok"),
           col("toks")))
       val tot = base.agg(sum(col("ntok")).cast("long").as("corpus_tokens"))
@@ -1058,7 +1058,7 @@ object Packing extends Operators {
     "pk24_budget_waterfill" -> { (s, d) =>
       val tok = Tables.documents(s, d)
         .select(col("source"),
-          explode(split(trim(col("text")), "\\s+")).as("tok"))
+          explode(TextAnalysis.tokens(col("text"))).as("tok"))
       val bySrc = tok.groupBy(col("source"))
         .agg(count(lit(1)).cast("long").as("src_tokens"),
           countDistinct(col("tok")).cast("long").as("distinct_toks"))

@@ -35,10 +35,134 @@ object Similarity extends Operators {
       when(element_at(emb, i + 1) > 0.0, lit(1L << i)).otherwise(lit(0L)))
       .reduce(_ + _)
 
-  private def withNorm(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("emb"))
-      .withColumn("norm", l2norm(col("emb")))
+  /** The embeddings table as (vec_id, [label,] emb: array<double>
+    * [, norm]) — the load every ss query (and dd's embedding dedup)
+    * starts from.
+    */
+  def vectors(s: SparkSession, d: String, label: Boolean = true, norm: Boolean = true): DataFrame = {
+    val e = Tables.embeddings(s, d).select(Seq(col("vec_id")) ++
+      (if (label) Seq(col("label")) else Nil) :+
+      col("embedding").cast("array<double>").as("emb"): _*)
+    if (norm) e.withColumn("norm", l2norm(col("emb"))) else e
+  }
+
+  /** Cosine of array columns `a`, `b` given their norms, truncated to
+    * 4 decimals (Det.trunc4 — the oracle's floor-based twin). */
+  def cos4(a: String, b: String, na: String, nb: String): Column =
+    Det.trunc4(dot(col(a), col(b)) / (col(na) * col(nb)))
+
+  /** The same cosine as a floored Fx4 fixed-point long. */
+  def cosFx(a: String, b: String, na: String, nb: String): Column =
+    floor(dot(col(a), col(b)) / (col(na) * col(nb)) * Fx4).cast("long")
+
+  /** Row vec_id 0 of a (vec_id, emb, norm, …) frame as THE query
+    * (q_emb, q_norm, and q_<c> for each of `extra`). */
+  private def query0(e: DataFrame, extra: String*): DataFrame =
+    e.filter(col("vec_id") === 0).select(Seq(col("emb").as("q_emb"), col("norm").as("q_norm")) ++
+      extra.map(c => col(c).as(s"q_$c")): _*)
+
+  /** Rows of a (vec_id, emb, norm) frame as panel queries
+    * (q_id, q_emb, q_norm). */
+  private def asPanel(e: DataFrame): DataFrame =
+    e.select(col("vec_id").as("q_id"), col("emb").as("q_emb"), col("norm").as("q_norm"))
+
+  /** Every corpus row against every panel query but itself, scored
+    * as the fixed-point cosine `fx`. */
+  private def panelCos(corpus: DataFrame, panel: DataFrame, fx: String = "cos_fx"): DataFrame =
+    corpus.crossJoin(broadcast(panel))
+      .filter(col("vec_id") =!= col("q_id"))
+      .withColumn(fx, cosFx("emb", "q_emb", "norm", "q_norm"))
+
+  /** Each query's top `k` rows by `fx` (ties → lower vec_id), ranked
+    * as `rk`. */
+  private def topPerQuery(scored: DataFrame, fx: String, rk: String, k: Int): DataFrame =
+    scored.withColumn(rk, row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col(fx).desc, col("vec_id"))))
+      .filter(col(rk) <= k)
+
+  /** Per-`keys` centroid `name`: the decimal-exact per-dimension mean
+    * of the `emb` arrays (order-independent, so the oracle's mean is
+    * bit-identical). */
+  private def centroids(e: DataFrame, keys: Seq[String], name: String = "cent"): DataFrame =
+    e.select(keys.map(col) :+ posexplode(col("emb")): _*)
+      .groupBy(keys.map(col) :+ col("pos"): _*)
+      .agg((sum(col("col").cast("decimal(27,10)")).cast("double") /
+        count(lit(1))).as("c"))
+      .groupBy(keys.map(col): _*)
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
+        x => x.getField("c")).as(name))
+
+  /** Product-quantizer code assignment of the array column `v`: PqM
+    * sub-vectors of PqSubDim dims, codebook = the first PqK vectors'
+    * sub-vectors, each sub-vector → nearest code by floored squared
+    * distance (ties → lowest code). Rows: vec_id, m, sub, code, csub.
+    */
+  private def pqAssign(e: DataFrame, v: String): DataFrame = {
+    val subs = e
+      .select(col("vec_id"), col(v), explode(sequence(lit(0), lit(PqM - 1))).as("m"))
+      .withColumn("sub", slice(col(v), col("m") * PqSubDim + 1, lit(PqSubDim)))
+      .select(col("vec_id"), col("m"), col("sub"))
+    val cb = subs.filter(col("vec_id") < PqK)
+      .select(col("m"), col("vec_id").cast("int").as("code"), col("sub").as("csub"))
+    val byVm = Window.partitionBy(col("vec_id"), col("m"))
+      .orderBy(col("d2t"), col("code"))
+    subs.join(broadcast(cb), Seq("m"))
+      .withColumn("d2t", floor(
+        aggregate(zip_with(col("sub"), col("csub"), (x, y) => (x - y) * (x - y)),
+          lit(0.0), (acc, z) => acc + z) * lit(MixFx)).cast("long"))
+      .withColumn("rn", row_number().over(byVm))
+      .filter(col("rn") === 1)
+  }
+
+  /** The assigned codes' centroid sub-vectors re-assembled in
+    * subspace order, per vec_id, as `name`. */
+  private def pqDecode(assigned: DataFrame, name: String): DataFrame =
+    assigned.groupBy(col("vec_id"))
+      .agg(flatten(transform(
+        array_sort(collect_list(struct(col("m"), col("csub")))),
+        x => x.getField("csub"))).as(name))
+
+  /** What a quantizer loses, per `key`: mean original↔`recon` cosine
+    * (floored 1e-4 per vector) and the worst per-component error over
+    * the components 0..`last`. */
+  private def reconCensus(e: DataFrame, last: Column, key: String): DataFrame =
+    e.withColumn("cos", dot(col("emb"), col("recon")) /
+        (l2norm(col("emb")) * l2norm(col("recon"))))
+      .withColumn("cos_i4", floor(col("cos") * lit(10000)).cast("long"))
+      .withColumn("max_err", array_max(transform(
+        sequence(lit(0), last),
+        i => abs(element_at(col("emb"), i + 1) - element_at(col("recon"), i + 1)))))
+      .groupBy(col(key))
+      .agg(count(lit(1)).as("n_vecs"),
+        Det.trunc4(sum(col("cos_i4")).cast("double") /
+          (count(lit(1)) * lit(10000.0))).as("avg_recon_cos"),
+        Det.trunc4(max(col("max_err"))).as("max_abs_err"))
+      .orderBy(col(key))
+
+  /** The per-dimension [min, max] of `emb` over the corpus, packed as
+    * ONE row of two arrays (mins, maxs) for a broadcast. */
+  private def dimRange(e: DataFrame): DataFrame =
+    e.select(posexplode(col("emb")))
+      .groupBy(col("pos"))
+      .agg(min(col("col")).as("mn"), max(col("col")).as("mx"))
+      .groupBy()
+      .agg(
+        transform(array_sort(collect_list(struct(col("pos"), col("mn")))),
+          x => x.getField("mn")).as("mins"),
+        transform(array_sort(collect_list(struct(col("pos"), col("mx")))),
+          x => x.getField("mx")).as("maxs"))
+
+  /** `emb` affinely quantized per dimension over the packed
+    * [mins, maxs] (scaled up by `up`, rounded floor(x + 0.5) — half-up
+    * in both engines — and back down by `down`) and reconstructed. */
+  private def quantRecon(up: Column, down: Column): Column =
+    transform(sequence(lit(0), size(col("emb")) - 1), i => {
+      val v = element_at(col("emb"), i + 1)
+      val mn = element_at(col("mins"), i + 1)
+      val mx = element_at(col("maxs"), i + 1)
+      when(mx === mn, mn).otherwise(
+        mn + floor((v - mn) / (mx - mn) * up + lit(0.5)) / down * (mx - mn))
+    })
 
   /** ss07: sign-sketch width and hamming radius for the shortlist. */
   val SketchBits = 16
@@ -152,25 +276,13 @@ object Similarity extends Operators {
     * second implementation.
     */
   def panelIndeg(s: SparkSession, d: String, panelSize: Int): DataFrame = {
-    val e = Dedup.barrier(Tables.embeddings(s, d)
-      .select(col("vec_id"),
-        col("embedding").cast("array<double>").as("emb"))
-      .withColumn("norm", Similarity.l2norm(col("emb"))))
-    val panel = e
+    val e = Dedup.barrier(vectors(s, d, label = false))
+    val panel = asPanel(e
       .withColumn("h", Hashing.hash64(col("vec_id").cast("string")))
-      .orderBy(col("h"), col("vec_id")).limit(panelSize)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-        col("norm").as("q_norm"))
+      .orderBy(col("h"), col("vec_id")).limit(panelSize))
     val counts = e.agg(count(lit(1)).cast("long").as("n_corpus"))
       .crossJoin(panel.agg(count(lit(1)).cast("long").as("n_panel")))
-    val topk = e.crossJoin(broadcast(panel))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos_fx", floor(
-        Similarity.dot(col("emb"), col("q_emb"))
-          / (col("norm") * col("q_norm")) * Fx4).cast("long"))
-      .withColumn("rk", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("cos_fx").desc, col("vec_id"))))
-      .filter(col("rk") <= HubK)
+    val topk = topPerQuery(panelCos(e, panel), "cos_fx", "rk", HubK)
     // indeg is bounded by panel×k rows (≤ 320 at the defaults) —
     // broadcast it so the orphan LEFT join never shuffles the corpus
     // id list (the initial plan otherwise picks SortMergeJoin: the
@@ -188,27 +300,23 @@ object Similarity extends Operators {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "ss01_topk_cosine" -> { (s, d) =>
-      val e = withNorm(s, d)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("emb").as("q_emb"), col("norm").as("q_norm"))
+      val e = vectors(s, d)
+      val q = query0(e)
       e.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
-        .withColumn("cos_sim",
-          graft.functions.Det.trunc4(dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm"))))
+        .withColumn("cos_sim", cos4("emb", "q_emb", "norm", "q_norm"))
         .select(col("vec_id"), col("label"), col("cos_sim"))
         .orderBy(col("cos_sim").desc, col("vec_id"))
         .limit(10)
     },
 
     "ss02_ann_signlsh" -> { (s, d) =>
-      val e = withNorm(s, d).withColumn("bucket", signBucket(col("emb")))
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("emb").as("q_emb"), col("norm").as("q_norm"), col("bucket").as("q_bucket"))
+      val e = vectors(s, d).withColumn("bucket", signBucket(col("emb")))
+      val q = query0(e, "bucket")
       e.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
         .filter(col("bucket") === col("q_bucket"))
-        .withColumn("cos_sim",
-          graft.functions.Det.trunc4(dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm"))))
+        .withColumn("cos_sim", cos4("emb", "q_emb", "norm", "q_norm"))
         .select(col("vec_id"), col("bucket"), col("cos_sim"))
         .orderBy(col("cos_sim").desc, col("vec_id"))
         .limit(5)
@@ -216,13 +324,11 @@ object Similarity extends Operators {
 
     "ss03_ann_ivf" -> { (s, d) =>
       val assigned = assignCells(s, d)
-      val q = assigned.filter(col("vec_id") === 0)
-        .select(col("emb").as("q_emb"), col("norm").as("q_norm"), col("cell").as("q_cell"))
+      val q = query0(assigned, "cell")
       assigned.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
         .filter(col("cell") === col("q_cell"))
-        .withColumn("cos_sim", graft.functions.Det.trunc4(
-          dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm"))))
+        .withColumn("cos_sim", cos4("emb", "q_emb", "norm", "q_norm"))
         .select(col("vec_id"), col("cell"), col("cos_sim"))
         .orderBy(col("cos_sim").desc, col("vec_id"))
         .limit(5)
@@ -235,14 +341,8 @@ object Similarity extends Operators {
     // scale the posexplode aggregation is one shuffle on (label, dim)
     // and the centroid table broadcasts.
     "ss04_kmeans_assign" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("emb"))
-      val dims = e.select(col("label"), posexplode(col("emb")))
-        .groupBy(col("label"), col("pos"))
-        .agg((sum(col("col").cast("decimal(27,10)")).cast("double") / count(lit(1))).as("c"))
-      val cents = dims.groupBy(col("label"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-          x => x.getField("c")).as("cent"))
+      val e = vectors(s, d, norm = false)
+      val cents = centroids(e, Seq("label"))
         .withColumn("c_norm", Similarity.l2norm(col("cent")))
       e.withColumn("norm", Similarity.l2norm(col("emb")))
         .join(broadcast(cents), Seq("label"))
@@ -262,9 +362,7 @@ object Similarity extends Operators {
     // bucket equi-join (never cross join), rank within query. Ranking
     // uses the TRUNCATED cosine so the order is engine-proof.
     "ss05_knn_join" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-        .withColumn("norm", Similarity.l2norm(col("emb")))
+      val e = vectors(s, d, label = false)
         .withColumn("bucket", Similarity.signBucket(col("emb")))
       val qs = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
@@ -273,8 +371,7 @@ object Similarity extends Operators {
         .orderBy(col("cos_sim").desc, col("vec_id"))
       e.filter(col("vec_id") >= 10)
         .join(broadcast(qs), Seq("bucket"))
-        .withColumn("cos_sim", Det.trunc4(
-          Similarity.dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm"))))
+        .withColumn("cos_sim", cos4("emb", "q_emb", "norm", "q_norm"))
         .withColumn("rank", row_number().over(byQuery).cast("long"))
         .filter(col("rank") <= 3)
         .select(col("q_id"), col("rank"), col("vec_id"), col("cos_sim"))
@@ -286,8 +383,7 @@ object Similarity extends Operators {
     // — the MIPS objective retrieval rankers use (cosine normalizes
     // away magnitude; MIPS keeps it).
     "ss06_mips_topk" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("emb"))
+      val e = vectors(s, d, norm = false)
       val q = e.filter(col("vec_id") === 0).select(col("emb").as("q_emb"))
       e.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
@@ -312,23 +408,18 @@ object Similarity extends Operators {
     // decimal-exact sums or pure int ratios, every query carries an
     // explicit ORDER BY for the oracle hash compare.
     "ss07_rerank" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-        .withColumn("norm", Similarity.l2norm(col("emb")))
+      val e = vectors(s, d, label = false)
         .withColumn("sketch", Similarity.signBucket(col("emb"), SketchBits))
       val masks = (0 until (1 << SketchBits))
         .filter(m => Integer.bitCount(m) <= HammingR).map(_.toLong)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("emb").as("q_emb"), col("norm").as("q_norm"),
-          col("sketch").as("q_sketch"))
+      val q = query0(e, "sketch")
         .withColumn("probe",
           explode(array(masks.map(m => col("q_sketch").bitwiseXOR(lit(m))): _*)))
       e.filter(col("vec_id") =!= 0)
         .join(broadcast(q), col("sketch") === col("probe"))
         .select(col("vec_id"),
           bit_count(col("sketch").bitwiseXOR(col("q_sketch"))).cast("long").as("hamming"),
-          Det.trunc4(Similarity.dot(col("emb"), col("q_emb")) /
-            (col("norm") * col("q_norm"))).as("cos_sim"))
+          cos4("emb", "q_emb", "norm", "q_norm").as("cos_sim"))
         .orderBy(col("cos_sim").desc, col("vec_id"))
         .limit(5)
     },
@@ -340,20 +431,14 @@ object Similarity extends Operators {
     // to run per index build. One scan + broadcast query row; both
     // rankings share the scored frame.
     "ss08_recall_eval" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-        .withColumn("norm", Similarity.l2norm(col("emb")))
+      val e = vectors(s, d, label = false)
         .withColumn("bucket", Similarity.signBucket(col("emb")))
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("emb").as("q_emb"), col("norm").as("q_norm"),
-          col("bucket").as("q_bucket"))
+      val q = query0(e, "bucket")
       // both rankings consume scored — persist it or the scan +
       // cosine stage evaluates twice (the dd07 barrier lesson)
       val scored = Dedup.barrier(e.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
-        .withColumn("cos_sim", Det.trunc4(
-          Similarity.dot(col("emb"), col("q_emb")) /
-            (col("norm") * col("q_norm")))))
+        .withColumn("cos_sim", cos4("emb", "q_emb", "norm", "q_norm")))
       val truth = scored
         .orderBy(col("cos_sim").desc, col("vec_id")).limit(10)
         .select(col("vec_id"))
@@ -379,9 +464,7 @@ object Similarity extends Operators {
     // agg). Census: per-cluster size, migration count, and centroid
     // drift (cos of old vs new centroid).
     "ss09_kmeans_iterate" -> { (s, d) =>
-      val e = graft.core.Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"),
-          col("embedding").cast("array<double>").as("emb"))
+      val e = vectors(s, d, norm = false)
       // train the K-centroid model with ONE distributed aggregation,
       // then hold it driver-side (K × dim doubles — the quantizer
       // model a real pipeline keeps on the driver, like a fitted
@@ -389,13 +472,7 @@ object Similarity extends Operators {
       // both derive from this same local frame, so no plan branch can
       // re-run the expensive (label, dim) aggregation — nor disagree
       // with the other branch's copy of the model.
-      val centRows = e.select(col("label"), posexplode(col("emb")))
-        .groupBy(col("label"), col("pos"))
-        .agg((sum(col("col").cast("decimal(27,10)")).cast("double") /
-          count(lit(1))).as("c"))
-        .groupBy(col("label"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-          x => x.getField("c")).as("cent"))
+      val centRows = centroids(e, Seq("label"))
         .collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
       val cents = {
         import s.implicits._
@@ -418,13 +495,7 @@ object Similarity extends Operators {
           }))
         .select(col("vec_id"), col("label"), col("emb"),
           col("best").getField("lbl").as("cluster")))
-      val newCents = assigned.select(col("cluster"), posexplode(col("emb")))
-        .groupBy(col("cluster"), col("pos"))
-        .agg((sum(col("col").cast("decimal(27,10)")).cast("double") /
-          count(lit(1))).as("c"))
-        .groupBy(col("cluster"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-          x => x.getField("c")).as("new_cent"))
+      val newCents = centroids(assigned, Seq("cluster"), "new_cent")
         .withColumn("n_norm", Similarity.l2norm(col("new_cent")))
       assigned.groupBy(col("cluster"))
         .agg(count(lit(1)).as("n_assigned"),
@@ -433,8 +504,7 @@ object Similarity extends Operators {
         .join(broadcast(cents.select(col("label").as("cluster"),
           col("cent"), col("c_norm"))), Seq("cluster"))
         .select(col("cluster"), col("n_assigned"), col("n_moved"),
-          Det.trunc4(Similarity.dot(col("cent"), col("new_cent")) /
-            (col("c_norm") * col("n_norm"))).as("centroid_drift"))
+          cos4("cent", "new_cent", "c_norm", "n_norm").as("centroid_drift"))
         .orderBy(col("cluster"))
     },
 
@@ -448,38 +518,10 @@ object Similarity extends Operators {
     // floor(x + 0.5) rounding, not round(): half-up in both engines,
     // no banker's-rounding divergence.
     "ss10_scalar_quant" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"),
-          col("embedding").cast("array<double>").as("emb"))
-      val packed = e.select(posexplode(col("emb")))
-        .groupBy(col("pos"))
-        .agg(min(col("col")).as("mn"), max(col("col")).as("mx"))
-        .groupBy()
-        .agg(
-          transform(array_sort(collect_list(struct(col("pos"), col("mn")))),
-            x => x.getField("mn")).as("mins"),
-          transform(array_sort(collect_list(struct(col("pos"), col("mx")))),
-            x => x.getField("mx")).as("maxs"))
-      val recon = e.crossJoin(broadcast(packed))
-        .withColumn("recon", transform(sequence(lit(0), size(col("emb")) - 1), i => {
-          val v = element_at(col("emb"), i + 1)
-          val mn = element_at(col("mins"), i + 1)
-          val mx = element_at(col("maxs"), i + 1)
-          when(mx === mn, mn).otherwise(
-            mn + floor((v - mn) / (mx - mn) * lit(255) + lit(0.5)) / lit(255.0) * (mx - mn))
-        }))
-        .withColumn("cos", Similarity.dot(col("emb"), col("recon")) /
-          (Similarity.l2norm(col("emb")) * Similarity.l2norm(col("recon"))))
-        .withColumn("cos_i4", floor(col("cos") * lit(10000)).cast("long"))
-        .withColumn("max_err", array_max(transform(
-          sequence(lit(0), size(col("emb")) - 1),
-          i => abs(element_at(col("emb"), i + 1) - element_at(col("recon"), i + 1)))))
-      recon.groupBy(col("label"))
-        .agg(count(lit(1)).as("n_vecs"),
-          Det.trunc4(sum(col("cos_i4")).cast("double") /
-            (count(lit(1)) * lit(10000.0))).as("avg_recon_cos"),
-          Det.trunc4(max(col("max_err"))).as("max_abs_err"))
-        .orderBy(col("label"))
+      val e = vectors(s, d, norm = false)
+      val recon = e.crossJoin(broadcast(dimRange(e)))
+        .withColumn("recon", quantRecon(lit(255), lit(255.0)))
+      reconCensus(recon, size(col("emb")) - 1, "label")
     },
 
     // --- ss11: IVF nprobe-recall curve -------------------------------
@@ -492,55 +534,8 @@ object Similarity extends Operators {
     // assignment (ss03's plan) is equi-joins on the cell id; the
     // scored frame is shared by truth and all three probe arms.
     "ss11_ivf_nprobe_eval" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-        .withColumn("norm", Similarity.l2norm(col("emb")))
-      val cents = e.filter(col("vec_id") < Similarity.IvfK)
-        .select(col("vec_id").as("c_id"), col("emb").as("c_emb"),
-          col("norm").as("c_norm"))
-      val byVec = Window.partitionBy(col("vec_id"))
-        .orderBy(col("c_cos").desc, col("c_id"))
-      val assigned = Dedup.barrier(e
-        .crossJoin(broadcast(cents))
-        .withColumn("c_cos", Det.trunc4(
-          Similarity.dot(col("emb"), col("c_emb")) / (col("norm") * col("c_norm"))))
-        .withColumn("rn", row_number().over(byVec))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("emb"), col("norm"), col("c_id").as("cell")))
-      val q = assigned.filter(col("vec_id") === 0)
-        .select(col("emb").as("q_emb"), col("norm").as("q_norm"))
-      // the query's cell ranking: one tiny frame, K rows
-      val qcells = cents.crossJoin(broadcast(q))
-        .withColumn("qc_cos", Det.trunc4(
-          Similarity.dot(col("c_emb"), col("q_emb")) / (col("c_norm") * col("q_norm"))))
-        .withColumn("qrank", row_number().over(
-          Window.orderBy(col("qc_cos").desc, col("c_id"))))
-        .select(col("c_id").as("cell"), col("qrank"))
-      val scored = Dedup.barrierAlso(assigned.filter(col("vec_id") =!= 0)
-        .crossJoin(broadcast(q))
-        .withColumn("cos_sim", Det.trunc4(
-          Similarity.dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm"))))
-        .select(col("vec_id"), col("cell"), col("cos_sim")))
-      val truth = scored
-        .orderBy(col("cos_sim").desc, col("vec_id")).limit(10)
-        .select(col("vec_id"))
-      val nprobes = { import s.implicits._; Seq(1, 2, 4).toDF("nprobe") }
-      val probed = scored
-        .join(broadcast(qcells), Seq("cell"))
-        .join(broadcast(nprobes), col("qrank") <= col("nprobe"))
-      val byProbe = Window.partitionBy(col("nprobe"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-      val approx = probed
-        .withColumn("rk", row_number().over(byProbe))
-        .filter(col("rk") <= 10)
-        .select(col("nprobe"), col("vec_id"), lit(1).as("hit"))
-      val cand = probed.groupBy(col("nprobe")).agg(count(lit(1)).as("n_cand"))
-      nprobes.crossJoin(broadcast(truth))
-        .join(approx, Seq("nprobe", "vec_id"), "left")
-        .groupBy(col("nprobe"))
-        .agg(count(lit(1)).as("n_truth"),
-          sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-        .join(cand, Seq("nprobe"))
+      val (rec, cand) = nprobeSweep(s, vectors(s, d, label = false), col("vec_id") =!= 0)
+      rec.join(cand, Seq("nprobe"))
         .select(col("nprobe").cast("long").as("nprobe"), col("n_cand"),
           col("n_truth"), col("n_hit"),
           Det.trunc4(col("n_hit").cast("double") / col("n_truth"))
@@ -561,41 +556,9 @@ object Similarity extends Operators {
     // compression loses, per label — directly comparable to ss10's
     // scalar-quant numbers.
     "ss12_pq_quantize" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"),
-          col("embedding").cast("array<double>").as("emb"))
-      val subs = e
-        .select(col("vec_id"), col("emb"),
-          explode(sequence(lit(0), lit(PqM - 1))).as("m"))
-        .withColumn("sub", slice(col("emb"), col("m") * PqSubDim + 1, lit(PqSubDim)))
-        .select(col("vec_id"), col("m"), col("sub"))
-      val cb = subs.filter(col("vec_id") < PqK)
-        .select(col("m"), col("vec_id").cast("int").as("code"), col("sub").as("csub"))
-      val byVm = Window.partitionBy(col("vec_id"), col("m"))
-        .orderBy(col("d2t"), col("code"))
-      val assigned = subs.join(broadcast(cb), Seq("m"))
-        .withColumn("d2t", floor(
-          aggregate(zip_with(col("sub"), col("csub"), (x, y) => (x - y) * (x - y)),
-            lit(0.0), (acc, z) => acc + z) * lit(MixFx)).cast("long"))
-        .withColumn("rn", row_number().over(byVm))
-        .filter(col("rn") === 1)
-      val recon = assigned.groupBy(col("vec_id"))
-        .agg(flatten(transform(
-          array_sort(collect_list(struct(col("m"), col("csub")))),
-          x => x.getField("csub"))).as("recon"))
-      e.join(recon, Seq("vec_id"))
-        .withColumn("cos", Similarity.dot(col("emb"), col("recon")) /
-          (Similarity.l2norm(col("emb")) * Similarity.l2norm(col("recon"))))
-        .withColumn("cos_i4", floor(col("cos") * lit(10000)).cast("long"))
-        .withColumn("max_err", array_max(transform(
-          sequence(lit(0), lit(PqM * PqSubDim - 1)),
-          i => abs(element_at(col("emb"), i + 1) - element_at(col("recon"), i + 1)))))
-        .groupBy(col("label"))
-        .agg(count(lit(1)).as("n_vecs"),
-          Det.trunc4(sum(col("cos_i4")).cast("double") /
-            (count(lit(1)) * lit(10000.0))).as("avg_recon_cos"),
-          Det.trunc4(max(col("max_err"))).as("max_abs_err"))
-        .orderBy(col("label"))
+      val e = vectors(s, d, norm = false)
+      val recon = pqDecode(pqAssign(e, "emb"), "recon")
+      reconCensus(e.join(recon, Seq("vec_id")), lit(PqM * PqSubDim - 1), "label")
     },
 
     // --- ss13: reciprocal-rank fusion --------------------------------
@@ -611,12 +574,8 @@ object Similarity extends Operators {
     // no float tolerance. Ranking keys are floor(metric·1e9) longs
     // with vec_id tiebreak — deterministic on both engines.
     "ss13_rank_fusion" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"),
-          col("embedding").cast("array<double>").as("emb"))
-        .withColumn("norm", Similarity.l2norm(col("emb")))
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("emb").as("q_emb"), col("norm").as("q_norm"))
+      val e = vectors(s, d)
+      val q = query0(e)
       val cand = e.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
         .withColumn("dotv", Similarity.dot(col("emb"), col("q_emb")))
@@ -676,41 +635,15 @@ object Similarity extends Operators {
     // ss15 reuses ss10's 1-row broadcast [min,max] pack and sweeps a
     // bounded ×|bits| explode
     "ss15_quant_bits_sweep" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      val packed = e.select(posexplode(col("emb")))
-        .groupBy(col("pos"))
-        .agg(min(col("col")).as("mn"), max(col("col")).as("mx"))
-        .groupBy()
-        .agg(
-          transform(array_sort(collect_list(struct(col("pos"), col("mn")))),
-            x => x.getField("mn")).as("mins"),
-          transform(array_sort(collect_list(struct(col("pos"), col("mx")))),
-            x => x.getField("mx")).as("maxs"))
+      val e = vectors(s, d, label = false, norm = false)
+      val packed = dimRange(e)
       val lv = when(col("bits") === 2, lit(3.0))
         .when(col("bits") === 4, lit(15.0)).otherwise(lit(255.0))
-      e.crossJoin(broadcast(packed))
+      val recon = e.crossJoin(broadcast(packed))
         .select(col("vec_id"), col("emb"), col("mins"), col("maxs"),
           explode(typedLit(SweepBits)).as("bits"))
-        .withColumn("recon", transform(sequence(lit(0), size(col("emb")) - 1), i => {
-          val v = element_at(col("emb"), i + 1)
-          val mn = element_at(col("mins"), i + 1)
-          val mx = element_at(col("maxs"), i + 1)
-          when(mx === mn, mn).otherwise(
-            mn + floor((v - mn) / (mx - mn) * lv + lit(0.5)) / lv * (mx - mn))
-        }))
-        .withColumn("cos", Similarity.dot(col("emb"), col("recon")) /
-          (Similarity.l2norm(col("emb")) * Similarity.l2norm(col("recon"))))
-        .withColumn("cos_i4", floor(col("cos") * lit(10000)).cast("long"))
-        .withColumn("max_err", array_max(transform(
-          sequence(lit(0), size(col("emb")) - 1),
-          i => abs(element_at(col("emb"), i + 1) - element_at(col("recon"), i + 1)))))
-        .groupBy(col("bits"))
-        .agg(count(lit(1)).as("n_vecs"),
-          Det.trunc4(sum(col("cos_i4")).cast("double") /
-            (count(lit(1)) * lit(10000.0))).as("avg_recon_cos"),
-          Det.trunc4(max(col("max_err"))).as("max_abs_err"))
-        .orderBy(col("bits"))
+        .withColumn("recon", quantRecon(lv, lv))
+      reconCensus(recon, size(col("emb")) - 1, "bits")
     },
 
     // --- ss16: sign-LSH probe-radius recall curve ---------------------
@@ -722,17 +655,12 @@ object Similarity extends Operators {
     // counts come from the 17-row hamming histogram, not re-scans.
     // Read with ss11 (the same curve for IVF nprobe).
     "ss16_probe_recall" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-        .withColumn("norm", Similarity.l2norm(col("emb")))
+      val e = vectors(s, d, label = false)
         .withColumn("sketch", Similarity.signBucket(col("emb"), SketchBits))
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("emb").as("q_emb"), col("norm").as("q_norm"),
-          col("sketch").as("q_sketch"))
+      val q = query0(e, "sketch")
       val scored = Dedup.barrier(e.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
-        .withColumn("cos_sim", Det.trunc4(
-          Similarity.dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm"))))
+        .withColumn("cos_sim", cos4("emb", "q_emb", "norm", "q_norm"))
         .withColumn("hamming",
           bit_count(col("sketch").bitwiseXOR(col("q_sketch"))).cast("int")))
       val truth = scored.orderBy(col("cos_sim").desc, col("vec_id")).limit(10)
@@ -832,9 +760,7 @@ object Similarity extends Operators {
     // difference between "recall was 0.7 on the vector we happened to
     // pick" and a defensible index decision.
     "ss19_panel_recall" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-        .withColumn("norm", Similarity.l2norm(col("emb")))
+      val e = vectors(s, d, label = false)
         .withColumn("bucket", Similarity.signBucket(col("emb")))
       val panel = e.filter(col("vec_id") < PanelN)
         .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
@@ -842,8 +768,7 @@ object Similarity extends Operators {
       val scored = Dedup.barrier(e
         .crossJoin(broadcast(panel))
         .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos_sim", Det.trunc4(
-          Similarity.dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm"))))
+        .withColumn("cos_sim", cos4("emb", "q_emb", "norm", "q_norm"))
         .select(col("q_id"), col("vec_id"), col("cos_sim"),
           (col("bucket") === col("q_bucket")).as("same_bucket")))
       val wq = Window.partitionBy(col("q_id"))
@@ -881,19 +806,11 @@ object Similarity extends Operators {
     // a cluster is the signal to re-run Lloyd (ss09) or split the
     // cell (ss14's balance view).
     "ss20_cluster_margin" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"),
-          col("embedding").cast("array<double>").as("emb"))
+      val e = vectors(s, d, norm = false)
       // centroid table stays a DataFrame end-to-end (VERDICT r6 #8):
       // the K-row frame flows straight into the 1-row packed
       // broadcast — no driver collect/re-parallelize round-trip
-      val cents = e.select(col("label"), posexplode(col("emb")))
-        .groupBy(col("label"), col("pos"))
-        .agg((sum(col("col").cast("decimal(27,10)")).cast("double") /
-          count(lit(1))).as("c"))
-        .groupBy(col("label"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-          x => x.getField("c")).as("cent"))
+      val cents = centroids(e, Seq("label"))
         .select(col("label").as("clbl"), col("cent"))
         .withColumn("c_norm", Similarity.l2norm(col("cent")))
       val packed = cents.agg(array_sort(collect_list(
@@ -945,51 +862,13 @@ object Similarity extends Operators {
     // residual codebook (PqM×PqK rows), the IVF-PQ shape production
     // ANN serving ships
     "ss21_ivf_pq_residual" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"),
-          col("embedding").cast("array<double>").as("emb"))
-      val cents = e.select(col("label"), posexplode(col("emb")))
-        .groupBy(col("label"), col("pos"))
-        .agg((sum(col("col").cast("decimal(27,10)")).cast("double") /
-          count(lit(1))).as("c"))
-        .groupBy(col("label"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-          x => x.getField("c")).as("cent"))
-      val resid = e.join(broadcast(cents), Seq("label"))
+      val e = vectors(s, d, norm = false)
+      val resid = e.join(broadcast(centroids(e, Seq("label"))), Seq("label"))
         .withColumn("res", zip_with(col("emb"), col("cent"), (x, c) => x - c))
-      val subs = resid
-        .select(col("vec_id"), col("res"),
-          explode(sequence(lit(0), lit(PqM - 1))).as("m"))
-        .withColumn("sub", slice(col("res"), col("m") * PqSubDim + 1, lit(PqSubDim)))
-        .select(col("vec_id"), col("m"), col("sub"))
-      val cb = subs.filter(col("vec_id") < PqK)
-        .select(col("m"), col("vec_id").cast("int").as("code"), col("sub").as("csub"))
-      val byVm = Window.partitionBy(col("vec_id"), col("m"))
-        .orderBy(col("d2t"), col("code"))
-      val assigned = subs.join(broadcast(cb), Seq("m"))
-        .withColumn("d2t", floor(
-          aggregate(zip_with(col("sub"), col("csub"), (x, y) => (x - y) * (x - y)),
-            lit(0.0), (acc, z) => acc + z) * lit(MixFx)).cast("long"))
-        .withColumn("rn", row_number().over(byVm))
-        .filter(col("rn") === 1)
-      val reconRes = assigned.groupBy(col("vec_id"))
-        .agg(flatten(transform(
-          array_sort(collect_list(struct(col("m"), col("csub")))),
-          x => x.getField("csub"))).as("rres"))
-      resid.join(reconRes, Seq("vec_id"))
-        .withColumn("recon", zip_with(col("cent"), col("rres"), (c, r) => c + r))
-        .withColumn("cos", Similarity.dot(col("emb"), col("recon")) /
-          (Similarity.l2norm(col("emb")) * Similarity.l2norm(col("recon"))))
-        .withColumn("cos_i4", floor(col("cos") * lit(10000)).cast("long"))
-        .withColumn("max_err", array_max(transform(
-          sequence(lit(0), lit(PqM * PqSubDim - 1)),
-          i => abs(element_at(col("emb"), i + 1) - element_at(col("recon"), i + 1)))))
-        .groupBy(col("label"))
-        .agg(count(lit(1)).as("n_vecs"),
-          Det.trunc4(sum(col("cos_i4")).cast("double") /
-            (count(lit(1)) * lit(10000.0))).as("avg_recon_cos"),
-          Det.trunc4(max(col("max_err"))).as("max_abs_err"))
-        .orderBy(col("label"))
+      val reconRes = pqDecode(pqAssign(resid, "res"), "rres")
+      reconCensus(resid.join(reconRes, Seq("vec_id"))
+        .withColumn("recon", zip_with(col("cent"), col("rres"), (c, r) => c + r)),
+        lit(PqM * PqSubDim - 1), "label")
     },
 
     // --- ss22: do identical texts carry identical embeddings? ---------
@@ -1049,59 +928,9 @@ object Similarity extends Operators {
     // TakeOrdered truth arm); the filter applies on the scored frame,
     // narrow on both arms.
     "ss23_filtered_ann" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"),
-          col("embedding").cast("array<double>").as("emb"))
-        .withColumn("norm", Similarity.l2norm(col("emb")))
-      val cents = e.filter(col("vec_id") < Similarity.IvfK)
-        .select(col("vec_id").as("c_id"), col("emb").as("c_emb"),
-          col("norm").as("c_norm"))
-      val byVec = Window.partitionBy(col("vec_id"))
-        .orderBy(col("c_cos").desc, col("c_id"))
-      val assigned = Dedup.barrier(e
-        .crossJoin(broadcast(cents))
-        .withColumn("c_cos", Det.trunc4(
-          Similarity.dot(col("emb"), col("c_emb")) / (col("norm") * col("c_norm"))))
-        .withColumn("rn", row_number().over(byVec))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("label"), col("emb"), col("norm"),
-          col("c_id").as("cell")))
-      val q = assigned.filter(col("vec_id") === 0)
-        .select(col("emb").as("q_emb"), col("norm").as("q_norm"))
-      val qcells = cents.crossJoin(broadcast(q))
-        .withColumn("qc_cos", Det.trunc4(
-          Similarity.dot(col("c_emb"), col("q_emb")) / (col("c_norm") * col("q_norm"))))
-        .withColumn("qrank", row_number().over(
-          Window.orderBy(col("qc_cos").desc, col("c_id"))))
-        .select(col("c_id").as("cell"), col("qrank"))
-      // the predicate applies to the scored frame ONCE; truth and all
-      // probe arms see the same filtered candidates
-      val scored = Dedup.barrierAlso(assigned
-        .filter(col("vec_id") =!= 0 && col("label") === FilterLabel)
-        .crossJoin(broadcast(q))
-        .withColumn("cos_sim", Det.trunc4(
-          Similarity.dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm"))))
-        .select(col("vec_id"), col("cell"), col("cos_sim")))
-      val truth = scored
-        .orderBy(col("cos_sim").desc, col("vec_id")).limit(10)
-        .select(col("vec_id"))
-      val nprobes = { import s.implicits._; Seq(1, 2, 4).toDF("nprobe") }
-      val probed = scored
-        .join(broadcast(qcells), Seq("cell"))
-        .join(broadcast(nprobes), col("qrank") <= col("nprobe"))
-      val byProbe = Window.partitionBy(col("nprobe"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-      val approx = probed
-        .withColumn("rk", row_number().over(byProbe))
-        .filter(col("rk") <= 10)
-        .select(col("nprobe"), col("vec_id"), lit(1).as("hit"))
-      val cand = probed.groupBy(col("nprobe")).agg(count(lit(1)).as("n_cand"))
-      nprobes.crossJoin(broadcast(truth))
-        .join(approx, Seq("nprobe", "vec_id"), "left")
-        .groupBy(col("nprobe"))
-        .agg(count(lit(1)).as("n_truth"),
-          sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-        .join(cand, Seq("nprobe"), "left")
+      val (rec, cand) = nprobeSweep(s, vectors(s, d),
+        col("vec_id") =!= 0 && col("label") === FilterLabel)
+      rec.join(cand, Seq("nprobe"), "left")
         .select(col("nprobe").cast("long").as("nprobe"),
           coalesce(col("n_cand"), lit(0L)).cast("long").as("n_cand"),
           col("n_truth").cast("long").as("n_truth"),
@@ -1122,8 +951,7 @@ object Similarity extends Operators {
     // ss24/mm10 are equi-key aggregations whose only windows/folds run
     // on bounded group tables (shards × modalities, panel × shards).
     "ss24_shard_fanout" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val e = vectors(s, d, label = false, norm = false)
         .withColumn("bucket", Similarity.signBucket(col("emb")))
         .withColumn("shard",
           pmod(Hashing.hash64(col("vec_id").cast("string")), lit(NShards.toLong)))
@@ -1154,35 +982,14 @@ object Similarity extends Operators {
     // dimension.
     "ss25_panel_nprobe" -> { (s, d) =>
       import s.implicits._
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-        .withColumn("norm", Similarity.l2norm(col("emb")))
-      val cents = e.filter(col("vec_id") < Similarity.IvfK)
-        .select(col("vec_id").as("c_id"), col("emb").as("c_emb"),
-          col("norm").as("c_norm"))
-      val byVec = Window.partitionBy(col("vec_id"))
-        .orderBy(col("c_cos").desc, col("c_id"))
-      val assigned = Dedup.barrier(e
-        .crossJoin(broadcast(cents))
-        .withColumn("c_cos", Det.trunc4(
-          Similarity.dot(col("emb"), col("c_emb")) / (col("norm") * col("c_norm"))))
-        .withColumn("rn", row_number().over(byVec))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("emb"), col("norm"), col("c_id").as("cell")))
-      val panel = assigned.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-          col("norm").as("q_norm"))
+      val (cents, cells) = ivfAssign(vectors(s, d, label = false))
+      val assigned = Dedup.barrier(cells)
+      val panel = asPanel(assigned.filter(col("vec_id") < 10))
       // per (query, cell) probe order: an 80-row frame
-      val qcells = cents.crossJoin(broadcast(panel))
-        .withColumn("qc_cos", Det.trunc4(
-          Similarity.dot(col("c_emb"), col("q_emb")) / (col("c_norm") * col("q_norm"))))
-        .withColumn("qrank", row_number().over(
-          Window.partitionBy(col("q_id")).orderBy(col("qc_cos").desc, col("c_id"))))
-        .select(col("q_id"), col("c_id").as("cell"), col("qrank"))
+      val qcells = rankCells(cents, panel, "q_id")
       val scored = Dedup.barrierAlso(assigned.filter(col("vec_id") >= 10)
         .crossJoin(broadcast(panel))
-        .withColumn("cos_sim", Det.trunc4(
-          Similarity.dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm"))))
+        .withColumn("cos_sim", cos4("emb", "q_emb", "norm", "q_norm"))
         .select(col("q_id"), col("vec_id"), col("cell"), col("cos_sim")))
       val byQ = Window.partitionBy(col("q_id"))
         .orderBy(col("cos_sim").desc, col("vec_id"))
@@ -1230,12 +1037,8 @@ object Similarity extends Operators {
     // reads ONLY the norm column (an index-only scan against a
     // broadcast threshold table), never the vectors.
     "ss26_mips_norm_prune" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-        .withColumn("norm", Similarity.l2norm(col("emb")))
-      val panel = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-          col("norm").as("q_norm"))
+      val e = vectors(s, d, label = false)
+      val panel = asPanel(e.filter(col("vec_id") < 10))
       val corpus = e.filter(col("vec_id") >= 10)
       val byQ = Window.partitionBy(col("q_id"))
         .orderBy(col("dot").desc, col("vec_id"))
@@ -1262,19 +1065,14 @@ object Similarity extends Operators {
     // span). A stale answer = the live winner arrived after the
     // snapshot — the measured decay that sets index refresh cadence.
     "ss27_index_staleness" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-        .withColumn("norm", Similarity.l2norm(col("emb")))
+      val e = vectors(s, d, label = false)
       val bounds = e.agg(
         min(col("vec_id")).as("lo"),
         (max(col("vec_id")) - min(col("vec_id")) + 1L).as("span"))
-      val panel = e.filter(col("vec_id") < PanelN)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-          col("norm").as("q_norm"))
+      val panel = asPanel(e.filter(col("vec_id") < PanelN))
       val scored = e.crossJoin(broadcast(panel))
         .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos_sim", Det.trunc4(
-          Similarity.dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm"))))
+        .withColumn("cos_sim", cos4("emb", "q_emb", "norm", "q_norm"))
         .crossJoin(broadcast(bounds))
         .withColumn("indexed",
           expr(s"(vec_id - lo) * 100 < span * $IndexPct"))
@@ -1316,19 +1114,14 @@ object Similarity extends Operators {
     // a 100 TB global sort/range-write needs, computed without doing
     // the sort.
     "ss28_mutual_knn" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"),
-          col("embedding").cast("array<double>").as("emb"))
-        .withColumn("norm", Similarity.l2norm(col("emb")))
-        .withColumn("bucket", Similarity.signBucket(col("emb")))
+      val e = vectors(s, d).withColumn("bucket", Similarity.signBucket(col("emb")))
       val eb = Dedup.barrier(e)
       val cand = eb.select(col("bucket"), col("vec_id").as("a"),
           col("label"), col("emb").as("ea"), col("norm").as("na"))
         .join(eb.select(col("bucket"), col("vec_id").as("b"),
           col("emb").as("eb"), col("norm").as("nb")), Seq("bucket"))
         .filter(col("a") =!= col("b"))
-        .withColumn("cos", Det.trunc4(
-          Similarity.dot(col("ea"), col("eb")) / (col("na") * col("nb"))))
+        .withColumn("cos", cos4("ea", "eb", "na", "nb"))
         .select(col("label"), col("a"), col("b"), col("cos"))
       val wk = Window.partitionBy(col("a"))
         .orderBy(col("cos").desc, col("b"))
@@ -1368,32 +1161,21 @@ object Similarity extends Operators {
     // twice (no global sort windows) and joins the two quartile frames
     // co-partitioned on doc_id, folding to the 16-cell matrix.
     "ss29_centroid_drift" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"),
-          col("embedding").cast("array<double>").as("emb"))
+      val e = vectors(s, d, norm = false)
       val bounds = e.agg(
         min(col("vec_id")).as("lo"),
         (max(col("vec_id")) - min(col("vec_id")) + 1L).as("span"))
       val tagged = e.crossJoin(broadcast(bounds))
         .withColumn("early", expr("(vec_id - lo) * 2 < span"))
-      def centroids(df: DataFrame, cc: String, nc: String): DataFrame =
-        df.select(col("label"), posexplode(col("emb")))
-          .groupBy(col("label"), col("pos"))
-          .agg((sum(col("col").cast("decimal(27,10)")).cast("double") /
-            count(lit(1))).as("c"))
-          .groupBy(col("label"))
-          .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-            x => x.getField("c")).as(cc))
-          .withColumn(nc, Similarity.l2norm(col(cc)))
-      val centE = centroids(tagged.filter(col("early")), "cent_e", "norm_e")
-      val centF = centroids(tagged, "cent_f", "norm_f")
+      def normed(df: DataFrame, cc: String, nc: String): DataFrame =
+        centroids(df, Seq("label"), cc).withColumn(nc, Similarity.l2norm(col(cc)))
+      val centE = normed(tagged.filter(col("early")), "cent_e", "norm_e")
+      val centF = normed(tagged, "cent_f", "norm_f")
       val counts = tagged.groupBy(col("label"))
         .agg(count(lit(1)).cast("long").as("n_vecs"),
           sum(when(col("early"), 1L).otherwise(0L)).cast("long").as("n_early"))
       counts.join(centE, Seq("label")).join(centF, Seq("label"))
-        .withColumn("drift_cos", Det.trunc4(
-          Similarity.dot(col("cent_e"), col("cent_f")) /
-            (col("norm_e") * col("norm_f"))))
+        .withColumn("drift_cos", cos4("cent_e", "cent_f", "norm_e", "norm_f"))
         .select(col("label"), col("n_vecs"), col("n_early"), col("drift_cos"))
         .orderBy(col("label"))
     },
@@ -1438,18 +1220,13 @@ object Similarity extends Operators {
     // only. ev64 folds the event log per (user, day) with
     // user-partitioned windows and censuses the bounded day table.
     "ss31_tombstone_ghosts" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-        .withColumn("norm", Similarity.l2norm(col("emb")))
+      val e = vectors(s, d, label = false)
         .withColumn("dead",
           pmod(Hashing.hash64(col("vec_id").cast("string")), lit(TombMod)) === 0)
-      val panel = e.filter(col("vec_id") < PanelN && !col("dead"))
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-          col("norm").as("q_norm"))
+      val panel = asPanel(e.filter(col("vec_id") < PanelN && !col("dead")))
       val scored = Dedup.barrier(e.crossJoin(broadcast(panel))
         .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos_sim", Det.trunc4(
-          Similarity.dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm"))))
+        .withColumn("cos_sim", cos4("emb", "q_emb", "norm", "q_norm"))
         .select(col("q_id"), col("vec_id"), col("dead"), col("cos_sim")))
       val wq = Window.partitionBy(col("q_id"))
         .orderBy(col("cos_sim").desc, col("vec_id"))
@@ -1482,25 +1259,7 @@ object Similarity extends Operators {
     // per-(vec, subspace) argmin window) folded to a |subspaces|-row
     // health census — no new plan shapes.
     "ss32_pq_utilization" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      val subs = e
-        .select(col("vec_id"), col("emb"),
-          explode(sequence(lit(0), lit(PqM - 1))).as("m"))
-        .withColumn("sub",
-          slice(col("emb"), col("m") * PqSubDim + 1, lit(PqSubDim)))
-        .select(col("vec_id"), col("m"), col("sub"))
-      val cb = subs.filter(col("vec_id") < PqK)
-        .select(col("m"), col("vec_id").cast("int").as("code"),
-          col("sub").as("csub"))
-      val byVm = Window.partitionBy(col("vec_id"), col("m"))
-        .orderBy(col("d2t"), col("code"))
-      val assigned = subs.join(broadcast(cb), Seq("m"))
-        .withColumn("d2t", floor(
-          aggregate(zip_with(col("sub"), col("csub"), (x, y) => (x - y) * (x - y)),
-            lit(0.0), (acc, z) => acc + z) * lit(MixFx)).cast("long"))
-        .withColumn("rn", row_number().over(byVm))
-        .filter(col("rn") === 1)
+      val assigned = pqAssign(vectors(s, d, label = false, norm = false), "emb")
         .select(col("m"), col("code"))
       val codeCounts = assigned.groupBy(col("m"), col("code"))
         .agg(count(lit(1)).cast("long").as("n"))
@@ -1527,8 +1286,7 @@ object Similarity extends Operators {
     // prefix dimensionalities — per (query, d) scoring reuses the one
     // barriered scored table; windows stay panel-partitioned.
     "ss33_matryoshka_recall" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val e = vectors(s, d, label = false, norm = false)
       val panel = e.filter(col("vec_id") < PanelN)
         .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
       val dims = { import s.implicits._; Dims.toDF("d") }
@@ -1576,19 +1334,14 @@ object Similarity extends Operators {
     // the quantile picks are exact integer rank arithmetic, no
     // percentile_approx.
     "ss34_two_stage_recall" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-        .withColumn("norm", Similarity.l2norm(col("emb")))
+      val e = vectors(s, d, label = false)
         .withColumn("sig",
           expr(sigExpr(i => s"element_at(emb, ${i + 1})")).cast("long"))
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("emb").as("q_emb"), col("norm").as("q_norm"),
-          col("sig").as("q_sig"))
+      val q = query0(e, "sig")
       val scored = Dedup.barrier(e.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
         .withColumn("ham", expr("bit_count(sig ^ q_sig)").cast("long"))
-        .withColumn("cos_sim", Det.trunc4(
-          Similarity.dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm"))))
+        .withColumn("cos_sim", cos4("emb", "q_emb", "norm", "q_norm"))
         .select(col("vec_id"), col("ham"), col("cos_sim")))
       val truth = scored.orderBy(col("cos_sim").desc, col("vec_id")).limit(10)
         .select(col("vec_id"))
@@ -1634,19 +1387,14 @@ object Similarity extends Operators {
       // controls-flat basket A/B (32-task overhead across ~40 tiny
       // stages outweighs the parallelized dots at this arithmetic
       // intensity)
-      val e = Dedup.barrier(Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-        .withColumn("norm", Similarity.l2norm(col("emb"))))
-      val panel = e.filter(pmod(col("vec_id"), lit(97)) === 7)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-          col("norm").as("q_norm"))
+      val e = Dedup.barrier(vectors(s, d, label = false))
+      val panel = asPanel(e.filter(pmod(col("vec_id"), lit(97)) === 7))
       // exact panel truth: top-10 per query over the whole corpus
       val byQ = Window.partitionBy(col("q_id"))
         .orderBy(col("cos_sim").desc, col("vec_id"))
       val truth = Dedup.barrierAlso(e.crossJoin(broadcast(panel))
         .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos_sim", Det.trunc4(
-          Similarity.dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm"))))
+        .withColumn("cos_sim", cos4("emb", "q_emb", "norm", "q_norm"))
         .withColumn("rn", row_number().over(byQ))
         .filter(col("rn") <= 10)
         .select(col("q_id"), col("vec_id")))
@@ -1664,8 +1412,7 @@ object Similarity extends Operators {
         .select(col("vec_id").as("c_id"), col("emb").as("c_emb"),
           col("norm").as("c_norm"))
       val assigned = e.crossJoin(broadcast(cents))
-        .withColumn("c_cos", Det.trunc4(
-          Similarity.dot(col("emb"), col("c_emb")) / (col("norm") * col("c_norm"))))
+        .withColumn("c_cos", cos4("emb", "c_emb", "norm", "c_norm"))
         .select(col("vec_id"), col("c_id"), col("c_cos"),
           explode(array(NLists.map(k => lit(k.toLong)): _*)).as("nlist"))
         .filter(col("c_id") < col("nlist"))
@@ -1730,17 +1477,9 @@ object Similarity extends Operators {
     //    primitive and has different cost behavior (unbounded result
     //    set, so the census reports the degree distribution envelope).
     "ss36_radius_census" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-        .withColumn("norm", Similarity.l2norm(col("emb")))
-      val panel = e.filter(pmod(col("vec_id"), lit(97)) === 0)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-          col("norm").as("q_norm"))
-      val deg = e.crossJoin(broadcast(panel))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos_fx", floor(
-          Similarity.dot(col("emb"), col("q_emb"))
-            / (col("norm") * col("q_norm")) * Fx4).cast("long"))
+      val e = vectors(s, d, label = false)
+      val panel = asPanel(e.filter(pmod(col("vec_id"), lit(97)) === 0))
+      val deg = panelCos(e, panel)
         .filter(col("cos_fx") >= Taus.min)
         .withColumn("tau", explode(array(Taus.map(lit): _*)))
         .filter(col("cos_fx") >= col("tau"))
@@ -1776,10 +1515,7 @@ object Similarity extends Operators {
       // one core (Probe stage census: a 3.8 s single-task stage = most of the
       // query). Round-robin the 2k rows first; the quadratic stage
       // then uses every core. Guide §2.6 (idle capacity).
-      val e = Dedup.barrier(graft.core.Par.scatter(Tables.embeddings(s, d)
-        .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("emb"))
-        .withColumn("norm", Similarity.l2norm(col("emb")))))
+      val e = Dedup.barrier(graft.core.Par.scatter(vectors(s, d, label = false)))
       val guard = broadcast(e.agg(count(lit(1)).cast("long").as("n_corpus"))
         .select(when(col("n_corpus") <= HubnessExactCap, lit(1L))
           .otherwise(raise_error(concat(
@@ -1792,16 +1528,7 @@ object Similarity extends Operators {
           .as("fence_ok")))
       val fenced = e.crossJoin(guard)
         .filter(col("fence_ok") === 1L).drop("fence_ok")
-      val q = e.select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-        col("norm").as("q_norm"))
-      val topk = fenced.crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos_fx", floor(
-          Similarity.dot(col("emb"), col("q_emb"))
-            / (col("norm") * col("q_norm")) * Fx4).cast("long"))
-        .withColumn("rk", row_number().over(Window.partitionBy(col("q_id"))
-          .orderBy(col("cos_fx").desc, col("vec_id"))))
-        .filter(col("rk") <= HubK)
+      val topk = topPerQuery(panelCos(fenced, asPanel(e)), "cos_fx", "rk", HubK)
       val indeg = topk.groupBy(col("vec_id"))
         .agg(count(lit(1)).cast("long").as("indeg"))
       val full = e.select(col("vec_id"))
@@ -1828,25 +1555,12 @@ object Similarity extends Operators {
     // region) draws far more probes than its fair share — the skew this
     // census measures is what picks replication factors per IVF shard.
     "ss38_routing_skew" -> { (s, d) =>
-      val e = Dedup.barrier(Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"),
-          col("embedding").cast("array<double>").as("emb"))
-        .withColumn("norm", Similarity.l2norm(col("emb"))))
-      val dims = e.select(col("label"), posexplode(col("emb")))
-        .groupBy(col("label"), col("pos"))
-        .agg((sum(col("col").cast("decimal(27,10)")).cast("double")
-          / count(lit(1))).as("c"))
-      val cents = dims.groupBy(col("label"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-          x => x.getField("c")).as("cent"))
+      val e = Dedup.barrier(vectors(s, d))
+      val cents = centroids(e, Seq("label"))
         .withColumn("c_norm", Similarity.l2norm(col("cent")))
-      val panel = e.filter(pmod(col("vec_id"), lit(PanelMod)) === 0)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-          col("norm").as("q_norm"))
+      val panel = asPanel(e.filter(pmod(col("vec_id"), lit(PanelMod)) === 0))
       val routed = panel.crossJoin(broadcast(cents))
-        .withColumn("cos_fx", floor(
-          Similarity.dot(col("q_emb"), col("cent"))
-            / (col("q_norm") * col("c_norm")) * Fx4).cast("long"))
+        .withColumn("cos_fx", cosFx("q_emb", "cent", "q_norm", "c_norm"))
         .withColumn("rk", row_number().over(Window.partitionBy(col("q_id"))
           .orderBy(col("cos_fx").desc, col("label"))))
         .filter(col("rk") <= RoutingProbe)
@@ -1880,55 +1594,31 @@ object Similarity extends Operators {
     // (ss27 priced staleness by LOSS; ss39 prices the two-segment serving
     // path that avoids it).
     "ss39_segment_merge_recall" -> { (s, d) =>
-      val e = Dedup.barrier(Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"),
-          col("embedding").cast("array<double>").as("emb"))
-        .withColumn("norm", Similarity.l2norm(col("emb")))
+      val e = Dedup.barrier(vectors(s, d)
         .withColumn("seg", when(pmod(col("vec_id"), lit(10L)) === 0,
           lit("delta")).otherwise(lit("main"))))
       // per-segment label centroids (ss04's construction, keyed by seg)
-      val dims = e.select(col("seg"), col("label"), posexplode(col("emb")))
-        .groupBy(col("seg"), col("label"), col("pos"))
-        .agg((sum(col("col").cast("decimal(27,10)")).cast("double")
-          / count(lit(1))).as("c"))
-      val cents = dims.groupBy(col("seg"), col("label"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-          x => x.getField("c")).as("cent"))
+      val cents = centroids(e, Seq("seg", "label"))
         .withColumn("c_norm", Similarity.l2norm(col("cent")))
-      val panel = e.filter(pmod(col("vec_id"), lit(PanelMod)) === 0)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-          col("norm").as("q_norm"))
+      val panel = asPanel(e.filter(pmod(col("vec_id"), lit(PanelMod)) === 0))
       val routed = panel.crossJoin(broadcast(cents))
-        .withColumn("r_fx", floor(
-          Similarity.dot(col("q_emb"), col("cent"))
-            / (col("q_norm") * col("c_norm")) * Fx4).cast("long"))
+        .withColumn("r_fx", cosFx("q_emb", "cent", "q_norm", "c_norm"))
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("q_id"), col("seg"))
             .orderBy(col("r_fx").desc, col("label"))))
         .filter(col("rk") <= NProbe)
         .select(col("q_id"), col("q_emb"), col("q_norm"),
           col("seg"), col("label"))
-      val serving = routed
+      val serving = topPerQuery(routed
         .join(e.select(col("seg"), col("label"), col("vec_id"),
           col("emb"), col("norm")), Seq("seg", "label"))
         .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("c_fx", floor(
-          Similarity.dot(col("emb"), col("q_emb"))
-            / (col("norm") * col("q_norm")) * Fx4).cast("long"))
-        .withColumn("srk", row_number().over(Window.partitionBy(col("q_id"))
-          .orderBy(col("c_fx").desc, col("vec_id"))))
-        .filter(col("srk") <= K)
+        .withColumn("c_fx", cosFx("emb", "q_emb", "norm", "q_norm")), "c_fx", "srk", K)
         .select(col("q_id"), col("vec_id"))
       // exact global top-K: the quadratic truth arm over the panel
-      val truth = e.select(col("vec_id"), col("emb"), col("norm"), col("seg"))
-        .crossJoin(broadcast(panel))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("t_fx", floor(
-          Similarity.dot(col("emb"), col("q_emb"))
-            / (col("norm") * col("q_norm")) * Fx4).cast("long"))
-        .withColumn("trk", row_number().over(Window.partitionBy(col("q_id"))
-          .orderBy(col("t_fx").desc, col("vec_id"))))
-        .filter(col("trk") <= K)
+      val truth = topPerQuery(panelCos(
+          e.select(col("vec_id"), col("emb"), col("norm"), col("seg")), panel, "t_fx"),
+          "t_fx", "trk", K)
         .select(col("q_id"), col("vec_id"), col("seg"))
       val perQ = truth
         .join(serving.withColumn("hit", lit(1L)),
@@ -1992,20 +1682,76 @@ object Similarity extends Operators {
     * centroids (one broadcast row set), argmax cosine, ties → lower
     * c_id. At scale the returned `cell` is the IVF partition key.
     */
-  private[graft] def assignCells(s: SparkSession, d: String): DataFrame = {
-    val e = withNorm(s, d)
+  private[graft] def assignCells(s: SparkSession, d: String): DataFrame =
+    ivfAssign(vectors(s, d))._2
+
+  /** IVF cell assignment over `e` (vec_id, [label,] emb, norm): the
+    * IvfK first vectors are the centroids (c_id, c_emb, c_norm), and
+    * every vector goes to the nearest by truncated cosine, ties → lower
+    * c_id. Returns (centroids, assigned: vec_id, [label,] emb, norm,
+    * cell).
+    */
+  private def ivfAssign(e: DataFrame): (DataFrame, DataFrame) = {
     val cents = e.filter(col("vec_id") < IvfK)
       .select(col("vec_id").as("c_id"), col("emb").as("c_emb"), col("norm").as("c_norm"))
-    // assign: argmax cosine over the K centroids (ties → lower c_id)
-    val byVec = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("c_cos").desc, col("c_id"))
-    e.crossJoin(broadcast(cents))
-      .withColumn("c_cos", graft.functions.Det.trunc4(
-        dot(col("emb"), col("c_emb")) / (col("norm") * col("c_norm"))))
+    val byVec = Window.partitionBy(col("vec_id")).orderBy(col("c_cos").desc, col("c_id"))
+    val keep = Seq("vec_id", "label", "emb", "norm").filter(e.columns.contains)
+    val assigned = e.crossJoin(broadcast(cents))
+      .withColumn("c_cos", cos4("emb", "c_emb", "norm", "c_norm"))
       .withColumn("rn", row_number().over(byVec))
       .filter(col("rn") === 1)
-      .select(col("vec_id"), col("label"), col("emb"), col("norm"), col("c_id").as("cell"))
+      .select(keep.map(col) :+ col("c_id").as("cell"): _*)
+    (cents, assigned)
   }
+
+  /** The one-query IVF nprobe sweep (ss11, ss23): vec_id 0 probes its
+    * nprobe ∈ {1, 2, 4} nearest cells. The `candidates` predicate
+    * applies to the scored frame ONCE, so the brute-force top-10 truth
+    * and every probe arm see the same rows. Returns (per nprobe:
+    * n_truth, n_hit; per nprobe: n_cand over the probed candidates).
+    */
+  private def nprobeSweep(s: SparkSession, e: DataFrame, candidates: Column): (DataFrame, DataFrame) = {
+    val (cents, cells) = ivfAssign(e)
+    val assigned = Dedup.barrier(cells)
+    val q = query0(assigned)
+    // the query's cell ranking: one tiny frame, K rows
+    val qcells = rankCells(cents, q)
+    val scored = Dedup.barrierAlso(assigned.filter(candidates)
+      .crossJoin(broadcast(q))
+      .withColumn("cos_sim", cos4("emb", "q_emb", "norm", "q_norm"))
+      .select(col("vec_id"), col("cell"), col("cos_sim")))
+    val truth = scored
+      .orderBy(col("cos_sim").desc, col("vec_id")).limit(10)
+      .select(col("vec_id"))
+    val nprobes = { import s.implicits._; Seq(1, 2, 4).toDF("nprobe") }
+    val probed = scored
+      .join(broadcast(qcells), Seq("cell"))
+      .join(broadcast(nprobes), col("qrank") <= col("nprobe"))
+    val byProbe = Window.partitionBy(col("nprobe"))
+      .orderBy(col("cos_sim").desc, col("vec_id"))
+    val approx = probed
+      .withColumn("rk", row_number().over(byProbe))
+      .filter(col("rk") <= 10)
+      .select(col("nprobe"), col("vec_id"), lit(1).as("hit"))
+    val cand = probed.groupBy(col("nprobe")).agg(count(lit(1)).as("n_cand"))
+    val rec = nprobes.crossJoin(broadcast(truth))
+      .join(approx, Seq("nprobe", "vec_id"), "left")
+      .groupBy(col("nprobe"))
+      .agg(count(lit(1)).as("n_truth"),
+        sum(coalesce(col("hit"), lit(0))).as("n_hit"))
+    (rec, cand)
+  }
+
+  /** Each query's ranking (qrank) of the IVF centroids by truncated
+    * cosine to its (q_emb, q_norm), ties → lower c_id, one ranking per
+    * value of `keys` (none: `q` is one query). Rows: keys, cell, qrank.
+    */
+  private def rankCells(cents: DataFrame, q: DataFrame, keys: String*): DataFrame =
+    cents.crossJoin(broadcast(q))
+      .withColumn("qc_cos", cos4("c_emb", "q_emb", "c_norm", "q_norm"))
+      .withColumn("qrank", row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(col("qc_cos").desc, col("c_id"))))
+      .select(keys.map(col) ++ Seq(col("c_id").as("cell"), col("qrank")): _*)
 
   private[operators] val duckCos =
     "floor((list_sum(list_transform(range(len(%s)), i -> %s[i+1] * %s[i+1])) / (%s * %s)) * 10000) / 10000"

@@ -21,6 +21,22 @@ object TextAnalysis extends Operators {
 
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 
+  /** One row per adjacent token pair (w1, w2) of every document with
+    * at least two tokens: the `keep` columns plus `pair(w1, w2)` as
+    * `name`. */
+  private def adjacentPairs(docs: DataFrame, keep: Seq[Column], name: String)(
+      pair: (Column, Column) => Column): DataFrame =
+    docs.withColumn("toks", tokens(col("text")))
+      .filter(size(col("toks")) >= 2)
+      .select(keep :+ explode(transform(sequence(lit(0), size(col("toks")) - 2),
+        i => pair(element_at(col("toks"), i + 1), element_at(col("toks"), i + 2)))).as(name): _*)
+
+  /** Hash of every `w`-token window of the token array `toks`, in
+    * window order. */
+  def gramHashes(toks: Column, w: Int): Column =
+    transform(sequence(lit(0), size(toks) - w),
+      i => Hashing.hash64(concat_ws(" ", slice(toks, i + 1, lit(w)))))
+
   val Stopwords: Seq[String] =
     Seq("the", "a", "of", "and", "to", "in", "is")
 
@@ -254,7 +270,7 @@ object TextAnalysis extends Operators {
         transform(sequence(lit(1), length(t)),
           i => concat(t.substr(lit(1), i - 1), t.substr(i + 1, length(t))))
       val vocab = Tables.documents(s, d)
-        .select(explode(split(trim(col("text")), "\\s+")).as("tok"))
+        .select(explode(tokens(col("text"))).as("tok"))
         .distinct()
       val variants = vocab
         .withColumn("d1", del1(col("tok")))
@@ -442,13 +458,8 @@ object TextAnalysis extends Operators {
     // unigrams are common — the pair-level fluency signal tx12's
     // unigram model cannot see.
     "tx13_bigram_lm" -> { (s, d) =>
-      val bg = Dedup.barrier(graft.core.Tables.documents(s, d)
-        .withColumn("toks", split(trim(col("text")), "\\s+"))
-        .filter(size(col("toks")) >= 2)
-        .select(col("doc_id"), explode(transform(
-          sequence(lit(0), size(col("toks")) - 2),
-          i => concat_ws(" ", element_at(col("toks"), i + 1),
-            element_at(col("toks"), i + 2)))).as("bigram")))
+      val bg = Dedup.barrier(adjacentPairs(graft.core.Tables.documents(s, d),
+        Seq(col("doc_id")), "bigram")((w1, w2) => concat_ws(" ", w1, w2)))
       val freq = bg.groupBy(col("bigram")).agg(count(lit(1)).as("bg_freq"))
       bg.join(freq, Seq("bigram"))
         .groupBy(col("doc_id"))
@@ -515,11 +526,10 @@ object TextAnalysis extends Operators {
     "tx16_gram_dup_rate" -> { (s, d) =>
       val W = 13
       val grams = Dedup.barrier(graft.core.Tables.documents(s, d)
-        .withColumn("toks", split(trim(col("text")), "\\s+"))
+        .withColumn("toks", tokens(col("text")))
         .filter(size(col("toks")) >= W)
         .select(col("doc_id"), col("source"),
-          explode(array_distinct(transform(sequence(lit(0), size(col("toks")) - W),
-            i => Hashing.hash64(concat_ws(" ", slice(col("toks"), i + 1, lit(W)))))))
+          explode(array_distinct(gramHashes(col("toks"), W)))
             .as("g")))
       val dfreq = grams.groupBy(col("g")).agg(count(lit(1)).as("dfc"))
       val perDoc = grams.join(dfreq, Seq("g"))
@@ -1154,7 +1164,7 @@ object TextAnalysis extends Operators {
     "tx35_stopword_profile" -> { (s, d) =>
       val toks = Tables.documents(s, d)
         .select(col("source"),
-          explode(split(trim(col("text")), "\\s+")).as("tok"))
+          explode(tokens(col("text"))).as("tok"))
         .filter(col("tok") =!= "")
         .withColumn("lt", lower(col("tok")))
         .withColumn("is_stop", col("lt").isin(ProfileStopwords: _*))
@@ -1184,7 +1194,7 @@ object TextAnalysis extends Operators {
     "tx36_len_quantiles_by_lang" -> { (s, d) =>
       val lens = Tables.documents(s, d)
         .select(col("lang"), col("doc_id"),
-          size(split(trim(col("text")), "\\s+")).cast("long").as("n_toks"))
+          size(tokens(col("text"))).cast("long").as("n_toks"))
         .filter(col("n_toks") > 0)
       Rank.exactQuantilesByKey(lens, "lang", col("n_toks"),
           col("doc_id"), LenPercentiles, p => s"p${p}_toks", "max_toks")
@@ -1211,7 +1221,7 @@ object TextAnalysis extends Operators {
     "tx37_snapshot_drift" -> { (s, d) =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       def toks(v: DataFrame, tag: Int): DataFrame = v
-        .select(explode(split(trim(col("text")), "\\s+")).as("token"))
+        .select(explode(tokens(col("text"))).as("token"))
         .filter(length(col("token")) > 0)
         .withColumn("v", lit(tag))
       val census = toks(Dedup.snapshotV1(docs), 1)
@@ -1261,14 +1271,8 @@ object TextAnalysis extends Operators {
     // tx13's: one fact-sized bigram aggregate, a vocab-sized first-
     // word rollup, then one rejoin keyed on the bigram.
     "tx38_surprisal_filter" -> { (s, d) =>
-      val bg = Dedup.barrier(Tables.documents(s, d)
-        .withColumn("toks", split(trim(col("text")), "\\s+"))
-        .filter(size(col("toks")) >= 2)
-        .select(col("doc_id"), explode(transform(
-          sequence(lit(0), size(col("toks")) - 2),
-          i => struct(element_at(col("toks"), i + 1).as("w1"),
-            concat_ws(" ", element_at(col("toks"), i + 1),
-              element_at(col("toks"), i + 2)).as("bigram")))).as("p"))
+      val bg = Dedup.barrier(adjacentPairs(Tables.documents(s, d), Seq(col("doc_id")), "p")(
+          (w1, w2) => struct(w1.as("w1"), concat_ws(" ", w1, w2).as("bigram")))
         .select(col("doc_id"), col("p.w1"), col("p.bigram")))
       val c2 = bg.groupBy(col("w1"), col("bigram"))
         .agg(count(lit(1)).cast("long").as("c2"))
@@ -1303,7 +1307,7 @@ object TextAnalysis extends Operators {
     "tx39_burstiness" -> { (s, d) =>
       val tok = Tables.documents(s, d)
         .select(col("doc_id"),
-          explode(split(trim(col("text")), "\\s+")).as("tok"))
+          explode(tokens(col("text"))).as("tok"))
       val stats = tok.groupBy(col("tok"))
         .agg(count(lit(1)).cast("long").as("tf"),
           countDistinct(col("doc_id")).cast("long").as("df"))
@@ -1329,12 +1333,8 @@ object TextAnalysis extends Operators {
     // orderBy+limit (TakeOrdered — no global sort materializes), rank
     // assigned over the 50-row result.
     "tx40_pmi_collocations" -> { (s, d) =>
-      val counts = Dedup.barrier(Tables.documents(s, d)
-        .withColumn("toks", split(trim(col("text")), "\\s+"))
-        .filter(size(col("toks")) >= 2)
-        .select(explode(transform(sequence(lit(0), size(col("toks")) - 2),
-          i => struct(element_at(col("toks"), i + 1).as("w1"),
-            element_at(col("toks"), i + 2).as("w2")))).as("b"))
+      val counts = Dedup.barrier(adjacentPairs(Tables.documents(s, d), Nil, "b")(
+          (w1, w2) => struct(w1.as("w1"), w2.as("w2")))
         .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
         .groupBy(col("w1"), col("w2"))
         .agg(count(lit(1)).cast("long").as("c12")))
@@ -1367,13 +1367,8 @@ object TextAnalysis extends Operators {
     // text. Vocab²-bounded state: one bigram aggregate + its
     // first-word marginal fold.
     "tx41_entropy_rate" -> { (s, d) =>
-      val bg = Dedup.barrier(Tables.documents(s, d)
-        .withColumn("toks", split(trim(col("text")), "\\s+"))
-        .filter(size(col("toks")) >= 2)
-        .select(col("lang"), explode(transform(
-          sequence(lit(0), size(col("toks")) - 2),
-          i => struct(element_at(col("toks"), i + 1).as("w1"),
-            element_at(col("toks"), i + 2).as("w2")))).as("b"))
+      val bg = Dedup.barrier(adjacentPairs(Tables.documents(s, d), Seq(col("lang")), "b")(
+          (w1, w2) => struct(w1.as("w1"), w2.as("w2")))
         .groupBy(col("lang"), col("b.w1").as("w1"), col("b.w2").as("w2"))
         .agg(count(lit(1)).cast("long").as("c12")))
       val m1 = bg.groupBy(col("lang"), col("w1"))
@@ -1400,7 +1395,7 @@ object TextAnalysis extends Operators {
     "tx42_adaptive_stopwords" -> { (s, d) =>
       val tok = Dedup.barrier(Tables.documents(s, d)
         .select(col("lang"), col("doc_id"),
-          explode(split(trim(col("text")), "\\s+")).as("tok"))
+          explode(tokens(col("text"))).as("tok"))
         .filter(col("tok") =!= ""))
       val docsPerLang = tok.groupBy(col("lang"))
         .agg(countDistinct(col("doc_id")).cast("long").as("n_docs"))

@@ -149,13 +149,7 @@ object StreamJobs {
       else
         s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(d)
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
-    }
+    graft.core.Tables.normalizeTs(raw)
   }
 
   /** Scratch dirs created by the snapshot drains and not yet

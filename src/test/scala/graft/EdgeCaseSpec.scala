@@ -71,6 +71,15 @@ class EdgeCaseSpec extends SparkSpec {
       s"leaked ${after - before} cached RDDs across CC rounds")
   }
 
+  test("a connected-components result stays readable after a later CC call") {
+    // dd10 checkpoints its census over one CC result; dd06 then runs
+    // another CC. Both frames must still count, in either order.
+    val keeper = SparkEntry.queries("dd10_cluster_keeper")(spark, sf)
+    val clusters = SparkEntry.queries("dd06_dedup_clusters")(spark, sf)
+    assert(keeper.count() > 0)
+    assert(clusters.count() > 0)
+  }
+
   test("connected components: deep chain converges; non-convergence throws") {
     import graft.operators.Components
     // a 25-node chain needs many propagation rounds (diameter bound)
